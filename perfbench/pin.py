@@ -1,5 +1,5 @@
 """Recompute `pinned.json`: the row count and order-insensitive result
-hash of every benchmark query on the generated tables at each scale.
+hash of every benchmark query on the generated tables.
 
     python3 perfbench/pin.py
 
@@ -17,7 +17,7 @@ import sys
 
 import run as bench
 
-SCALES = (0.01, 0.1)
+SCALES = (0.01,)
 
 
 def main() -> None:

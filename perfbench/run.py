@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload registry_sf0.01 --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload registry_sf0.01 --seed 1 --seconds 20 --trace 0
 
 Runs one workload of `BENCHMARK.json` against the engine in the checkout
 this file sits in, checks the engine's outputs, and prints as its last
@@ -27,7 +27,6 @@ ENGINE = "big_data_engineering_project_spark"
 
 WORKLOADS = {
     "registry_sf0.01": ("registry", 0.01),
-    "registry_sf0.1": ("registry", 0.1),
     "stream_hot_path": ("stream", None),
 }
 
@@ -36,9 +35,8 @@ def pin_environment(work: str) -> None:
     """Pin the settings the engine reads from the environment, before
     anything imports it."""
     os.environ["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
-    # The workloads need far less. A heap that reaches its cap early makes
-    # peak_rss_mb repeat: at 4g the heap grew lazily and VmHWM varied by
-    # 16% (quartile spread) from run to run.
+    # The workloads need far less, and the heap is pre-touched (see
+    # get_spark below), so its size is part of peak_rss_mb.
     os.environ["SPARK_DRIVER_MEMORY"] = "1g"
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "spark-local")
     os.environ["TMPDIR"] = os.path.join(work, "tmp")
@@ -88,11 +86,18 @@ def run(args, kind: str, sf: float | None, work: str) -> int:
         "perfbench",
         shuffle_partitions=int(os.environ["SPARK_GRAFT_CPUS"]),
         extra_conf={
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={os.environ['TMPDIR']}",
+            # The whole heap is committed and touched at start, so that
+            # peak_rss_mb is the heap plus what grows outside it. Grown
+            # lazily, a 1g heap left VmHWM at 1.16-1.64 GB across runs.
+            "spark.driver.extraJavaOptions": (
+                f"-Djava.io.tmpdir={os.environ['TMPDIR']} "
+                f"-Xms{os.environ['SPARK_DRIVER_MEMORY']} -XX:+AlwaysPreTouch"
+            ),
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
         },
     )
     t_session = time.perf_counter()
+    wl.log(f"session start: {t_session - t_start:.2f} s")
     r = wl.Run(spark, args.seed, args.seconds, bool(args.trace), t_start)
     r.tracer.add("session.get_spark", 0.0, t_session - r.tracer.t0, None, None)
     try:
@@ -124,13 +129,14 @@ def run(args, kind: str, sf: float | None, work: str) -> int:
         "env": env_record(),
         "host": host,
         "ops": len(r.op_s),
-        "units": {"untraced": len(untraced), "traced": len(r.unit_s[True])},
+        "unit_s": {"untraced": untraced, "traced": r.unit_s[True]},
+        "op_s": r.op_s,
         "op_tail_percentile": tail_pct,
         "peak_rss_mb": rss,
         "mismatches": r.mismatches[:20],
     }
     if args.trace:
-        metrics = per_layer(r, kind, t_session - t_start)
+        metrics, detail["not_exercised"] = per_layer(r, kind, t_session - t_start)
         os.makedirs(os.path.join(ROOT, ".perfbench_out"), exist_ok=True)
         r.tracer.dump(os.path.join(
             ROOT, ".perfbench_out", f"{args.workload}-seed{args.seed}-trace.json"))
@@ -168,9 +174,11 @@ def stop_spark(spark) -> None:
 NOT_SUMS = ("caches.pinned_rdds_max", "streaming.state_rows", "streaming.state_memory_mb")
 
 
-def per_layer(r, kind: str, session_s: float) -> dict[str, tuple[float, str]]:
+def per_layer(r, kind: str, session_s: float) -> tuple[dict[str, tuple[float, str]], list[str]]:
     """Per-layer figures of the traced units, per unit (a registry pass
-    or a run_hot_path call), plus self times and the tracing overhead."""
+    or a run_hot_path call), plus self times and the tracing overhead.
+    Also the names of the metrics this workload does not exercise: they
+    print as 0.0, since the result line carries every per-layer metric."""
     import probes
     import workloads as wl
 
@@ -192,10 +200,11 @@ def per_layer(r, kind: str, session_s: float) -> dict[str, tuple[float, str]]:
     top = "pass" if kind == "registry" else "streaming.run_hot_path"
     out["trace.unit_self_s"] = (selfs.get(top, 0.0) / n, "s")
     out["trace.op_self_s"] = (selfs.get("op", 0.0) / n, "s")
+    idle = [k for k in names if k not in layer] + (["trace.op_self_s"] if "op" not in selfs else [])
     plain, traced = r.unit_s[False], r.unit_s[True]
     overhead = statistics.median(traced) / statistics.median(plain) - 1.0
     out["trace.overhead_pct"] = (100.0 * overhead, "%")
-    return out
+    return out, idle
 
 
 UNITS = {"s": "s", "mb": "MB", "p50": "ms", "rows": "count", "max": "count"}

@@ -2,7 +2,7 @@
 
     python3 -m pytest perfbench/test_perfbench.py -q
 
-The first group is fast. The second runs the benchmark itself (five
+The first group is fast. The second runs the benchmark itself (four
 short runs, a few minutes on four cores) and checks what it prints
 against `BENCHMARK.json`, the spans of a traced run, and that two traced
 runs on one seed count the same Spark jobs, stages and tasks.
@@ -14,6 +14,7 @@ import json
 import os
 import subprocess
 import sys
+import types
 
 import pytest
 
@@ -69,22 +70,27 @@ def test_every_query_is_a_pinned_headline():
     for name in workloads.QUERIES:
         assert REGISTRY[name].headline and REGISTRY[name].oracle, name
         assert name in pinned["sf0.01"], name
+    assert set(pinned["sf0.01"]) == set(workloads.QUERIES)
+    # plans.<module>.build_s is declared exactly for the modules the pass runs
+    modules = {workloads._module(REGISTRY[name]) for name in workloads.QUERIES}
+    assert modules == set(workloads.MODULES)
 
 
 # -------------------------------------------------------------- the runs
 
 
-def _run(workload: str, seed: int, trace: int) -> dict:
+def _run(workload: str, seed: int, trace: int, detail: bool = False):
     proc = subprocess.run(
         [sys.executable, os.path.join(HERE, "run.py"), "--workload", workload,
          "--seed", str(seed), "--seconds", "1", "--trace", str(trace)],
         cwd=ROOT, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    lines = proc.stdout.strip().splitlines()
+    result = json.loads(lines[-1])
     assert set(result) == {"correct", "attempted", "failed", "metrics"}
     assert result["correct"] and result["failed"] == 0 and result["attempted"] >= 1
-    return result
+    return (result, json.loads(lines[-2])) if detail else result
 
 
 def _names_units(result: dict) -> dict[str, str]:
@@ -94,10 +100,10 @@ def _names_units(result: dict) -> dict[str, str]:
 @pytest.fixture(scope="module")
 def traced_registry():
     trace_file = os.path.join(ROOT, ".perfbench_out", "registry_sf0.01-seed5-trace.json")
-    first = _run("registry_sf0.01", 5, 1)
+    first, detail = _run("registry_sf0.01", 5, 1, detail=True)
     with open(trace_file) as fh:
         spans = json.load(fh)["spans"]
-    return first, _run("registry_sf0.01", 5, 1), spans
+    return first, _run("registry_sf0.01", 5, 1), spans, detail
 
 
 @pytest.mark.parametrize("workload", [w["name"] for w in SPEC["workloads"]])
@@ -109,6 +115,22 @@ def test_end_to_end_names_and_units_match_spec(workload):
 def test_per_layer_names_and_units_match_spec(traced_registry):
     want = {m["name"]: m["unit"] for m in SPEC["per_layer"]}
     assert _names_units(traced_registry[0]) == want
+
+
+def test_metrics_a_workload_does_not_exercise_are_named(traced_registry):
+    idle = traced_registry[3]["not_exercised"]
+    assert idle == [m["name"] for m in SPEC["per_layer"] if m["name"].startswith("streaming.")]
+
+
+def test_a_stream_check_that_raises_is_a_mismatch():
+    class NoTable:
+        @property
+        def read(self):
+            raise RuntimeError("no table was written")
+
+    run = types.SimpleNamespace(spark=NoTable(), mismatches=[])
+    workloads.stream_check(run, "in", "out", 500, "unit 0")
+    assert run.mismatches == ["unit 0: output check raised"]
 
 
 def test_children_never_exceed_their_parent(traced_registry):

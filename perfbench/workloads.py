@@ -7,7 +7,7 @@ calls into the engine and times those calls from outside.
 - `stream`: each op is one micro-batch of `run_hot_path`. A unit is one
   `run_hot_path` call over `STREAM_FILES` files of `STREAM_ROWS` records.
 
-A run is: set-up (session start plus one untimed warm-up unit, with the
+A run is: set-up (session start plus an untimed warm-up, with the
 output checks that need no timing), then a fixed number of whole units
 set by `seconds`. Traced runs alternate untraced and traced units:
 per-layer figures come from the traced ones, and the gap between the
@@ -28,40 +28,56 @@ import traceback
 import datagen
 from probes import PHASES, JobCounter, ProgressListener, Tracer
 
-# One `headline=True` query from each `queries_*` module of the
-# registry but `queries_multimodal` (its media fixture is written on
-# first use, which costs every run about 3.5 s of set-up), and minhash
-# dedup, whose shingle index is a cache that `clear_all_owned_caches`
-# reclaims: window statistics, a three-way and a five-way star join, IVF
-# search (its builder trains the index with Spark jobs), an as-of join,
-# sessionization and a snapshot diff.
+# The pass: label propagation, whose builder fires Spark jobs, plus one
+# cheap headliner from each other `queries_*` module: window statistics,
+# a three-way and a five-way star join, a daily TWAP, a snapshot diff
+# and PII redaction.
+# In a warm pass of all 71 headliners on the sf 0.01 tables (four
+# cores), builders took 22.1 s of 59.6 s and fired 105 jobs: pretrain
+# 45, label propagation 44, IVF training 8, pagerank 5. This pass covers
+# 44 of those 105 builder jobs, 3.2 s of the 22.1 s of builder time,
+# 1.6 s of the 37.5 s of count() time and 73 of the 623 jobs.
+#
+# Pretrain, pagerank and IVF are left out for their cost in a run of
+# about a minute, which is what the benchmark's schedule allows. After
+# session start the cold pass took 35 s with pretrain and 17 s without
+# it, and a warm pass 10-17 s with it and 4-6 s without: with pretrain a
+# run measured one or two passes. Pagerank and IVF cost about 8 s each
+# in the cold pass. No `queries_multimodal` query is run: its media
+# fixture is written on first use, about 3.5 s more set-up.
 QUERIES = (
     "q_zscore_anomalies",
     "q_shipping_priority",
     "q_volume_shipping",
-    "q_embedding_ivf_batch_topk",
-    "q_asof_last_purchase",
-    "q_session_stats",
+    "q_twap_daily",
     "q_snapshot_diff",
-    "q_dedup_minhash_lsh",
+    "q_pii_redaction",
+    "q_label_propagation",
 )
-MODULES = ("reference", "tpch", "tpch2", "pipeline", "temporal", "behavior",
-           "multimodal", "warehouse")
+MODULES = ("reference", "tpch", "tpch2", "pipeline", "temporal", "behavior", "warehouse")
 
 # Records per input file, so per micro-batch: the producer's poll size
 # (FIXTURES.md section 2). run_hot_path reads one file per trigger.
 STREAM_ROWS = 100
 STREAM_FILES = 5
 
-# About how long one unit takes on four cores. A run measures
-# round(seconds / NOMINAL_UNIT_S) units, so every run of a workload does
-# the same work whatever the host's speed.
-NOMINAL_UNIT_S = {"registry": 4.0, "stream": 6.0}
+# A run measures round(seconds / SECONDS_PER_UNIT) whole units, so every
+# run of a workload does the same work whatever the host's speed. On four
+# cores a warm pass takes about 5 s and a stream unit about 7.5 s, after
+# a warm-up of about 25 s and 20 s.
+SECONDS_PER_UNIT = {"registry": 4.0, "stream": 6.5}
 FROZEN_NOW = "2026-01-16 00:00:00"
 
-# A run starts no new unit after this many seconds, so that a run on a
-# badly contended host still ends well inside the time one run may take.
-HARD_STOP_S = 90.0
+# A run starts no new unit after this many seconds from session start.
+# The benchmark's full schedule (4 + 22 runs per workload, two
+# workloads) must end within 3420 s, about 71 s a run, also on a
+# contended host.
+HARD_STOP_S = 55.0
+
+# Untimed passes after the cold one. Passes kept getting faster for a
+# while: 5.9, 4.8, 5.0 and 4.0 s for the first four after the cold pass
+# in one run, and the median of four passes sat on that slope.
+WARM_OP_PASSES = 1
 
 PINNED = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pinned.json")
 
@@ -110,7 +126,7 @@ class Run:
         """Yield (index, traced) for each measured unit. Traced runs
         alternate untraced and traced units and have at least one of
         each. A run that nears HARD_STOP_S starts no more units."""
-        n = max(2 if self.traced else 1, round(self.seconds / NOMINAL_UNIT_S[kind]))
+        n = max(2 if self.traced else 1, round(self.seconds / SECONDS_PER_UNIT[kind]))
         for i in range(n):
             if i and time.perf_counter() - self.t_start > HARD_STOP_S:
                 return
@@ -132,8 +148,10 @@ def pass_order(seed: int, unit: int) -> list[str]:
 
 
 def registry_setup(run: Run, sf_dir: str, sf_key: str) -> None:
-    """Warm-up pass: every query once, cold, with its row count and
-    result hash checked against `pinned.json`."""
+    """Warm-up: a cold pass in which every query's row count and result
+    hash must equal `pinned.json`, then WARM_OP_PASSES untimed passes of
+    the ops as they are measured (builder, count(), clear), whose row
+    counts must match too."""
     from big_data_engineering_project_spark.caches import clear_all_owned_caches
     from big_data_engineering_project_spark.plans import REGISTRY
 
@@ -153,6 +171,19 @@ def registry_setup(run: Run, sf_dir: str, sf_key: str) -> None:
             run.mismatches.append(f"{name}: warm-up raised")
             log(traceback.format_exc())
         clear_all_owned_caches()
+    for _ in range(WARM_OP_PASSES):
+        t0 = time.perf_counter()
+        for name in QUERIES:
+            try:
+                with run.tracer.span("setup.query"):
+                    rows = REGISTRY[name].builder(run.spark, sf_dir).count()
+                if rows != pinned[name]["rows"]:
+                    run.mismatches.append(f"{name}: warm-up {rows} rows")
+            except Exception:
+                run.mismatches.append(f"{name}: warm-up raised")
+                log(traceback.format_exc())
+            clear_all_owned_caches()
+        log(f"warm-up pass: {time.perf_counter() - t0:.2f} s")
 
 
 def registry_measure(run: Run, sf_dir: str) -> None:
@@ -239,7 +270,17 @@ def _hot_path(run: Run, in_dir: str, out: str) -> None:
 def stream_check(run: Run, in_dir: str, out: str, n_rows: int, tag: str) -> None:
     """The written table holds every generated row exactly once, and its
     hash equals the batch formulation: the same enrichment over the
-    same files plus row_number() per author in arrival order."""
+    same files plus row_number() per author in arrival order. A check
+    that raises (no table was written, say) is a mismatch; the run goes
+    on."""
+    try:
+        _stream_check(run, in_dir, out, n_rows, tag)
+    except Exception:
+        run.mismatches.append(f"{tag}: output check raised")
+        log(traceback.format_exc())
+
+
+def _stream_check(run: Run, in_dir: str, out: str, n_rows: int, tag: str) -> None:
     import datetime as dt
 
     from pyspark.sql import Window
@@ -273,8 +314,15 @@ def stream_setup(run: Run, root: str) -> ProgressListener:
     run.spark.streams.addListener(listener)
     in_dir, n = _stream_input(root, "warm", run.seed * 7919 + 104729)
     out = os.path.join(root, "warm-out")
-    _hot_path(run, in_dir, out)
+    t0 = time.perf_counter()
+    try:
+        _hot_path(run, in_dir, out)
+    except Exception:
+        run.mismatches.append("warm-up: run_hot_path raised")
+        log(traceback.format_exc())
+    t1 = time.perf_counter()
     stream_check(run, in_dir, out, n, "warm-up")
+    log(f"warm-up: {t1 - t0:.2f} s, output check {time.perf_counter() - t1:.2f} s")
     shutil.rmtree(out, ignore_errors=True)
     return listener
 
@@ -308,7 +356,9 @@ def stream_measure(run: Run, root: str, listener: ProgressListener) -> None:
                 run.add(f"exec.{k}", v)
             _batch_spans(run, sid, unit, batches, t0, wall)
             per_unit.extend(batches)
+        t_check = time.perf_counter()
         stream_check(run, in_dir, out, n, f"unit {unit}")
+        log(f"unit {unit}: {wall:.2f} s, output check {time.perf_counter() - t_check:.2f} s")
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(in_dir, ignore_errors=True)
     if per_unit:
