@@ -5,13 +5,13 @@ production-session scale: every Column operation is one synchronous
 py4j roundtrip (~0.1-1 ms depending on host), so a builder that
 assembles a few hundred expression nodes burns 0.1-1+ s of pure
 driver time PER CALL — per bench rep, per streaming start, per sweep
-entry (r14 measured text_profile_col at ~0.8 s/call; r15 measured
-with_minhash_signature 0.58 s, minhash_band_buckets 0.72 s,
-pack_concat_chunks 1.42 s, budget_mix_select 1.01 s — see
-OPTIMIZATION_r15.md). An unresolved Column is an immutable expression
-tree bound to no plan, so ONE instance can serve every plan in the
-process. This module is the shared memo the per-operator memos
-(text_profile_named was the first) hang off:
+entry (r14 measured text_profile_col at ~0.8 s/call; the committed
+r15 interleaved A/B, plans/r15/ab_expr_memo.json, measured the memo
+1.80x faster on q_dedup_minhash_lsh, 1.61x on q_minhash_calibration
+and a wash on q_pretrain_pipeline). An unresolved Column is an
+immutable expression tree bound to no plan, so ONE instance can serve
+every plan in the process. This module is the shared memo the
+per-operator memos (text_profile_named was the first) hang off:
 
 - keys are (gateway_token, *caller key): a restarted JVM gateway in
   the same Python process gets fresh trees instead of stale java refs

@@ -133,10 +133,13 @@ def pagerank(
     return pr
 
 
-# Pure-lineage LPA is safe only this deep: the analyzed plan doubles
-# per iteration (label frame referenced twice), so beyond this the
-# operator installs a localCheckpoint hook itself (see docstring).
-_LPA_PURE_LINEAGE_MAX_ITERS = 4
+# Longest pure-lineage LPA segment: a deeper loop with no explicit
+# `materialize` localCheckpoints every this many iterations. Measured
+# (SCALING.md "LPA without lineage doubling"): through 6 iterations
+# pure lineage is within 0.2 s of the best cadence and fires no job
+# while the plan is built; from 7 on it loses. Cadences 2-5 tie at
+# 8-32 iterations, and 6 is already slower.
+_LPA_PURE_LINEAGE_MAX_ITERS = 5
 
 
 def label_propagation(
@@ -152,9 +155,9 @@ def label_propagation(
     over an edge list, treated as undirected: each node starts
     labelled with itself; per iteration every node adopts the label
     with the LARGEST weighted vote among its neighbours, smallest
-    label winning ties; nodes with no neighbours keep their label.
-    Returns [node, label] — nodes sharing a final label form a
-    community.
+    label winning ties. Returns [node, label] — nodes sharing a final
+    label form a community. Contract: endpoints and weights are
+    non-null, weights are longs (every caller passes counts).
 
     Determinism: votes are integer weight sums (combine-order-free),
     the argmax tie-break is total ((votes DESC, label ASC)), and the
@@ -164,32 +167,26 @@ def label_propagation(
     cross-engine (exact unrolled-CTE oracle, like pagerank above).
 
     Scale shape per iteration: labels ⋈ undirected-edges on the
-    vote-source key, then TWO partial-aggregated grouped passes —
-    (node, label) vote sums, then per-node max-vote and min-label-at-
-    max — deliberately NOT a row_number window, which would pile a hot
-    node's whole neighbourhood into one unsplittable window partition
-    (the sliding-coverage lesson). `materialize`/`materialize_every`
-    as in pagerank — BUT the default differs, and must:
+    vote-source key, a partial-aggregated (node, label) vote sum, then
+    ONE partial-aggregated per-node min over the struct (-votes,
+    label) — the argmax in a single ordinary aggregate, with the same
+    total order. Deliberately NOT a row_number window, which would
+    pile a hot node's whole neighbourhood into one unsplittable
+    window partition (the sliding-coverage lesson), and not a
+    max-then-join-back chain, which would reference the vote frame
+    twice.
 
-    Unlike pagerank (whose rank frame enters each iteration ONCE, so
-    pure lineage grows linearly and stays cheap through ~100
-    iterations), each LPA iteration references the label frame TWICE
-    (votes source + the kept-label fallback of the left join), so the
-    pure-lineage analyzed plan DOUBLES per iteration — measured
-    (SCALING.md round-8): data-size-independent 2.1 s at 4
-    iterations, 4.1 s at 5, minutes by 8, pure Catalyst analysis
-    cost. `localCheckpoint` truncates the logical plan (persist does
-    NOT — a cached frame's analyzed tree still embeds the full
-    lineage, so caching alone cannot fix this) at a flat ~0.25
-    s/iteration. Therefore when `materialize` is None and `iters` >
-    _LPA_PURE_LINEAGE_MAX_ITERS, a localCheckpoint hook at every-1
-    cadence is installed automatically (every-1 measured FASTER than
-    every-2: the doubled segment re-analysis costs more than the
-    saved checkpoint). Results are bit-identical at any cadence.
+    The label frame enters each iteration ONCE, so the plan grows
+    linearly, as pagerank's does; planning cost still grows faster
+    than linearly with depth. So when `materialize` is None and
+    `iters` > _LPA_PURE_LINEAGE_MAX_ITERS, a localCheckpoint hook is
+    installed every _LPA_PURE_LINEAGE_MAX_ITERS iterations; otherwise
+    `materialize`/`materialize_every` as in pagerank. Results are
+    bit-identical at any cadence.
     """
     if materialize is None and iters > _LPA_PURE_LINEAGE_MAX_ITERS:
         materialize = lambda d: d.localCheckpoint()  # noqa: E731
-        materialize_every = 1
+        materialize_every = _LPA_PURE_LINEAGE_MAX_ITERS
     e_src, e_dst, e_w = F.col(src), F.col(dst), F.col(weight)
     # The undirected edge frame is static across iterations; persist it
     # once (same rationale as pagerank above — when `edges` is derived,
@@ -202,29 +199,19 @@ def label_propagation(
             edges.select(e_dst.alias("a"), e_src.alias("b"), e_w.alias("__w"))
         )
     )
-    nodes = und.select(F.col("a").alias("node")).distinct()
-    lab = nodes.select("node", F.col("node").alias("label"))
+    lab = und.select(F.col("a").alias("node"), F.col("a").alias("label"))
+    lab = lab.distinct()
+    # No kept-label fallback join: `und` is symmetric and the node set
+    # is distinct(und.a), so every node receives at least one vote in
+    # every iteration.
     for it in range(iters):
-        votes = (
+        lab = (
             lab.join(und, lab["node"] == und["a"])
-            .groupBy(F.col("b").alias("__n"), "label")
+            .groupBy(F.col("b").alias("node"), "label")
             .agg(F.sum("__w").alias("__v"))
-        )
-        mx = votes.groupBy(F.col("__n").alias("__mn")).agg(
-            F.max("__v").alias("__mv")
-        )
-        best = (
-            votes.join(
-                mx,
-                (F.col("__n") == F.col("__mn"))
-                & (F.col("__v") == F.col("__mv")),
-            )
-            .select(F.col("__n").alias("node"), "label")
             .groupBy("node")
-            .agg(F.min("label").alias("__nl"))
-        )
-        lab = lab.join(best, "node", "left").select(
-            "node", F.coalesce("__nl", "label").alias("label")
+            .agg(F.min(F.struct(-F.col("__v"), "label")).alias("__m"))
+            .select("node", F.col("__m.label").alias("label"))
         )
         if materialize is not None and (it + 1) % materialize_every == 0:
             lab = materialize(lab)
@@ -376,8 +363,8 @@ def hop_distance(
     Lineage: the settled table enters each hop twice (anti-join +
     union), so past _BFS_PURE_LINEAGE_MAX_HOPS hops a localCheckpoint
     hook at every-1 cadence is installed automatically when no
-    `materialize` is given — the label_propagation lesson
-    (SCALING.md round-8); results are bit-identical at any cadence.
+    `materialize` is given — the lineage-doubling lesson (SCALING.md
+    round-8); results are bit-identical at any cadence.
     """
     if materialize is None and max_hops > _BFS_PURE_LINEAGE_MAX_HOPS:
         materialize = lambda d: d.localCheckpoint()  # noqa: E731
@@ -414,7 +401,8 @@ def hop_distance(
 
 # The peeled edge frame enters each iteration three times (degree agg
 # + two endpoint semi joins), so pure lineage grows geometrically —
-# the label_propagation lesson applies with a lower threshold.
+# the lineage-doubling lesson (SCALING.md round-8), with a lower
+# threshold.
 _KCORE_PURE_LINEAGE_MAX_ITERS = 3
 
 

@@ -431,9 +431,11 @@ _LPA_ITERS = 4
     "(synchronous LPA may oscillate on bipartite structures; a fixed "
     "budget is what makes the result well-defined), so the whole "
     "fixed point holds an unrolled-CTE oracle. The per-node argmax "
-    "is two grouped partial-aggregated passes, NOT a row_number "
-    "window — a hot node's neighbourhood never lands in one window "
-    "partition (operators/graph.py:label_propagation)",
+    "is ONE grouped partial-aggregated min over (-votes, label), NOT "
+    "a row_number window — a hot node's neighbourhood never lands in "
+    "one window partition — and the builder fires no Spark job: the "
+    "label frame enters each iteration once, so 4 iterations stay "
+    "pure lineage (operators/graph.py:label_propagation)",
     headline=True,
     tags=("behavior", "graph", "iterative"),
 )
@@ -459,15 +461,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        label_propagation(
-            sparse,
-            iters=_LPA_ITERS,
-            # explicit lineage cut: at 4 iterations the pure plan is
-            # already analysis-dominated (SCALING.md r8: nomat 2.1 s
-            # vs checkpointed 1.2 s at sf0.1, results bit-identical);
-            # past 4 the operator would install this hook itself
-            materialize=lambda d: d.localCheckpoint(),
-        )
+        label_propagation(sparse, iters=_LPA_ITERS)
         .select(
             F.col("node").alias("event_type"),
             F.col("label").alias("community"),
@@ -649,14 +643,14 @@ _LPA_DEEP_ITERS = 8
 @register(
     "q_label_propagation_deep",
     oracle=_lpa_oracle(_LPA_DEEP_ITERS),
-    doc=f"Label propagation at {_LPA_DEEP_ITERS} iterations — twice "
-    "past the pure-lineage threshold, so this query EXERCISES the "
-    "operator's automatic localCheckpoint installation under the "
-    "oracle gate: the unrolled-CTE oracle proves the lineage-cut "
-    "execution is bit-identical to the pure fixed point cross-engine "
-    "(without the auto-hook this plan is minutes of Catalyst "
-    "analysis — SCALING.md r8). Same sparsified transition graph as "
-    "q_label_propagation (operators/graph.py:label_propagation)",
+    doc=f"Label propagation at {_LPA_DEEP_ITERS} iterations — past the "
+    "operator's 5-iteration pure-lineage threshold, so this query "
+    "EXERCISES its automatic localCheckpoint installation (a lineage "
+    "cut after iteration 5, then 3 pure iterations) under the oracle "
+    "gate: the unrolled-CTE oracle proves the lineage-cut execution "
+    "is bit-identical to the pure fixed point cross-engine. Same "
+    "sparsified transition graph as q_label_propagation "
+    "(operators/graph.py:label_propagation)",
     tags=("behavior", "graph", "iterative"),
 )
 def q_label_propagation_deep(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1362,6 +1362,62 @@ def test_label_propagation_communities(spark):
     assert cp == got
 
 
+def _reference_lpa(edges, iters):
+    """Pure-Python synchronous weighted LPA: undirected, integer vote
+    sums, argmax by (votes DESC, label ASC), fixed iteration budget.
+    Returns (labels, number of argmax decisions that were exact ties)."""
+    nbrs: dict[int, list[tuple[int, int]]] = {}
+    for s, d, w in edges:
+        nbrs.setdefault(s, []).append((d, w))
+        nbrs.setdefault(d, []).append((s, w))
+    label = {n: n for n in nbrs}
+    ties = 0
+    for _ in range(iters):
+        new = {}
+        for n, adj in nbrs.items():
+            votes: dict[int, int] = {}
+            for m, w in adj:
+                votes[label[m]] = votes.get(label[m], 0) + w
+            top = max(votes.values())
+            ties += sum(v == top for v in votes.values()) > 1
+            new[n] = min(votes, key=lambda lab: (-votes[lab], lab))
+        label = new
+    return label, ties
+
+
+def test_label_propagation_matches_python_reference(spark):
+    """label_propagation equals a pure-Python LPA on two seeded random
+    graphs (disjoint components of one edge frame) with exact vote ties
+    (weights 1-2) and one hub node each (touching every odd node), for
+    every budget 1-6, both by default and with an every-iteration
+    localCheckpoint hook."""
+    import random
+
+    from big_data_engineering_project_spark.operators.graph import (
+        label_propagation,
+    )
+
+    edges = []
+    for base, seed in ((0, 3), (100, 17)):
+        rng = random.Random(seed)
+        edges += [(base, base + v, 1) for v in range(1, 24, 2)]
+        for _ in range(30):
+            a, b = rng.sample(range(base + 1, base + 24), 2)
+            edges.append((a, b, rng.choice((1, 1, 2))))
+    df = spark.createDataFrame(edges, "src INT, dst INT, w LONG")
+    for iters in range(1, 7):
+        want, ties = _reference_lpa(edges, iters)
+        assert ties > 0, iters
+        for hook in (None, lambda d: d.localCheckpoint()):
+            got = {
+                r["node"]: r["label"]
+                for r in label_propagation(
+                    df, iters=iters, materialize=hook
+                ).collect()
+            }
+            assert got == want, (iters, hook)
+
+
 def test_pagerank_materialize_hook(spark):
     """The lineage-cutting hook (r6 verdict: exposed but never
     exercised) must (a) leave results bit-identical to the pure-
@@ -1800,13 +1856,13 @@ def test_reservoir_sample_merge_algebra_and_dedup(spark):
 
 
 def test_label_propagation_auto_checkpoints_deep_runs(spark):
-    """Pure-lineage LPA doubles its analyzed plan per iteration (the
-    label frame enters each iteration twice), so iters > 4 must
-    auto-install the localCheckpoint hook: (a) a deep default run
-    returns a lineage-CUT frame (scan of materialized partitions,
-    not a join chain), (b) results are bit-identical to an explicit
-    every-1 checkpoint run and to the pure form at the threshold
-    depth."""
+    """Pure-lineage LPA planning cost grows faster than linearly with
+    depth, so iters > 5 must auto-install the localCheckpoint hook at
+    every-5 cadence: (a) a deep default run whose budget is a multiple
+    of 5 returns a lineage-CUT frame (scan of materialized
+    partitions, not a join chain), (b) results are bit-identical to
+    an explicit every-1 checkpoint run and to the pure form at the
+    threshold depth."""
     from big_data_engineering_project_spark.operators.graph import (
         label_propagation,
     )
@@ -1818,24 +1874,24 @@ def test_label_propagation_auto_checkpoints_deep_runs(spark):
         [(a, b, w) for a, b, w in rng if a != b], "src INT, dst INT, w LONG"
     )
 
-    deep_default = label_propagation(edges, iters=6)
+    deep_default = label_propagation(edges, iters=10)
     plan = deep_default._jdf.queryExecution().analyzed().toString()
     assert "Join" not in plan, plan[:500]  # lineage cut at the tail
 
     explicit = label_propagation(
-        edges, iters=6, materialize=lambda d: d.localCheckpoint()
+        edges, iters=10, materialize=lambda d: d.localCheckpoint()
     )
     got = sorted(map(tuple, deep_default.collect()))
     assert got == sorted(map(tuple, explicit.collect()))
 
     # at the threshold the default stays pure lineage and agrees
-    pure4 = label_propagation(edges, iters=4)
-    assert "Join" in pure4._jdf.queryExecution().analyzed().toString()
-    cp4 = label_propagation(
-        edges, iters=4, materialize=lambda d: d.localCheckpoint()
+    pure5 = label_propagation(edges, iters=5)
+    assert "Join" in pure5._jdf.queryExecution().analyzed().toString()
+    cp5 = label_propagation(
+        edges, iters=5, materialize=lambda d: d.localCheckpoint()
     )
-    assert sorted(map(tuple, pure4.collect())) == sorted(
-        map(tuple, cp4.collect())
+    assert sorted(map(tuple, pure5.collect())) == sorted(
+        map(tuple, cp5.collect())
     )
 
 

@@ -730,3 +730,22 @@ def test_ranking_evals_window_partitioned_by_key(plans):
         assert specs, name
         for spec in specs:
             assert spec.split(",")[0].strip().startswith(key), (name, spec)
+
+
+def test_label_propagation_builder_fires_no_jobs(spark, sf_dir):
+    """Builders build plans and fire no Spark job: the LPA builder
+    returns pure lineage (the label frame enters each iteration once),
+    with no eager localCheckpoint inside the call."""
+    from big_data_engineering_project_spark.caches import (
+        clear_all_owned_caches,
+    )
+    from big_data_engineering_project_spark.sources.catalog import load_table
+
+    load_table(spark, sf_dir, "events")  # warm the scan: its schema
+    # read may fire a job, and the memoized scan is shared by builders
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.numTotalJobs()
+    REGISTRY["q_label_propagation"].builder(spark, sf_dir)
+    fired = sched.numTotalJobs() - before
+    clear_all_owned_caches()
+    assert fired == 0, fired

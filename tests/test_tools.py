@@ -87,8 +87,11 @@ def test_planaudit_probe_classification():
     assert "q_dedup_minhash_lsh" in sh
     assert "q_counts_by_type" not in sh
     # known limit: localCheckpoint-truncated iteratives (e.g.
-    # q_label_propagation) expose only post-checkpoint Exchanges in
-    # their final plan and may classify jvm — documented in bench_diff
+    # q_kcore_parts) expose only post-checkpoint Exchanges in their
+    # final plan and may classify jvm — documented in bench_diff;
+    # pure-lineage label propagation shows every iteration's Exchanges
+    assert "q_kcore_parts" not in sh
+    assert "q_label_propagation" in sh
     # shuffle-probe keys parse from both artifact spellings
     assert bench_diff.probe_sec(
         {"calibration": {"sh_pre": 0.8, "sh_post": 0.6}}, "sh"

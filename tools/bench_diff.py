@@ -152,7 +152,7 @@ def probe_sec(doc: dict, kind: str = "jvm") -> float | None:
 # threshold; simple scan-agg queries sit below it. Known limit: an
 # iterative query whose loop localCheckpoints per step (lineage
 # truncation) exposes only its POST-checkpoint Exchanges in the final
-# plan — e.g. q_label_propagation counts 1 — and classifies jvm; the
+# plan — e.g. q_kcore_parts counts 2 — and classifies jvm; the
 # classification is a measured improvement over CPU-only, not a
 # perfect partition.
 SHUFFLE_EXCHANGE_MIN = 5
