@@ -19,14 +19,11 @@ per-operator memos (text_profile_named was the first) hang off:
 - values are Columns or tuples of Columns — never DataFrames, never
   data: memoizing an expression OBJECT cannot change any result, and
   nothing is cached across executions (the plan re-executes from the
-  parquet inputs every time it is used);
-- SPARK_GRAFT_NO_EXPR_MEMO=1 disables the memo (A/B adjudication
-  hook: arm B rebuilds every tree per call).
+  parquet inputs every time it is used).
 """
 
 from __future__ import annotations
 
-import os
 from typing import Callable, TypeVar
 
 T = TypeVar("T")
@@ -46,8 +43,6 @@ def memo_expr(key: tuple, build: Callable[[], T]) -> T:
     Column (or tuple thereof) from constants and fixed column NAMES
     only — anything referencing a caller's DataFrame must stay
     per-call."""
-    if os.environ.get("SPARK_GRAFT_NO_EXPR_MEMO") == "1":
-        return build()
     full = (_gateway_token(), *key)
     hit = _MEMO.get(full)
     if hit is None:

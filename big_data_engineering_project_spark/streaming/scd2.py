@@ -39,13 +39,39 @@ Equivalence (checked per-round by tools/streaming_check.py
 `scd2_maintenance` and tests/test_streaming.py): folding any
 batch-partition of a changelog through scd2_merge_batch yields the
 IDENTICAL history table as the batch operator over the union.
+
+Replay contract, shared by every runner in this module. Each runner
+drains its json file stream with `_drain` (availableNow: every file,
+then stop). The 13 single-state fold runners (SCD2, CM, KMV, agg,
+OHLC, target encoding, HLL, KLL, AUC, source gate, vocab, reservoir,
+pack) only supply a fold; `_fold_into` skips a batch whose id is at
+or below the `_applied_batch` marker stored inside the state
+directory, else swaps in fold(state, batch) stamped with the batch's
+marker. So a crash after the state swap but before the streaming
+checkpoint commits cannot apply that batch twice on restart. The
+skip is unconditional: it is also correct for the folds that are
+idempotent anyway (SCD2, KMV, HLL, reservoir). The marker is scoped
+to the checkpoint lineage (the query id in `<checkpoint>/metadata`):
+batch ids restart at 0 under a fresh checkpoint, which is a new
+ingest, not a replay, and always applies. Write-then-swap order: the
+new state and its marker are written in full to a sibling
+`.swap-tmp` directory, then swapped in by two renames
+(`_write_state_swap`), so the state and its marker commit together
+and no task retry ever reads a half-written table. The
+directory-per-batch runners (decontam, IVF append, index delete,
+MinHash, pHash, BM25) write each batch to its own
+`batch=<lineage>-<id>` directory (`_batch_tag`), which a replay
+overwrites, so they need no marker; `run_table_diff_stream` and
+`run_mix_stream` write two outputs in a set order and keep their own
+batch body, described in their docstrings.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -160,8 +186,6 @@ def _compact_on_stop(
     absorbed as normal data — their replay protection died with their
     checkpoint. `roots` is [(artifact_root, partition_by)] so the
     cell-partitioned ANN tables keep their pruning layout."""
-    import re as _re
-
     from big_data_engineering_project_spark.operators.compaction import (
         compact_batches,
     )
@@ -169,7 +193,7 @@ def _compact_on_stop(
         _fs_list_batches,
     )
 
-    lineage = _re.sub(r"[^A-Za-z0-9]", "", _lineage_id(checkpoint_dir))
+    prefix = _batch_tag(checkpoint_dir, "")
     # List commits/ through the Hadoop FS API, like _fs_list_batches:
     # os.listdir only exists for local checkpoints, and on s3a/abfs it
     # would report commits/ absent → last=-1 → a spurious refusal on
@@ -196,9 +220,9 @@ def _compact_on_stop(
     # state the RuntimeError's wording would belie (r13 ADVICE #3).
     for root, _partition_by in roots:
         for tag in _fs_list_batches(spark, root):
-            if not tag.startswith(lineage + "-"):
+            if not tag.startswith(prefix):
                 continue
-            suffix = tag[len(lineage) + 1 :]
+            suffix = tag[len(prefix) :]
             if suffix.isdigit() and int(suffix) > last:
                 raise RuntimeError(
                     f"compact_on_stop: {root} holds batch={tag} beyond "
@@ -217,21 +241,15 @@ def _compact_on_stop(
 
 
 def _write_state_tmp(
-    merged: DataFrame,
-    path: str,
-    batch_id: int | None = None,
-    checkpoint_dir: str | None = None,
-    marker: tuple[str, int] | None = None,
+    merged: DataFrame, path: str, marker: tuple[str, int] | None
 ) -> str:
     """Materialize `merged` into the sibling `.swap-tmp` dir (plus
-    the (checkpoint, batch_id) marker) WITHOUT swapping it in —
-    lineage still reads the intact current table. Returns the tmp
-    path for _swap_in."""
+    the (checkpoint lineage, batch_id) marker, if any) WITHOUT
+    swapping it in — lineage still reads the intact current table.
+    Returns the tmp path for _swap_in."""
     tmp = path + ".swap-tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     merged.write.mode("overwrite").parquet(tmp)
-    if marker is None and batch_id is not None and checkpoint_dir:
-        marker = (_lineage_id(checkpoint_dir), batch_id)
     if marker is not None:
         import json as _json
 
@@ -254,11 +272,7 @@ def _swap_in(path: str) -> None:
 
 
 def _write_state_swap(
-    merged: DataFrame,
-    path: str,
-    batch_id: int | None = None,
-    checkpoint_dir: str | None = None,
-    marker: tuple[str, int] | None = None,
+    merged: DataFrame, path: str, marker: tuple[str, int] | None
 ) -> None:
     """Replace the state table with `merged` WITHOUT overwriting the
     files its own lineage reads: the new table fully materializes
@@ -269,18 +283,95 @@ def _write_state_swap(
     deleted files if cached blocks drop). A crash between the renames
     leaves `.swap-old`, which _read_state restores. Delta/Iceberg
     MERGE INTO is the deployment-scale form of this whole dance.
-
-    A (checkpoint, batch_id) marker rides inside the swapped dir
-    (`_applied_batch`), so runners whose merge is NOT naturally
-    redelivery-idempotent (SUM-folding CM counters, agg_merge
-    sufficient statistics, KLL count addition) can no-op a replayed
-    batch: a crash AFTER the swap but BEFORE the streaming checkpoint
-    commits would otherwise double-apply the batch's counts on
-    restart (r9 ADVICE #5). The marker is checkpoint-SCOPED — batch
-    ids restart at 0 under a fresh checkpoint, which is a new
-    lineage, not a replay."""
-    _write_state_tmp(merged, path, batch_id, checkpoint_dir, marker)
+    The (checkpoint lineage, batch_id) marker rides inside the swapped
+    dir (module docstring, replay contract)."""
+    _write_state_tmp(merged, path, marker)
     _swap_in(path)
+
+
+def _drain(
+    spark: SparkSession,
+    schema: str | StructType,
+    input_dir: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+    process_batch: Callable[[DataFrame, int], None],
+) -> None:
+    """Run `process_batch` over every file under `input_dir` as an
+    availableNow json file stream and return once every batch is
+    committed to `checkpoint_dir`."""
+    (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .json(input_dir)
+        .writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _fold_into(
+    state_path: str,
+    checkpoint_dir: str,
+    fold: Callable[[DataFrame | None, DataFrame], DataFrame],
+) -> Callable[[DataFrame, int], None]:
+    """The batch body of a single-state fold runner: skip a replayed
+    batch, else swap in fold(current state or None, batch) with the
+    batch's marker (module docstring, replay contract)."""
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        last = _applied_batch_id(state_path, checkpoint_dir)
+        if last is not None and batch_id <= last:
+            return
+        existing = _read_state(batch_df.sparkSession, state_path)
+        _write_state_swap(
+            fold(existing, batch_df),
+            state_path,
+            (_lineage_id(checkpoint_dir), batch_id),
+        )
+
+    return process_batch
+
+
+def _merge_by(
+    existing: DataFrame | None,
+    part: DataFrame,
+    keys: Sequence[str],
+    *aggs: Column,
+) -> DataFrame:
+    """The batch's partial state alone for the first batch, else
+    `aggs` over (state ∪ partial) grouped by `keys` — the merge step
+    of every mergeable-state fold."""
+    if existing is None:
+        return part
+    return existing.unionByName(part).groupBy(*keys).agg(*aggs)
+
+
+def _batch_tag(checkpoint_dir: str, batch_id: int | str) -> str:
+    """`<lineage>-<batch_id>`: the `batch=` directory tag of a
+    directory-per-batch runner. The lineage id is stripped to
+    [A-Za-z0-9] because the tag becomes a directory name; resolve it
+    inside the batch body, once the checkpoint metadata exists.
+    `batch_id=""` gives the prefix every tag of the lineage shares."""
+    lineage = re.sub(r"[^A-Za-z0-9]", "", _lineage_id(checkpoint_dir))
+    return f"{lineage}-{batch_id}"
+
+
+def _read_prior(
+    spark: SparkSession, root: str, tag: str
+) -> DataFrame | None:
+    """Every batch directory under `root` except the batch's own `tag`
+    (a replay must not probe itself), or None before the first batch
+    lands."""
+    if not os.path.exists(root):
+        return None
+    return (
+        spark.read.parquet(root)
+        .filter(F.col("batch") != tag)
+        .drop("batch")
+    )
 
 
 def scd2_merge_batch(
@@ -410,26 +501,13 @@ def run_scd2_stream(
     the operators/upsert.py pattern; MERGE INTO on a transactional
     format at deployment scale)."""
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        history = _read_state(spark_b, history_path)
-        merged = scd2_merge_batch(
-            history, batch_df, key, ts_col, attr, tiebreak
-        )
-        _write_state_swap(merged, history_path)
+    def fold(history: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        return scd2_merge_batch(history, batch_df, key, ts_col, attr, tiebreak)
 
-    stream = (
-        spark.readStream.schema(CHANGELOG_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, CHANGELOG_STREAM_SCHEMA, input_dir, checkpoint_dir,
+        max_files_per_trigger, _fold_into(history_path, checkpoint_dir, fold),
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
 
 def run_cm_sketch_stream(
@@ -452,49 +530,21 @@ def run_cm_sketch_stream(
     whole point of sketch-backed serving (reference anchor: the
     driver-held exact counters of S/kinesis_processing_2.py:42-43,
     made bounded). Exact stream ≡ batch equality is checked per
-    round (tools/streaming_check.py `cm_sketch_merge`).
-
-    SUM-folding is NOT redelivery-idempotent, so the state carries
-    the last applied batch id and a replayed batch no-ops — a crash
-    after the state swap but before the checkpoint commit can no
-    longer double-count (r9 ADVICE #5)."""
+    round (tools/streaming_check.py `cm_sketch_merge`)."""
     from big_data_engineering_project_spark.operators.sketches import (
         cm_counters,
     )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        last = _applied_batch_id(counters_path, checkpoint_dir)
-        if last is not None and batch_id <= last:
-            return
-        batch_c = cm_counters(
-            batch_df.selectExpr(f"{hash_expr} AS __h"), "__h"
-        )
-        existing = _read_state(spark_b, counters_path)
-        merged = (
-            batch_c
-            if existing is None
-            else existing.unionByName(batch_c)
-            .groupBy("seed", "bucket")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        _write_state_swap(
-            merged, counters_path, batch_id=batch_id,
-            checkpoint_dir=checkpoint_dir,
+    def fold(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        part = cm_counters(batch_df.selectExpr(f"{hash_expr} AS __h"), "__h")
+        return _merge_by(
+            existing, part, ("seed", "bucket"), F.sum("cnt").alias("cnt")
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, _fold_into(counters_path, checkpoint_dir, fold),
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
 
 def run_kmv_stream(
@@ -527,41 +577,27 @@ def run_kmv_stream(
         kmv_sketch_agg,
     )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        batch_s = kmv_sketch_agg(
+    def fold(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        part = kmv_sketch_agg(
             batch_df.selectExpr(*key_cols, f"{hash_expr} AS __h"),
             key_cols,
             "__h",
             k=k,
             n_shards=n_shards,
         )
-        existing = _read_state(spark_b, sketch_path)
-        merged = (
-            batch_s
-            if existing is None
-            else existing.unionByName(batch_s)
-            .groupBy(*key_cols)
-            .agg(
-                kmv_merge_expr(F.collect_list("kmv_sketch"), k).alias(
-                    "kmv_sketch"
-                )
-            )
+        return _merge_by(
+            existing,
+            part,
+            key_cols,
+            kmv_merge_expr(F.collect_list("kmv_sketch"), k).alias(
+                "kmv_sketch"
+            ),
         )
-        _write_state_swap(merged, sketch_path)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, _fold_into(sketch_path, checkpoint_dir, fold),
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
 
 def run_agg_maintenance_stream(
@@ -582,48 +618,22 @@ def run_agg_maintenance_stream(
     is bit-identical to one batch agg over the union (checked per
     round: tools/streaming_check.py `agg_maintenance`). State is one
     row per key regardless of stream volume; the serving read is
-    agg_finish over the state table.
-
-    agg_merge's (n, Σ, Σ²) addition is NOT redelivery-idempotent, so
-    the state carries the last applied batch id and a replayed batch
-    no-ops — a crash after the state swap but before the checkpoint
-    commit can no longer double-apply the batch (r9 ADVICE #5)."""
+    agg_finish over the state table."""
     from big_data_engineering_project_spark.operators.ivm import (
         agg_merge,
         agg_state,
     )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        last = _applied_batch_id(state_path, checkpoint_dir)
-        if last is not None and batch_id <= last:
-            return
-        batch_s = agg_state(
-            batch_df.selectExpr(*keys, f"{value_expr} AS __v"),
-            keys,
-            "__v",
+    def fold(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        part = agg_state(
+            batch_df.selectExpr(*keys, f"{value_expr} AS __v"), keys, "__v"
         )
-        existing = _read_state(spark_b, state_path)
-        merged = (
-            batch_s if existing is None else agg_merge(existing, batch_s, keys)
-        )
-        _write_state_swap(
-            merged, state_path, batch_id=batch_id,
-            checkpoint_dir=checkpoint_dir,
-        )
+        return part if existing is None else agg_merge(existing, part, keys)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, _fold_into(state_path, checkpoint_dir, fold),
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
 
 def ohlc_partial(
@@ -725,25 +735,14 @@ def run_ohlc_stream(
     buckets (older than the watermark) stop being touched and can be
     compacted out to the serving table."""
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
+    def fold(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         part = ohlc_partial(batch_df, key, time_col, value_col, id_col, bucket)
-        existing = _read_state(spark_b, state_path)
-        merged = part if existing is None else ohlc_merge(existing, part, key)
-        _write_state_swap(merged, state_path)
+        return part if existing is None else ohlc_merge(existing, part, key)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, _fold_into(state_path, checkpoint_dir, fold),
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
 
 def run_target_encoding_stream(
@@ -775,27 +774,14 @@ def run_target_encoding_stream(
         oof_stats,
     )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        partial = oof_stats(
-            batch_df, category_col, target_col, fold_key, n_folds
-        )
-        existing = _read_state(spark_b, stats_path)
-        merged = partial if existing is None else oof_merge(existing, partial)
-        _write_state_swap(merged, stats_path)
+    def fold(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        part = oof_stats(batch_df, category_col, target_col, fold_key, n_folds)
+        return part if existing is None else oof_merge(existing, part)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, _fold_into(stats_path, checkpoint_dir, fold),
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
 
 def run_table_diff_stream(
@@ -889,9 +875,7 @@ def run_table_diff_stream(
                     "marker-disagree recovery"
                 )
             _write_state_swap(
-                bucket_digests(snap_now, key, cols),
-                digests_path,
-                marker=snap_m,
+                bucket_digests(snap_now, key, cols), digests_path, snap_m
             )
         snap_bid = _applied_batch_id(snapshot_path, checkpoint_dir)
         if snap_bid is not None and batch_id <= snap_bid:
@@ -970,29 +954,16 @@ def run_table_diff_stream(
         # lineage reads both current tables, so a tmp write after a
         # peer swap would read half-updated state. Replica swaps
         # first — see the docstring's recovery contract.
-        _write_state_tmp(
-            merged_snap, snapshot_path, batch_id=batch_id,
-            checkpoint_dir=checkpoint_dir,
-        )
-        _write_state_tmp(
-            merged_digests, digests_path, batch_id=batch_id,
-            checkpoint_dir=checkpoint_dir,
-        )
+        mark = (_lineage_id(checkpoint_dir), batch_id)
+        _write_state_tmp(merged_snap, snapshot_path, mark)
+        _write_state_tmp(merged_digests, digests_path, mark)
         _swap_in(snapshot_path)
         _swap_in(digests_path)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, process_batch,
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
 
 def run_hll_stream(
@@ -1016,40 +987,23 @@ def run_hll_stream(
     hll_sketch_agg over the full input exactly (the same identity
     q_hll_daily_merge's pytest pins for the daily rollup). State is
     one ≤ 2^lgk-register binary per key regardless of stream volume.
-    Register-max union is naturally REDELIVERY-IDEMPOTENT (re-maxing
-    the same registers is a no-op), so no batch-id guard is needed.
     Serving read: hll_sketch_estimate over the state table. Checked
     per round (tools/streaming_check.py `hll_maintenance`)."""
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        batch_s = (
+    def fold(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        part = (
             batch_df.selectExpr(*key_cols, f"{item_expr} AS __item")
             .groupBy(*key_cols)
             .agg(F.hll_sketch_agg("__item", F.lit(lgk)).alias("hll"))
         )
-        existing = _read_state(spark_b, sketch_path)
-        merged = (
-            batch_s
-            if existing is None
-            else existing.unionByName(batch_s)
-            .groupBy(*key_cols)
-            .agg(F.hll_union_agg("hll").alias("hll"))
+        return _merge_by(
+            existing, part, key_cols, F.hll_union_agg("hll").alias("hll")
         )
-        _write_state_swap(merged, sketch_path)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, _fold_into(sketch_path, checkpoint_dir, fold),
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
 
 def run_kll_stream(
@@ -1079,18 +1033,12 @@ def run_kll_stream(
     for the latency/price/score columns quantile summaries serve; a
     genuinely high-cardinality value column should quantize inside
     `value_expr` (e.g. `CAST(v * 100 AS LONG)` buckets), the same
-    knob the batch operator has. Count addition is NOT redelivery-
-    idempotent, so the state carries the last applied batch id (same
-    guard as the CM/agg runners). `shard_expr` defaults to hashing
+    knob the batch operator has. `shard_expr` defaults to hashing
     the value itself (the batch default when id_col is None)."""
     sh = shard_expr if shard_expr else f"xxhash64({value_expr})"
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        last = _applied_batch_id(state_path, checkpoint_dir)
-        if last is not None and batch_id <= last:
-            return
-        batch_s = (
+    def fold(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        part = (
             batch_df.selectExpr(
                 f"pmod({sh}, {n_shards}) AS shard",
                 f"CAST({value_expr} AS LONG) AS __v",
@@ -1099,31 +1047,14 @@ def run_kll_stream(
             .groupBy("shard", "__v")
             .agg(F.count(F.lit(1)).alias("__w"))
         )
-        existing = _read_state(spark_b, state_path)
-        merged = (
-            batch_s
-            if existing is None
-            else existing.unionByName(batch_s)
-            .groupBy("shard", "__v")
-            .agg(F.sum("__w").alias("__w"))
-        )
-        _write_state_swap(
-            merged, state_path, batch_id=batch_id,
-            checkpoint_dir=checkpoint_dir,
+        return _merge_by(
+            existing, part, ("shard", "__v"), F.sum("__w").alias("__w")
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, _fold_into(state_path, checkpoint_dir, fold),
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
 
 def run_auc_stream(
@@ -1151,22 +1082,16 @@ def run_auc_stream(
     scores per key), not O(predictions) — classifier scores quantize
     naturally (calibrated models emit bounded-precision probabilities;
     a raw-logit column should quantize inside `score_expr`, the same
-    knob the KLL runner documents). Count addition is NOT redelivery-
-    idempotent, so the state carries the last applied batch id (same
-    guard as the CM/agg/KLL runners). Checked per round
+    knob the KLL runner documents). Checked per round
     (tools/streaming_check.py `auc_maintenance`)."""
     keys = list(key_cols or [])
+    pos = (
+        f"CASE WHEN ({label_expr}) IS NOT NULL "
+        f"AND CAST(({label_expr}) AS BOOLEAN) THEN 1 ELSE 0 END"
+    )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        last = _applied_batch_id(state_path, checkpoint_dir)
-        if last is not None and batch_id <= last:
-            return
-        pos = (
-            f"CASE WHEN ({label_expr}) IS NOT NULL "
-            f"AND CAST(({label_expr}) AS BOOLEAN) THEN 1 ELSE 0 END"
-        )
-        batch_s = (
+    def fold(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        part = (
             batch_df.selectExpr(
                 *keys, f"({score_expr}) AS __s", f"{pos} AS __p"
             )
@@ -1176,34 +1101,18 @@ def run_auc_stream(
                 F.sum("__p").cast("long").alias("__pos"),
             )
         )
-        existing = _read_state(spark_b, state_path)
-        merged = (
-            batch_s
-            if existing is None
-            else existing.unionByName(batch_s)
-            .groupBy(*keys, "__s")
-            .agg(
-                F.sum("__cnt").alias("__cnt"),
-                F.sum("__pos").alias("__pos"),
-            )
-        )
-        _write_state_swap(
-            merged, state_path, batch_id=batch_id,
-            checkpoint_dir=checkpoint_dir,
+        return _merge_by(
+            existing,
+            part,
+            (*keys, "__s"),
+            F.sum("__cnt").alias("__cnt"),
+            F.sum("__pos").alias("__pos"),
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, _fold_into(state_path, checkpoint_dir, fold),
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
 
 def run_source_gate_stream(
@@ -1231,47 +1140,25 @@ def run_source_gate_stream(
     state key. Addition is order-insensitive → state(union of
     batches) = one groupBy over the union EXACTLY, and the served
     verdicts hash-equal batch `source_quality_gate` over the full
-    stream. Count addition is not redelivery-idempotent → batch-id
-    marker (the CM/KLL/AUC discipline). Checked per round
+    stream. Checked per round
     (tools/streaming_check.py `source_gate_maintenance`)."""
     from big_data_engineering_project_spark.operators.governance import (
         source_gate_state,
     )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        last = _applied_batch_id(state_path, checkpoint_dir)
-        if last is not None and batch_id <= last:
-            return
-        batch_s = source_gate_state(batch_df, id_col, text_col, source_col)
-        existing = _read_state(spark_b, state_path)
-        merged = (
-            batch_s
-            if existing is None
-            else existing.unionByName(batch_s)
-            .groupBy("source", "__fp")
-            .agg(
-                F.sum("__n").cast("long").alias("__n"),
-                F.sum("__sq").cast("long").alias("__sq"),
-            )
-        )
-        _write_state_swap(
-            merged, state_path, batch_id=batch_id,
-            checkpoint_dir=checkpoint_dir,
+    def fold(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        return _merge_by(
+            existing,
+            source_gate_state(batch_df, id_col, text_col, source_col),
+            ("source", "__fp"),
+            F.sum("__n").cast("long").alias("__n"),
+            F.sum("__sq").cast("long").alias("__sq"),
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, _fold_into(state_path, checkpoint_dir, fold),
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
 
 def run_vocab_stream(
@@ -1290,46 +1177,23 @@ def run_vocab_stream(
     text_analysis.vocab_coverage_from_counts over this state,
     hash-equals the batch computation over the union — same serve
     code, equal states). State is O(vocabulary), the table the batch
-    query builds from scratch each run. Count addition is not
-    redelivery-idempotent → batch-id marker (the CM/KLL/AUC
-    discipline). Checked per round (tools/streaming_check.py
-    `vocab_maintenance`)."""
+    query builds from scratch each run. Checked per round
+    (tools/streaming_check.py `vocab_maintenance`)."""
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        last = _applied_batch_id(state_path, checkpoint_dir)
-        if last is not None and batch_id <= last:
-            return
-        batch_s = (
+    def fold(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        part = (
             batch_df.selectExpr(f"explode({text_expr}) AS term")
             .groupBy("term")
             .agg(F.count(F.lit(1)).cast("long").alias("c"))
         )
-        existing = _read_state(spark_b, state_path)
-        merged = (
-            batch_s
-            if existing is None
-            else existing.unionByName(batch_s)
-            .groupBy("term")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
-        _write_state_swap(
-            merged, state_path, batch_id=batch_id,
-            checkpoint_dir=checkpoint_dir,
+        return _merge_by(
+            existing, part, ("term",), F.sum("c").cast("long").alias("c")
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, _fold_into(state_path, checkpoint_dir, fold),
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
 
 def run_decontam_stream(
@@ -1357,8 +1221,6 @@ def run_decontam_stream(
     discipline — replays overwrite their own directory). Eval-set
     updates are a new out_path, not an in-place edit. Checked per
     round (tools/streaming_check.py `decontam_maintenance`)."""
-    import re
-
     from big_data_engineering_project_spark.operators.dedup import (
         contamination_report,
     )
@@ -1368,24 +1230,15 @@ def run_decontam_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        lineage = re.sub(r"[^A-Za-z0-9]", "", _lineage_id(checkpoint_dir))
         rep = contamination_report(batch_df, eval_df, id_col, text_col)
         rep.write.mode("overwrite").parquet(
-            out_path + f"/batch={lineage}-{batch_id}"
+            out_path + f"/batch={_batch_tag(checkpoint_dir, batch_id)}"
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, process_batch,
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
     if compact_on_stop:
         _compact_on_stop(spark, checkpoint_dir, [(out_path, ())])
 
@@ -1417,8 +1270,6 @@ def run_ivf_append_stream(
     pre-seeded replica. Probe-all reads of the maintained index equal
     brute force over base ∪ all streamed batches exactly (checked per
     round: tools/streaming_check.py `ivf_index_maintenance`)."""
-    import re
-
     from big_data_engineering_project_spark.operators.similarity import (
         ivf_index_append,
     )
@@ -1426,30 +1277,18 @@ def run_ivf_append_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # lineage resolved HERE (the checkpoint metadata exists once
-        # the query runs, not when this runner is called) and
-        # sanitized — the tag becomes a directory name
-        lineage = re.sub(r"[^A-Za-z0-9]", "", _lineage_id(checkpoint_dir))
         ivf_index_append(
             batch_df,
             index_path,
-            tag=f"{lineage}-{batch_id}",
+            tag=_batch_tag(checkpoint_dir, batch_id),
             id_col=id_col,
             vec_col=vec_col,
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, process_batch,
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
     if compact_on_stop:
         _compact_on_stop(
             spark, checkpoint_dir, [(index_path + "/vectors", ("cell",))]
@@ -1483,8 +1322,6 @@ def run_index_delete_stream(
     tombstone batch dirs into one `batch=base` at availableNow
     termination (tombstones/ is a directory-per-batch artifact like
     any other) with the standard uncommitted-batch refusal."""
-    import re
-
     from big_data_engineering_project_spark.operators.similarity import (
         vector_index_delete,
     )
@@ -1492,27 +1329,18 @@ def run_index_delete_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        lineage = re.sub(r"[^A-Za-z0-9]", "", _lineage_id(checkpoint_dir))
         vector_index_delete(
             spark,
             index_path,
             batch_df.select(id_col),
-            tag=f"{lineage}-{batch_id}",
+            tag=_batch_tag(checkpoint_dir, batch_id),
             id_col=id_col,
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, process_batch,
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
     if compact_on_stop:
         _compact_on_stop(
             spark, checkpoint_dir, [(index_path + "/tombstones", ())]
@@ -1547,37 +1375,22 @@ def run_reservoir_stream(
         reservoir_sample_agg,
     )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark_b = batch_df.sparkSession
-        batch_s = reservoir_sample_agg(
-            batch_df, key_cols, id_col, k=k, n_shards=n_shards
+    def fold(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        return _merge_by(
+            existing,
+            reservoir_sample_agg(
+                batch_df, key_cols, id_col, k=k, n_shards=n_shards
+            ),
+            key_cols,
+            reservoir_merge_expr(F.collect_list("reservoir"), k).alias(
+                "reservoir"
+            ),
         )
-        existing = _read_state(spark_b, sample_path)
-        merged = (
-            batch_s
-            if existing is None
-            else existing.unionByName(batch_s)
-            .groupBy(*key_cols)
-            .agg(
-                reservoir_merge_expr(
-                    F.collect_list("reservoir"), k
-                ).alias("reservoir")
-            )
-        )
-        _write_state_swap(merged, sample_path)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, _fold_into(sample_path, checkpoint_dir, fold),
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
 
 def run_pack_stream(
@@ -1604,31 +1417,22 @@ def run_pack_stream(
     the natural shape of an append log with assigned ids), because
     concat packing is defined by the id total order; the runner
     raises if a batch violates it rather than silently emitting
-    offsets that disagree with the batch path. Offset addition is NOT
-    redelivery-idempotent, so the state carries the (checkpoint
-    lineage, batch id) marker and a replayed batch no-ops (the
-    agg/CM/KLL runner discipline)."""
+    offsets that disagree with the batch path. An empty batch
+    appends nothing."""
     from big_data_engineering_project_spark.operators.text_analysis import (
         pack_concat_chunks,
     )
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark_b = batch_df.sparkSession
-        last = _applied_batch_id(state_path, checkpoint_dir)
-        if last is not None and batch_id <= last:
-            return
-        existing = _read_state(spark_b, state_path)
+    def fold(existing: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         base_tokens, max_id = 0, None
         if existing is not None:
             row = existing.agg(
                 F.max(F.col("tok_offset") + F.col("n_tokens")).alias("t"),
                 F.max(id_col).alias("m"),
             ).collect()[0]
-            base_tokens, max_id = int(row["t"]), row["m"]
+            base_tokens, max_id = int(row["t"] or 0), row["m"]
         lo = batch_df.agg(F.min(id_col).alias("lo")).collect()[0]["lo"]
-        if max_id is not None and lo <= max_id:
+        if None not in (lo, max_id) and lo <= max_id:
             raise ValueError(
                 f"pack stream requires id-monotone ingest: batch min "
                 f"{id_col}={lo} <= already-packed max {max_id}"
@@ -1655,30 +1459,12 @@ def run_pack_stream(
                 ),
             )
         )
-        merged = (
-            shifted
-            if existing is None
-            else existing.unionByName(shifted)
-        )
-        _write_state_swap(
-            merged,
-            state_path,
-            batch_id=batch_id,
-            checkpoint_dir=checkpoint_dir,
-        )
+        return shifted if existing is None else existing.unionByName(shifted)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, _fold_into(state_path, checkpoint_dir, fold),
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
 
 def run_minhash_index_stream(
@@ -1715,8 +1501,6 @@ def run_minhash_index_stream(
     exactly — checked per round (tools/streaming_check.py
     `minhash_index_maintenance`).
     """
-    import re
-
     from big_data_engineering_project_spark.operators.dedup import (
         hashed_shingle_table,
         minhash_band_buckets,
@@ -1728,19 +1512,11 @@ def run_minhash_index_stream(
     sh_root = os.path.join(index_path, "shingles")
     pairs_root = os.path.join(index_path, "pairs")
 
-    def read_prior(sp: SparkSession, root: str, tag: str) -> DataFrame | None:
-        if not os.path.exists(root):
-            return None
-        return sp.read.parquet(root).filter(F.col("batch") != tag).drop(
-            "batch"
-        )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         sp = batch_df.sparkSession
-        lineage = re.sub(r"[^A-Za-z0-9]", "", _lineage_id(checkpoint_dir))
-        tag = f"{lineage}-{batch_id}"
+        tag = _batch_tag(checkpoint_dir, batch_id)
         hashed = hashed_shingle_table(batch_df, id_col, text_col).persist()
         sigs = with_minhash_signature(hashed).select("doc", "sig")
         newb = minhash_band_buckets(sigs).persist()
@@ -1757,7 +1533,7 @@ def run_minhash_index_stream(
             )
         )
         cands = within
-        prior_b = read_prior(sp, bands_root, tag)
+        prior_b = _read_prior(sp, bands_root, tag)
         if prior_b is not None:
             cross = (
                 newb.alias("a")
@@ -1776,7 +1552,7 @@ def run_minhash_index_stream(
             cands = cands.unionByName(cross)
         cands = cands.distinct()
         hv = hashed.select("doc", "hv")
-        prior_h = read_prior(sp, sh_root, tag)
+        prior_h = _read_prior(sp, sh_root, tag)
         if prior_h is not None:
             hv = hv.unionByName(prior_h.select("doc", "hv"))
         verified = verify_jaccard_pairs(cands, hv, threshold)
@@ -1792,18 +1568,10 @@ def run_minhash_index_stream(
         newb.unpersist()
         hashed.unpersist()
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, process_batch,
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
     if compact_on_stop:
         _compact_on_stop(
             spark,
@@ -1845,8 +1613,6 @@ def run_phash_index_stream(
     directories ≡ batch `phash_neardup_pairs` over the full corpus —
     checked per round (tools/streaming_check.py
     `phash_index_maintenance`)."""
-    import re
-
     from big_data_engineering_project_spark.operators.dedup import (
         phash_band_table,
     )
@@ -1855,19 +1621,11 @@ def run_phash_index_stream(
     hashes_root = os.path.join(index_path, "hashes")
     pairs_root = os.path.join(index_path, "pairs")
 
-    def read_prior(sp: SparkSession, root: str, tag: str) -> DataFrame | None:
-        if not os.path.exists(root):
-            return None
-        return sp.read.parquet(root).filter(F.col("batch") != tag).drop(
-            "batch"
-        )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         sp = batch_df.sparkSession
-        lineage = re.sub(r"[^A-Za-z0-9]", "", _lineage_id(checkpoint_dir))
-        tag = f"{lineage}-{batch_id}"
+        tag = _batch_tag(checkpoint_dir, batch_id)
         newb = phash_band_table(
             batch_df, max_hamming, id_col, hi_col, lo_col
         ).persist()
@@ -1884,7 +1642,7 @@ def run_phash_index_stream(
             )
         )
         cands = within
-        prior_b = read_prior(sp, bands_root, tag)
+        prior_b = _read_prior(sp, bands_root, tag)
         if prior_b is not None:
             cross = (
                 newb.alias("a")
@@ -1903,7 +1661,7 @@ def run_phash_index_stream(
             cands = cands.unionByName(cross)
         cands = cands.distinct()
         hv = newb.select("doc", "w1", "w2").distinct()
-        prior_h = read_prior(sp, hashes_root, tag)
+        prior_h = _read_prior(sp, hashes_root, tag)
         if prior_h is not None:
             hv = hv.unionByName(prior_h.select("doc", "w1", "w2"))
         ha = hv.select(
@@ -1941,18 +1699,10 @@ def run_phash_index_stream(
         ).parquet(os.path.join(hashes_root, f"batch={tag}"))
         newb.unpersist()
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, process_batch,
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
     if compact_on_stop:
         _compact_on_stop(
             spark,
@@ -1985,8 +1735,6 @@ def run_bm25_index_stream(
     bit-for-bit (checked per round: tools/streaming_check.py
     `bm25_index_maintenance`). Contract: doc ids unique across batches
     (an append log)."""
-    import re
-
     from big_data_engineering_project_spark.operators.text_analysis import (
         doc_lengths,
         text_postings,
@@ -1995,8 +1743,7 @@ def run_bm25_index_stream(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        lineage = re.sub(r"[^A-Za-z0-9]", "", _lineage_id(checkpoint_dir))
-        tag = f"{lineage}-{batch_id}"
+        tag = _batch_tag(checkpoint_dir, batch_id)
         text_postings(batch_df, id_col, text_col).write.mode(
             "overwrite"
         ).parquet(os.path.join(index_path, "postings", f"batch={tag}"))
@@ -2004,18 +1751,10 @@ def run_bm25_index_stream(
             "overwrite"
         ).parquet(os.path.join(index_path, "doclens", f"batch={tag}"))
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, process_batch,
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
     if compact_on_stop:
         _compact_on_stop(
             spark,
@@ -2061,8 +1800,6 @@ def run_mix_stream(
     pack-stream contract — greedy prefix selection is order-defined);
     violations raise. Stream ≡ batch checked per round
     (tools/streaming_check.py `mix_maintenance`)."""
-    import re
-
     from big_data_engineering_project_spark.operators.dedup import tokens_col
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -2072,8 +1809,7 @@ def run_mix_stream(
         last = _applied_batch_id(state_path, checkpoint_dir)
         if last is not None and batch_id <= last:
             return
-        lineage = re.sub(r"[^A-Za-z0-9]", "", _lineage_id(checkpoint_dir))
-        tag = f"{lineage}-{batch_id}"
+        tag = _batch_tag(checkpoint_dir, batch_id)
         ledger = _read_state(sp, state_path)
         base_rows = (
             {
@@ -2102,8 +1838,6 @@ def run_mix_stream(
                 for x in (k, seen)
             ]
         ) if base_rows else None
-        from pyspark.sql import Window
-
         cur = batch_df.select(
             F.col(id_col).alias("id"),
             F.col(strata_col).alias("stratum"),
@@ -2167,23 +1901,12 @@ def run_mix_stream(
                 F.col("__bm").alias("max_id"),
             )
         _write_state_swap(
-            merged,
-            state_path,
-            batch_id=batch_id,
-            checkpoint_dir=checkpoint_dir,
+            merged, state_path, (_lineage_id(checkpoint_dir), batch_id)
         )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
+    _drain(
+        spark, schema, input_dir, checkpoint_dir,
+        max_files_per_trigger, process_batch,
     )
-    query = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
     if compact_on_stop:
         _compact_on_stop(spark, checkpoint_dir, [(manifest_path, ())])

@@ -383,8 +383,8 @@ def test_compact_on_stop_hook_cycle_and_refusal(spark, tmp_path):
         bm25_scores,
     )
     from big_data_engineering_project_spark.streaming.scd2 import (
+        _batch_tag,
         _compact_on_stop,
-        _lineage_id,
         run_bm25_index_stream,
     )
 
@@ -433,17 +433,15 @@ def test_compact_on_stop_hook_cycle_and_refusal(spark, tmp_path):
     assert serve() == want(9)
 
     # (c) a current-lineage batch dir beyond the last commit → refuse
-    import re
-
-    lineage = re.sub(r"[^A-Za-z0-9]", "", _lineage_id(cp))
-    rogue = os.path.join(idx, "postings", f"batch={lineage}-99")
+    rogue_tag = _batch_tag(cp, 99)
+    rogue = os.path.join(idx, "postings", f"batch={rogue_tag}")
     spark.read.parquet(idx + "/postings").drop("batch").write.parquet(rogue)
     with pytest.raises(RuntimeError, match="refusing to compact"):
         _compact_on_stop(
             spark, cp, [(os.path.join(idx, "postings"), ())]
         )
     # the artifact was not touched by the refused call
-    assert f"{lineage}-99" in _batch_tags(idx + "/postings")
+    assert rogue_tag in _batch_tags(idx + "/postings")
 
 
 def test_merge_compact_composed_lifecycle(spark, tmp_path):

@@ -1110,48 +1110,117 @@ def test_kll_stream_state_and_quantiles_match_batch(spark, tmp_path):
     assert served == batch_q
 
 
-def test_batch_id_guard_skips_replayed_batches(spark, tmp_path):
+def _replay_runner(name):
+    """(runner, runner kwargs, two tiny micro-batches) for each fold
+    runner the replay test covers: the additive folds, where a
+    replayed batch would double counts, volumes or sums."""
+    from big_data_engineering_project_spark.streaming.scd2 import (
+        run_cm_sketch_stream,
+        run_ohlc_stream,
+        run_target_encoding_stream,
+    )
+
+    if name == "cm":
+        return (
+            run_cm_sketch_stream,
+            dict(schema="x LONG", hash_expr="x"),
+            [
+                [{"x": i % 13} for i in range(50)],
+                [{"x": i % 7} for i in range(50)],
+            ],
+        )
+    if name == "ohlc":
+        ticks = [
+            {
+                "sym": "AB"[i % 2],
+                "ts": f"2026-02-0{1 + i % 2}T0{i % 7}:00:00",
+                "v": float(1 + (i * 37) % 50),
+                "i": i,
+            }
+            for i in range(40)
+        ]
+        return (
+            run_ohlc_stream,
+            dict(
+                schema="sym STRING, ts TIMESTAMP, v DOUBLE, i LONG",
+                key="sym",
+                time_col="ts",
+                value_col="v",
+                id_col="i",
+            ),
+            [ticks[:20], ticks[20:]],
+        )
+    rows = [
+        {"uid": i % 9, "cat": f"c{i % 3}", "y": (i * 7) % 11 / 4.0}
+        for i in range(40)
+    ]
+    return (
+        run_target_encoding_stream,
+        dict(
+            schema="uid LONG, cat STRING, y DOUBLE",
+            category_col="cat",
+            target_col="y",
+            fold_key="uid",
+            n_folds=3,
+        ),
+        [rows[:20], rows[20:]],
+    )
+
+
+@pytest.mark.parametrize("name", ["cm", "ohlc", "target_encoding"])
+def test_batch_id_guard_skips_replayed_batches(spark, tmp_path, name):
     """r9 ADVICE #5: replaying an already-applied micro-batch against
-    committed state must NOT double-apply non-idempotent merges.
-    Simulates the crash-after-swap-before-checkpoint-commit window by
-    deleting the LAST commit file from the checkpoint: on restart
-    with the SAME checkpoint, Spark re-executes that batch, and the
-    (checkpoint, batch_id) marker inside the state dir makes it a
-    no-op — counters stay equal to the single-pass batch counters
-    instead of doubling. A FRESH checkpoint, by contrast, is a new
+    committed state must NOT double-apply an additive fold (CM
+    counters, OHLC volume, target-encoding n/Σ). Simulates the
+    crash-after-swap-before-checkpoint-commit window by deleting the
+    LAST commit file from the checkpoint: on restart with the SAME
+    checkpoint, Spark re-executes that batch, and the (checkpoint,
+    batch_id) marker inside the state dir makes it a no-op — the
+    state stays equal to the single-pass state instead of doubling
+    the batch. For CM, a FRESH checkpoint, by contrast, is a new
     lineage whose ids restart at 0 — its batches must APPLY (doubling
     is then the user-requested re-ingest), which is why the marker is
     checkpoint-scoped."""
     import os as _os
+    import shutil as _shutil
+
+    from big_data_engineering_project_spark.streaming.scd2 import (
+        _applied_batch_id,
+    )
+
+    runner, kw, batches = _replay_runner(name)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    _write_ordered_json(in_dir, batches)
+    state_path = str(tmp_path / "state")
+    cp1 = str(tmp_path / "cp1")
+
+    def state():
+        return sorted(
+            tuple(r) for r in spark.read.parquet(state_path).collect()
+        )
+
+    runner(spark, str(in_dir), state_path, cp1, **kw)
+    once = state()
+    assert once and _applied_batch_id(state_path, cp1) == 1
+
+    # crash window: state swap committed batch 1, checkpoint did not.
+    # Relocate the checkpoint (same metadata query id = same lineage;
+    # a new path also dodges the session's cached commit-log handle)
+    # and drop the batch-1 commit so restart re-executes batch 1.
+    cp1b = str(tmp_path / "cp1_relocated")
+    _shutil.copytree(cp1, cp1b)
+    _os.remove(_os.path.join(cp1b, "commits", "1"))
+    _os.remove(_os.path.join(cp1b, "commits", ".1.crc"))
+    runner(spark, str(in_dir), state_path, cp1b, **kw)
+    assert state() == once  # replayed batch 1 no-oped
+    if name != "cm":
+        return
 
     from big_data_engineering_project_spark.operators.sketches import (
         cm_counters,
     )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        _applied_batch_id,
-        run_cm_sketch_stream,
-    )
 
-    batches = [
-        [{"x": i % 13} for i in range(50)],
-        [{"x": i % 7} for i in range(50)],
-    ]
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    _write_ordered_json(in_dir, batches)
-    ctr_path = str(tmp_path / "cm")
-    cp1 = str(tmp_path / "cp1")
-
-    def counters():
-        return sorted(
-            tuple(r) for r in spark.read.parquet(ctr_path).collect()
-        )
-
-    run_cm_sketch_stream(
-        spark, str(in_dir), ctr_path, cp1, schema="x LONG", hash_expr="x"
-    )
-    once = counters()
-    assert _applied_batch_id(ctr_path, cp1) == 1
     bb = spark.read.schema("x LONG").json(str(in_dir))
     want = sorted(
         tuple(r)
@@ -1159,32 +1228,10 @@ def test_batch_id_guard_skips_replayed_batches(spark, tmp_path):
     )
     assert once == want
 
-    # crash window: state swap committed batch 1, checkpoint did not.
-    # Relocate the checkpoint (same metadata query id = same lineage;
-    # a new path also dodges the session's cached commit-log handle)
-    # and drop the batch-1 commit so restart re-executes batch 1.
-    import shutil as _shutil
-
-    cp1b = str(tmp_path / "cp1_relocated")
-    _shutil.copytree(cp1, cp1b)
-    _os.remove(_os.path.join(cp1b, "commits", "1"))
-    _os.remove(_os.path.join(cp1b, "commits", ".1.crc"))
-    run_cm_sketch_stream(
-        spark, str(in_dir), ctr_path, cp1b, schema="x LONG", hash_expr="x"
-    )
-    assert counters() == want  # replayed batch 1 no-oped
-
     # fresh checkpoint = new lineage: the same files re-ingest and
     # every count doubles (marker scoping, not id comparison alone)
-    run_cm_sketch_stream(
-        spark,
-        str(in_dir),
-        ctr_path,
-        str(tmp_path / "cp2"),
-        schema="x LONG",
-        hash_expr="x",
-    )
-    doubled = {(r[0], r[1]): r[2] for r in counters()}
+    runner(spark, str(in_dir), state_path, str(tmp_path / "cp2"), **kw)
+    doubled = {(r[0], r[1]): r[2] for r in state()}
     for (seed, bucket), cnt in (
         (r[:2], r[2]) for r in want
     ):
