@@ -19,8 +19,8 @@ the final lift division:
    by the largest basket (TPC-H order ≤ 7 lines → ≤ 21 pairs; a
    real corpus needs the min-support cut to bound this).
 3. pair supports, item supports, and the basket count N are then
-   FILTERS over that one counts aggregate (persisted — see
-   _persist_owned below — because Catalyst pushes the filters
+   FILTERS over that one counts aggregate (pinned with
+   caches.pin, because Catalyst pushes the filters
    below the aggregate and would otherwise recompute the full
    upstream per consumer).
 4. lift(a,b) = N·supp(a,b) / (supp(a)·supp(b)) computed as ONE
@@ -50,39 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# The tagged-count aggregate is consumed by three branches (pair
-# supports, item supports, basket count). Catalyst pushes each
-# branch's filter below the aggregate, which breaks exchange-reuse
-# canonicalization — so without materialization the ENTIRE upstream
-# (scan → per-basket sets → explode → groupBy) executes once per
-# branch. The aggregate is pair-cardinality-sized (bounded by the
-# item catalog, ≪ input), so it is persisted and tracked for reclaim,
-# same lifecycle pattern as the dedup shingle tables
-# (operators/dedup.py:_persist_owned).
-_OWNED_PERSISTS: list[DataFrame] = []
-
-
-def clear_association_caches() -> None:
-    """Unpersist every counts frame frequent_pairs persisted
-    internally. Safe anytime — subsequent queries recompute."""
-    while _OWNED_PERSISTS:
-        try:
-            _OWNED_PERSISTS.pop().unpersist()
-        except Exception:
-            pass
-
-
-_MAX_OWNED = 4  # bench loops re-invoke the operator; evict oldest
-
-
-def _persist_owned(df: DataFrame) -> DataFrame:
-    while len(_OWNED_PERSISTS) >= _MAX_OWNED:
-        try:
-            _OWNED_PERSISTS.pop(0).unpersist()
-        except Exception:
-            pass
-    _OWNED_PERSISTS.append(df.persist())
-    return df
+from big_data_engineering_project_spark.caches import pin
 
 
 def frequent_pairs(
@@ -157,7 +125,7 @@ def frequent_pairs(
     marker_arr = F.array(
         F.struct(null_item.alias("a"), null_item.alias("b"))
     )
-    counts = _persist_owned(
+    counts = pin(
         baskets.select(
             F.explode(
                 F.concat(pairs_arr, singles_arr, marker_arr)

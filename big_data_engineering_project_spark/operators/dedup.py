@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from big_data_engineering_project_spark.caches import memo, pin
+
 # Polynomial-hash constants shared with the DuckDB oracle SQL
 # (plans/queries_pipeline.py) — change them together.
 HASH_PRIME = 1_000_000_007
@@ -44,30 +46,6 @@ MINHASH_SEEDS: tuple[tuple[int, int], ...] = (
 MINHASH_K = len(MINHASH_SEEDS)
 LSH_BANDS = 4
 LSH_ROWS = MINHASH_K // LSH_BANDS
-
-# Shingle frames persisted INTERNALLY (caller passed hashed=None) are
-# tracked here so long-lived sessions can reclaim executor memory —
-# the operators return lazy DataFrames, so they cannot unpersist their
-# own input. Callers that pass their own `hashed` frame own its
-# lifecycle (see plans/queries_pipeline.py's memo for the session-
-# shared variant).
-_OWNED_PERSISTS: list[DataFrame] = []
-
-
-def clear_dedup_caches() -> None:
-    """Unpersist every shingle frame the dedup operators persisted
-    internally (hashed=None calls). Safe to call anytime — subsequent
-    queries recompute; results are unaffected."""
-    while _OWNED_PERSISTS:
-        try:
-            _OWNED_PERSISTS.pop().unpersist()
-        except Exception:
-            pass
-
-
-def _persist_owned(df: DataFrame) -> DataFrame:
-    _OWNED_PERSISTS.append(df.persist())
-    return df
 
 
 def _char_poly_hash(s: Column) -> Column:
@@ -137,7 +115,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     max_bucket_size: int | None = None,
     max_bucket_frac: float | None = None,
-    arrow: bool = False,
     hashed: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs by n-gram Jaccard ≥ threshold.
@@ -147,8 +124,7 @@ def ngram_jaccard_pairs(
     Jaccard via per-doc set sizes. Output: (doc_a, doc_b, jaccard),
     doc_a < doc_b. Pass a prebuilt `hashed` (doc, hv) frame to share
     the shingle computation across several dedup jobs in one session;
-    internally-built frames are persisted and tracked — reclaim with
-    `clear_dedup_caches()`.
+    internally-built frames are pinned (`caches.pin`).
 
     High-DF cut: `max_bucket_size` is an absolute document-frequency
     floor; `max_bucket_frac` scales the cut with corpus size (cut =
@@ -177,8 +153,7 @@ def ngram_jaccard_pairs(
         # The exploded index itself is NOT persisted: re-exploding a
         # cached array column is a streamed narrow pass, cheaper than a
         # persist round-trip.
-        shingler = hashed_shingle_table_arrow if arrow else hashed_shingle_table
-        hashed = _persist_owned(shingler(df, id_col, text_col, n))
+        hashed = pin(hashed_shingle_table(df, id_col, text_col, n))
     # n_sh rides along each index row (8 bytes) so the size prefilter
     # can run inside the join condition.
     inv = hashed.select(
@@ -473,20 +448,17 @@ def minhash_signatures(
     id_col: str,
     text_col: str,
     n: int = 3,
-    arrow: bool = False,
     hashed: DataFrame | None = None,
 ) -> DataFrame:
     """(doc, sig array<long>[K]) — K minhashes over shingle poly-hashes.
 
     Hash each shingle once, then K (a·h+b) mod P minima — no explode,
     no shuffle for the signature computation itself. Minima are
-    order-independent over the shingle SET, so the arrow fast path
-    (sorted hv) and the Catalyst path (first-occurrence-ordered hv)
-    produce identical signatures.
+    order-independent over the shingle SET, so any `hashed` frame
+    holding the same sets gives identical signatures.
     """
     if hashed is None:
-        shingler = hashed_shingle_table_arrow if arrow else hashed_shingle_table
-        hashed = shingler(df, id_col, text_col, n)
+        hashed = hashed_shingle_table(df, id_col, text_col, n)
     return with_minhash_signature(hashed).select("doc", "sig")
 
 
@@ -535,112 +507,17 @@ def hashed_shingle_table(
     return base.select("doc", hv.alias("hv")).filter(F.size("hv") > 0)
 
 
-def hashed_shingle_table_arrow(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
-    """Arrow fast path for `hashed_shingle_table`: identical arithmetic
-    (same tokens, same char poly hash, same 3-window combine, distinct)
-    but computed in a pandas UDF with fully-vectorized numpy — batch
-    chars land in one flat codepoint array, per-token Horner folds
-    become `codes · B^exp` + `np.add.reduceat`, shingle combines and
-    dedup are array slices. No per-char (or even per-token) Python.
-
-    Why it exists: Catalyst higher-order functions are interpreted
-    (outside whole-stage codegen), so the char fold is the hot spot of
-    every shingle-based dedup. Measured at sf0.1/local[32]: the
-    shingler alone is 2-5× faster warm (≈1.8 s vs 4-9 s), but NOT
-    default — cold or in the mixed bench the Python-worker spin-up +
-    Arrow transfer of the text column erases the gain (headline bench
-    total 21.6 s catalyst-default vs 30.5 s arrow-default). It becomes
-    the right choice on long-running jobs over large corpora where
-    workers stay warm and per-doc CPU dominates; flip `arrow=True`
-    there. `tests/test_operators.py` pins bit-equality of both paths;
-    the DuckDB oracles keep validating end results.
-
-    Output hv is SORTED (np.unique) rather than first-occurrence
-    order; every consumer treats hv as a set.
-    """
-    import re
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    if n != 3:
-        raise NotImplementedError("hashed shingles support n=3 only")
-
-    from big_data_engineering_project_spark.sources.catalog import spread
-
-    # Java regex \s (ASCII-only) — NOT Python str.split(), which also
-    # splits on Unicode whitespace and would diverge from the Catalyst
-    # tokenizer on exotic input.
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-
-    def batch_hv(texts):  # (pd.Series of str) -> pd.Series of list[int]
-        docs_tokens = [
-            [t for t in ws.split(s.lower()) if t] if s is not None else []
-            for s in texts
-        ]
-        n_docs = len(docs_tokens)
-        n_toks = np.fromiter(
-            (len(ts) for ts in docs_tokens), dtype=np.int64, count=n_docs
-        )
-        flat = [t for ts in docs_tokens for t in ts]
-        empty = pd.Series([[] for _ in range(n_docs)])
-        if not flat:
-            return empty
-        tok_lens = np.fromiter(
-            (len(t) for t in flat), dtype=np.int64, count=len(flat)
-        )
-        codes = np.frombuffer(
-            "".join(flat).encode("utf-32-le"), dtype=np.uint32
-        ).astype(np.int64)
-        offsets = np.zeros(len(flat), dtype=np.int64)
-        np.cumsum(tok_lens[:-1], out=offsets[1:])
-        pow_b = np.empty(int(tok_lens.max()), dtype=np.int64)
-        pow_b[0] = 1
-        for i in range(1, len(pow_b)):
-            pow_b[i] = pow_b[i - 1] * HASH_BASE % HASH_PRIME
-        pos = np.arange(len(codes)) - np.repeat(offsets, tok_lens)
-        exp = np.repeat(tok_lens, tok_lens) - 1 - pos
-        # codepoint·B^e < 2^21·2^30 ≪ 2^63; per-token sums of <2^30
-        # terms can't overflow either → one mod at the end ≡ Horner.
-        ht = np.add.reduceat(codes * pow_b[exp] % HASH_PRIME, offsets) % HASH_PRIME
-        doc_of_tok = np.repeat(np.arange(n_docs), n_toks)
-        if len(ht) < 3:
-            return empty
-        sh = ((ht[:-2] * HASH_BASE + ht[1:-1]) % HASH_PRIME * HASH_BASE + ht[2:]) % HASH_PRIME
-        in_doc = doc_of_tok[:-2] == doc_of_tok[2:]
-        sh, sh_doc = sh[in_doc], doc_of_tok[:-2][in_doc]
-        # distinct per doc: P < 2^30 → (doc, hash) packs into one key
-        uniq = np.unique((sh_doc << 31) | sh)
-        per_doc = np.bincount(uniq >> 31, minlength=n_docs)
-        return pd.Series(
-            [a.tolist() for a in np.split(uniq & 0x7FFFFFFF, np.cumsum(per_doc)[:-1])]
-        )
-
-    hv_udf = pandas_udf(batch_hv, "array<long>")
-    base = spread(df.select(F.col(id_col).alias("doc"), F.col(text_col)))
-    return base.select("doc", hv_udf(F.col(text_col)).alias("hv")).filter(
-        F.size("hv") > 0
-    )
-
-
 def _minhash_sig_expr() -> Column:
     # one immutable tree per process (16 seeds x a transform over the
     # fixed 'hv' column name): ~0.58 s of py4j construction per call
     # otherwise, paid by every minhash caller per bench rep (r15
     # expression-memo pass)
-    from big_data_engineering_project_spark.functions.expr_memo import (
-        memo_expr,
-    )
-
     def min_hash(a: int, b: int) -> Column:
         # NB: factory closure, not default-arg lambda — extra params
         # would change the lambda arity Spark uses to bind HOF args.
         return F.array_min(F.transform("hv", lambda h: (a * h + b) % HASH_PRIME))
 
-    return memo_expr(
+    return memo(
         ("minhash_sig", MINHASH_SEEDS),
         lambda: F.array(*[min_hash(a, b) for a, b in MINHASH_SEEDS]),
     )
@@ -653,9 +530,6 @@ def with_minhash_signature(hashed: DataFrame) -> DataFrame:
 def minhash_band_buckets(sig_df: DataFrame) -> DataFrame:
     """(doc, band, bucket) — LSH banding: bucket = order-independent
     polynomial combine of the band's signature rows mod P."""
-    from big_data_engineering_project_spark.functions.expr_memo import (
-        memo_expr,
-    )
 
     def build() -> Column:
         bands = []
@@ -669,7 +543,7 @@ def minhash_band_buckets(sig_df: DataFrame) -> DataFrame:
             )
         return F.explode(F.array(*bands))
 
-    bb = memo_expr(("minhash_bands", LSH_BANDS, LSH_ROWS), build)
+    bb = memo(("minhash_bands", LSH_BANDS, LSH_ROWS), build)
     return sig_df.select("doc", bb.alias("bb")).select(
         "doc", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
     )
@@ -681,7 +555,6 @@ def minhash_lsh_pairs(
     text_col: str,
     threshold: float,
     n: int = 3,
-    arrow: bool = False,
     hashed: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs, Jaccard-verified.
@@ -694,12 +567,10 @@ def minhash_lsh_pairs(
     shingle computation across dedup jobs in one session.
     """
     if hashed is None:
-        shingler = hashed_shingle_table_arrow if arrow else hashed_shingle_table
-        # One computation feeds signatures AND verification (cached:
+        # One computation feeds signatures AND verification (pinned:
         # the char-fold hashing is the expensive step; the frame is
-        # compact — one long array per doc). Tracked for
-        # clear_dedup_caches() — the lazy return can't unpersist itself.
-        hashed = _persist_owned(shingler(df, id_col, text_col, n))
+        # compact — one long array per doc).
+        hashed = pin(hashed_shingle_table(df, id_col, text_col, n))
     sigs = with_minhash_signature(hashed).select("doc", "sig")
     buckets = minhash_band_buckets(sigs)
     a = buckets.alias("a")
@@ -724,11 +595,7 @@ def verify_jaccard_pairs(
     over HASHED shingle sets — long-array intersects, no document text
     in the shuffle. Shared by the batch LSH pass and the streaming
     band-index runner so stream ≡ batch down to the division."""
-    from big_data_engineering_project_spark.functions.expr_memo import (
-        memo_expr,
-    )
-
-    inter, jacc = memo_expr(
+    inter, jacc = memo(
         ("verify_jaccard",),
         lambda: (
             F.size(F.array_intersect("sa", "sb")),
@@ -1360,10 +1227,8 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
         else:
             raise RuntimeError(f"CC did not converge in {max_iters} rounds")
         # The final labels frame stays persisted (it backs the returned
-        # plan) but is tracked so clear_dedup_caches() can reclaim it —
-        # otherwise each call leaks one cached frame in a long session.
-        _OWNED_PERSISTS.append(labels)
-        return labels.select("doc", F.col("label").alias("keeper"))
+        # plan); pinning it lets a long session reclaim it.
+        return pin(labels).select("doc", F.col("label").alias("keeper"))
     except BaseException:
         labels.unpersist()
         raise
@@ -1402,13 +1267,10 @@ def ngram_jaccard_rs(
     must be disjoint or comparisons are still well-defined — a doc
     appearing on both sides simply matches itself at jaccard 1.
     """
-    shingler = hashed_shingle_table
     if hashed_new is None:
-        hashed_new = _persist_owned(shingler(new_df, id_col, text_col, n))
+        hashed_new = pin(hashed_shingle_table(new_df, id_col, text_col, n))
     if hashed_corpus is None:
-        hashed_corpus = _persist_owned(
-            shingler(corpus_df, id_col, text_col, n)
-        )
+        hashed_corpus = pin(hashed_shingle_table(corpus_df, id_col, text_col, n))
     inv_n = hashed_new.select(
         "doc", F.explode("hv").alias("s"),
         F.size("hv").cast("long").alias("n_sh"),
@@ -1669,7 +1531,7 @@ def shingle_containment_pairs(
         frac = Fraction(threshold).limit_denominator(1_000_000)
         tau_num, tau_den = frac.numerator, frac.denominator
     if hashed is None:
-        hashed = _persist_owned(hashed_shingle_table(df, id_col, text_col, n))
+        hashed = pin(hashed_shingle_table(df, id_col, text_col, n))
     inv = hashed.select("doc", F.explode("hv").alias("s"))
     sizes = hashed.select("doc", F.size("hv").cast("long").alias("n_sh"))
     if max_bucket_size is not None or max_bucket_frac is not None:
@@ -1738,7 +1600,7 @@ def minhash_calibration_pairs(
     removed — cost is bounded by the SAME candidate discipline.
     """
     if hashed is None:
-        hashed = _persist_owned(hashed_shingle_table(df, id_col, text_col, n))
+        hashed = pin(hashed_shingle_table(df, id_col, text_col, n))
     sigs = with_minhash_signature(hashed).select("doc", "sig")
     buckets = minhash_band_buckets(sigs)
     a, b = buckets.alias("a"), buckets.alias("b")

@@ -37,51 +37,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from big_data_engineering_project_spark.caches import pin
 from big_data_engineering_project_spark.operators.sketches import (
     mg_bucket_sql,
 )
 
 DEFAULT_FOLDS = 4
 DEFAULT_SMOOTH_M = 100
-
-# The per-(category, fold) stats frame is persisted INTERNALLY: four
-# derived aggregates (totals per category, per fold, global) consume
-# it, and without the pin Spark re-derives each from its own scan of
-# the fact table — 4 scans of 100 TB instead of one. The frame itself
-# is bounded (#categories × n_folds rows). Same lifecycle contract as
-# dedup._OWNED_PERSISTS: the returned DataFrame is lazy, so the
-# operator cannot unpersist its own frame; long-lived sessions reclaim
-# via clear_features_caches() (wired into caches.clear_all_owned_caches).
-_OWNED_PERSISTS: list[DataFrame] = []
-# r8 ADVICE #4: a long-lived serving loop that repeatedly finishes the
-# streaming-maintained state would otherwise accumulate pinned frames
-# without bound — cap the registry and evict oldest-first (unpersist
-# is always safe: any still-lazy consumer of an evicted frame simply
-# recomputes its bounded #categories × n_folds rows).
-_MAX_OWNED_PERSISTS = 8
-
-
-def _pin(st: DataFrame) -> DataFrame:
-    st = st.persist(StorageLevel.MEMORY_AND_DISK)
-    _OWNED_PERSISTS.append(st)
-    while len(_OWNED_PERSISTS) > _MAX_OWNED_PERSISTS:
-        try:
-            _OWNED_PERSISTS.pop(0).unpersist()
-        except Exception:
-            pass
-    return st
-
-
-def clear_features_caches() -> None:
-    """Unpersist every stats frame target_encode_oof pinned. Safe to
-    call anytime — subsequent queries recompute; results unaffected."""
-    while _OWNED_PERSISTS:
-        try:
-            _OWNED_PERSISTS.pop().unpersist()
-        except Exception:
-            pass
 
 
 def target_encode_oof(
@@ -155,12 +118,13 @@ def oof_finish(st: DataFrame, m: int = DEFAULT_SMOOTH_M) -> DataFrame:
     so stream ≡ batch is equality of the SAME arithmetic over equal
     states.
 
-    EVERY call pins the stats frame (four derived aggregates consume
-    it — see the _OWNED_PERSISTS comment); the registry is capped at
-    _MAX_OWNED_PERSISTS with oldest-first eviction, so a serving loop
-    that re-finishes the streaming-maintained state cannot accumulate
-    pins. clear_features_caches() reclaims everything immediately."""
-    st = _pin(st)
+    EVERY call pins the stats frame (`caches.pin`): four derived
+    aggregates consume it, and without the pin Spark re-derives each
+    from its own scan of the fact table. The frame itself is bounded
+    (#categories × n_folds rows), and the pin FIFO is bounded too, so
+    a serving loop that re-finishes the streaming-maintained state
+    cannot accumulate pins."""
+    st = pin(st)
     tot = st.groupBy("category").agg(
         F.sum("n_f").cast("long").alias("__n_t"),
         F.sum("s_f").alias("__s_t"),
@@ -786,7 +750,7 @@ def cohen_kappa(
         )
         .agg(F.count(F.lit(1)).cast("long").alias("__n"))
     )
-    cells = _pin(cells)
+    cells = pin(cells)
     dec = "decimal(38,0)"
     r = cells.groupBy("__a").agg(F.sum("__n").cast(dec).alias("__r"))
     c = cells.groupBy("__b").agg(F.sum("__n").cast(dec).alias("__c"))
@@ -858,7 +822,7 @@ def fleiss_kappa(
     )
     item_tot = cells.groupBy("__i").agg(F.sum("__n").alias("__tot"))
     complete = item_tot.filter(F.col("__tot") == n).select("__i")
-    kept = _pin(cells.join(complete, "__i"))
+    kept = pin(cells.join(complete, "__i"))
     s2n = kept.agg(
         F.sum((F.col("__n") * F.col("__n")).cast(dec)).alias("__s2"),
         F.count_distinct(F.col("__i")).cast(dec).alias("__ni"),

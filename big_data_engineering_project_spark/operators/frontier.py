@@ -30,23 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-# Range-shuffled frames persisted internally (see global_row_number's
-# rationale in operators/linkage.py: both passes must observe ONE
-# evaluation of the range shuffle, or the pid → prefix-max mapping can
-# disagree with the local ranks' bucketing).
-_OWNED_PERSISTS: list[DataFrame] = []
-
-
-def clear_frontier_caches() -> None:
-    """Unpersist every frame pareto_frontier_2d pinned. Safe to call
-    anytime — subsequent queries recompute; results are unaffected."""
-    while _OWNED_PERSISTS:
-        try:
-            _OWNED_PERSISTS.pop().unpersist()
-        except Exception:
-            pass
+from big_data_engineering_project_spark.caches import pin
 
 
 def pareto_frontier_2d(
@@ -70,21 +55,22 @@ def pareto_frontier_2d(
     parted = groups.repartitionByRange(n, "__x").withColumn(
         "__pid", F.spark_partition_id()
     )
-    # Persisted (MEMORY_AND_DISK, spills — never recomputes) so the
+    # Pinned (spills — never recomputes) so the
     # local prefix maxes and the per-partition maxes read the SAME
     # evaluation of the range shuffle: repartitionByRange re-samples
     # boundaries per evaluation and a shuffled upstream's row order is
     # fetch-order-dependent, so two evaluations can bucket differently
     # (SPARK-23207 family) and the pid-keyed join below would mix them.
-    local = parted.withColumn(
-        "__lmax",
-        F.max("__gmax").over(
-            Window.partitionBy("__pid")
-            .orderBy("__x")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        ),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _OWNED_PERSISTS.append(local)
+    local = pin(
+        parted.withColumn(
+            "__lmax",
+            F.max("__gmax").over(
+                Window.partitionBy("__pid")
+                .orderBy("__x")
+                .rowsBetween(Window.unboundedPreceding, -1)
+            ),
+        )
+    )
     # per-partition maxes -> exclusive prefix max: <= n rows, the only
     # single-task window, broadcast back.
     pmax = local.groupBy("__pid").agg(F.max("__gmax").alias("__pm"))

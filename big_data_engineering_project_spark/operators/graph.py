@@ -33,6 +33,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from big_data_engineering_project_spark.caches import pin
+
 SCALE = 10**12
 DAMP_NUM = 85
 DAMP_DEN = 100
@@ -83,11 +85,10 @@ def pagerank(
     # their lineage — when `edges` is itself derived (a windowed
     # transition count, a support-filtered pair table), the derivation
     # re-executes once per iteration unless the frame is materialized.
-    # Persist both once (owned-cache lifecycle, reclaimed by
-    # clear_graph_caches): iterations then read the cached frames, and
-    # the nodes.count() below materializes the node cache up front.
+    # Pin both once: iterations then read the cached frames, and the
+    # nodes.count() below materializes the node cache up front.
     # Results are unchanged — persistence is an execution boundary.
-    nodes = _persist_owned(
+    nodes = pin(
         edges.select(e_src.alias("node"))
         .union(edges.select(e_dst.alias("node")))
         .distinct()
@@ -101,7 +102,7 @@ def pagerank(
     # it. out_w is node-sized, so the join is left to AQE: broadcast
     # when it fits, sort-merge co-partitioned with the groupBy above
     # when it doesn't.
-    e = _persist_owned(
+    e = pin(
         edges.select(
             e_src.alias("__s"), e_dst.alias("__d"), e_w.alias("__w")
         ).join(out_w, "__s")
@@ -188,11 +189,11 @@ def label_propagation(
         materialize = lambda d: d.localCheckpoint()  # noqa: E731
         materialize_every = _LPA_PURE_LINEAGE_MAX_ITERS
     e_src, e_dst, e_w = F.col(src), F.col(dst), F.col(weight)
-    # The undirected edge frame is static across iterations; persist it
+    # The undirected edge frame is static across iterations; pin it
     # once (same rationale as pagerank above — when `edges` is derived,
     # e.g. the sparsified transition graph, every iteration's vote join
-    # would otherwise re-run the derivation). Owned-cache lifecycle.
-    und = _persist_owned(
+    # would otherwise re-run the derivation).
+    und = pin(
         edges.select(
             e_src.alias("a"), e_dst.alias("b"), e_w.alias("__w")
         ).union(
@@ -216,39 +217,6 @@ def label_propagation(
         if materialize is not None and (it + 1) % materialize_every == 0:
             lab = materialize(lab)
     return lab
-
-
-# triangle_count's oriented edge frame feeds three consumers (two
-# wedge sides + the closing join); Catalyst recomputes the branch per
-# consumer, so the edge-cardinality frame is persisted with the same
-# bounded owned-cache lifecycle as the association counts table
-# (operators/association.py).
-_OWNED_PERSISTS: list[DataFrame] = []
-# Sized for the deepest single-query composition (pagerank holds 2 —
-# nodes + out-weighted edges — and a pipeline may chain 2-3 graph ops);
-# all owned frames are node/edge-cardinality summaries, tiny vs the
-# inputs, and FIFO eviction must never reclaim a frame the CURRENT
-# query still iterates over.
-_MAX_OWNED = 8
-
-
-def clear_graph_caches() -> None:
-    """Unpersist every frame triangle_count persisted internally."""
-    while _OWNED_PERSISTS:
-        try:
-            _OWNED_PERSISTS.pop().unpersist()
-        except Exception:
-            pass
-
-
-def _persist_owned(df: DataFrame) -> DataFrame:
-    while len(_OWNED_PERSISTS) >= _MAX_OWNED:
-        try:
-            _OWNED_PERSISTS.pop(0).unpersist()
-        except Exception:
-            pass
-    _OWNED_PERSISTS.append(df.persist())
-    return df
 
 
 def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -295,7 +263,7 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     db = F.broadcast(deg.select(F.col("n").alias("b"), F.col("d").alias("__db")))
     ka = F.struct(F.col("__da").alias("d"), F.col("a").alias("n"))
     kb = F.struct(F.col("__db").alias("d"), F.col("b").alias("n"))
-    o = _persist_owned(
+    o = pin(
         e.join(da, "a")
         .join(db, "b")
         .select(
@@ -444,9 +412,9 @@ def k_core(
         materialize = lambda d: d.localCheckpoint()  # noqa: E731
         materialize_every = 1
     # The symmetrized start frame feeds the first peel's degree agg AND
-    # both its semi joins; persist it once so a derived `edges` input
-    # is not re-derived per consumer (owned-cache lifecycle).
-    und = _persist_owned(
+    # both its semi joins; pin it once so a derived `edges` input
+    # is not re-derived per consumer.
+    und = pin(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
@@ -519,10 +487,9 @@ def shortest_path_costs(
     if materialize is None and iters > _SSSP_PURE_LINEAGE_MAX_ITERS:
         materialize = lambda d: d.localCheckpoint()  # noqa: E731
         materialize_every = 1
-    # Static edge list re-joined every round — persist once (owned-
-    # cache lifecycle) so a derived edge frame is not re-derived
-    # per relaxation.
-    edges = _persist_owned(edges)
+    # Static edge list re-joined every round — pin it once so a
+    # derived edge frame is not re-derived per relaxation.
+    edges = pin(edges)
     dist = sources.select(
         F.col(sources.columns[0]).alias("node"),
         F.lit(0).cast("long").alias("cost"),
@@ -579,17 +546,17 @@ def link_prediction(
     # `e` feeds three consumers (both union arms via `und`, and the
     # final anti-join) and `ctr` feeds both sides of the wedge
     # self-join — when `edges` is derived (a support-filtered pair
-    # table), each consumer would re-run the derivation. Persist both
-    # once (owned-cache lifecycle); `ctr` is edge-cardinality ×2 rows
-    # of (long, long, long), bounded.
-    e = _persist_owned(
+    # table), each consumer would re-run the derivation. Pin both
+    # once; `ctr` is edge-cardinality ×2 rows of (long, long, long),
+    # bounded.
+    e = pin(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     )
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     if max_center_degree is not None:
         deg = deg.filter(F.col("deg") <= int(max_center_degree))
-    ctr = _persist_owned(
+    ctr = pin(
         und.join(deg, "a").select(
             F.col("a").alias("z"),
             F.col("b").alias("n"),

@@ -31,25 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-# Range-shuffled frames persisted INTERNALLY by global_row_number are
-# tracked here so long-lived sessions can reclaim executor memory —
-# the operator returns a lazy DataFrame, so it cannot unpersist its
-# own input (same lifecycle contract as operators/dedup.py's
-# _OWNED_PERSISTS).
-_OWNED_PERSISTS: list[DataFrame] = []
-
-
-def clear_linkage_caches() -> None:
-    """Unpersist every range-shuffled frame global_row_number pinned.
-    Safe to call anytime — subsequent queries recompute; results are
-    unaffected."""
-    while _OWNED_PERSISTS:
-        try:
-            _OWNED_PERSISTS.pop().unpersist()
-        except Exception:
-            pass
+from big_data_engineering_project_spark.caches import pin
 
 
 def global_row_number(
@@ -63,7 +46,7 @@ def global_row_number(
     (local rank + per-partition counts); the offsets table is
     ≤ n_parts rows and broadcasts.
 
-    The ranked frame is persisted (MEMORY_AND_DISK — spills, never
+    The ranked frame is pinned (`caches.pin` — spills, never
     recomputes) because BOTH passes must observe ONE evaluation of the
     range shuffle: repartitionByRange re-samples its boundaries on
     every evaluation, and when the upstream frame is itself a shuffle
@@ -73,17 +56,18 @@ def global_row_number(
     from another yields ranks > n (observed as NTILE emitting k+1
     tiles on sf0.1). With a single materialization the result is the
     exact global row number regardless of where the sampled boundaries
-    fell. Reclaim with clear_linkage_caches()."""
+    fell."""
     spark = df.sparkSession
     n = n_parts or spark.sparkContext.defaultParallelism
     parted = df.repartitionByRange(n, *order_cols).withColumn(
         "__pid", F.spark_partition_id()
     )
-    local = parted.withColumn(
-        "__lrn",
-        F.row_number().over(Window.partitionBy("__pid").orderBy(*order_cols)),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _OWNED_PERSISTS.append(local)
+    local = pin(
+        parted.withColumn(
+            "__lrn",
+            F.row_number().over(Window.partitionBy("__pid").orderBy(*order_cols)),
+        )
+    )
     # cumulative offsets: a window over ≤ n_parts rows — bounded by
     # construction, the ONLY single-task step in the plan. Derived
     # from the PERSISTED frame so the pid → count mapping is the one

@@ -436,9 +436,7 @@ def budget_mix_select(
     """
     from pyspark.sql import Window
 
-    from big_data_engineering_project_spark.functions.expr_memo import (
-        memo_expr,
-    )
+    from big_data_engineering_project_spark.caches import memo
 
     def build():
         ppm_map = F.create_map(
@@ -473,7 +471,7 @@ def budget_mix_select(
     # pass: ~1.0 s of py4j construction per call otherwise); the
     # withColumn chain is collapsed into staged selects — the
     # optimized plan is unchanged
-    e = memo_expr(
+    e = memo(
         (
             "budget_mix",
             strata_col,

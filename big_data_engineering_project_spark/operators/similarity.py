@@ -21,43 +21,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from big_data_engineering_project_spark.caches import memo
 from big_data_engineering_project_spark.sources.catalog import spread
 
 HASH_PRIME = 1_000_000_007
 HASH_BASE = 31  # shared with dedup._char_poly_hash (same fold)
-
-# Narrow derived frames that feed multiple downstream consumers (the
-# LSH band table feeds the bucket-size cut AND both sides of the
-# candidate self-join; the norm table feeds both verify probes) —
-# without a pin each consumer re-runs the explode/aggregate lineage
-# from the corpus scan. Same owned-cache lifecycle as the dedup
-# shingle memo; reclaimed via clear_similarity_caches() (wired into
-# caches.clear_all_owned_caches).
-_OWNED_PERSISTS: list[DataFrame] = []
-_MAX_OWNED_PERSISTS = 8
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _OWNED_PERSISTS.append(df)
-    while len(_OWNED_PERSISTS) > _MAX_OWNED_PERSISTS:
-        try:
-            _OWNED_PERSISTS.pop(0).unpersist()
-        except Exception:
-            pass
-    return df
-
-
-def clear_similarity_caches() -> None:
-    """Unpersist every frame this module pinned. Safe anytime —
-    consumers recompute their bounded frames; results unaffected."""
-    while _OWNED_PERSISTS:
-        try:
-            _OWNED_PERSISTS.pop().unpersist()
-        except Exception:
-            pass
 
 
 def as_double(vec: Column) -> Column:
@@ -84,15 +53,8 @@ def as_double(vec: Column) -> Column:
 #     double (what Spark's round() computes for scale 0 — see
 #     _round_half_away), dots/norms are exact int64 sums, and the
 #     final divide mirrors Spark's NULL-on-zero-denominator.
-# The fold implementations below remain as the expression-only
-# reference (pinned equal by pytest; SPARK_GRAFT_SERVE_FOLD=1 routes
-# the operators back to them for A/B adjudication).
-
-
-def _serve_via_arrow() -> bool:
-    import os
-
-    return os.environ.get("SPARK_GRAFT_SERVE_FOLD") != "1"
+# The int8 expression fold stays as the reference that pytest pins
+# the Arrow path equal to (`_fold_int8_topk`).
 
 
 def _list_matrix(arr, np):
@@ -476,12 +438,8 @@ def _cell_expr_m(vec_key: tuple, centroids, vec: Column) -> Column:
     """Memoized _cell_expr: ~0.9 s of py4j literal construction per
     call (k × dims F.lit's). `vec_key` must uniquely describe how
     `vec` is built from fixed column names (r15 expression-memo
-    pass — see functions/expr_memo.py)."""
-    from big_data_engineering_project_spark.functions.expr_memo import (
-        memo_expr,
-    )
-
-    return memo_expr(
+    pass — see caches.py)."""
+    return memo(
         ("ivf_cell", vec_key, _quant_key(centroids)),
         lambda: _cell_expr(centroids, vec),
     )
@@ -930,11 +888,7 @@ def _pq_codes_expr_m(dv_key: tuple, dv, codebooks) -> Column:
     index build/append/encode otherwise. `dv_key` must uniquely
     describe how `dv` is built from fixed column names (r15
     expression-memo pass)."""
-    from big_data_engineering_project_spark.functions.expr_memo import (
-        memo_expr,
-    )
-
-    return memo_expr(
+    return memo(
         ("pq_codes", dv_key, _quant_key(codebooks)),
         lambda: _pq_codes_expr(dv, codebooks),
     )
@@ -1001,11 +955,7 @@ def _adc_cosine_expr(qvec: list[float], codebooks: list[list[list[float]]]):
     values — the tree references only the fixed `codes` column, so
     bench reps and repeat serves of the same query skip the ~0.5 s
     of literal-table construction (r15 expression-memo pass)."""
-    from big_data_engineering_project_spark.functions.expr_memo import (
-        memo_expr,
-    )
-
-    return memo_expr(
+    return memo(
         ("adc_cosine", tuple(qvec), _quant_key(codebooks)),
         lambda: _adc_cosine_expr_build(qvec, codebooks),
     )
@@ -1049,11 +999,7 @@ def _adc_ladder_cols(
     oracle replays the same floors from the SQL-derivable codebook
     (plans/queries_pipeline.py:_pq_adc_oracle). Memoized on the
     (query, codebooks, ladder) values like _adc_cosine_expr."""
-    from big_data_engineering_project_spark.functions.expr_memo import (
-        memo_expr,
-    )
-
-    return memo_expr(
+    return memo(
         ("adc_ladder", tuple(qvec), _quant_key(codebooks), int(ladder)),
         lambda: _adc_ladder_cols_build(qvec, codebooks, ladder),
     )
@@ -2617,10 +2563,20 @@ def int8_topk(
     recall vs the exact ranking is pinned by pytest. Same plan shape
     as brute_force_topk: broadcast 1-row quantized query, zero shuffle
     of the vector table, TakeOrderedAndProject. Quantize+score run in
-    the Arrow/numpy path by default (bit-identical — see the module
-    comment; SPARK_GRAFT_SERVE_FOLD=1 restores the expression fold)."""
-    if _serve_via_arrow():
-        return _arrow_int8_topk(vectors, query_df, k, id_col, vec_col)
+    the Arrow/numpy path (bit-identical to `_fold_int8_topk` — see
+    the module comment)."""
+    return _arrow_int8_topk(vectors, query_df, k, id_col, vec_col)
+
+
+def _fold_int8_topk(
+    vectors: DataFrame,
+    query_df: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """`int8_topk` as one Catalyst expression fold: the reference the
+    Arrow path is tested against."""
     qv = int8_quantize(vectors, id_col, vec_col)
     qq = int8_quantize(
         query_df.select(F.lit(-1).alias(id_col), F.col(vec_col)),

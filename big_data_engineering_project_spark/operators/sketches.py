@@ -35,40 +35,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from big_data_engineering_project_spark.caches import pin
 from big_data_engineering_project_spark.operators.dedup import HASH_PRIME
-
-# Bounded summary frames that feed MULTIPLE downstream consumers
-# (e.g. _mg_prune's top-(k+1) frame feeds both the offsets agg and the
-# survivor join; a merge stacks two prune layers, so without a pin the
-# per-half scan+groupBy lineage re-executes once per consumer — 4+
-# scans of the fact table instead of 2 at 100 TB). Same owned-cache
-# lifecycle as features._OWNED_PERSISTS; reclaimed via
-# clear_sketches_caches() (wired into caches.clear_all_owned_caches).
-_OWNED_PERSISTS: list[DataFrame] = []
-_MAX_OWNED_PERSISTS = 8
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _OWNED_PERSISTS.append(df)
-    while len(_OWNED_PERSISTS) > _MAX_OWNED_PERSISTS:
-        try:
-            _OWNED_PERSISTS.pop(0).unpersist()
-        except Exception:
-            pass
-    return df
-
-
-def clear_sketches_caches() -> None:
-    """Unpersist every summary frame this module pinned. Safe anytime —
-    consumers recompute their bounded frames; results unaffected."""
-    while _OWNED_PERSISTS:
-        try:
-            _OWNED_PERSISTS.pop().unpersist()
-        except Exception:
-            pass
 
 DEFAULT_K = 64
 DEFAULT_SHARDS = 32
@@ -490,7 +459,7 @@ def _mg_prune(
     # and the survivor join below — pin it so the upstream counts
     # lineage (a full fact-table scan+groupBy when called from
     # mg_summary) executes once per prune, not once per consumer.
-    topk1 = _pin(
+    topk1 = pin(
         counts.withColumn("__rn", F.row_number().over(wn))
         .filter(F.col("__rn") <= k + 1)
     )

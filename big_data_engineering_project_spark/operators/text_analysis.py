@@ -11,6 +11,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from big_data_engineering_project_spark.caches import memo
 from big_data_engineering_project_spark.functions.lexicons import (
     LANG_MARKERS,
     STOPWORDS,
@@ -106,37 +107,15 @@ def text_profile_col(text: Column) -> Column:
     return F.aggregate(toks, init, step, finish)
 
 
-# The fused profile is a LARGE expression tree (7-field struct step ×
-# stopword/marker isin lists): constructing it costs ~0.8 s of pure
-# driver-side py4j traffic, paid per builder call — per bench rep, per
-# streaming query start. The tree is an immutable unresolved
-# expression, reusable across any number of plans in the process, so
-# memoize per input column name. (Results are unchanged — this caches
-# an expression OBJECT, never data.) The Column holds py4j handles
-# bound to the JVM gateway, so the key includes a gateway token: a
-# restarted gateway in the same Python process gets a fresh tree
-# instead of stale java refs that fail opaquely (r14 ADVICE).
-_TEXT_PROFILE_MEMO: dict[tuple[int, str], Column] = {}
-
-
-def _gateway_token() -> int:
-    from pyspark import SparkContext
-
-    return id(SparkContext._gateway)
-
-
 def text_profile_named(col_name: str = "text") -> Column:
     """Memoized `text_profile_col(F.col(col_name))` — use this from
     query builders / streaming starts; fall back to text_profile_col
-    only for non-trivial input expressions."""
-    key = (_gateway_token(), col_name)
-    memo = _TEXT_PROFILE_MEMO.get(key)
-    if memo is None:
-        for stale in [k for k in _TEXT_PROFILE_MEMO if k[0] != key[0]]:
-            _TEXT_PROFILE_MEMO.pop(stale, None)
-        memo = text_profile_col(F.col(col_name))
-        _TEXT_PROFILE_MEMO[key] = memo
-    return memo
+    only for non-trivial input expressions. The fused profile is a
+    LARGE expression tree (7-field struct step × stopword/marker isin
+    lists) costing ~0.8 s of py4j construction per call."""
+    return memo(
+        ("text_profile", col_name), lambda: text_profile_col(F.col(col_name))
+    )
 
 
 def lang_id_col(tokens: Column) -> Column:
@@ -1281,10 +1260,6 @@ def pack_concat_chunks(
     ~1.4 s of pure py4j traffic per call (r15 expression-memo pass);
     the produced plan is unchanged (CollapseProject produced the same
     inlined projection from the old chain)."""
-    from big_data_engineering_project_spark.functions.expr_memo import (
-        memo_expr,
-    )
-
     c = int(chunk_tokens)
 
     def build():
@@ -1310,7 +1285,7 @@ def pack_concat_chunks(
             ).cast("long"),
         }
 
-    e = memo_expr(
+    e = memo(
         ("pack_chunks", c, id_col, text_col, int(bucket_size)), build
     )
     base = docs.select(

@@ -11,6 +11,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from big_data_engineering_project_spark.caches import memo, pin
 from big_data_engineering_project_spark.functions.lexicons import (
     LANG_MARKERS,
     STOPWORDS,
@@ -37,55 +38,20 @@ B = HASH_BASE
 #
 # Three dedup queries (ngram-jaccard, minhash-lsh, minhash-signatures)
 # start from the identical (doc, hv) shingle-hash frame — the single
-# most expensive expression in the suite. Memoize it per (app, sf_dir)
-# and persist, so one session running several dedup jobs computes the
-# shingles once (a materialized common subexpression; at cluster scale
-# this is the "shingle table" a production dedup pipeline would write
-# out once and reuse). MEMORY_AND_DISK default keeps it spill-safe.
-
-_HASHED_MEMO: dict[tuple[str, str, int], DataFrame] = {}
+# most expensive expression in the suite. Memoize it per (session,
+# sf_dir) and persist, so one session running several dedup jobs
+# computes the shingles once (a materialized common subexpression; at
+# cluster scale this is the "shingle table" a production dedup
+# pipeline would write out once and reuse). The default level spills.
 
 
 def _shared_hashed(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    # Evict entries from dead sessions so a long-lived process touching
-    # many SparkSessions doesn't accumulate persisted frames (the stale
-    # unpersist is best-effort — the old context may already be gone).
-    for stale in [k for k in _HASHED_MEMO if k[0] != app_id]:
-        try:
-            _HASHED_MEMO.pop(stale).unpersist()
-        except Exception:
-            pass
-    key = (app_id, sf_dir, n)
-    if key not in _HASHED_MEMO:
-        docs = load_table(spark, sf_dir, "documents")
-        # Arrow/numpy shingler is opt-in (SPARK_GRAFT_ARROW_SHINGLES=1):
-        # bit-equal to the Catalyst path (pinned by test), 2-5x faster
-        # warm, but loses cold (Python-worker spin-up + Arrow transfer
-        # of the text column). A/B'd at sf0.1 under the warm bench
-        # protocol — see bench notes in SCALING.md.
-        shingler = (
-            dedup.hashed_shingle_table_arrow
-            if os.environ.get("SPARK_GRAFT_ARROW_SHINGLES") == "1"
-            else dedup.hashed_shingle_table
-        )
-        _HASHED_MEMO[key] = shingler(docs, "doc_id", "text", n).persist()
-    return _HASHED_MEMO[key]
-
-
-def clear_hashed_memo() -> None:
-    """Unpersist and drop every memoized shingle table (explicit hook
-    for callers that want the cache gone before session end)."""
-    while _HASHED_MEMO:
-        try:
-            _HASHED_MEMO.popitem()[1].unpersist()
-        except Exception:
-            pass
-    while _SPLIT_MEMO:
-        try:
-            _SPLIT_MEMO.popitem()[1].unpersist()
-        except Exception:
-            pass
+    return memo(
+        ("hashed_shingles", id(spark), sf_dir, n),
+        lambda: dedup.hashed_shingle_table(
+            load_table(spark, sf_dir, "documents"), "doc_id", "text", n
+        ).persist(),
+    )
 
 
 # Shared split-assignment frame ----------------------------------------------
@@ -96,27 +62,16 @@ def clear_hashed_memo() -> None:
 # stores the split as a column at corpus-write time; the per-session
 # memo is the in-process equivalent. Tiny: two narrow columns.
 
-_SPLIT_MEMO: dict[tuple[str, str], DataFrame] = {}
-
 
 def _shared_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_engineering_project_spark.operators.sampling import with_split
 
-    app_id = spark.sparkContext.applicationId
-    for stale in [k for k in _SPLIT_MEMO if k[0] != app_id]:
-        try:
-            _SPLIT_MEMO.pop(stale).unpersist()
-        except Exception:
-            pass
-    key = (app_id, sf_dir)
-    if key not in _SPLIT_MEMO:
-        docs = load_table(spark, sf_dir, "documents")
-        _SPLIT_MEMO[key] = (
-            with_split(docs, "text")
-            .select(F.col("doc_id").alias("doc"), "split")
-            .persist()
-        )
-    return _SPLIT_MEMO[key]
+    return memo(
+        ("splits", id(spark), sf_dir),
+        lambda: with_split(load_table(spark, sf_dir, "documents"), "text")
+        .select(F.col("doc_id").alias("doc"), "split")
+        .persist(),
+    )
 
 
 # Shared DuckDB CTE fragments ------------------------------------------------
@@ -3852,7 +3807,7 @@ def q_pretrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the ~14 stage-accounting jobs. The frame is narrow (ids, counts,
     # an 8-byte fp — never text) and persists for the stage aggs.
     prof = text_profile_named("text")
-    base = dedup._persist_owned(
+    base = pin(
         docs.select(
             F.col("doc_id").alias("doc"),
             "source",

@@ -15,6 +15,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_engineering_project_spark.caches import memo
+
 TABLES = [
     "region",
     "nation",
@@ -79,24 +81,6 @@ def ensure_engine_confs(spark: SparkSession) -> None:
     ensure_package_on_executors(spark)
 
 
-# One scan plan per (session, dir, table): spark.read.parquet re-reads
-# the footer for schema inference and re-lists the path on EVERY call,
-# and ensure_engine_confs adds py4j roundtrips — pure driver overhead
-# repeated for every builder invocation in a multi-query session. The
-# memoized DataFrame is an immutable plan object (reusing it caches no
-# data); the key includes BOTH the Spark applicationId (a restarted
-# context never sees a stale plan) and id(spark) (sibling sessions
-# from newSession() share one applicationId but must each get their
-# own DataFrame and their own ensure_engine_confs pass — session confs
-# like nanosAsLong are per-session). Bounded by sessions × dirs ×
-# tables, a handful of plan handles in practice. Caveat: the plan
-# snapshots the file listing — callers that REWRITE a catalog parquet
-# in place mid-session must not rely on load_table re-listing (no
-# current caller does; the fixture dirs are read-only). Explicit
-# reclaim: clear_catalog_memos().
-_TABLE_MEMO: dict[tuple[int, str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one catalog table.
 
@@ -104,13 +88,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     at 100 TB the table would additionally be partitioned (e.g. orders
     by month of o_orderdate) for partition pruning — the query code is
     identical either way.
+
+    One scan plan per (session, dir, table) is memoized (`caches.memo`):
+    spark.read.parquet re-reads the footer for schema inference and
+    re-lists the path on every call, and ensure_engine_confs adds py4j
+    roundtrips. The plan object caches no data. Sibling sessions from
+    newSession() each get their own frame and their own
+    ensure_engine_confs pass, since session confs like nanosAsLong are
+    per-session. Caveat: the plan snapshots the file listing, so a
+    caller that rewrites a catalog parquet in place mid-session must
+    not rely on load_table re-listing (no current caller does; the
+    fixture dirs are read-only).
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
-    key = (id(spark), spark.sparkContext.applicationId, sf_dir, name)
-    memo = _TABLE_MEMO.get(key)
-    if memo is not None:
-        return memo
+    return memo(
+        ("table", id(spark), sf_dir, name),
+        lambda: _scan_table(spark, sf_dir, name),
+    )
+
+
+def _scan_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_engine_confs(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
@@ -128,22 +126,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _TABLE_MEMO[key] = df
+    df._bde_table = True  # spread() memoizes only these frames
     return df
-
-
-_SPREAD_MEMO: dict[tuple[int, int], DataFrame] = {}
-
-
-def clear_catalog_memos() -> None:
-    """Drop the memoized scan plans and spread results (plan objects
-    only — nothing is persisted, so there is nothing to unpersist).
-    Companion to caches.clear_all_owned_caches, which deliberately does
-    NOT clear these: the bench calls that between every query, and
-    re-planning every table scan per query is exactly the driver
-    overhead the memos remove."""
-    _TABLE_MEMO.clear()
-    _SPREAD_MEMO.clear()
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -159,23 +143,18 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism
+
+    def spread_out() -> DataFrame:
+        return df.repartition(target) if df.rdd.getNumPartitions() < target else df
+
     # df.rdd re-plans the query just to read the partition count — a
-    # driver-side cost paid per call. Memoize ONLY for frames that are
-    # themselves _TABLE_MEMO entries: those are the repeated callers
-    # (id(df) is stable because the table memo retains the frame), and
-    # restricting to them bounds the memo at tables × targets. A fresh
-    # df.select(...) input would never hit its id again — memoizing it
-    # would retain one dead DataFrame per call (r14 ADVICE leak).
-    is_table_frame = any(df is v for v in _TABLE_MEMO.values())
-    key = (id(df), target)
-    if is_table_frame:
-        memo = _SPREAD_MEMO.get(key)
-        if memo is not None:
-            return memo
-    out = df.repartition(target) if df.rdd.getNumPartitions() < target else df
-    if is_table_frame:
-        _SPREAD_MEMO[key] = out
-    return out
+    # driver-side cost paid per call. Memoize ONLY for load_table
+    # frames: those are the repeated callers, and a fresh
+    # df.select(...) input would never hit its key again. The entry
+    # holds `df`, so its id cannot be reused while the entry lives.
+    if not vars(df).get("_bde_table"):
+        return spread_out()
+    return memo(("spread", id(df), target), lambda: (df, spread_out()))[1]
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:

@@ -32,6 +32,7 @@ sys.path.insert(0, REPO)
 from ab_harness import _clear_everything, run_ab  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from big_data_engineering_project_spark.caches import pin  # noqa: E402
 from big_data_engineering_project_spark.operators import graph  # noqa: E402
 from big_data_engineering_project_spark.plans import REGISTRY  # noqa: E402
 from big_data_engineering_project_spark.session import get_spark  # noqa: E402
@@ -53,7 +54,7 @@ def old_label_propagation(
     localCheckpoint both LPA queries ran under."""
     materialize = materialize or (lambda d: d.localCheckpoint())
     e_src, e_dst, e_w = F.col(src), F.col(dst), F.col(weight)
-    und = graph._persist_owned(
+    und = pin(
         edges.select(
             e_src.alias("a"), e_dst.alias("b"), e_w.alias("__w")
         ).union(

@@ -92,9 +92,15 @@ def test_quality_filter_and_serving_query(spark, sf_dir):
 
 
 def test_clear_hashed_memo_unpersists(spark, sf_dir):
+    """The shared shingle table is memoized per session and persisted;
+    caches.clear_memos() unpersists it and the next call rebuilds."""
+    from big_data_engineering_project_spark.caches import clear_memos
     from big_data_engineering_project_spark.plans import queries_pipeline as qp
 
-    qp._shared_hashed(spark, sf_dir, 3).count()
-    assert qp._HASHED_MEMO
-    qp.clear_hashed_memo()
-    assert not qp._HASHED_MEMO
+    hashed = qp._shared_hashed(spark, sf_dir, 3)
+    hashed.count()
+    assert hashed.storageLevel.useMemory
+    assert qp._shared_hashed(spark, sf_dir, 3) is hashed
+    clear_memos()
+    assert not hashed.storageLevel.useMemory
+    assert qp._shared_hashed(spark, sf_dir, 3) is not hashed

@@ -100,3 +100,48 @@ def test_committed_artifacts_are_clean_and_current():
         pa["n_queries"],
         len(REGISTRY),
     )
+
+
+def test_environment_and_cache_state_have_one_owner():
+    """Only session.py reads the environment (deployment settings), and
+    only caches.py holds module-level memo or pin containers — no
+    env-toggled twin paths, no per-module cache ledgers."""
+    import ast
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "big_data_engineering_project_spark",
+    )
+    env_readers, containers = [], []
+    for root, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            rel = os.path.relpath(path, pkg)
+            tree = ast.parse(open(path).read())
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Attribute)
+                    and node.attr in ("environ", "getenv")
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "os"
+                ) or (
+                    isinstance(node, ast.ImportFrom)
+                    and node.module == "os"
+                    and any(a.name in ("environ", "getenv") for a in node.names)
+                ):
+                    env_readers.append(f"{rel}:{node.lineno}")
+            for node in tree.body:
+                targets = (
+                    node.targets if isinstance(node, ast.Assign)
+                    else [node.target] if isinstance(node, ast.AnnAssign)
+                    else []
+                )
+                for t in targets:
+                    if isinstance(t, ast.Name) and (
+                        "_MEMO" in t.id or t.id == "_OWNED_PERSISTS"
+                    ):
+                        containers.append(f"{rel}:{t.id}")
+    assert all(r.startswith("session.py:") for r in env_readers), env_readers
+    assert all(c.startswith("caches.py:") for c in containers), containers

@@ -197,25 +197,18 @@ def test_simhash_wide_fingerprint_is_discriminative(spark, sf_dir):
     assert n_pairs < all_pairs * 0.005  # ≪ the 3.7% the 16-bit version matched
 
 
-def test_hashed_shingle_arrow_matches_catalyst(spark, sf_dir):
-    """The numpy/Arrow shingle-hash fast path is bit-identical (as a
-    SET per doc) to the Catalyst higher-order-function reference on
-    real fixture text, including unicode/punctuation/short docs."""
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    ref = {
-        r["doc"]: sorted(r["hv"])
-        for r in dedup.hashed_shingle_table(docs, "doc_id", "text").collect()
-    }
-    fast = {
-        r["doc"]: list(r["hv"])  # arrow path emits sorted hv already
-        for r in dedup.hashed_shingle_table_arrow(docs, "doc_id", "text").collect()
-    }
-    assert fast == ref
-
-
 def test_hashed_shingle_arrow_edge_cases(spark):
     """Nulls, empty strings, unicode whitespace, and <3-token docs all
-    agree between the two shingler implementations."""
+    agree between the Catalyst shingler and the DuckDB mirror the
+    dedup oracles use (queries_pipeline's toks/ht/hs CTE fragments)."""
+    import duckdb
+
+    from big_data_engineering_project_spark.plans.queries_pipeline import (
+        _HT_CTE,
+        _HV_CTE,
+        _TOKS_CTE,
+    )
+
     rows = [
         Row(id=1, t=None),
         Row(id=2, t=""),
@@ -230,11 +223,22 @@ def test_hashed_shingle_arrow_edge_cases(spark):
         r["doc"]: sorted(r["hv"])
         for r in dedup.hashed_shingle_table(df, "id", "t").collect()
     }
-    fast = {
-        r["doc"]: list(r["hv"])
-        for r in dedup.hashed_shingle_table_arrow(df, "id", "t").collect()
-    }
-    assert fast == ref
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany(
+            "INSERT INTO documents VALUES (?, ?)", [(r.id, r.t) for r in rows]
+        )
+        mirror = {
+            doc: sorted(hv)
+            for doc, hv in con.execute(
+                f"WITH {_TOKS_CTE}, {_HT_CTE}, {_HV_CTE} SELECT doc, hv FROM hs"
+            ).fetchall()
+        }
+    finally:
+        con.close()
+    assert mirror == ref
+    assert sorted(ref) == [4, 5, 6, 7]
 
 
 def test_minhash_lsh_subset_of_ngram(spark, sf_dir):
@@ -1751,8 +1755,10 @@ def test_incremental_rs_persisted_index_two_day_ingest(
     IDENTICAL to the in-session run that recomputes the corpus
     shingles from text, and the union is the full incremental-ingest
     changelog."""
+    from big_data_engineering_project_spark.caches import (
+        clear_all_owned_caches,
+    )
     from big_data_engineering_project_spark.operators.dedup import (
-        clear_dedup_caches,
         hashed_shingle_table,
         ngram_jaccard_rs,
     )
@@ -1807,7 +1813,7 @@ def test_incremental_rs_persisted_index_two_day_ingest(
         "a corpus-side id from the not-yet-ingested day-2 batch leaked"
     )
     assert day2_ids <= {r["doc_id"] for r in n2.select("doc_id").collect()}
-    clear_dedup_caches()
+    clear_all_owned_caches()
 
 
 def test_reservoir_sample_merge_algebra_and_dedup(spark):
@@ -2211,8 +2217,10 @@ def test_global_row_number_single_range_evaluation(spark):
     from another yields ranks > n (NTILE emitted tile k+1). Pins (a)
     the persisted node in the plan, (b) rank bounds and tile bounds
     over a shuffle-derived upstream across repeated runs."""
+    from big_data_engineering_project_spark.caches import (
+        clear_all_owned_caches,
+    )
     from big_data_engineering_project_spark.operators.linkage import (
-        clear_linkage_caches,
         global_row_number,
         ntile_scalable,
     )
@@ -2234,7 +2242,7 @@ def test_global_row_number_single_range_evaluation(spark):
         assert {r["tile"] for r in agg} == {1, 2, 3, 4, 5}
         assert all(r["count"] in (n // 5, n // 5 + 1) for r in agg)
         assert sum(r["count"] for r in agg) == n
-    clear_linkage_caches()
+    clear_all_owned_caches()
 
 
 def test_sorted_neighborhood_finds_planted_typo_pair(spark):
@@ -2838,10 +2846,10 @@ def test_time_decay_attribution_integer_ladder(spark):
 
 
 def test_clear_all_owned_caches_reclaims_tracked_frames(spark):
-    """The facade must drain every module's owned-persist ledger (the
-    between-queries hook in oracle_check/bench): after a query that
-    pins range-rank frames, the linkage ledger is non-empty; after the
-    facade runs, every ledger is empty and the query still recomputes
+    """The facade must drain every pin (the between-queries hook in
+    oracle_check/bench): after queries that pin range-rank and
+    frontier frames, one persisted RDD per pin exists; after the
+    facade runs, none of them does and the queries still recompute
     correctly."""
     from big_data_engineering_project_spark.caches import (
         clear_all_owned_caches,
@@ -2851,19 +2859,26 @@ def test_clear_all_owned_caches_reclaims_tracked_frames(spark):
         linkage,
     )
 
+    def n_persisted() -> int:
+        return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+    clear_all_owned_caches()
+    before = n_persisted()
     df = spark.range(0, 500).select(
         (F.col("id") % 97).alias("k"), F.col("id")
     )
     ranked = linkage.global_row_number(
         df.groupBy("k").agg(F.sum("id").alias("v")), ["v", "k"], n_parts=4
     )
+    front = frontier.pareto_frontier_2d(df, "k", "id", n_parts=4)
     n = ranked.count()
-    assert linkage._OWNED_PERSISTS, "rank should pin a frame"
+    n_front = front.count()
+    assert n_persisted() == before + 2, "rank and frontier should each pin"
     clear_all_owned_caches()
-    assert not linkage._OWNED_PERSISTS
-    assert not frontier._OWNED_PERSISTS
+    assert n_persisted() == before
     # result unaffected by reclamation — recompute matches
     assert ranked.count() == n
+    assert front.count() == n_front
 
 
 def test_containment_finds_quoted_subset_jaccard_misses(spark):
@@ -2990,8 +3005,10 @@ def test_target_encode_oof_is_leak_free_and_group_aware(spark):
     entity-keyed: all rows of one fold_key share a fold."""
     from pyspark.sql import functions as F
 
+    from big_data_engineering_project_spark.caches import (
+        clear_all_owned_caches,
+    )
     from big_data_engineering_project_spark.operators.features import (
-        clear_features_caches,
         target_encode_oof,
     )
 
@@ -3038,7 +3055,7 @@ def test_target_encode_oof_is_leak_free_and_group_aware(spark):
             got_n, got_enc = got[(cat, f)]
             assert got_n == oof_n
             assert abs(got_enc - want) < 1e-9
-    clear_features_caches()
+    clear_all_owned_caches()
 
 
 def test_ams_f2_sign_sums_merge_and_estimate_quality(spark):

@@ -1045,12 +1045,10 @@ def test_int8_topk_recall_and_quantization(spark, sf_dir):
     assert [r["vec_id"] for r in kept] == [2]
 
 
-def test_arrow_serve_paths_match_expression_folds(
-    spark, sf_dir, monkeypatch
-):
+def test_arrow_serve_paths_match_expression_folds(spark, sf_dir):
     """The Arrow/numpy serve scorers are pinned BIT-EQUAL to the
-    expression-fold reference (r15 §4.2 optimization): int8_topk's
-    default path vs SPARK_GRAFT_SERVE_FOLD=1, on the fixture AND on a
+    expression-fold reference (r15 §4.2 optimization): int8_topk vs
+    the fold `_fold_int8_topk`, on the fixture AND on a
     synthetic frame engineered to hit the rounding edge (components
     whose scaled value is exactly *.5 — Spark round() goes half-away-
     from-zero, numpy's default is half-to-even) and the zero-vector
@@ -1083,16 +1081,12 @@ def test_arrow_serve_paths_match_expression_folds(
         [([4.0, 1.0, 3.0, -1.0],)], "embedding ARRAY<DOUBLE>"
     )
 
-    def run(fn, *args, **kw):
-        monkeypatch.delenv("SPARK_GRAFT_SERVE_FOLD", raising=False)
-        arrow = [tuple(r) for r in fn(*args, **kw).collect()]
-        monkeypatch.setenv("SPARK_GRAFT_SERVE_FOLD", "1")
-        fold = [tuple(r) for r in fn(*args, **kw).collect()]
-        monkeypatch.delenv("SPARK_GRAFT_SERVE_FOLD", raising=False)
-        return arrow, fold
-
     for vectors, q in ((rest, query), (synth, sq)):
-        arrow, fold = run(similarity.int8_topk, vectors, q, k=10)
+        arrow = [tuple(r) for r in similarity.int8_topk(vectors, q, k=10).collect()]
+        fold = [
+            tuple(r)
+            for r in similarity._fold_int8_topk(vectors, q, k=10).collect()
+        ]
         assert arrow == fold and len(arrow) > 0
 
     # float-cosine helper vs the fold brute force (on the non-zero

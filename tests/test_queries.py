@@ -7,6 +7,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from big_data_engineering_project_spark import caches
 from big_data_engineering_project_spark.plans import REGISTRY
 from big_data_engineering_project_spark.sources.catalog import TABLES
 from tools.oracle_check import compare
@@ -26,7 +27,11 @@ def duck(sf_dir):
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_matches_oracle(spark, sf_dir, duck, name):
     spec = REGISTRY[name]
+    caches.clear_all_owned_caches()
     sdf = spec.builder(spark, sf_dir).toPandas()
+    # A builder that fills the pin FIFO could evict its own frame
+    # before the plan reads it.
+    assert len(caches._PINS) < caches.PIN_BOUND
     if spec.oracle is None:
         assert len(sdf) >= 0  # rows-only smoke
         return

@@ -1113,34 +1113,41 @@ def test_kll_stream_state_and_quantiles_match_batch(spark, tmp_path):
 def _replay_runner(name):
     """(runner, runner kwargs, two tiny micro-batches) for each fold
     runner the replay test covers: the additive folds, where a
-    replayed batch would double counts, volumes or sums."""
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_cm_sketch_stream,
-        run_ohlc_stream,
-        run_target_encoding_stream,
-    )
+    replayed batch would double counts, volumes, sums or offsets."""
+    from big_data_engineering_project_spark.streaming import scd2
 
-    if name == "cm":
-        return (
-            run_cm_sketch_stream,
+    ticks = [
+        {
+            "sym": "AB"[i % 2],
+            "ts": f"2026-02-0{1 + i % 2}T0{i % 7}:00:00",
+            "v": float(1 + (i * 37) % 50),
+            "i": i,
+        }
+        for i in range(40)
+    ]
+    enc = [
+        {"uid": i % 9, "cat": f"c{i % 3}", "y": (i * 7) % 11 / 4.0}
+        for i in range(40)
+    ]
+    docs = [
+        {
+            "doc_id": i,
+            "text": f"w{i % 5} the w{i % 3} cat sat on mat {i % 4}",
+            "source": "xy"[i % 2],
+        }
+        for i in range(20)
+    ]
+    cases = {
+        "cm": (
+            scd2.run_cm_sketch_stream,
             dict(schema="x LONG", hash_expr="x"),
             [
                 [{"x": i % 13} for i in range(50)],
                 [{"x": i % 7} for i in range(50)],
             ],
-        )
-    if name == "ohlc":
-        ticks = [
-            {
-                "sym": "AB"[i % 2],
-                "ts": f"2026-02-0{1 + i % 2}T0{i % 7}:00:00",
-                "v": float(1 + (i * 37) % 50),
-                "i": i,
-            }
-            for i in range(40)
-        ]
-        return (
-            run_ohlc_stream,
+        ),
+        "ohlc": (
+            scd2.run_ohlc_stream,
             dict(
                 schema="sym STRING, ts TIMESTAMP, v DOUBLE, i LONG",
                 key="sym",
@@ -1149,29 +1156,99 @@ def _replay_runner(name):
                 id_col="i",
             ),
             [ticks[:20], ticks[20:]],
-        )
-    rows = [
-        {"uid": i % 9, "cat": f"c{i % 3}", "y": (i * 7) % 11 / 4.0}
-        for i in range(40)
-    ]
-    return (
-        run_target_encoding_stream,
-        dict(
-            schema="uid LONG, cat STRING, y DOUBLE",
-            category_col="cat",
-            target_col="y",
-            fold_key="uid",
-            n_folds=3,
         ),
-        [rows[:20], rows[20:]],
-    )
+        "target_encoding": (
+            scd2.run_target_encoding_stream,
+            dict(
+                schema="uid LONG, cat STRING, y DOUBLE",
+                category_col="cat",
+                target_col="y",
+                fold_key="uid",
+                n_folds=3,
+            ),
+            [enc[:20], enc[20:]],
+        ),
+        "agg": (
+            scd2.run_agg_maintenance_stream,
+            dict(schema="k STRING, v LONG", keys=["k"], value_expr="v"),
+            [
+                [{"k": "ab"[i % 2], "v": i} for i in range(10)],
+                [{"k": "ab"[i % 2], "v": i * 3} for i in range(10)],
+            ],
+        ),
+        "kll": (
+            scd2.run_kll_stream,
+            dict(schema="v LONG", value_expr="v", n_shards=4),
+            [
+                [{"v": i % 11} for i in range(30)],
+                [{"v": i % 5} for i in range(30)],
+            ],
+        ),
+        "auc": (
+            scd2.run_auc_stream,
+            dict(
+                schema="s DOUBLE, y LONG, c STRING",
+                score_expr="s",
+                label_expr="y",
+                key_cols=["c"],
+            ),
+            [
+                [
+                    {"s": (i % 7) / 7.0, "y": i % 2, "c": "pq"[i % 2]}
+                    for i in range(20)
+                ],
+                [
+                    {"s": (i % 5) / 5.0, "y": (i // 2) % 2, "c": "pq"[i % 2]}
+                    for i in range(20)
+                ],
+            ],
+        ),
+        "source_gate": (
+            scd2.run_source_gate_stream,
+            dict(
+                schema="doc_id LONG, text STRING, source STRING",
+                id_col="doc_id",
+                text_col="text",
+                source_col="source",
+            ),
+            [docs[:10], docs[10:]],
+        ),
+        "vocab": (
+            scd2.run_vocab_stream,
+            dict(
+                schema="doc_id LONG, text STRING",
+                text_expr="filter(split(lower(text), ' '), x -> x != '')",
+            ),
+            [docs[:10], docs[10:]],
+        ),
+        "pack": (
+            scd2.run_pack_stream,
+            dict(schema="doc_id LONG, text STRING", chunk_tokens=8),
+            [docs[:10], docs[10:]],
+        ),
+    }
+    return cases[name]
 
 
-@pytest.mark.parametrize("name", ["cm", "ohlc", "target_encoding"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "cm",
+        "ohlc",
+        "target_encoding",
+        "agg",
+        "kll",
+        "auc",
+        "source_gate",
+        "vocab",
+        "pack",
+    ],
+)
 def test_batch_id_guard_skips_replayed_batches(spark, tmp_path, name):
     """r9 ADVICE #5: replaying an already-applied micro-batch against
     committed state must NOT double-apply an additive fold (CM
-    counters, OHLC volume, target-encoding n/Σ). Simulates the
+    counters, OHLC volume, target-encoding n/Σ, aggregate and KLL/AUC/
+    gate/vocab counts, pack offsets). Simulates the
     crash-after-swap-before-checkpoint-commit window by deleting the
     LAST commit file from the checkpoint: on restart with the SAME
     checkpoint, Spark re-executes that batch, and the (checkpoint,

@@ -16,8 +16,9 @@ Arm semantics:
 - each arm is a dict of runtime SQL confs applied before its runs
   (CLI: --conf-a k=v[,k=v...] --conf-b ...), and/or a Python setup
   callable when used as a library (monkeypatch arms);
-- before every run the operator-owned caches AND the shared shingle/
-  split memos are cleared, then one UNTIMED warm run materializes the
+- before every run the pinned frames AND every driver memo (scan
+  plans, expression trees, shared shingle/split frames) are cleared,
+  then one UNTIMED warm run materializes the
   pins under the arm's configuration, then the timed run executes with
   warm caches — the same steady state the bench's median measures;
 - equality: once per query, each arm's result is collected and the
@@ -45,17 +46,15 @@ sys.path.insert(0, REPO)
 import bench  # noqa: E402
 from big_data_engineering_project_spark.caches import (  # noqa: E402
     clear_all_owned_caches,
+    clear_memos,
 )
 from big_data_engineering_project_spark.plans import REGISTRY  # noqa: E402
-from big_data_engineering_project_spark.plans.queries_pipeline import (  # noqa: E402
-    clear_hashed_memo,
-)
 from big_data_engineering_project_spark.session import get_spark  # noqa: E402
 
 
 def _clear_everything() -> None:
     clear_all_owned_caches()
-    clear_hashed_memo()
+    clear_memos()
 
 
 def _canon_rows(rows) -> list[tuple]:
@@ -103,7 +102,7 @@ def run_ab(
 
     out: dict = {
         "protocol": "interleaved same-session A/B; ABBA round order; "
-        "per run: clear owned caches + shingle/split memos, untimed "
+        "per run: clear pinned frames + driver memos, untimed "
         "warm run (materializes pins under the arm's confs), timed "
         "run (count) with warm caches; result multiset equality "
         "asserted between arms once per query",
