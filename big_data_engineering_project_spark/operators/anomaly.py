@@ -273,7 +273,7 @@ def seasonal_apply(
     side (stats broadcast), so the SAME function applies to a batch
     frame or a readStream — the streaming twin is a stream-static
     broadcast join with frozen training stats (see
-    tools/streaming_check.py seasonal_anomalies check)."""
+    tools/streaming_check.py `seasonal_anomalies`)."""
     joined = df.withColumn("season", season_col).join(
         F.broadcast(stats), [entity_col, "season"]
     )

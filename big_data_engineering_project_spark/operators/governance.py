@@ -302,19 +302,6 @@ def source_gate_state(
     )
 
 
-def source_gate_merge(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two gate states over disjoint inputs: cell counts and
-    ladder sums add per (source, fingerprint)."""
-    return (
-        a.unionByName(b)
-        .groupBy("source", "__fp")
-        .agg(
-            F.sum("__n").cast("long").alias("__n"),
-            F.sum("__sq").cast("long").alias("__sq"),
-        )
-    )
-
-
 def source_gate_finish(
     state: DataFrame,
     min_docs: int,

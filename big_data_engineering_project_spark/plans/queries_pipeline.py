@@ -607,10 +607,7 @@ def _ivf_fixture_index(spark: SparkSession, sf_dir: str) -> str:
     index_path = _pid_scoped_index_path("bde_ivf_", sf_dir)
     marker = os.path.join(index_path, "_built")
     if not os.path.exists(marker):
-        cents = [
-            [float(x) for x in r["embedding"]]
-            for r in corpus.orderBy("vec_id").limit(8).collect()
-        ]
+        cents = _donor_centroids(corpus, 8)
         similarity.build_ivf_index(corpus, index_path, cents)
         similarity.ivf_index_append(day1, index_path)
         open(marker, "w").close()
@@ -673,10 +670,7 @@ def _ivfdel_fixture_index(spark: SparkSession, sf_dir: str) -> str:
     index_path = _pid_scoped_index_path("bde_ivfdel_", sf_dir)
     marker = os.path.join(index_path, "_built")
     if not os.path.exists(marker):
-        cents = [
-            [float(x) for x in r["embedding"]]
-            for r in corpus.orderBy("vec_id").limit(8).collect()
-        ]
+        cents = _donor_centroids(corpus, 8)
         similarity.build_ivf_index(corpus, index_path, cents)
         similarity.ivf_index_append(day1, index_path)
         similarity.vector_index_delete(
@@ -1059,10 +1053,7 @@ def q_embedding_matryoshka_batch_topk(
     index_path = _pid_scoped_index_path("bde_ivfb_", sf_dir)
     marker = os.path.join(index_path, "_built")
     if not os.path.exists(marker):
-        cents = [
-            [float(x) for x in r["embedding"]]
-            for r in corpus.orderBy("vec_id").limit(8).collect()
-        ]
+        cents = _donor_centroids(corpus, 8)
         similarity.build_ivf_index(corpus, index_path, cents)
         open(marker, "w").close()
     return similarity.matryoshka_index_topk_batch(
@@ -1130,10 +1121,7 @@ def q_embedding_ivf_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the path is pid-scoped, so repeated calls (bench reps, sweep +
     # gate in one process) reuse one build instead of rebuilding
     if not os.path.exists(marker):
-        cents = [
-            [float(x) for x in r["embedding"]]
-            for r in corpus.orderBy("vec_id").limit(n_cells).collect()
-        ]
+        cents = _donor_centroids(corpus, n_cells)
         similarity.build_ivf_index(corpus, index_path, cents)
         open(marker, "w").close()
     return similarity.ivf_index_topk_batch(
@@ -1887,6 +1875,15 @@ def _adc_chain(terms: list[str]) -> str:
 _PQ_M, _PQ_SUB, _PQ_DONORS, _ADC_LAD = 16, 4, 16, 1048576
 
 
+def _donor_centroids(corpus, n: int) -> list[list[float]]:
+    """IVF centroids from the corpus's first n vectors in vec_id order —
+    the donor rows the IVF oracles re-derive in SQL."""
+    return [
+        [float(x) for x in r["embedding"]]
+        for r in corpus.orderBy("vec_id").limit(n).collect()
+    ]
+
+
 def _donor_pq_books(emb, m: int, sub: int, n_donors: int):
     """SQL-derivable PQ codebooks: donor rows vec_id 1..n ARE the
     codebook — book j's entries are the donors' j-th subvectors,
@@ -2059,10 +2056,7 @@ def _ivfpq_fixture_index(spark: SparkSession, sf_dir: str) -> str:
     index_path = _pid_scoped_index_path("bde_ivfpq_", sf_dir)
     marker = os.path.join(index_path, "_built")
     if not os.path.exists(marker):
-        cents = [
-            [float(x) for x in r["embedding"]]
-            for r in corpus.orderBy("vec_id").limit(8).collect()
-        ]
+        cents = _donor_centroids(corpus, 8)
         books = _donor_pq_books(emb, _PQ_M, _PQ_SUB, _PQ_DONORS)
         similarity.build_ivfpq_index(corpus, index_path, cents, books)
         similarity.ivfpq_index_append(day1, index_path)
@@ -2121,10 +2115,7 @@ def _ivfpq_merged_fixture_index(spark: SparkSession, sf_dir: str) -> str:
     index_b = _pid_scoped_index_path("bde_ivfpq_mrg_b_", sf_dir)
     marker = os.path.join(index_a, "_merged")
     if not os.path.exists(marker):
-        cents = [
-            [float(x) for x in r["embedding"]]
-            for r in corpus.orderBy("vec_id").limit(8).collect()
-        ]
+        cents = _donor_centroids(corpus, 8)
         books = _donor_pq_books(emb, _PQ_M, _PQ_SUB, _PQ_DONORS)
         similarity.build_ivfpq_index(shard_a, index_a, cents, books)
         similarity.build_ivfpq_index(shard_b, index_b, cents, books)
@@ -2501,10 +2492,7 @@ def _ivfpq_batch_fixture_index(spark: SparkSession, sf_dir: str) -> str:
     index_path = _pid_scoped_index_path("bde_ivfpqb_", sf_dir)
     marker = os.path.join(index_path, "_built")
     if not os.path.exists(marker):
-        cents = [
-            [float(x) for x in r["embedding"]]
-            for r in corpus.orderBy("vec_id").limit(8).collect()
-        ]
+        cents = _donor_centroids(corpus, 8)
         books = _donor_pq_books(emb, _PQ_M, _PQ_SUB, _PQ_DONORS)
         similarity.build_ivfpq_index(corpus, index_path, cents, books)
         open(marker, "w").close()
@@ -2584,10 +2572,7 @@ def q_embedding_ivfpq_residual_topk(
     index_path = _pid_scoped_index_path("bde_rpq_", sf_dir)
     marker = os.path.join(index_path, "_built")
     if not os.path.exists(marker):
-        cents = [
-            [float(x) for x in r["embedding"]]
-            for r in corpus.orderBy("vec_id").limit(8).collect()
-        ]
+        cents = _donor_centroids(corpus, 8)
         # donor RESIDUAL codebook (SQL-derivable twin of the kmeans
         # fit): each donor's residual against ITS OWN argmax-cosine
         # cell, sliced per subspace — the same Python left-assoc

@@ -35,10 +35,11 @@ the touched keys). The merge shuffles on `key` once for the batch
 windows and joins batch-side keys only — per-batch cost is
 O(batch + touched-keys' open rows), never O(history).
 
-Equivalence (checked per-round by tools/streaming_check.py
-`scd2_maintenance` and tests/test_streaming.py): folding any
-batch-partition of a changelog through scd2_merge_batch yields the
-IDENTICAL history table as the batch operator over the union.
+Equivalence (tools/streaming_check.py `scd2_maintenance`, a row of
+the one TWINS table that both Tier-1 and the STREAMING artifact run):
+folding any batch-partition of a changelog through scd2_merge_batch
+yields the IDENTICAL history table as the batch operator over the
+union.
 
 Replay contract, shared by every runner in this module. Each runner
 drains its json file stream with `_drain` (availableNow: every file,
@@ -766,8 +767,8 @@ def run_target_encoding_stream(
     × n_folds rows regardless of stream volume; encodings are served
     by features.oof_finish over the state, so the served feature table
     after N batches is bit-identical to the batch encoder over the
-    union (checked per round: `target_encoding` in
-    tools/streaming_check.py). Decimal sums are associative, so
+    union (checked per round: tools/streaming_check.py
+    `target_encoding`). Decimal sums are associative, so
     batch-boundary placement cannot change any served double."""
     from big_data_engineering_project_spark.operators.features import (
         oof_merge,
@@ -1467,6 +1468,38 @@ def run_pack_stream(
     )
 
 
+def _band_candidates(
+    newb: DataFrame,
+    prior: DataFrame | None,
+    val_col: str,
+    a_col: str,
+    b_col: str,
+) -> DataFrame:
+    """Candidate pairs of one band-index batch: band collisions within
+    the batch (a < b) plus collisions against the prior batches' band
+    rows (ordered by least/greatest), deduplicated. Shared by the
+    MinHash and pHash index runners, whose band tables differ only in
+    the value column's name."""
+    same_band = (F.col("a.band") == F.col("b.band")) & (
+        F.col(f"a.{val_col}") == F.col(f"b.{val_col}")
+    )
+    cands = (
+        newb.alias("a")
+        .join(newb.alias("b"), same_band & (F.col("a.doc") < F.col("b.doc")))
+        .select(F.col("a.doc").alias(a_col), F.col("b.doc").alias(b_col))
+    )
+    if prior is not None:
+        cands = cands.unionByName(
+            newb.alias("a")
+            .join(prior.alias("b"), same_band)
+            .select(
+                F.least(F.col("a.doc"), F.col("b.doc")).alias(a_col),
+                F.greatest(F.col("a.doc"), F.col("b.doc")).alias(b_col),
+            )
+        )
+    return cands.distinct()
+
+
 def run_minhash_index_stream(
     spark: SparkSession,
     input_dir: str,
@@ -1520,37 +1553,9 @@ def run_minhash_index_stream(
         hashed = hashed_shingle_table(batch_df, id_col, text_col).persist()
         sigs = with_minhash_signature(hashed).select("doc", "sig")
         newb = minhash_band_buckets(sigs).persist()
-        within = (
-            newb.alias("a")
-            .join(
-                newb.alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.doc") < F.col("b.doc")),
-            )
-            .select(
-                F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b")
-            )
+        cands = _band_candidates(
+            newb, _read_prior(sp, bands_root, tag), "bucket", "doc_a", "doc_b"
         )
-        cands = within
-        prior_b = _read_prior(sp, bands_root, tag)
-        if prior_b is not None:
-            cross = (
-                newb.alias("a")
-                .join(
-                    prior_b.alias("b"),
-                    (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bucket") == F.col("b.bucket")),
-                )
-                .select(
-                    F.least(F.col("a.doc"), F.col("b.doc")).alias("doc_a"),
-                    F.greatest(F.col("a.doc"), F.col("b.doc")).alias(
-                        "doc_b"
-                    ),
-                )
-            )
-            cands = cands.unionByName(cross)
-        cands = cands.distinct()
         hv = hashed.select("doc", "hv")
         prior_h = _read_prior(sp, sh_root, tag)
         if prior_h is not None:
@@ -1629,37 +1634,9 @@ def run_phash_index_stream(
         newb = phash_band_table(
             batch_df, max_hamming, id_col, hi_col, lo_col
         ).persist()
-        within = (
-            newb.alias("a")
-            .join(
-                newb.alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.val") == F.col("b.val"))
-                & (F.col("a.doc") < F.col("b.doc")),
-            )
-            .select(
-                F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b")
-            )
+        cands = _band_candidates(
+            newb, _read_prior(sp, bands_root, tag), "val", "id_a", "id_b"
         )
-        cands = within
-        prior_b = _read_prior(sp, bands_root, tag)
-        if prior_b is not None:
-            cross = (
-                newb.alias("a")
-                .join(
-                    prior_b.alias("b"),
-                    (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.val") == F.col("b.val")),
-                )
-                .select(
-                    F.least(F.col("a.doc"), F.col("b.doc")).alias("id_a"),
-                    F.greatest(F.col("a.doc"), F.col("b.doc")).alias(
-                        "id_b"
-                    ),
-                )
-            )
-            cands = cands.unionByName(cross)
-        cands = cands.distinct()
         hv = newb.select("doc", "w1", "w2").distinct()
         prior_h = _read_prior(sp, hashes_root, tag)
         if prior_h is not None:

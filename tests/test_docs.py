@@ -145,3 +145,78 @@ def test_environment_and_cache_state_have_one_owner():
                         containers.append(f"{rel}:{t.id}")
     assert all(r.startswith("session.py:") for r in env_readers), env_readers
     assert all(c.startswith("caches.py:") for c in containers), containers
+
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(ROOT, "big_data_engineering_project_spark")
+
+# Public stream runners that no TWINS row needs to call, each with a
+# one-word reason. Empty: every runner has a stream ≡ batch twin.
+RUNNERS_WITHOUT_TWIN: tuple[tuple[str, str], ...] = ()
+
+
+def _package_sources(subdir: str = ""):
+    for root, _dirs, files in os.walk(os.path.join(PKG, subdir)):
+        for fn in sorted(files):
+            if fn.endswith(".py"):
+                path = os.path.join(root, fn)
+                yield os.path.relpath(path, PKG), open(path).read()
+
+
+def test_every_stream_runner_has_a_twin_row():
+    """Every public stream runner in streaming/ (`run_*`, `*_stream`,
+    `*_streams`) is called by a TWINS row of tools/streaming_check.py —
+    directly or through the helpers the row uses — so a new runner
+    cannot ship outside Tier-1 and the STREAMING artifact."""
+    import ast
+
+    runners = {
+        node.name
+        for _rel, src in _package_sources("streaming")
+        for node in ast.parse(src).body
+        if isinstance(node, ast.FunctionDef)
+        and not node.name.startswith("_")
+        and (
+            node.name.startswith("run_")
+            or node.name.endswith(("_stream", "_streams"))
+        )
+    }
+    tree = ast.parse(open(os.path.join(ROOT, "tools", "streaming_check.py")).read())
+    defs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+    (table,) = [
+        n for n in tree.body
+        if isinstance(n, ast.AnnAssign) and getattr(n.target, "id", "") == "TWINS"
+    ]
+    named, todo, seen = set(), [table], set()
+    while todo:
+        for node in ast.walk(todo.pop()):
+            name = (
+                node.id if isinstance(node, ast.Name)
+                else node.attr if isinstance(node, ast.Attribute)
+                else None
+            )
+            named.add(name)
+            if name in defs and name not in seen:
+                seen.add(name)
+                todo.append(defs[name])
+    exempt = {name for name, _reason in RUNNERS_WITHOUT_TWIN}
+    assert all(len(reason.split()) == 1 for _n, reason in RUNNERS_WITHOUT_TWIN)
+    assert not exempt & named, exempt & named  # stale exemptions
+    assert runners - exempt <= named, sorted(runners - exempt - named)
+
+
+def test_streaming_check_citations_name_twin_rows():
+    """Every tools/streaming_check.py citation in a package docstring
+    reads ``tools/streaming_check.py `<entry>` `` and names an entry the
+    TWINS table produces."""
+    from tools.streaming_check import entry_names
+
+    entries = set(entry_names())
+    bad = []
+    for rel, src in _package_sources():
+        n_cited = src.count("streaming_check.py")
+        cited = re.findall(r"tools/streaming_check\.py\s+`(\w+)`", src)
+        if len(cited) != n_cited:
+            bad.append(f"{rel}: {n_cited - len(cited)} citation(s) without an entry")
+        bad += [f"{rel}: {name}" for name in cited if name not in entries]
+    assert not bad, bad

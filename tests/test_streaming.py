@@ -1,6 +1,8 @@
 """Streaming tests (SURVEY.md §5.4): file-source micro-batches with a
-frozen clock; author_activity_count == batch row_number formulation;
-per-batch z-score anomalies == pandas oracle; exactly-once restart."""
+frozen clock. Every stream ≡ batch twin runs from the one TWINS table
+of tools/streaming_check.py (test_twin_stream_equals_batch); the tests
+below check what a twin cannot: trigger caps, the per-batch pandas
+anomaly oracle, replay guards, refusals and marker-disagree rebuilds."""
 
 from __future__ import annotations
 
@@ -15,60 +17,23 @@ from pyspark.sql import functions as F
 
 from big_data_engineering_project_spark.streaming.pipeline import (
     STREAM_SCHEMA,
-    enrich_stream,
     run_hot_path,
 )
-
-FROZEN_NOW = dt.datetime(2026, 1, 16, 0, 0, 0)
-
-
-def _gen_records(n: int, seed: int = 42) -> list[dict]:
-    rng = random.Random(seed)
-    authors = [f"user{i}" for i in range(8)]
-    recs = []
-    for i in range(n):
-        score = rng.randint(0, 100)
-        if i % 37 == 0:
-            score = 100_000  # guaranteed z-score outlier (FIXTURES.md §2)
-        recs.append(
-            {
-                "seq": i,
-                "id": f"post{i:05d}",
-                "author": rng.choice(authors),
-                "title": rng.choice(
-                    ["Good news everyone", "bad terrible day!!", "Just a question?"]
-                ),
-                "subreddit": rng.choice(["jobs", "college"]),
-                "created_time": (
-                    dt.datetime(2026, 1, 15, 0, 0, 0) + dt.timedelta(minutes=i)
-                ).strftime("%Y-%m-%d %H:%M:%S"),
-                "score": score,
-                "num_comments": rng.randint(0, 50),
-                "is_self_post": bool(rng.getrandbits(1)),
-                "flair_text": rng.choice(["Help", None]),
-                "upvote_ratio": round(rng.random(), 2),
-                "edited": "False",
-                "over_18": False,
-                "thumbnail": rng.choice(["self", "http://img/x.jpg"]),
-                "stickied": False,
-            }
-        )
-    return recs
+from tools.streaming_check import (
+    FROZEN_NOW,
+    TWINS,
+    gen_hot_records,
+    run_twin,
+    write_batches,
+)
 
 
-def _write_batches(dirpath, recs, batch_size=40):
-    # Spark's file source orders by modification time (ties → undefined
-    # order); strictly increasing mtimes pin arrival order = seq order.
-    import os
-    import time
-
-    t0 = time.time() - 3600
-    for b, start in enumerate(range(0, len(recs), batch_size)):
-        path = f"{dirpath}/{b:04d}.json"
-        with open(path, "w") as f:
-            for r in recs[start : start + batch_size]:
-                f.write(json.dumps(r) + "\n")
-        os.utime(path, (t0 + b, t0 + b))
+@pytest.mark.parametrize("twin", TWINS, ids=lambda t: t.name)
+def test_twin_stream_equals_batch(spark, tmp_path, twin):
+    """Every stream ≡ batch twin of tools/streaming_check.py — the rows
+    that also write the STREAMING artifact — holds under Tier-1."""
+    results = run_twin(spark, str(tmp_path), twin)
+    assert all(r["match"] for r in results.values()), results
 
 
 @pytest.fixture(scope="module")
@@ -81,8 +46,8 @@ def hot_path_output(spark, tmp_path_factory):
         str(base / "cp"),
     )
     (base / "in").mkdir()
-    recs = _gen_records(200)
-    _write_batches(in_dir, recs, batch_size=40)
+    recs = gen_hot_records(200)
+    write_batches(in_dir, recs, batch_size=40)
     run_hot_path(
         spark, in_dir, table, anom, cp, now=FROZEN_NOW, max_files_per_trigger=1
     )
@@ -125,26 +90,6 @@ def test_author_count_equals_batch_row_number(spark, hot_path_output):
     assert mismatches == 0
 
 
-def test_enrichment_matches_batch_mode(spark, hot_path_output):
-    """Streaming enrichment == the same expressions applied in batch
-    mode over the same files (stream/batch unification)."""
-    out = spark.read.parquet(hot_path_output["table"])
-    batch = enrich_stream(
-        spark.read.schema(STREAM_SCHEMA).json(hot_path_output["in"]), FROZEN_NOW
-    )
-    cols = [
-        "seq",
-        "sentiment",
-        "post_age_minutes",
-        "popularity_score",
-        "post_type",
-        "time_of_day",
-    ]
-    a = out.select(cols).toPandas().sort_values("seq").reset_index(drop=True)
-    b = batch.select(cols).toPandas().sort_values("seq").reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-
-
 def test_per_batch_anomalies_match_pandas_oracle(spark, hot_path_output):
     """T5: z-score anomalies recomputed per micro-batch only — verify
     against a pandas groupby-per-batch oracle (ddof=1 like the
@@ -170,7 +115,7 @@ def test_restart_is_exactly_once_and_state_continues(spark, hot_path_output):
         hot_path_output["anom"],
         hot_path_output["cp"],
     )
-    more = _gen_records(40, seed=7)
+    more = gen_hot_records(40, seed=7)
     for r in more:
         r["seq"] += 1000
         r["id"] = f"late{r['seq']}"
@@ -194,59 +139,6 @@ def test_restart_is_exactly_once_and_state_continues(spark, hot_path_output):
         assert maxes[r["author"]] > r["count"]
 
 
-def test_windowed_stream_matches_batch(spark, tmp_path):
-    """T7: watermarked streaming window counts == batch F.window over
-    the same data, for windows the watermark has closed."""
-    import os
-    import time as _time
-
-    from big_data_engineering_project_spark.streaming.pipeline import (
-        enrich_stream,
-        stream_source,
-    )
-    from big_data_engineering_project_spark.streaming.windows import (
-        run_windowed_stream,
-        windowed_counts,
-    )
-
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    recs = _gen_records(160)
-    _write_batches(in_dir, recs, batch_size=40)
-
-    stream = enrich_stream(stream_source(spark, in_dir, 2), FROZEN_NOW)
-    q = run_windowed_stream(
-        stream,
-        str(tmp_path / "out"),
-        str(tmp_path / "cp"),
-        window="1 hour",
-        watermark="1 minute",
-    )
-    q.awaitTermination()
-
-    got = spark.read.parquet(str(tmp_path / "out"))
-    batch = windowed_counts(
-        enrich_stream(
-            spark.read.schema(STREAM_SCHEMA).json(in_dir), FROZEN_NOW
-        ),
-        "created_ts",
-        "subreddit",
-        "1 hour",
-    )
-    # Append mode only emits windows the watermark closed; every emitted
-    # window must match the batch count exactly, and most windows close
-    # (records span ~2.7h; only the tail window may be withheld).
-    emitted = {
-        (r["window_start"], r["subreddit"]): r["cnt"] for r in got.collect()
-    }
-    expected = {
-        (r["window_start"], r["subreddit"]): r["cnt"] for r in batch.collect()
-    }
-    assert len(emitted) > 0
-    for k, v in emitted.items():
-        assert expected[k] == v, k
-
-
 def test_dedup_stream_drops_redelivered_records(spark, tmp_path):
     """T8 upgrade: duplicate ids re-delivered in later micro-batches
     (the at-least-once failure mode) are dropped within the watermark."""
@@ -260,9 +152,9 @@ def test_dedup_stream_drops_redelivered_records(spark, tmp_path):
 
     in_dir = str(tmp_path / "in")
     os.makedirs(in_dir)
-    recs = _gen_records(80)
+    recs = gen_hot_records(80)
     dupes = [dict(r) for r in recs[20:40]]  # redelivered batch (same ids)
-    _write_batches(in_dir, recs + dupes, batch_size=40)
+    write_batches(in_dir, recs + dupes, batch_size=40)
 
     stream = dedup_stream(
         enrich_stream(stream_source(spark, in_dir, 1), FROZEN_NOW)
@@ -319,176 +211,12 @@ def test_rate_source_trigger_semantics_no_files(spark):
     assert vals == list(range(vals[0], vals[0] + len(vals)))  # gapless, no dupes
 
 
-def test_streaming_sessionize_matches_batch(spark, tmp_path):
-    """Streaming gap sessionization (applyInPandasWithState) must equal
-    the batch lag-island formulation (operators.behavior.sessionize)
-    over the same records — including sessions that SPAN micro-batch
-    boundaries (per-user state carries last_ts across batches)."""
-    import os
-
-    from pyspark.sql.types import (
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from big_data_engineering_project_spark.operators.behavior import sessionize
-    from big_data_engineering_project_spark.streaming.stateful import (
-        with_session_idx,
-    )
-
-    rng = random.Random(7)
-    base = dt.datetime(2026, 1, 15, 0, 0, 0)
-    recs, t = [], {u: base for u in range(4)}
-    for i in range(120):
-        u = rng.randrange(4)
-        # gaps straddle the 1h session threshold in both directions
-        t[u] += dt.timedelta(minutes=rng.choice([5, 20, 90, 200]))
-        recs.append(
-            {"event_id": i, "user_id": u,
-             "ts": t[u].strftime("%Y-%m-%d %H:%M:%S")}
-        )
-    # arrival order == event_id order == per-user ts order (file mtimes
-    # strictly increasing, 30 records per file)
-    in_dir = str(tmp_path / "in"); os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=30)
-
-    schema = StructType(
-        [
-            StructField("event_id", IntegerType()),
-            StructField("user_id", IntegerType()),
-            StructField("ts", StringType()),
-        ]
-    )
-    parsed = lambda df: df.withColumn(  # noqa: E731
-        "ts", F.to_timestamp("ts", "yyyy-MM-dd HH:mm:ss")
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(in_dir)
-    )
-    out_dir, cp = str(tmp_path / "out"), str(tmp_path / "cp")
-    q = (
-        with_session_idx(
-            parsed(stream), "user_id", "ts", gap_seconds=3600,
-            order_col="event_id",
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (r["event_id"]): r["session_idx"]
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    batch = sessionize(
-        parsed(spark.read.schema(schema).json(in_dir)),
-        "user_id", "ts", gap_seconds=3600, tiebreak_col="event_id",
-    )
-    want = {r["event_id"]: r["session_idx"] for r in batch.collect()}
-    assert got == want and len(got) == 120
-
-
-def test_stateful_sessionize_multichunk_arrow_batches(spark, tmp_path):
-    """Regression (r5 advice): applyInPandasWithState hands ONE group's
-    micro-batch over as MULTIPLE Arrow chunks in shuffle-arrival order;
-    the per-chunk sort mis-stamped any batch larger than one chunk.
-    Force 5-record chunks and scrambled arrival so a single user's 90
-    rows span ~18 chunks — stream must still equal batch exactly."""
-    import os
-
-    from pyspark.sql.types import (
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from big_data_engineering_project_spark.operators.behavior import sessionize
-    from big_data_engineering_project_spark.streaming.stateful import (
-        with_session_idx,
-    )
-
-    rng = random.Random(11)
-    base = dt.datetime(2026, 2, 1, 0, 0, 0)
-    recs, t = [], base
-    for i in range(90):
-        t += dt.timedelta(minutes=rng.choice([5, 20, 90, 200]))
-        recs.append(
-            {"event_id": i, "user_id": 1,
-             "ts": t.strftime("%Y-%m-%d %H:%M:%S")}
-        )
-    scrambled = recs[:]
-    rng.shuffle(scrambled)  # arrival order != event order inside the batch
-    in_dir = str(tmp_path / "in"); os.makedirs(in_dir)
-    _write_batches(in_dir, scrambled, batch_size=90)  # one micro-batch
-
-    schema = StructType(
-        [
-            StructField("event_id", IntegerType()),
-            StructField("user_id", IntegerType()),
-            StructField("ts", StringType()),
-        ]
-    )
-    parsed = lambda df: df.withColumn(  # noqa: E731
-        "ts", F.to_timestamp("ts", "yyyy-MM-dd HH:mm:ss")
-    )
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "5")
-    try:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .json(in_dir)
-        )
-        out_dir, cp = str(tmp_path / "out"), str(tmp_path / "cp")
-        q = (
-            with_session_idx(
-                parsed(stream), "user_id", "ts", gap_seconds=3600,
-                order_col="event_id",
-            )
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-    got = {
-        r["event_id"]: r["session_idx"]
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    batch = sessionize(
-        parsed(spark.read.schema(schema).json(in_dir)),
-        "user_id", "ts", gap_seconds=3600, tiebreak_col="event_id",
-    )
-    want = {r["event_id"]: r["session_idx"] for r in batch.collect()}
-    assert got == want and len(got) == 90
-
-
 def test_curation_stream_matches_batch(spark, tmp_path):
     """Incremental curation ≡ batch curation: the same gate/split/
     fingerprint expressions run as a 3-micro-batch stream with
     cross-batch dedup state; output must equal curate_documents over
     the union (arrival order follows doc_id, so first-arrival ==
     min-doc_id keeper)."""
-    import json as _json
-    import os
-    import time as _time
-
     from big_data_engineering_project_spark.plans.queries_pipeline import (
         _CURATION_MIN_QUALITY,
         curate_documents,
@@ -528,16 +256,13 @@ def test_curation_stream_matches_batch(spark, tmp_path):
              "lang": "en", "source": "s"},
         ],
     ]
-    in_dir = str(tmp_path / "in"); os.makedirs(in_dir)
-    for i, recs in enumerate(batches):
-        with open(os.path.join(in_dir, f"b{i}.json"), "w") as fh:
-            for r in recs:
-                fh.write(_json.dumps(r) + "\n")
-        _time.sleep(0.05)  # strictly increasing mtimes → arrival order
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    _write_ordered_json(in_dir, batches)
 
     out, cp = str(tmp_path / "out"), str(tmp_path / "cp")
     run_curation_stream(
-        spark, in_dir, out, cp, quality_min=_CURATION_MIN_QUALITY
+        spark, str(in_dir), out, cp, quality_min=_CURATION_MIN_QUALITY
     )
     got = {
         r["doc_id"]: (r["source"], r["split"], r["n_tokens"])
@@ -559,87 +284,12 @@ def test_curation_stream_matches_batch(spark, tmp_path):
     assert 4 not in got                        # junk gated out
 
 
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Stream-stream inner interval join (clicks ⋈ buys within 30 min)
-    drains to exactly the batch join of the same files — and the
-    time-range lives in the JOIN condition, so state is bounded (Spark
-    rejects the unbounded form outright)."""
-    import os
-
-    from big_data_engineering_project_spark.streaming.joins import (
-        interval_join_streams,
-    )
-
-    base = dt.datetime(2026, 1, 15, 0, 0, 0)
-    clicks = [
-        {"c_user": f"user{i % 5}", "click_id": i,
-         "click_ts": (base + dt.timedelta(minutes=3 * i)).strftime("%Y-%m-%d %H:%M:%S")}
-        for i in range(60)
-    ]
-    buys = [
-        {"b_user": f"user{i % 5}", "buy_id": 1000 + i,
-         "buy_ts": (base + dt.timedelta(minutes=3 * i + (7 if i % 3 else 45))).strftime("%Y-%m-%d %H:%M:%S")}
-        for i in range(60)
-    ]
-    cdir, bdir = str(tmp_path / "clicks"), str(tmp_path / "buys")
-    os.makedirs(cdir), os.makedirs(bdir)
-    _write_batches(cdir, clicks, batch_size=20)
-    _write_batches(bdir, buys, batch_size=20)
-
-    c_schema = "c_user STRING, click_id LONG, click_ts STRING"
-    b_schema = "b_user STRING, buy_id LONG, buy_ts STRING"
-
-    def prep(df, ts):
-        return df.withColumn(ts, F.to_timestamp(ts))
-
-    cs = prep(
-        spark.readStream.schema(c_schema).option("maxFilesPerTrigger", 1).json(cdir),
-        "click_ts",
-    )
-    bs = prep(
-        spark.readStream.schema(b_schema).option("maxFilesPerTrigger", 1).json(bdir),
-        "buy_ts",
-    )
-    joined = interval_join_streams(
-        cs, bs, "c_user", "b_user", "click_ts", "buy_ts", 30 * 60
-    )
-    out = str(tmp_path / "out")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "cp"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = {
-        (r["click_id"], r["buy_id"])
-        for r in spark.read.parquet(out).collect()
-    }
-    cb = prep(spark.read.schema(c_schema).json(cdir), "click_ts")
-    bb = prep(spark.read.schema(b_schema).json(bdir), "buy_ts")
-    want = {
-        (r["click_id"], r["buy_id"])
-        for r in interval_join_streams(
-            cb, bb, "c_user", "b_user", "click_ts", "buy_ts", 30 * 60
-        ).collect()
-    }
-    assert len(want) > 0
-    assert got == want
-
-
 def test_cusum_stream_equals_batch_with_frozen_stats(spark, tmp_path):
     """Streaming CUSUM (recursion in 8-byte keyed state, frozen
     training stats) must emit EXACTLY the batch operator's alarm rows
     on the same ordered data — closed form ≡ recursion, all integer.
     The drift is planted to start mid-stream so alarms depend on
     state carried across micro-batches."""
-    import datetime as dt
-    import json as _json
-    import os
-    import time as _time
-
     from big_data_engineering_project_spark.operators.anomaly import (
         cusum_drift,
         cusum_stats,
@@ -677,16 +327,9 @@ def test_cusum_stream_equals_batch_with_frozen_stats(spark, tmp_path):
     stats = cusum_stats(train, "k", "v")
 
     in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
     # interleave keys by time so batches carry both keys
     rows.sort(key=lambda r: (r["ts"], r["id"]))
-    t0 = _time.time() - 3600
-    for b, start in enumerate(range(0, len(rows), 20)):
-        p = os.path.join(in_dir, f"{b:04d}.json")
-        with open(p, "w") as f:
-            for r in rows[start : start + 20]:
-                f.write(_json.dumps(r) + "\n")
-        os.utime(p, (t0 + b, t0 + b))
+    write_batches(in_dir, rows, batch_size=20)
 
     schema = "k STRING, ts STRING, id LONG, v DOUBLE"
     ss = (
@@ -891,10 +534,6 @@ def test_table_diff_stream_maintains_exact_digest_index(spark, tmp_path):
     reinsert, the XOR-delta-maintained digest index must equal
     bucket_digests rebuilt from the final replica EXACTLY, and the
     maintained replica must equal the expected final rows."""
-    import json as _json
-    import os as _os
-    import time as _time
-
     from big_data_engineering_project_spark.operators.cdc import (
         bucket_digests,
     )
@@ -934,13 +573,7 @@ def test_table_diff_stream_maintains_exact_digest_index(spark, tmp_path):
     ]
     in_dir = tmp_path / "chg"
     in_dir.mkdir()
-    t0 = _time.time() - 600
-    for b, recs in enumerate(batches):
-        fp = str(in_dir / f"{b}.json")
-        with open(fp, "w") as fh:
-            for r in recs:
-                fh.write(_json.dumps(r) + "\n")
-        _os.utime(fp, (t0 + b, t0 + b))
+    _write_ordered_json(in_dir, batches)
 
     run_table_diff_stream(
         spark,

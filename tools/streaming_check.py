@@ -1,82 +1,18 @@
-"""Per-round streaming correctness artifact (r6 verdict task 3).
+"""The speed layer's stream ≡ batch twin table, and the CLI that writes
+the per-round STREAMING artifact from it.
 
-The batch side leaves CORRECTNESS_FULL_r0N artifacts every round; the
-speed layer's guarantees lived only in pytest, so a state-semantics
-regression would fail a test but leave no round-over-round evidence
-trail. This tool runs every stream≡batch equivalence end-to-end
-against deterministic fixtures and writes STREAMING_r0N.json with
-per-check row counts and value-hash equality — the same evidence shape
-the oracle sweeps give the batch layer. Reference anchor: the speed
-layer is half the reference architecture (S/kinesis_processing_2.py).
-
-Checks (each runs the REAL streaming execution — file-source
-micro-batches, checkpoints, state stores — then the batch twin):
-
-  hot_path_enrichment   run_hot_path (enrich + applyInPandasWithState
-                        author counts + foreachBatch dual sink) ≡
-                        enrich_stream + row_number in batch mode
-  restart_recovery      re-run with the same checkpoint after a late
-                        file: old rows NOT reprocessed, author-count
-                        state continues past batch-local counts
-  sessionization        with_session_idx (stateful gap sessions,
-                        sessions spanning micro-batches) ≡ batch
-                        lag-island sessionize
-  curation_ingest       run_curation_stream (quality gate + split
-                        stamp + cross-batch fingerprint dedup state)
-                        ≡ curate_documents over the union
-  interval_join         interval_join_streams executed stream-mode
-                        (time-range in the JOIN condition → bounded
-                        state) ≡ the same operator in batch mode
-  watermark_dedup       dedup_stream (dropDuplicatesWithinWatermark,
-                        cross-batch keyed state) drops planted
-                        redeliveries ≡ batch dropDuplicates
-  cusum_drift           cusum_alarm_stream (8-byte keyed recursion
-                        state, frozen training stats) ≡ the batch
-                        closed-form operator, exact integer rows
-  scd2_maintenance      run_scd2_stream (foreachBatch MERGE of an
-                        SCD2 history table from a micro-batched
-                        changelog, replay-guarded) ≡ batch
-                        scd2_from_changelog over the union
-  cm_sketch_merge       run_cm_sketch_stream (per-batch linear-sketch
-                        counter addition, constant d·w state) ≡ batch
-                        cm_counters over the union, EXACT integers
-  kmv_sketch_merge      run_kmv_stream (per-batch KMV sketch merge,
-                        one ≤ k-array per key) ≡ batch kmv_sketch_agg
-                        over the union, EXACT sketch arrays incl. the
-                        < k exact-enumeration path
-  agg_maintenance       run_agg_maintenance_stream (per-batch fold of
-                        (n, Σ, Σ², min, max) states via ivm.agg_merge)
-                        ≡ one batch agg over the union, EXACT served
-                        aggregates with cross-batch extremes planted
-  seasonal_anomalies    seasonal_apply with FROZEN training stats
-                        (stream-static broadcast join, stateless map)
-                        ≡ the same applier over the batch union;
-                        planted slot-absurd values must fire
-  interval_join_outer   LEFT OUTER stream-stream interval join
-                        (abandonment rows emit with NULL right side
-                        after the watermark passes; sentinel rows
-                        advance the min-across-inputs watermark)
-                        ≡ the batch left join
-  ohlc_bars             run_ohlc_stream (foreachBatch merge of
-                        mergeable OHLC partial state, one row per
-                        (key, bucket)) ≡ batch ohlc_resample over the
-                        union, incl. cross-batch same-ts tie-breaks
-  table_diff_maintenance run_table_diff_stream (XOR-delta maintenance
-                        of a replica snapshot + its Merkle bucket-
-                        digest index from an upsert/tombstone
-                        changelog) ≡ bucket_digests rebuilt from the
-                        final replica AND table_diff over the full
-                        snapshots, both EXACT
-  reservoir_maintenance run_reservoir_stream (per-batch bottom-k
-                        reservoir merge per key) ≡ batch
-                        reservoir_sample_agg over the union, EXACT
-                        (score, id) arrays incl. cross-batch
-                        redeliveries + the < k enumeration path
-  pack_maintenance      run_pack_stream (incremental concat-and-chunk
-                        packing assignment over an id-monotone append
-                        stream, replay-guarded) ≡ batch
-                        pack_concat_chunks over the union, EXACT
-                        offsets/chunk ranges
+The batch side leaves CORRECTNESS_FULL artifacts every round; this
+tool gives the speed layer the same evidence shape. Every twin is one
+row of `TWINS`: a deterministic fixture writer, the REAL streaming
+execution over it (file-source micro-batches, checkpoints, state
+stores), a read-back of what the stream left behind, and the batch
+twin over the union of the same records. `run_twin` turns a row into
+its artifact entry — row counts, order-insensitive value hashes of
+both sides, any extra predicates — and `match`. The same rows run
+under Tier-1 (tests/test_streaming.py parametrizes over `TWINS`), so
+the artifact and the gate cannot drift apart. Reference anchor: the
+speed layer is half the reference architecture
+(S/kinesis_processing_2.py).
 
 Usage: python tools/streaming_check.py [--json STREAMING_r0N.json]
 Exit code 1 if any check fails.
@@ -87,18 +23,48 @@ from __future__ import annotations
 import datetime as dt
 import hashlib
 import json
+import math
 import os
 import random
 import shutil
 import sys
 import tempfile
 import time
+from dataclasses import dataclass
+from typing import Callable
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+from big_data_engineering_project_spark.operators import (  # noqa: E402
+    anomaly,
+    behavior,
+    cdc,
+    compaction,
+    dedup,
+    features,
+    governance,
+    ivm,
+    sampling,
+    similarity,
+    sketches,
+    temporal,
+    text_analysis,
+)
+from big_data_engineering_project_spark.plans.queries_pipeline import (  # noqa: E402
+    _CURATION_MIN_QUALITY,
+    curate_documents,
+)
+from big_data_engineering_project_spark.streaming import (  # noqa: E402
+    joins,
+    pipeline,
+    scd2,
+    stateful,
+    windows,
+)
 
 FROZEN_NOW = dt.datetime(2026, 1, 16, 0, 0, 0)
 
@@ -109,8 +75,10 @@ def _rows_hash(rows) -> str:
     return hashlib.sha256("\n".join(canon).encode()).hexdigest()[:16]
 
 
-def _write_batches(dirpath: str, recs: list[dict], batch_size: int) -> None:
-    # Strictly increasing mtimes pin file-source arrival order.
+def write_batches(dirpath: str, recs: list[dict], batch_size: int) -> None:
+    # Spark's file source orders by modification time (ties → undefined
+    # order); strictly increasing mtimes pin arrival order.
+    os.makedirs(dirpath, exist_ok=True)
     t0 = time.time() - 3600
     for b, start in enumerate(range(0, len(recs), batch_size)):
         path = os.path.join(dirpath, f"{b:04d}.json")
@@ -120,14 +88,14 @@ def _write_batches(dirpath: str, recs: list[dict], batch_size: int) -> None:
         os.utime(path, (t0 + b, t0 + b))
 
 
-def _gen_hot_records(n: int, seed: int = 42) -> list[dict]:
+def gen_hot_records(n: int, seed: int = 42) -> list[dict]:
     rng = random.Random(seed)
     authors = [f"user{i}" for i in range(8)]
     recs = []
     for i in range(n):
         score = rng.randint(0, 100)
         if i % 37 == 0:
-            score = 100_000
+            score = 100_000  # guaranteed z-score outlier (FIXTURES.md §2)
         recs.append(
             {
                 "seq": i,
@@ -154,177 +122,277 @@ def _gen_hot_records(n: int, seed: int = 42) -> list[dict]:
     return recs
 
 
-def check_hot_path(spark, root: str) -> tuple[dict, dict]:
-    """Returns (hot_path_enrichment result, restart context for the
-    restart check — the two share one streaming run)."""
-    from big_data_engineering_project_spark.streaming.pipeline import (
-        STREAM_SCHEMA,
-        enrich_stream,
-        run_hot_path,
-    )
+# --- the harness ---------------------------------------------------------------
 
-    in_dir = os.path.join(root, "hot_in")
-    table = os.path.join(root, "hot_table")
-    anom = os.path.join(root, "hot_anom")
-    cp = os.path.join(root, "hot_cp")
-    os.makedirs(in_dir)
-    recs = _gen_hot_records(200)
-    _write_batches(in_dir, recs, batch_size=40)
-    run_hot_path(
-        spark, in_dir, table, anom, cp, now=FROZEN_NOW, max_files_per_trigger=1
-    )
 
-    cols = [
-        "seq",
-        "sentiment",
-        "post_age_minutes",
-        "popularity_score",
-        "post_type",
-        "time_of_day",
-        "author_activity_count",
-    ]
-    out = spark.read.parquet(table)
-    got = out.select(cols).collect()
-    w = Window.partitionBy("author").orderBy("seq")
-    batch = (
-        enrich_stream(
-            spark.read.schema(STREAM_SCHEMA).json(in_dir), FROZEN_NOW
+class Paths:
+    """One row's scratch directories under `root/<name>`: `inp` (the
+    fixture's json files), `out` (the stream's sink, state or index),
+    `cp` (its checkpoint), and `path(leaf)` for anything else. Steps
+    also stash what later steps need (records, frozen stats) here."""
+
+    def __init__(self, root: str, name: str):
+        self.root = os.path.join(root, name)
+        os.makedirs(self.root)
+        self.inp, self.out, self.cp = (
+            self.path("in"),
+            self.path("out"),
+            self.path("cp"),
         )
-        .withColumn("author_activity_count", F.row_number().over(w))
-        .select(cols)
-        .collect()
-    )
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(batch),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(batch),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] == 200
-        and res["hash_stream"] == res["hash_batch"]
-    )
-    ctx = {"in": in_dir, "table": table, "anom": anom, "cp": cp}
-    return res, ctx
+
+    def path(self, leaf: str) -> str:
+        return os.path.join(self.root, leaf)
 
 
-def check_restart(spark, ctx: dict) -> dict:
-    from big_data_engineering_project_spark.streaming.pipeline import (
-        run_hot_path,
+@dataclass(frozen=True)
+class Twin:
+    """One stream ≡ batch twin. `read` and `batch` return the rows the
+    two sides must agree on — a list, or a dict of labelled lists whose
+    "" entry gives `rows_*`/`hash_*` and every other label `hash_<label>_*`.
+    `extras(spark, p, got, want)` adds entries: a bool must be True, any
+    other value is reported (and may be checked by `ok`). `rows` pins
+    the exact row count (default: both sides non-empty). `then` rows
+    continue in the same directories and add their own entries."""
+
+    name: str
+    why: str
+    fixture: Callable
+    stream: Callable
+    read: Callable
+    batch: Callable
+    extras: Callable | None = None
+    ok: Callable | None = None
+    rows: int | None = None
+    then: tuple = ()
+
+
+def _labelled(rows) -> dict:
+    return rows if isinstance(rows, dict) else {"": rows}
+
+
+def run_twin(spark, root: str, twin: Twin, p: Paths | None = None) -> dict:
+    """Run one row end to end; returns {entry name: result dict}."""
+    p = p or Paths(root, twin.name)
+    twin.fixture(spark, p)
+    twin.stream(spark, p)
+    got, want = _labelled(twin.read(spark, p)), _labelled(twin.batch(spark, p))
+    res = {"rows_stream": len(got[""]), "rows_batch": len(want[""])}
+    hashes = {f"hash_{label}_" if label else "hash_": label for label in got}
+    for key, label in hashes.items():
+        res[key + "stream"] = _rows_hash(got[label])
+        res[key + "batch"] = _rows_hash(want[label])
+    extra = twin.extras(spark, p, got[""], want[""]) if twin.extras else {}
+    res.update(extra)
+    n = res["rows_batch"]
+    res["match"] = bool(
+        res["rows_stream"] == n
+        and (n == twin.rows if twin.rows is not None else n > 0)
+        and all(res[k + "stream"] == res[k + "batch"] for k in hashes)
+        and all(v for v in extra.values() if isinstance(v, bool))
+        and (twin.ok is None or twin.ok(res))
+    )
+    results = {twin.name: res}
+    for follow in twin.then:
+        results.update(run_twin(spark, root, follow, p))
+    return results
+
+
+def entry_names() -> list[str]:
+    """Every artifact entry name the table produces, in run order."""
+    names, todo = [], list(TWINS)
+    while todo:
+        t = todo.pop(0)
+        names.append(t.name)
+        todo[:0] = t.then
+    return names
+
+
+def _tuples(df, *cols) -> list[tuple]:
+    if not cols:
+        return [tuple(r) for r in df.collect()]
+    return [tuple(r[c] for c in cols) for r in df.collect()]
+
+
+def _json(spark, schema: str, path: str):
+    return spark.read.schema(schema).json(path)
+
+
+def _source(spark, schema: str, path: str):
+    return (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(path)
     )
 
-    more = _gen_hot_records(40, seed=7)
+
+def _sink(df, p: Paths) -> None:
+    """Drain a streaming frame into Parquet at p.out (availableNow)."""
+    q = (
+        df.writeStream.format("parquet")
+        .option("path", p.out)
+        .option("checkpointLocation", p.cp)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+
+
+def _ts(df, col: str, fmt: str | None = None):
+    return df.withColumn(col, F.to_timestamp(col, fmt))
+
+
+# --- fixtures and steps, one block per twin ------------------------------------
+
+_HOT_COLS = (
+    "seq",
+    "sentiment",
+    "post_age_minutes",
+    "popularity_score",
+    "post_type",
+    "time_of_day",
+    "author_activity_count",
+)
+
+
+def _hot_fixture(spark, p):
+    write_batches(p.inp, gen_hot_records(200), batch_size=40)
+
+
+def _hot_stream(spark, p):
+    pipeline.run_hot_path(
+        spark, p.inp, p.out, p.path("anom"), p.cp, now=FROZEN_NOW,
+        max_files_per_trigger=1,
+    )
+
+
+def _hot_batch(spark, p):
+    w = Window.partitionBy("author").orderBy("seq")
+    enriched = pipeline.enrich_stream(
+        _json(spark, pipeline.STREAM_SCHEMA, p.inp), FROZEN_NOW
+    )
+    return _tuples(
+        enriched.withColumn("author_activity_count", F.row_number().over(w)),
+        *_HOT_COLS,
+    )
+
+
+def _restart_fixture(spark, p):
+    more = gen_hot_records(40, seed=7)
     for r in more:
         r["seq"] += 1000
         r["id"] = f"late{r['seq']}"
-    with open(os.path.join(ctx["in"], "9999.json"), "w") as f:
+    with open(os.path.join(p.inp, "9999.json"), "w") as f:
         for r in more:
             f.write(json.dumps(r) + "\n")
-    run_hot_path(
-        spark,
-        ctx["in"],
-        ctx["table"],
-        ctx["anom"],
-        ctx["cp"],
-        now=FROZEN_NOW,
-        max_files_per_trigger=1,
-    )
-    out = spark.read.parquet(ctx["table"])
-    n = out.count()
-    n_distinct = out.select("id").distinct().count()
+
+
+def _restart_extras(spark, p, got, want):
+    out = spark.read.parquet(p.out)
     late = out.filter(F.col("seq") >= 1000)
-    late_counts = {r["author"]: r["count"] for r in late.groupBy("author").count().collect()}
+    late_counts = {
+        r["author"]: r["count"] for r in late.groupBy("author").count().collect()
+    }
     maxes = {
         r["author"]: r["m"]
         for r in out.groupBy("author")
         .agg(F.max("author_activity_count").alias("m"))
         .collect()
     }
-    state_continued = all(maxes[a] > c for a, c in late_counts.items())
     return {
-        "rows_stream": n,
-        "rows_batch": 240,
-        "exactly_once": n == n_distinct == 240,
-        "state_continued": state_continued,
-        "match": n == n_distinct == 240 and state_continued,
+        "exactly_once": len(got) == len(set(got)) == 240,
+        "state_continued": all(maxes[a] > c for a, c in late_counts.items()),
     }
 
 
-def check_sessionize(spark, root: str) -> dict:
-    from big_data_engineering_project_spark.operators.behavior import (
-        sessionize,
-    )
-    from big_data_engineering_project_spark.streaming.stateful import (
-        with_session_idx,
-    )
+_SESS_SCHEMA = "event_id INT, user_id INT, ts STRING"
 
+
+def _sess_fixture(spark, p):
     rng = random.Random(7)
     base = dt.datetime(2026, 1, 15)
     recs, t = [], {u: base for u in range(4)}
     for i in range(120):
         u = rng.randrange(4)
+        # gaps straddle the 1h session threshold in both directions
         t[u] += dt.timedelta(minutes=rng.choice([5, 20, 90, 200]))
         recs.append(
             {"event_id": i, "user_id": u, "ts": t[u].strftime("%Y-%m-%d %H:%M:%S")}
         )
-    in_dir = os.path.join(root, "sess_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=30)
-    schema = "event_id INT, user_id INT, ts STRING"
-    parse = lambda df: df.withColumn(  # noqa: E731
-        "ts", F.to_timestamp("ts", "yyyy-MM-dd HH:mm:ss")
-    )
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(in_dir)
-    )
-    out_dir, cp = os.path.join(root, "sess_out"), os.path.join(root, "sess_cp")
-    q = (
-        with_session_idx(
-            parse(stream), "user_id", "ts", gap_seconds=3600, order_col="event_id"
+    write_batches(p.inp, recs, batch_size=30)
+
+
+def _sess_multichunk_fixture(spark, p):
+    rng = random.Random(11)
+    recs, t = [], dt.datetime(2026, 2, 1)
+    for i in range(90):
+        t += dt.timedelta(minutes=rng.choice([5, 20, 90, 200]))
+        recs.append(
+            {"event_id": i, "user_id": 1, "ts": t.strftime("%Y-%m-%d %H:%M:%S")}
         )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = [
-        (r["event_id"], r["session_idx"])
-        for r in spark.read.parquet(out_dir).collect()
-    ]
-    want = [
-        (r["event_id"], r["session_idx"])
-        for r in sessionize(
-            parse(spark.read.schema(schema).json(in_dir)),
-            "user_id",
-            "ts",
-            gap_seconds=3600,
-            tiebreak_col="event_id",
-        ).collect()
-    ]
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] == 120
-        and res["hash_stream"] == res["hash_batch"]
-    )
-    return res
+    rng.shuffle(recs)  # arrival order != event order inside the batch
+    write_batches(p.inp, recs, batch_size=90)  # one micro-batch
 
 
-def check_curation(spark, root: str) -> dict:
-    from big_data_engineering_project_spark.plans.queries_pipeline import (
-        _CURATION_MIN_QUALITY,
-        curate_documents,
-    )
-    from big_data_engineering_project_spark.streaming.pipeline import (
-        run_curation_stream,
+def _sess_stream(spark, p):
+    _sink(
+        stateful.with_session_idx(
+            _ts(_source(spark, _SESS_SCHEMA, p.inp), "ts", "yyyy-MM-dd HH:mm:ss"),
+            "user_id", "ts", gap_seconds=3600, order_col="event_id",
+        ),
+        p,
     )
 
+
+def _sess_multichunk_stream(spark, p):
+    # 5-record Arrow chunks: one user's 90-row micro-batch reaches the
+    # state function as ~18 chunks in shuffle-arrival order
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "5")
+    try:
+        _sess_stream(spark, p)
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def _sess_batch(spark, p):
+    return _tuples(
+        behavior.sessionize(
+            _ts(_json(spark, _SESS_SCHEMA, p.inp), "ts", "yyyy-MM-dd HH:mm:ss"),
+            "user_id", "ts", gap_seconds=3600, tiebreak_col="event_id",
+        ),
+        "event_id", "session_idx",
+    )
+
+
+def _windowed_fixture(spark, p):
+    write_batches(p.inp, gen_hot_records(160), batch_size=40)
+
+
+def _windowed_stream(spark, p):
+    windows.run_windowed_stream(
+        pipeline.enrich_stream(pipeline.stream_source(spark, p.inp, 2), FROZEN_NOW),
+        p.out, p.cp, window="1 hour", watermark="1 minute",
+    ).awaitTermination()
+
+
+def _windowed_batch(spark, p):
+    # append mode emits exactly the windows the final watermark (max
+    # event time − 1 minute) has closed
+    enriched = pipeline.enrich_stream(
+        _json(spark, pipeline.STREAM_SCHEMA, p.inp), FROZEN_NOW
+    )
+    wm = enriched.agg(F.max("created_ts")).first()[0] - dt.timedelta(minutes=1)
+    return _tuples(
+        windows.windowed_counts(enriched, "created_ts", "subreddit", "1 hour")
+        .filter(F.col("window_end") <= F.lit(wm)),
+        "window_start", "subreddit", "cnt",
+    )
+
+
+def _curation_fixture(spark, p):
     rng = random.Random(13)
     words = [f"w{i}" for i in range(500)]
     markers = ["the", "and", "of", "to", "in"]
@@ -338,124 +406,60 @@ def check_curation(spark, root: str) -> dict:
     ]
     for i in range(per_file, n, 8):  # plant cross-batch duplicates
         texts[i] = texts[i - per_file]
-    recs = [
+    p.recs = [
         {"doc_id": i, "text": texts[i], "lang": "en", "source": f"s{i % 4}"}
         for i in range(n)
     ]
-    in_dir = os.path.join(root, "cur_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=per_file)
-    out, cp = os.path.join(root, "cur_out"), os.path.join(root, "cur_cp")
-    run_curation_stream(spark, in_dir, out, cp, quality_min=_CURATION_MIN_QUALITY)
-    got = [
-        (r["doc_id"], r["source"], r["split"], r["n_tokens"])
-        for r in spark.read.parquet(out).collect()
-    ]
-    batch_df = spark.createDataFrame(recs).dropDuplicates(["doc_id"])
-    want = [
-        (r["doc_id"], r["source"], r["split"], r["n_tokens"])
-        for r in curate_documents(batch_df).collect()
-    ]
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-    )
-    return res
+    write_batches(p.inp, p.recs, batch_size=per_file)
 
 
-def check_interval_join(spark, root: str) -> dict:
-    from big_data_engineering_project_spark.streaming.joins import (
-        interval_join_streams,
-    )
+_CURATION_COLS = ("doc_id", "source", "split", "n_tokens")
 
+_CLICK_SCHEMA = "c_user STRING, click_id LONG, click_ts STRING"
+_BUY_SCHEMA = "b_user STRING, buy_id LONG, buy_ts STRING"
+
+
+def _join_fixture(p, buy_offsets: dict[int, int], sentinels: bool) -> None:
+    """60 clicks 3 minutes apart over 5 users; a buy for each click in
+    `buy_offsets` that many minutes later. Sentinels: a far-future row
+    on each side advances the min-across-inputs watermark."""
     base = dt.datetime(2026, 1, 15)
+    stamp = lambda m: (base + dt.timedelta(minutes=m)).strftime(  # noqa: E731
+        "%Y-%m-%d %H:%M:%S"
+    )
     clicks = [
-        {
-            "c_user": f"user{i % 5}",
-            "click_id": i,
-            "click_ts": (base + dt.timedelta(minutes=3 * i)).strftime(
-                "%Y-%m-%d %H:%M:%S"
-            ),
-        }
+        {"c_user": f"user{i % 5}", "click_id": i, "click_ts": stamp(3 * i)}
         for i in range(60)
     ]
     buys = [
-        {
-            "b_user": f"user{i % 5}",
-            "buy_id": 1000 + i,
-            "buy_ts": (
-                base + dt.timedelta(minutes=3 * i + (7 if i % 3 else 45))
-            ).strftime("%Y-%m-%d %H:%M:%S"),
-        }
-        for i in range(60)
+        {"b_user": f"user{i % 5}", "buy_id": 1000 + i, "buy_ts": stamp(3 * i + off)}
+        for i, off in buy_offsets.items()
     ]
-    cdir, bdir = os.path.join(root, "clicks"), os.path.join(root, "buys")
-    os.makedirs(cdir), os.makedirs(bdir)
-    _write_batches(cdir, clicks, batch_size=20)
-    _write_batches(bdir, buys, batch_size=20)
-    c_schema = "c_user STRING, click_id LONG, click_ts STRING"
-    b_schema = "b_user STRING, buy_id LONG, buy_ts STRING"
-    prep = lambda df, ts: df.withColumn(ts, F.to_timestamp(ts))  # noqa: E731
-    cs = prep(
-        spark.readStream.schema(c_schema).option("maxFilesPerTrigger", 1).json(cdir),
-        "click_ts",
-    )
-    bs = prep(
-        spark.readStream.schema(b_schema).option("maxFilesPerTrigger", 1).json(bdir),
-        "buy_ts",
-    )
-    out = os.path.join(root, "ij_out")
-    q = (
-        interval_join_streams(cs, bs, "c_user", "b_user", "click_ts", "buy_ts", 1800)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(root, "ij_cp"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = [
-        (r["click_id"], r["buy_id"]) for r in spark.read.parquet(out).collect()
-    ]
-    cb = prep(spark.read.schema(c_schema).json(cdir), "click_ts")
-    bb = prep(spark.read.schema(b_schema).json(bdir), "buy_ts")
-    want = [
-        (r["click_id"], r["buy_id"])
-        for r in interval_join_streams(
-            cb, bb, "c_user", "b_user", "click_ts", "buy_ts", 1800
-        ).collect()
-    ]
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-    )
-    return res
+    if sentinels:
+        far = stamp(10 * 24 * 60)
+        clicks.append({"c_user": "sentinel", "click_id": -1, "click_ts": far})
+        buys.append({"b_user": "sentinel", "buy_id": -1, "buy_ts": far})
+    write_batches(p.inp, clicks, batch_size=20)
+    write_batches(p.path("buys"), buys, batch_size=20)
 
 
-def check_watermark_dedup(spark, root: str) -> dict:
-    """dedup_stream (dropDuplicatesWithinWatermark) ≡ batch
-    dropDuplicates on planted cross-batch redeliveries: ids divisible
-    by 5 are re-delivered byte-identically in LATER micro-batches
-    (inside the 1-hour horizon) — the at-least-once crash-replay shape
-    the reference's no-checkpoint consumer exhibits (T8). The keyed
-    state must carry across micro-batches for the stream side to drop
-    them."""
-    from big_data_engineering_project_spark.streaming.pipeline import (
-        dedup_stream,
+def _join(spark, p, read, how: str = "inner"):
+    return joins.interval_join_streams(
+        _ts(read(spark, _CLICK_SCHEMA, p.inp), "click_ts"),
+        _ts(read(spark, _BUY_SCHEMA, p.path("buys")), "buy_ts"),
+        "c_user", "b_user", "click_ts", "buy_ts", 1800, how=how,
     )
 
+
+def _clicked(df) -> list[tuple]:
+    """(click_id, buy_id) pairs, the sentinel row excluded."""
+    return [t for t in _tuples(df, "click_id", "buy_id") if t[0] >= 0]
+
+
+_DEDUP_SCHEMA = "id LONG, payload STRING, created_ts STRING"
+
+
+def _dedup_fixture(spark, p):
     base = dt.datetime(2026, 1, 15)
     orig = [
         {
@@ -470,65 +474,11 @@ def check_watermark_dedup(spark, root: str) -> dict:
     # redeliveries appended AFTER the full original sequence → they
     # arrive in later micro-batches than their originals
     recs = orig + [r for r in orig if r["id"] % 5 == 0]
-    in_dir = os.path.join(root, "dedup_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=30)
-    schema = "id LONG, payload STRING, created_ts STRING"
-    prep = lambda df: df.withColumn(  # noqa: E731
-        "created_ts", F.to_timestamp("created_ts")
-    )
-    ss = prep(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(in_dir)
-    )
-    out = os.path.join(root, "dedup_out")
-    q = (
-        dedup_stream(ss, id_col="id", ts_col="created_ts", within="1 hour")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(root, "dedup_cp"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = [
-        (r["id"], r["payload"], r["created_ts"])
-        for r in spark.read.parquet(out).collect()
-    ]
-    bb = prep(spark.read.schema(schema).json(in_dir))
-    want = [
-        (r["id"], r["payload"], r["created_ts"])
-        for r in bb.dropDuplicates(["id"]).collect()
-    ]
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "redelivered": sum(1 for r in recs) - len(orig),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] == len(orig)
-        and res["hash_stream"] == res["hash_batch"]
-    )
-    return res
+    p.redelivered = len(recs) - len(orig)
+    write_batches(p.inp, recs, batch_size=30)
 
 
-def check_cusum_stream(spark, root: str) -> dict:
-    """cusum_alarm_stream ≡ batch cusum_drift with the same frozen
-    training stats: the drift is planted mid-stream so the alarms
-    depend on the 8-byte recursion state carried across micro-batches;
-    both sides are integer end-to-end, so the rows must be EXACTLY
-    equal."""
-    from big_data_engineering_project_spark.operators.anomaly import (
-        cusum_drift,
-        cusum_stats,
-    )
-    from big_data_engineering_project_spark.streaming.stateful import (
-        cusum_alarm_stream,
-    )
-
+def _cusum_fixture(spark, p):
     base = dt.datetime(2026, 1, 10)
     recs = []
     i = 0
@@ -541,417 +491,51 @@ def check_cusum_stream(spark, root: str) -> dict:
                         "%Y-%m-%d %H:%M:%S"
                     ),
                     "id": i,
-                    "v": 50.0
-                    + 3.0 * (j % 2)
-                    + (12.0 if j >= shift_at else 0.0),
+                    "v": 50.0 + 3.0 * (j % 2) + (12.0 if j >= shift_at else 0.0),
                 }
             )
             i += 1
     recs.sort(key=lambda r: (r["ts"], r["id"]))
-    in_dir = os.path.join(root, "cusum_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=40)
-
+    write_batches(p.inp, recs, batch_size=40)
+    # training stats from the pre-drift window only (production shape)
     train = spark.createDataFrame(
         [(r["k"], r["v"]) for r in recs if int(r["id"]) % 120 < 60],
         "k STRING, v DOUBLE",
     )
-    stats = cusum_stats(train, "k", "v")
-    schema = "k STRING, ts STRING, id LONG, v DOUBLE"
-    ss = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(in_dir)
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    out = os.path.join(root, "cusum_out")
-    q = (
-        cusum_alarm_stream(ss, stats, "k", "ts", "id", "v")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(root, "cusum_cp"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = [
-        (r["k"], r["id"], r["cusum_micro"], r["threshold_micro"])
-        for r in spark.read.parquet(out).collect()
-    ]
-    bb = (
-        spark.read.schema(schema)
-        .json(in_dir)
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    want = [
-        (r["k"], r["id"], r["cusum_micro"], r["threshold_micro"])
-        for r in cusum_drift(
-            bb, "k", "ts", "id", "v", precomputed_stats=stats
-        ).collect()
-    ]
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-    )
-    return res
+    p.stats = anomaly.cusum_stats(train, "k", "v")
 
 
-def check_scd2_stream(spark, root: str) -> dict:
-    """run_scd2_stream (foreachBatch MERGE maintenance of an SCD2
-    history Parquet table from a micro-batched changelog) ≡ the batch
-    scd2_from_changelog over the union of all records — versions,
-    validity intervals, is_current flags. The changelog plants echo
-    rows (no-change) and NULL attr states across micro-batch
-    boundaries, so compaction-against-current-state and the replay
-    guard are both load-bearing. This is the production form of the
-    reference's DynamoDB keyed upsert (S/kinesis_processing_2.py:
-    149-163) generalized to full validity history."""
-    from big_data_engineering_project_spark.operators.cdc import (
-        scd2_from_changelog,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_scd2_stream,
-    )
+_CUSUM_SCHEMA = "k STRING, ts STRING, id LONG, v DOUBLE"
+_CUSUM_COLS = ("k", "id", "cusum_micro", "threshold_micro")
 
+
+def _scd2_fixture(spark, p):
     rng = random.Random(29)
     base = dt.datetime(2026, 1, 12)
     attrs = ["red", "green", "blue", None]
-    recs = []
-    for i in range(360):
-        recs.append(
-            {
-                "user_id": rng.randrange(20),
-                "event_id": i,
-                "ts": (base + dt.timedelta(minutes=i)).strftime(
-                    "%Y-%m-%dT%H:%M:%S"
-                ),
-                "event_type": rng.choice(attrs),
-            }
-        )
-    in_dir = os.path.join(root, "scd2_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=45)  # 8 micro-batches
-
-    hist_path = os.path.join(root, "scd2_history")
-    run_scd2_stream(
-        spark,
-        in_dir,
-        hist_path,
-        os.path.join(root, "scd2_cp"),
-    )
-    got = [
-        (
-            r["user_id"],
-            r["event_type"],
-            r["effective_from"],
-            r["effective_to"],
-            r["version"],
-            r["is_current"],
-        )
-        for r in spark.read.parquet(hist_path).collect()
+    recs = [
+        {
+            "user_id": rng.randrange(20),
+            "event_id": i,
+            "ts": (base + dt.timedelta(minutes=i)).strftime("%Y-%m-%dT%H:%M:%S"),
+            "event_type": rng.choice(attrs),
+        }
+        for i in range(360)
     ]
-    bb = (
-        spark.read.schema(
-            "user_id LONG, event_id LONG, ts STRING, event_type STRING"
-        )
-        .json(in_dir)
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    want = [
-        tuple(r)
-        for r in scd2_from_changelog(
-            bb, "user_id", "ts", "event_type", ("event_id",)
-        ).collect()
-    ]
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-    )
-    return res
+    write_batches(p.inp, recs, batch_size=45)  # 8 micro-batches
 
 
-def check_cm_sketch_stream(spark, root: str) -> dict:
-    """run_cm_sketch_stream (per-batch linear-sketch MERGE of
-    count-min counters, constant d·w-row state) ≡ cm_counters over
-    the union of all records — EXACT integer counter equality, the
-    strongest possible stream≡batch claim (no hash tolerance). The
-    fixture plants a zipf-ish hot-key skew so map-side combine and
-    the merge addition both carry real weight."""
-    from big_data_engineering_project_spark.operators.sketches import (
-        cm_counters,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_cm_sketch_stream,
-    )
-
+def _cm_fixture(spark, p):
     rng = random.Random(61)
     recs = []
     for i in range(600):
         # skewed key space: key k with prob ~ 1/(k+1)
         k = min(int(1.0 / max(rng.random(), 1e-6)) - 1, 40)
         recs.append({"h": k * 2_654_435_761 % (2**31), "i": i})
-    in_dir = os.path.join(root, "cm_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=75)  # 8 micro-batches
-
-    counters_path = os.path.join(root, "cm_counters")
-    run_cm_sketch_stream(
-        spark,
-        in_dir,
-        counters_path,
-        os.path.join(root, "cm_cp"),
-        schema="h LONG, i LONG",
-        hash_expr="h",
-    )
-    got = [
-        (r["seed"], r["bucket"], r["cnt"])
-        for r in spark.read.parquet(counters_path).collect()
-    ]
-    bb = spark.read.schema("h LONG, i LONG").json(in_dir)
-    want = [
-        (r["seed"], r["bucket"], r["cnt"])
-        for r in cm_counters(bb.selectExpr("h AS __h"), "__h").collect()
-    ]
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-    )
-    return res
+    write_batches(p.inp, recs, batch_size=75)  # 8 micro-batches
 
 
-def check_ohlc_stream(spark, root: str) -> dict:
-    """run_ohlc_stream (foreachBatch merge of mergeable OHLC partial
-    state — argmin/argmax candidate structs + high/low/volume, one
-    state row per (key, bucket)) ≡ batch ohlc_resample over the union
-    of all ticks. The fixture plants SAME-TIMESTAMP ties at bucket
-    edges whose tied rows land in DIFFERENT micro-batches, so the
-    struct-merge tie-break (unique id) is load-bearing across the
-    stream/batch divide."""
-    from big_data_engineering_project_spark.operators.temporal import (
-        ohlc_resample,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        ohlc_finish,
-        run_ohlc_stream,
-    )
-
-    rng = random.Random(47)
-    base = dt.datetime(2026, 2, 2)
-    recs = []
-    i = 0
-    for sym in ("AAA", "BBB", "CCC"):
-        for day in range(2):
-            for minute in range(0, 360, 7):
-                recs.append(
-                    {
-                        "sym": sym,
-                        "ts": (
-                            base + dt.timedelta(days=day, minutes=minute)
-                        ).strftime("%Y-%m-%dT%H:%M:%S"),
-                        "v": round(rng.uniform(1, 500), 2),
-                        "i": i,
-                    }
-                )
-                i += 1
-            # planted tie: two rows AT the bucket's first instant with
-            # different ids and different values — the open must pick
-            # the lower id on both sides.
-            for _ in range(2):
-                recs.append(
-                    {
-                        "sym": sym,
-                        "ts": (base + dt.timedelta(days=day)).strftime(
-                            "%Y-%m-%dT%H:%M:%S"
-                        ),
-                        "v": round(rng.uniform(1, 500), 2),
-                        "i": i,
-                    }
-                )
-                i += 1
-    rng.shuffle(recs)  # ties split across micro-batches
-    in_dir = os.path.join(root, "ohlc_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=40)  # 8+ micro-batches
-
-    state_path = os.path.join(root, "ohlc_state")
-    schema = "sym STRING, ts TIMESTAMP, v DOUBLE, i LONG"
-    run_ohlc_stream(
-        spark,
-        in_dir,
-        state_path,
-        os.path.join(root, "ohlc_cp"),
-        schema=schema,
-        key="sym",
-        time_col="ts",
-        value_col="v",
-        id_col="i",
-        bucket="day",
-    )
-    got = [
-        tuple(r)
-        for r in ohlc_finish(spark.read.parquet(state_path), "sym")
-        .orderBy("sym", "bucket_ts")
-        .collect()
-    ]
-    bb = spark.read.schema(schema).json(in_dir)
-    want = [
-        tuple(r)
-        for r in ohlc_resample(
-            bb, key="sym", time_col="ts", value_col="v", id_col="i",
-            bucket="day",
-        )
-        .orderBy("sym", "bucket_ts")
-        .collect()
-    ]
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-    )
-    return res
-
-
-def check_interval_join_outer(spark, root: str) -> dict:
-    """LEFT OUTER stream-stream interval join ≡ the batch left join:
-    abandoned clicks (no conversion within the window) must emit with
-    NULL buy columns once the watermark passes their horizon. The
-    global watermark is min across BOTH inputs, so each side carries a
-    far-future sentinel row (excluded from comparison) — without it
-    the tail's null-emissions would be held back forever, the
-    documented production gotcha."""
-    from big_data_engineering_project_spark.streaming.joins import (
-        interval_join_streams,
-    )
-
-    base = dt.datetime(2026, 1, 15)
-    clicks = [
-        {
-            "c_user": f"user{i % 5}",
-            "click_id": i,
-            "click_ts": (base + dt.timedelta(minutes=3 * i)).strftime(
-                "%Y-%m-%d %H:%M:%S"
-            ),
-        }
-        for i in range(60)
-    ]
-    # conversions for ~half the users/times: i%2 buys inside the 30 min
-    # window, the rest never convert -> abandonment rows
-    buys = [
-        {
-            "b_user": f"user{i % 5}",
-            "buy_id": 1000 + i,
-            "buy_ts": (base + dt.timedelta(minutes=3 * i + 7)).strftime(
-                "%Y-%m-%d %H:%M:%S"
-            ),
-        }
-        for i in range(0, 60, 2)
-    ]
-    far = (base + dt.timedelta(days=10)).strftime("%Y-%m-%d %H:%M:%S")
-    clicks.append({"c_user": "sentinel", "click_id": -1, "click_ts": far})
-    buys.append({"b_user": "sentinel", "buy_id": -1, "buy_ts": far})
-    cdir, bdir = os.path.join(root, "oj_clicks"), os.path.join(root, "oj_buys")
-    os.makedirs(cdir), os.makedirs(bdir)
-    _write_batches(cdir, clicks, batch_size=20)
-    _write_batches(bdir, buys, batch_size=20)
-    c_schema = "c_user STRING, click_id LONG, click_ts STRING"
-    b_schema = "b_user STRING, buy_id LONG, buy_ts STRING"
-    prep = lambda df, ts: df.withColumn(ts, F.to_timestamp(ts))  # noqa: E731
-    cs = prep(
-        spark.readStream.schema(c_schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(cdir),
-        "click_ts",
-    )
-    bs = prep(
-        spark.readStream.schema(b_schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(bdir),
-        "buy_ts",
-    )
-    out = os.path.join(root, "oj_out")
-    q = (
-        interval_join_streams(
-            cs, bs, "c_user", "b_user", "click_ts", "buy_ts", 1800,
-            how="left_outer",
-        )
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(root, "oj_cp"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = [
-        (r["click_id"], r["buy_id"])
-        for r in spark.read.parquet(out).collect()
-        if r["click_id"] >= 0
-    ]
-    cb = prep(spark.read.schema(c_schema).json(cdir), "click_ts")
-    bb = prep(spark.read.schema(b_schema).json(bdir), "buy_ts")
-    want = [
-        (r["click_id"], r["buy_id"])
-        for r in interval_join_streams(
-            cb, bb, "c_user", "b_user", "click_ts", "buy_ts", 1800,
-            how="left_outer",
-        ).collect()
-        if r["click_id"] >= 0
-    ]
-    n_abandoned = sum(1 for _, b in want if b is None)
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "abandoned": n_abandoned,
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and n_abandoned > 0
-    )
-    return res
-
-
-def check_kmv_stream(spark, root: str) -> dict:
-    """run_kmv_stream (per-batch KMV sketch MERGE, one ≤ k-long array
-    per key) ≡ kmv_sketch_agg over the union of all records — EXACT
-    sketch-array equality (KMV merge is exact algebra, so no estimate
-    tolerance is needed). The fixture replays user ids ACROSS
-    micro-batches so the k-smallest-of-union dedup — not per-batch
-    counting — is what the equality exercises, and one key stays
-    under k distinct so the short-sketch (exact enumeration) path is
-    covered too."""
-    from big_data_engineering_project_spark.operators.sketches import (
-        kmv_sketch_agg,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_kmv_stream,
-    )
-
+def _kmv_fixture(spark, p):
     rng = random.Random(73)
     recs = []
     for i in range(600):
@@ -960,1407 +544,40 @@ def check_kmv_stream(spark, root: str) -> dict:
         else:
             etype, uid = rng.choice(["click", "view"]), rng.randint(0, 4000)
         recs.append({"etype": etype, "uid": uid, "i": i})
-    in_dir = os.path.join(root, "kmv_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=75)  # 8 micro-batches
+    write_batches(p.inp, recs, batch_size=75)  # 8 micro-batches
 
-    # same uniform-mix shape as the batch queries' _kmv_mix
-    hash_expr = "(uid * 2654435761) % 2147483647"
-    k = 16
-    sketch_path = os.path.join(root, "kmv_sketch")
-    run_kmv_stream(
-        spark,
-        in_dir,
-        sketch_path,
-        os.path.join(root, "kmv_cp"),
-        schema="etype STRING, uid LONG, i LONG",
-        key_cols=["etype"],
-        hash_expr=hash_expr,
-        k=k,
-        n_shards=8,
-    )
-    got = [
-        (r["etype"], tuple(r["kmv_sketch"]))
-        for r in spark.read.parquet(sketch_path).collect()
-    ]
-    bb = spark.read.schema("etype STRING, uid LONG, i LONG").json(in_dir)
-    want = [
-        (r["etype"], tuple(r["kmv_sketch"]))
-        for r in kmv_sketch_agg(
-            bb.selectExpr("etype", f"{hash_expr} AS __h"),
-            ["etype"],
-            "__h",
-            k=k,
-            n_shards=8,
-        ).collect()
-    ]
-    short_ok = any(
-        key == "rare" and 0 < len(sk) < k for key, sk in want
-    )
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-        # the exact-enumeration (< k distinct) path must be exercised
-        "short_sketch_covered": short_ok,
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["short_sketch_covered"]
-    )
-    return res
 
+# same uniform-mix shape as the batch queries' _kmv_mix
+_KMV_HASH = "(uid * 2654435761) % 2147483647"
+_KMV_SCHEMA = "etype STRING, uid LONG, i LONG"
 
-def check_hll_stream(spark, root: str) -> dict:
-    """run_hll_stream (per-batch HLL sketch UNION, one binary per
-    key) ≡ hll_sketch_agg over the union of all records — the served
-    ESTIMATE table is hash-equal (same-lgK union is lossless in
-    register space, the identity q_hll_daily_merge's pytest pins).
-    The fixture replays user ids across micro-batches so register
-    max — not per-batch counting — is what the equality exercises."""
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_hll_stream,
-    )
 
-    rng = random.Random(91)
-    recs = [
-        {
-            "etype": rng.choice(["click", "view", "buy"]),
-            "uid": rng.randint(0, 3000),
-            "i": i,
-        }
-        for i in range(600)
-    ]
-    in_dir = os.path.join(root, "hll_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=75)  # 8 micro-batches
+def _sketch_rows(df, col: str) -> list[tuple]:
+    return [(r["etype"], tuple(r[col])) for r in df.collect()]
 
-    sketch_path = os.path.join(root, "hll_sketch")
-    run_hll_stream(
-        spark,
-        in_dir,
-        sketch_path,
-        os.path.join(root, "hll_cp"),
-        schema="etype STRING, uid LONG, i LONG",
-        key_cols=["etype"],
-        item_expr="uid",
-        lgk=12,
-    )
-    got = [
-        (r["etype"], r["est"])
-        for r in spark.read.parquet(sketch_path)
-        .select(
-            "etype",
-            F.hll_sketch_estimate("hll").cast("long").alias("est"),
-        )
-        .collect()
-    ]
-    bb = spark.read.schema("etype STRING, uid LONG, i LONG").json(in_dir)
-    want = [
-        (r["etype"], r["est"])
-        for r in bb.groupBy("etype")
-        .agg(
-            F.hll_sketch_estimate(F.hll_sketch_agg("uid", F.lit(12)))
-            .cast("long")
-            .alias("est")
-        )
-        .collect()
-    ]
-    exact = {
-        r["etype"]: r["x"]
-        for r in bb.groupBy("etype")
-        .agg(F.countDistinct("uid").alias("x"))
-        .collect()
-    }
-    # estimate sanity beside the equality: within 5% of exact at lgk=12
-    est_ok = all(
-        abs(est - exact[k]) <= max(1, int(0.05 * exact[k]))
-        for k, est in want
-    )
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(sorted(got)),
-        "hash_batch": _rows_hash(sorted(want)),
-        "estimates_within_5pct": est_ok,
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and est_ok
-    )
-    return res
 
-
-def check_kll_stream(spark, root: str) -> dict:
-    """run_kll_stream (weighted-distinct value state per shard,
-    maintained by exact count addition) ≡ the batch KLL build over
-    the union: BOTH the maintained state table and the served
-    quantile read-offs are hash-equal to the batch pipeline (the
-    state algebra is order-insensitive addition; the summary is a
-    deterministic pure function of the state). Values repeat heavily
-    across batches so the weighted-distinct collapse — not per-batch
-    pass-through — carries the weight."""
-    from big_data_engineering_project_spark.operators.sketches import (
-        kll_merge_all,
-        kll_quantiles,
-        kll_summary,
-        kll_summary_from_weighted,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_kll_stream,
-    )
-
-    rng = random.Random(17)
-    recs = [
-        {"v": int(rng.gauss(500, 150)) % 997, "i": i} for i in range(800)
-    ]
-    in_dir = os.path.join(root, "kll_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=100)  # 8 micro-batches
-
-    state_path = os.path.join(root, "kll_state")
-    run_kll_stream(
-        spark,
-        in_dir,
-        state_path,
-        os.path.join(root, "kll_cp"),
-        schema="v LONG, i LONG",
-        value_expr="v",
-        n_shards=8,
-    )
-    state = spark.read.parquet(state_path)
-    got_state = sorted(
-        (r["shard"], r["__v"], r["__w"]) for r in state.collect()
-    )
-    bb = spark.read.schema("v LONG, i LONG").json(in_dir)
-    want_state = sorted(
-        (r["shard"], r["__v"], r["__w"])
-        for r in bb.selectExpr(
-            "pmod(xxhash64(v), 8) AS shard", "CAST(v AS LONG) AS __v"
-        )
-        .groupBy("shard", "__v")
-        .agg(F.count(F.lit(1)).alias("__w"))
-        .collect()
-    )
-    qs = [(1, 4, "p25"), (1, 2, "p50"), (99, 100, "p99")]
-    served = sorted(
-        tuple(r)
-        for r in kll_quantiles(
-            kll_merge_all(kll_summary_from_weighted(state, k=64), k=64),
-            qs,
-        ).collect()
-    )
-    batch_q = sorted(
-        tuple(r)
-        for r in kll_quantiles(
-            kll_merge_all(
-                kll_summary(bb, "v", k=64, n_shards=8), k=64
-            ),
-            qs,
-        ).collect()
-    )
-    res = {
-        "rows_stream": len(got_state),
-        "rows_batch": len(want_state),
-        "hash_stream": _rows_hash(got_state),
-        "hash_batch": _rows_hash(want_state),
-        "hash_quantiles_stream": _rows_hash(served),
-        "hash_quantiles_batch": _rows_hash(batch_q),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["hash_quantiles_stream"] == res["hash_quantiles_batch"]
-    )
-    return res
-
-
-def check_auc_stream(spark, root: str) -> dict:
-    """run_auc_stream (weighted-distinct score state per cohort,
-    maintained by exact count addition) ≡ batch auc_exact over the
-    union: BOTH the maintained state table and the served keyed AUC
-    rows are hash-equal to the batch pipeline — continuous model
-    monitoring with no approximation. Scores repeat across batches
-    (3-decimal quantized probabilities) so the distinct-collapse, not
-    pass-through, carries the weight; two cohorts exercise the keyed
-    path end-to-end."""
-    from big_data_engineering_project_spark.operators.features import (
-        auc_exact,
-        auc_from_weighted,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_auc_stream,
-    )
-
-    rng = random.Random(23)
-    recs = []
-    for i in range(900):
-        cohort = "a" if i % 3 else "b"
-        y = 1 if rng.random() < 0.4 else 0
-        # positives score higher on average; 3-decimal quantization
-        # makes scores collide across batches (the state stays small)
-        s = round(min(0.999, max(0.001, rng.gauss(0.62 if y else 0.41, 0.18))), 3)
-        recs.append({"s": s, "y": y, "c": cohort, "i": i})
-    in_dir = os.path.join(root, "auc_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=150)  # 6 micro-batches
-
-    state_path = os.path.join(root, "auc_state")
-    run_auc_stream(
-        spark,
-        in_dir,
-        state_path,
-        os.path.join(root, "auc_cp"),
-        schema="s DOUBLE, y LONG, c STRING, i LONG",
-        score_expr="s",
-        label_expr="y",
-        key_cols=["c"],
-    )
-    state = spark.read.parquet(state_path)
-    got_state = sorted(
-        (r["c"], r["__s"], r["__cnt"], r["__pos"]) for r in state.collect()
-    )
-    bb = spark.read.schema("s DOUBLE, y LONG, c STRING, i LONG").json(in_dir)
-    want_state = sorted(
-        (r["c"], r["__s"], r["__cnt"], r["__pos"])
-        for r in bb.selectExpr(
-            "c",
-            "s AS __s",
-            "CASE WHEN y IS NOT NULL AND CAST(y AS BOOLEAN) "
-            "THEN 1 ELSE 0 END AS __p",
-        )
-        .groupBy("c", "__s")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("__cnt"),
-            F.sum("__p").cast("long").alias("__pos"),
-        )
-        .collect()
-    )
-    served = sorted(
-        tuple(r)
-        for r in auc_from_weighted(state, ["c"]).collect()
-    )
-    batch_auc = sorted(
-        tuple(r)
-        for r in auc_exact(bb, "s", "y", key_cols=["c"]).collect()
-    )
-    res = {
-        "rows_stream": len(got_state),
-        "rows_batch": len(want_state),
-        "hash_stream": _rows_hash(got_state),
-        "hash_batch": _rows_hash(want_state),
-        "hash_auc_stream": _rows_hash(served),
-        "hash_auc_batch": _rows_hash(batch_auc),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["hash_auc_stream"] == res["hash_auc_batch"]
-    )
-    return res
-
-
-def check_vocab_stream(spark, root: str) -> dict:
-    """run_vocab_stream ((term → count) state, exact addition) ≡ the
-    batch token-count table over the union, AND the served
-    vocabulary-coverage curve (shared vocab_coverage_from_counts
-    serve) hash-equals the batch curve — tokenizer drift monitoring
-    with no approximation. Terms repeat across batches so the
-    additive merge, not pass-through, carries the weight."""
-    from big_data_engineering_project_spark.operators.text_analysis import (
-        vocab_coverage_from_counts,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_vocab_stream,
-    )
-
-    rng = random.Random(53)
-    vocab = [f"tok{i}" for i in range(60)]
-    recs = []
-    for i in range(300):
-        # Zipf-ish: low-index tokens dominate, all batches overlap
-        n = rng.randint(5, 15)
-        toks = [vocab[min(int(rng.expovariate(0.08)), 59)] for _ in range(n)]
-        recs.append({"doc_id": i, "text": " ".join(toks)})
-    in_dir = os.path.join(root, "vc_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=75)  # 4 micro-batches
-
-    state_path = os.path.join(root, "vc_state")
-    run_vocab_stream(
-        spark,
-        in_dir,
-        state_path,
-        os.path.join(root, "vc_cp"),
-        schema="doc_id LONG, text STRING",
-        text_expr="filter(split(lower(text), '\\\\s+'), x -> x != '')",
-    )
-    state = spark.read.parquet(state_path)
-    got_state = sorted((r["term"], r["c"]) for r in state.collect())
-    bb = spark.read.schema("doc_id LONG, text STRING").json(in_dir)
-    want_cnt = (
-        bb.selectExpr(
-            "explode(filter(split(lower(text), '\\\\s+'), x -> x != '')) AS term"
-        )
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    want_state = sorted((r["term"], r["c"]) for r in want_cnt.collect())
-    ns = [5, 20, 50]
-    served = sorted(
-        tuple(r)
-        for r in vocab_coverage_from_counts(state, ns).collect()
-    )
-    batch_curve = sorted(
-        tuple(r)
-        for r in vocab_coverage_from_counts(want_cnt, ns).collect()
-    )
-    res = {
-        "rows_stream": len(got_state),
-        "rows_batch": len(want_state),
-        "hash_stream": _rows_hash(got_state),
-        "hash_batch": _rows_hash(want_state),
-        "hash_curve_stream": _rows_hash(served),
-        "hash_curve_batch": _rows_hash(batch_curve),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["hash_curve_stream"] == res["hash_curve_batch"]
-    )
-    return res
-
-
-def check_decontam_stream(spark, root: str) -> dict:
-    """run_decontam_stream (per-batch contamination screening against
-    a frozen broadcast eval set, directory-per-batch appends) ≡ batch
-    contamination_report over the union of all ingested train docs —
-    with planted contamination in EVERY micro-batch so each batch's
-    report carries rows, and clean docs proving absent."""
-    from big_data_engineering_project_spark.operators.dedup import (
-        contamination_report,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_decontam_stream,
-    )
-
-    bench = [
-        "the quick brown fox jumps over the lazy dog tonight",
-        "pack my box with five dozen liquor jugs right now",
-    ]
-    eval_df = spark.createDataFrame(
-        [(100 + i, t) for i, t in enumerate(bench)],
-        "doc_id LONG, text STRING",
-    )
-    eval_path = os.path.join(root, "dc_eval")
-    eval_df.write.parquet(eval_path)
-
-    recs = []
-    for i in range(24):
-        if i % 8 == 3:  # one leaked doc per batch of 8
-            t = bench[i % 2] + f" plus trailing tokens {i}"
-        else:
-            t = f"clean document body {i} with its own unique words w{i}"
-        recs.append({"doc_id": i, "text": t})
-    in_dir = os.path.join(root, "dc_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=8)  # 3 micro-batches
-
-    out = os.path.join(root, "dc_out")
-    run_decontam_stream(
-        spark,
-        in_dir,
-        eval_path,
-        out,
-        os.path.join(root, "dc_cp"),
-        schema="doc_id LONG, text STRING",
-    )
-    got = sorted(
-        (r["doc"], r["n_shared_shingles"], r["n_eval_docs"])
-        for r in spark.read.parquet(out).drop("batch").collect()
-    )
-    union = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in recs], "doc_id LONG, text STRING"
-    )
-    want = sorted(
-        (r["doc"], r["n_shared_shingles"], r["n_eval_docs"])
-        for r in contamination_report(
-            union, eval_df, "doc_id", "text"
-        ).collect()
-    )
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-        "flagged_docs": sorted({d for d, _, _ in got}),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["flagged_docs"] == [3, 11, 19]
-    )
-    return res
-
-
-def check_dedup_cluster_serve(spark, root: str) -> dict:
-    """Incremental dedup CLUSTERS: duplicate_clusters served over the
-    minhash stream's MAINTAINED pair state ≡ batch clusters over
-    re-paired union docs — the production read of the band-index twin
-    (new docs append pairs incrementally; the keeper table re-derives
-    from accumulated pairs without ever re-shingling the corpus).
-    The fixture plants a CROSS-BATCH chain (doc 30 ~ doc 3, doc 31 ~
-    doc 30) so a component only comes out right if pairs from
-    different micro-batches merge into one cluster."""
-    from big_data_engineering_project_spark.operators.dedup import (
-        duplicate_clusters,
-        minhash_lsh_pairs,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_minhash_index_stream,
-    )
-
-    base = (
-        "alpha bravo charlie delta echo foxtrot golf hotel india "
-        "juliet kilo lima"
-    )
-    recs = []
-    for i in range(30):
-        recs.append({"doc_id": i, "text": base + f" u{i} v{i % 7} w{i % 5}"})
-    # cross-batch chain: 30 (batch 3) near-dups 3 (batch 1); 31
-    # near-dups 30 — the component {3, 30, 31} spans three batches
-    recs.append({"doc_id": 30, "text": recs[3]["text"] + " extra"})
-    recs.append({"doc_id": 31, "text": recs[3]["text"] + " extra more"})
-    recs.append({"doc_id": 32, "text": "entirely different words only "
-                                       "here nothing shared at all"})
-    in_dir = os.path.join(root, "cc_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=11)  # 3 micro-batches
-    idx = os.path.join(root, "cc_idx")
-    run_minhash_index_stream(
-        spark,
-        in_dir,
-        idx,
-        os.path.join(root, "cc_cp"),
-        schema="doc_id LONG, text STRING",
-        threshold=0.5,
-    )
-    served = sorted(
-        (r["doc"], r["keeper"])
-        for r in duplicate_clusters(
-            spark.read.parquet(os.path.join(idx, "pairs"))
-        ).collect()
-    )
-    union = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in recs], "doc_id LONG, text STRING"
-    )
-    batch = sorted(
-        (r["doc"], r["keeper"])
-        for r in duplicate_clusters(
-            minhash_lsh_pairs(union, "doc_id", "text", 0.5)
-        ).collect()
-    )
-    keepers = dict(served)
-    res = {
-        "rows_stream": len(served),
-        "rows_batch": len(batch),
-        "hash_stream": _rows_hash(served),
-        "hash_batch": _rows_hash(batch),
-        # 3, 30, 31 must land in ONE component even though their
-        # pairs were discovered in three different micro-batches
-        # (the base docs are near-dups of each other too, so the
-        # shared keeper is the component's min id, not 3 itself)
-        "cross_batch_component": (
-            30 in keepers
-            and 31 in keepers
-            and keepers.get(30) == keepers.get(3)
-            and keepers.get(31) == keepers.get(3)
-        ),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["cross_batch_component"]
-    )
-    return res
-
-
-def check_source_gate_stream(spark, root: str) -> dict:
-    """run_source_gate_stream ((source, fingerprint) cell state,
-    exact count/ladder-sum addition) ≡ batch source_quality_gate over
-    the union: BOTH the maintained state and the served gate verdicts
-    hash-equal the batch pipeline. The fixture plants a CROSS-BATCH
-    mirror — batch 4 re-sends batch 1 texts under another source —
-    so the dup accounting only comes out right if fp totals are
-    derived from merged state, not per batch."""
-    from big_data_engineering_project_spark.operators.governance import (
-        source_gate_finish,
-        source_quality_gate,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_source_gate_stream,
-    )
-
-    rng = random.Random(41)
-    words = [f"w{i}" for i in range(400)]
-    recs = []
-    for i in range(600):
-        src = f"s{i % 5}"
-        n = rng.randint(20, 120)
-        text = " ".join(rng.choice(words) for _ in range(n))
-        recs.append({"doc_id": i, "text": text, "source": src})
-    # cross-batch mirror: docs 450-499 (batch 4) replay texts of docs
-    # 0-49 (batch 1) under source 'mirror'
-    for j in range(50):
-        recs[450 + j] = {
-            "doc_id": 450 + j,
-            "text": recs[j]["text"],
-            "source": "mirror",
-        }
-    in_dir = os.path.join(root, "gate_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=150)  # 4 micro-batches
-
-    state_path = os.path.join(root, "gate_state")
-    run_source_gate_stream(
-        spark,
-        in_dir,
-        state_path,
-        os.path.join(root, "gate_cp"),
-        schema="doc_id LONG, text STRING, source STRING",
-        id_col="doc_id",
-        text_col="text",
-        source_col="source",
-    )
-    state = spark.read.parquet(state_path)
-    got_state = sorted(
-        (r["source"], r["__fp"], r["__n"], r["__sq"])
-        for r in state.collect()
-    )
-    bb = spark.read.schema("doc_id LONG, text STRING, source STRING").json(
-        in_dir
-    )
-    from big_data_engineering_project_spark.operators.governance import (
-        source_gate_state,
-    )
-
-    want_state = sorted(
-        (r["source"], r["__fp"], r["__n"], r["__sq"])
-        for r in source_gate_state(bb, "doc_id", "text", "source").collect()
-    )
-    served = sorted(
-        tuple(r)
-        for r in source_gate_finish(state, 30, 0.6, 0.3).collect()
-    )
-    batch_gate = sorted(
-        tuple(r)
-        for r in source_quality_gate(
-            bb, "doc_id", "text", "source", 30, 0.6, 0.3
-        ).collect()
-    )
-    # the planted mirror must be visible as dups on BOTH sides
-    mirror = {r[0]: r for r in served}
-    res = {
-        "rows_stream": len(got_state),
-        "rows_batch": len(want_state),
-        "hash_stream": _rows_hash(got_state),
-        "hash_batch": _rows_hash(want_state),
-        "hash_gate_stream": _rows_hash(served),
-        "hash_gate_batch": _rows_hash(batch_gate),
-        "cross_batch_dups_seen": bool(
-            mirror.get("mirror") and mirror["mirror"][3] >= 50
-        ),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["hash_gate_stream"] == res["hash_gate_batch"]
-        and res["cross_batch_dups_seen"]
-    )
-    return res
-
-
-def check_ivf_index_stream(spark, root: str) -> dict:
-    """run_ivf_append_stream (per-batch directory appends against the
-    frozen centroids) ≡ one batch build over base ∪ all streamed
-    vectors: probe-all top-k over the MAINTAINED index is hash-equal
-    to probe-all over a from-scratch index AND to brute force over
-    the union (the exactness anchor of the persisted-ANN family).
-    The fixture streams 3 micro-batches of synthetic 8-dim vectors."""
-    import math
-
-    from big_data_engineering_project_spark.operators.similarity import (
-        brute_force_topk,
-        build_ivf_index,
-        ivf_index_topk,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_ivf_append_stream,
-    )
-
-    def vec(i: int) -> list[float]:
-        return [
-            round(math.sin(0.7 * i + j * 1.3), 6) for j in range(8)
-        ]
-
-    base_rows = [(i, vec(i)) for i in range(60)]
-    stream_rows = [(100 + i, vec(100 + i)) for i in range(45)]
-    base = spark.createDataFrame(
-        base_rows, "vec_id LONG, embedding ARRAY<DOUBLE>"
-    )
-    cents = [vec(i * 9) for i in range(5)]
-    idx = os.path.join(root, "ivf_idx")
-    build_ivf_index(base, idx, cents)
-
-    in_dir = os.path.join(root, "ivf_in")
-    os.makedirs(in_dir)
-    _write_batches(
-        in_dir,
-        [{"vec_id": i, "embedding": v} for i, v in stream_rows],
-        batch_size=15,
-    )
-    run_ivf_append_stream(
-        spark,
-        in_dir,
-        idx,
-        os.path.join(root, "ivf_cp"),
-        schema="vec_id LONG, embedding ARRAY<DOUBLE>",
-    )
-
-    query = spark.createDataFrame(
-        [(vec(42),)], "embedding ARRAY<DOUBLE>"
-    )
-    k = 12
-    got = [
-        (r["vec_id"], round(r["cosine"], 12))
-        for r in ivf_index_topk(spark, idx, query, k=k, n_probe=5).collect()
-    ]
-    # from-scratch batch index over the union
-    union = base.unionByName(
-        spark.createDataFrame(
-            stream_rows, "vec_id LONG, embedding ARRAY<DOUBLE>"
-        )
-    )
-    idx2 = os.path.join(root, "ivf_idx_batch")
-    build_ivf_index(union, idx2, cents)
-    want = [
-        (r["vec_id"], round(r["cosine"], 12))
-        for r in ivf_index_topk(spark, idx2, query, k=k, n_probe=5).collect()
-    ]
-    brute = [
-        (r["vec_id"], round(r["cosine"], 12))
-        for r in brute_force_topk(union, query, k=k).collect()
-    ]
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-        "probe_all_equals_brute": got == brute,
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["probe_all_equals_brute"]
-    )
-    return res
-
-
-def check_index_delete_stream(spark, root: str) -> dict:
-    """run_index_delete_stream (micro-batched takedown feed →
-    tombstone batch dirs, exactly-once) ≡ one batch
-    vector_index_delete of the union id set: probe-all top-k over the
-    maintained index is hash-equal to the batch-deleted twin AND to
-    brute force over the SURVIVING corpus. compact_on_stop folds the
-    three tombstone batch dirs into one base; the serve is unchanged
-    by the fold."""
-    import math
-
-    from big_data_engineering_project_spark.operators.similarity import (
-        _fs_list_batches,
-        brute_force_topk,
-        build_ivf_index,
-        ivf_index_topk,
-        vector_index_delete,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_index_delete_stream,
-    )
-
-    def vec(i: int) -> list[float]:
-        return [
-            round(math.sin(0.7 * i + j * 1.3), 6) for j in range(8)
-        ]
-
-    base_rows = [(i, vec(i)) for i in range(60)]
-    base = spark.createDataFrame(
-        base_rows, "vec_id LONG, embedding ARRAY<DOUBLE>"
-    )
-    cents = [vec(i * 9) for i in range(5)]
-    idx = os.path.join(root, "del_idx")
-    build_ivf_index(base, idx, cents)
-    deleted = [i for i in range(60) if i % 4 == 1]  # 15 ids, 3 batches
-    in_dir = os.path.join(root, "del_in")
-    os.makedirs(in_dir)
-    _write_batches(
-        in_dir, [{"vec_id": i} for i in deleted], batch_size=5
-    )
-    run_index_delete_stream(
-        spark,
-        in_dir,
-        idx,
-        os.path.join(root, "del_cp"),
-        schema="vec_id LONG",
-        compact_on_stop=True,
-    )
-    tomb_tags = _fs_list_batches(spark, idx + "/tombstones")
-
-    query = spark.createDataFrame([(vec(42),)], "embedding ARRAY<DOUBLE>")
-    k = 12
-    got = [
-        (r["vec_id"], round(r["cosine"], 12))
-        for r in ivf_index_topk(spark, idx, query, k=k, n_probe=5).collect()
-    ]
-    # batch twin: same base index, one batch delete of the union set
-    idx2 = os.path.join(root, "del_idx_batch")
-    build_ivf_index(base, idx2, cents)
-    vector_index_delete(spark, idx2, deleted)
-    want = [
-        (r["vec_id"], round(r["cosine"], 12))
-        for r in ivf_index_topk(spark, idx2, query, k=k, n_probe=5).collect()
-    ]
-    surviving = base.filter(~F.col("vec_id").isin(deleted))
-    brute = [
-        (r["vec_id"], round(r["cosine"], 12))
-        for r in brute_force_topk(surviving, query, k=k).collect()
-    ]
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-        "probe_all_equals_brute": got == brute,
-        "tombstones_compacted": tomb_tags == ["base"],
-        "no_deleted_served": not (
-            {i for i, _c in got} & set(deleted)
-        ),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["probe_all_equals_brute"]
-        and res["tombstones_compacted"]
-        and res["no_deleted_served"]
-    )
-    return res
-
-
-def check_minhash_index_stream(spark, root: str) -> dict:
-    """run_minhash_index_stream (per-batch band-index append + probe +
-    exact-Jaccard verify) ≡ batch minhash_lsh_pairs over the union:
-    the accumulated per-batch pair directories equal the batch pass
-    exactly (ids AND jaccard doubles — the verify expression is
-    shared), and the maintained band index equals one built from
-    scratch. Fixture: 36 docs in 3 micro-batches, with near-dup pairs
-    planted within AND across batches."""
-    from big_data_engineering_project_spark.operators.dedup import (
-        hashed_shingle_table,
-        minhash_band_buckets,
-        minhash_lsh_pairs,
-        with_minhash_signature,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_minhash_index_stream,
-    )
-
-    words = [
-        "alpha bravo charlie delta echo foxtrot golf hotel india juliet",
-        "kilo lima mike november oscar papa quebec romeo sierra tango",
-        "uniform victor whiskey xray yankee zulu one two three four",
-    ]
-
-    def doc(i: int) -> str:
-        base = words[i % 3]
-        return base + f" tail{i % 7} suffix{i % 5} end{i % 11}"
-
-    recs = []
-    for i in range(36):
-        t = doc(i)
-        if i % 9 == 4:  # near-dup of i-4 (often lands in another batch)
-            t = doc(i - 4) + " extra"
-        recs.append({"doc_id": i, "text": t})
-
-    in_dir = os.path.join(root, "mh_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=12)
-    idx = os.path.join(root, "mh_idx")
-    run_minhash_index_stream(
-        spark,
-        in_dir,
-        idx,
-        os.path.join(root, "mh_cp"),
-        schema="doc_id LONG, text STRING",
-        threshold=0.5,
-    )
-
-    got = [
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in spark.read.parquet(os.path.join(idx, "pairs")).collect()
-    ]
-    union = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in recs], "doc_id LONG, text STRING"
-    )
-    want = [
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in minhash_lsh_pairs(union, "doc_id", "text", 0.5).collect()
-    ]
-    idx_rows = [
-        (r["doc"], r["band"], r["bucket"])
-        for r in spark.read.parquet(os.path.join(idx, "bands")).drop(
-            "batch"
-        ).collect()
-    ]
-    scratch = [
-        (r["doc"], r["band"], r["bucket"])
-        for r in minhash_band_buckets(
-            with_minhash_signature(
-                hashed_shingle_table(union, "doc_id", "text")
-            ).select("doc", "sig")
-        ).collect()
-    ]
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-        "index_equals_scratch": sorted(idx_rows) == sorted(scratch),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["index_equals_scratch"]
-    )
-    return res
-
-
-def check_bm25_index_stream(spark, root: str) -> dict:
-    """run_bm25_index_stream (per-batch posting/doclen directory
-    appends) ≡ batch bm25_scores over the union: serving a fixed
-    query from the MAINTAINED index (bm25_from_index — shared scoring
-    expression) is hash-equal to scoring the batch corpus directly,
-    doubles included; the maintained doclen table equals the batch
-    one exactly."""
-    from big_data_engineering_project_spark.operators.text_analysis import (
-        bm25_from_index,
-        bm25_scores,
-        doc_lengths,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_bm25_index_stream,
-    )
-
-    vocab = [
-        "spark", "query", "index", "scan", "merge", "join", "filter",
-        "table", "batch", "stream",
-    ]
-    recs = []
-    for i in range(30):
-        words = [vocab[(i * 7 + j * 3) % len(vocab)] for j in range(6 + i % 5)]
-        if i % 4 == 0:
-            words += ["spark", "index"]
-        recs.append({"doc_id": i, "text": " ".join(words)})
-
-    in_dir = os.path.join(root, "bm_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=10)
-    idx = os.path.join(root, "bm_idx")
-    run_bm25_index_stream(
-        spark,
-        in_dir,
-        idx,
-        os.path.join(root, "bm_cp"),
-        schema="doc_id LONG, text STRING",
-    )
-
-    terms = ["spark", "index", "merge"]
-    got = [
-        (r["doc_id"], r["n_terms"], r["score"])
-        for r in bm25_from_index(
-            spark.read.parquet(os.path.join(idx, "postings")).drop("batch"),
-            spark.read.parquet(os.path.join(idx, "doclens")).drop("batch"),
-            terms,
-        ).collect()
-    ]
-    union = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in recs], "doc_id LONG, text STRING"
-    )
-    want = [
-        (r["doc_id"], r["n_terms"], r["score"])
-        for r in bm25_scores(union, terms).collect()
-    ]
-    dl_stream = sorted(
-        (r["doc"], r["dl"])
-        for r in spark.read.parquet(os.path.join(idx, "doclens"))
-        .drop("batch")
-        .collect()
-    )
-    dl_batch = sorted(
-        (r["doc"], r["dl"]) for r in doc_lengths(union).collect()
-    )
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-        "doclens_equal": dl_stream == dl_batch,
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["doclens_equal"]
-    )
-    return res
-
-
-def check_phash_index_stream(spark, root: str) -> dict:
-    """run_phash_index_stream (per-batch band/hash/pair directory
-    appends) ≡ batch phash_neardup_pairs over the union — the
-    cross-modal streamed-dedup twin: a noisy copy arriving TWO BATCHES
-    after its original must pair via the maintained band index, and a
-    dropped-commit replay (same lineage) overwrites its own
-    directories instead of duplicating pairs."""
-    import shutil as _shutil
-
-    from big_data_engineering_project_spark.operators.dedup import (
-        phash_neardup_pairs,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_phash_index_stream,
-    )
-
-    rng_vals = [
-        (i, (0x9E3779B9 * (i + 1)) & 0xFFFFFFFF,
-         (0x85EBCA6B * (i + 7)) & 0x7FFFFFFF)
-        for i in range(18)
-    ]
-    recs = [
-        {"media_id": i, "ahash_hi": hi, "ahash_lo": lo}
-        for i, hi, lo in rng_vals
-    ]
-    # planted near-dups: 13 = copy of 1 with 2 bits flipped (cross-
-    # batch, batches of 6 → original in batch 0, copy in batch 2);
-    # 14 = exact copy of 2 (Hamming 0)
-    recs[13] = {
-        "media_id": 13,
-        "ahash_hi": recs[1]["ahash_hi"] ^ 0b101,
-        "ahash_lo": recs[1]["ahash_lo"],
-    }
-    recs[14] = {
-        "media_id": 14,
-        "ahash_hi": recs[2]["ahash_hi"],
-        "ahash_lo": recs[2]["ahash_lo"],
-    }
-    in_dir = os.path.join(root, "ph_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=6)
-    idx = os.path.join(root, "ph_idx")
-    cp = os.path.join(root, "ph_cp")
-    kw = dict(
-        schema="media_id LONG, ahash_hi LONG, ahash_lo LONG",
-        max_hamming=3,
-    )
-    run_phash_index_stream(spark, in_dir, idx, cp, **kw)
-
-    def pair_rows():
-        return sorted(
-            (r["id_a"], r["id_b"], r["hamming"])
-            for r in spark.read.parquet(
-                os.path.join(idx, "pairs")
-            ).collect()
-        )
-
-    union = spark.createDataFrame(
-        [(r["media_id"], r["ahash_hi"], r["ahash_lo"]) for r in recs],
-        "media_id LONG, ahash_hi LONG, ahash_lo LONG",
-    )
-    want = sorted(
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in phash_neardup_pairs(union, max_hamming=3).collect()
-    )
-    got = pair_rows()
-    n_bands = spark.read.parquet(os.path.join(idx, "bands")).count()
-
-    # replay the last batch: dropped commit, same lineage
-    cp2 = os.path.join(root, "ph_cp2")
-    _shutil.copytree(cp, cp2)
-    last_commit = os.path.join(cp2, "commits", "2")
-    if os.path.exists(last_commit):
-        os.remove(last_commit)
-    crc = os.path.join(cp2, "commits", ".2.crc")
-    if os.path.exists(crc):
-        os.remove(crc)
-    run_phash_index_stream(spark, in_dir, idx, cp2, **kw)
-    got_replay = pair_rows()
-    n_bands_replay = spark.read.parquet(os.path.join(idx, "bands")).count()
-
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-        "cross_batch_pair": (1, 13, 2) in got,
-        "exact_pair": (2, 14, 0) in got,
-        "replay_identical": got_replay == got
-        and n_bands_replay == n_bands,
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["cross_batch_pair"]
-        and res["exact_pair"]
-        and res["replay_identical"]
-    )
-    return res
-
-
-def check_index_compaction(spark, root: str) -> dict:
-    """Compaction lifecycle of a streamed directory-per-batch index
-    (operators/compaction.py, r11 verdict task 1): stream two batches
-    into a BM25 index, serve; compact (batch dirs collapse to one
-    base, file count DROPS through the Hadoop-FS seam); serve again —
-    bit-equal; restart the stream with a third batch (clean-stop
-    contract) — it appends beside base and the final serve equals the
-    batch scorer over the full union."""
-    from big_data_engineering_project_spark.operators.compaction import (
-        compact_bm25_index,
-        count_files,
-    )
-    from big_data_engineering_project_spark.operators.text_analysis import (
-        bm25_from_index,
-        bm25_scores,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_bm25_index_stream,
-    )
-
-    vocab = ["alpha", "beta", "gamma", "delta", "scan", "merge"]
-    recs = [
-        {
-            "doc_id": i,
-            "text": " ".join(
-                vocab[(i * 5 + j) % len(vocab)] for j in range(5 + i % 4)
-            ),
-        }
-        for i in range(30)
-    ]
-    in_dir = os.path.join(root, "cmp_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs[:20], batch_size=10)
-    idx = os.path.join(root, "cmp_idx")
-    cp = os.path.join(root, "cmp_cp")
-    kw = dict(schema="doc_id LONG, text STRING")
-    run_bm25_index_stream(spark, in_dir, idx, cp, **kw)
-
-    terms = ["alpha", "merge"]
-
-    def serve():
-        return sorted(
-            (r["doc_id"], r["n_terms"], r["score"])
-            for r in bm25_from_index(
-                spark.read.parquet(os.path.join(idx, "postings")).drop(
-                    "batch"
-                ),
-                spark.read.parquet(os.path.join(idx, "doclens")).drop(
-                    "batch"
-                ),
-                terms,
-            ).collect()
-        )
-
-    pre = serve()
-    files_before = count_files(spark, os.path.join(idx, "postings"))
-    stats = compact_bm25_index(spark, idx)
-    files_after = count_files(spark, os.path.join(idx, "postings"))
-    post = serve()
-    # clean-stop restart: batch 2 arrives after compaction, and THIS
-    # run exercises the r13 compact_on_stop hook — the availableNow
-    # termination itself folds the new batch dir into a fresh lone
-    # base, so the final serve reads one base directory only.
-    _write_batches(in_dir, recs, batch_size=10)
-    run_bm25_index_stream(
-        spark, in_dir, idx, cp, compact_on_stop=True, **kw
-    )
-    union = spark.createDataFrame(
-        [(r["doc_id"], r["text"]) for r in recs], "doc_id LONG, text STRING"
-    )
-    want = sorted(
-        (r["doc_id"], r["n_terms"], r["score"])
-        for r in bm25_scores(union, terms).collect()
-    )
-    final = serve()
-    final_tags = sorted(
-        d[len("batch=") :]
-        for d in os.listdir(os.path.join(idx, "postings"))
-        if d.startswith("batch=")
-    )
-    res = {
-        "compacted": bool(stats["postings"]["compacted"]),
-        "files_before": files_before,
-        "files_after": files_after,
-        "hash_pre": _rows_hash(pre),
-        "hash_post": _rows_hash(post),
-        "rows_final": len(final),
-        "rows_batch": len(want),
-        "hash_final": _rows_hash(final),
-        "hash_batch": _rows_hash(want),
-        "final_tags": final_tags,
-    }
-    res["match"] = (
-        res["compacted"]
-        and files_after < files_before
-        and res["hash_pre"] == res["hash_post"]
-        and res["rows_final"] == res["rows_batch"] > 0
-        and res["hash_final"] == res["hash_batch"]
-        and final_tags == ["base"]
-    )
-    return res
-
-
-def check_mix_stream(spark, root: str) -> dict:
-    """run_mix_stream (per-batch greedy mix fill against the ledger)
-    ≡ batch budget_mix_select over the union: the accumulated manifest
-    directories equal the batch manifest EXACTLY (ids, tok_before,
-    budgets). Fixture: 3 id-monotone micro-batches, one stratum
-    exhausting its budget mid-stream, one untargeted stratum."""
-    from pyspark.sql import functions as F
-
-    from big_data_engineering_project_spark.operators.dedup import tokens_col
-    from big_data_engineering_project_spark.operators.sampling import (
-        budget_mix_select,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_mix_stream,
-    )
-
-    targets = {"en": 500_000, "de": 300_000}
-    budget = 400
-    recs = []
-    for i in range(30):
-        lang = ["en", "de", "xx"][i % 3]
-        nwords = 8 + (i % 5) * 4
-        recs.append(
-            {
-                "doc_id": i,
-                "lang": lang,
-                "text": " ".join(f"w{j}" for j in range(nwords)),
-            }
-        )
-
-    in_dir = os.path.join(root, "mix_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=10)
-    man = os.path.join(root, "mix_manifest")
-    run_mix_stream(
-        spark,
-        in_dir,
-        os.path.join(root, "mix_state"),
-        man,
-        os.path.join(root, "mix_cp"),
-        schema="doc_id LONG, lang STRING, text STRING",
-        targets_ppm=targets,
-        budget_tokens=budget,
-    )
-
-    got = sorted(
-        (r["id"], r["stratum"], r["n_tokens"], r["tok_before"],
-         r["stratum_budget"])
-        for r in spark.read.parquet(man).drop("batch").collect()
-    )
-    union = spark.createDataFrame(
-        [(r["doc_id"], r["lang"], r["text"]) for r in recs],
-        "doc_id LONG, lang STRING, text STRING",
-    ).withColumn("n_toks_doc", F.size(tokens_col(F.col("text"))).cast("long"))
-    want = sorted(
-        (r["id"], r["stratum"], r["n_tokens"], r["tok_before"],
-         r["stratum_budget"])
-        for r in budget_mix_select(
-            union, "lang", "doc_id", "n_toks_doc", targets, budget
-        ).collect()
-    )
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-        "budget_exhausted_mid_stream": any(
-            r[1] == "de" for r in want
-        ) and len({r[1] for r in want}) == 2,
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["budget_exhausted_mid_stream"]
-    )
-    return res
-
-
-def check_agg_maintenance_stream(spark, root: str) -> dict:
-    """run_agg_maintenance_stream (per-batch fold of (n, Σ, Σ², min,
-    max) sufficient-statistic states via ivm.agg_merge) ≡ one batch
-    agg_state over the union — EXACT decimal/long equality of the
-    SERVED aggregates (count/total/mean/variance/min/max through
-    agg_finish, so the mirrored-division finish is exercised too).
-    Values are planted so per-key extremes arrive in DIFFERENT
-    micro-batches — the min/max fold, not per-batch luck, must
-    produce them."""
-    from big_data_engineering_project_spark.operators.ivm import (
-        agg_finish,
-        agg_state,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_agg_maintenance_stream,
-    )
-
+def _agg_fixture(spark, p):
     rng = random.Random(37)
     recs = []
     for i in range(600):
-        k = f"k{i % 4}"
         v = rng.randint(-500, 500)
         if i == 17:
-            v = 10_000   # early-batch max for k1
+            v = 10_000  # early-batch max for k1
         if i == 577:
             v = -10_000  # late-batch min for k1
-        recs.append({"k": k, "v": v, "i": i})
-    in_dir = os.path.join(root, "ivm_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=75)  # 8 micro-batches
-
-    state_path = os.path.join(root, "ivm_state")
-    run_agg_maintenance_stream(
-        spark,
-        in_dir,
-        state_path,
-        os.path.join(root, "ivm_cp"),
-        schema="k STRING, v LONG, i LONG",
-        keys=["k"],
-        value_expr="v",
-    )
-    got = [
-        tuple(r)
-        for r in agg_finish(
-            spark.read.parquet(state_path), ["k"]
-        ).collect()
-    ]
-    bb = spark.read.schema("k STRING, v LONG, i LONG").json(in_dir)
-    want = [
-        tuple(r)
-        for r in agg_finish(
-            agg_state(bb.selectExpr("k", "v AS __v"), ["k"], "__v"),
-            ["k"],
-        ).collect()
-    ]
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-        # the planted cross-batch extremes must be the served min/max
-        "extremes_folded": any(
-            r[0] == "k1" and r[-2] == -10_000 and r[-1] == 10_000
-            for r in want
-        ),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["extremes_folded"]
-    )
-    return res
+        recs.append({"k": f"k{i % 4}", "v": v, "i": i})
+    write_batches(p.inp, recs, batch_size=75)  # 8 micro-batches
 
 
-def check_pack_stream(spark, root: str) -> dict:
-    """run_pack_stream (incremental concat-and-chunk packing over an
-    id-monotone append stream) ≡ pack_concat_chunks over the union —
-    EXACT row equality of the full assignment table (offsets, chunk
-    ranges, spans): the maintained state never re-offsets old docs,
-    yet every new batch lands exactly where the batch packer would
-    put it. Doc lengths vary so chunk boundaries fall mid-batch and
-    cross-batch; a REPLAYED batch (marker check) must no-op rather
-    than double-shift offsets."""
-    from big_data_engineering_project_spark.operators.text_analysis import (
-        pack_concat_chunks,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        _applied_batch_id,
-        run_pack_stream,
-    )
-
-    rng = random.Random(23)
-    recs = []
-    for i in range(400):
-        n_words = rng.randint(1, 40)
-        recs.append(
-            {"doc_id": i, "text": " ".join(f"w{j}" for j in range(n_words))}
-        )
-    in_dir = os.path.join(root, "pack_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=50)  # 8 id-monotone batches
-
-    state_path = os.path.join(root, "pack_state")
-    cp = os.path.join(root, "pack_cp")
-    run_pack_stream(
-        spark,
-        in_dir,
-        state_path,
-        cp,
-        schema="doc_id LONG, text STRING",
-        chunk_tokens=64,
-    )
-    got = sorted(
-        tuple(r) for r in spark.read.parquet(state_path).collect()
-    )
-    bb = spark.read.schema("doc_id LONG, text STRING").json(in_dir)
-    want = sorted(
-        tuple(r)
-        for r in pack_concat_chunks(bb, 64, "doc_id", "text").collect()
-    )
-    # replay guard: re-applying the last batch id must be a no-op —
-    # simulate by checking the marker survived the final swap
-    last = _applied_batch_id(state_path, cp)
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-        "replay_marker_present": last is not None and last >= 0,
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["replay_marker_present"]
-    )
-    return res
+_SEASONAL_SCHEMA = "etype STRING, ts STRING, id LONG, v DOUBLE"
+_SEASONAL_COLS = ("etype", "season", "id", "v", "z")
 
 
-def check_seasonal_stream(spark, root: str) -> dict:
-    """seasonal_apply over a file stream ≡ the same function over the
-    batch union, with FROZEN training stats (the production shape: the
-    baseline is computed offline, the stream is scored against it via
-    a stream-static broadcast join). Anomalies are planted into slots
-    whose baselines differ 20× so slot conditioning — not a global
-    threshold — is what fires."""
-    from big_data_engineering_project_spark.operators.anomaly import (
-        seasonal_apply,
-        seasonal_stats,
-    )
-
+def _seasonal_fixture(spark, p):
     base = dt.datetime(2026, 1, 12)
     rng = random.Random(99)
     recs = []
-    planted_ids = set()
+    p.planted = set()
     i = 0
     for day in range(4):
         for h, baseline in ((4, 5.0), (12, 100.0)):
@@ -2370,7 +587,7 @@ def check_seasonal_stream(spark, root: str) -> dict:
                 # the hour-12 baseline and vice versa
                 if day == 2 and m == 30:
                     v = 100.0 if h == 4 else 5.0
-                    planted_ids.add(i)
+                    p.planted.add(i)
                 recs.append(
                     {
                         "etype": "view",
@@ -2383,184 +600,87 @@ def check_seasonal_stream(spark, root: str) -> dict:
                 )
                 i += 1
     recs.sort(key=lambda r: (r["ts"], r["id"]))
-    in_dir = os.path.join(root, "seasonal_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=24)
-
-    schema = "etype STRING, ts STRING, id LONG, v DOUBLE"
-    train = (
-        spark.createDataFrame(
-            [(r["etype"], r["ts"], r["id"], r["v"]) for r in recs if r["id"] % 4 == 0],
-            schema,
-        ).withColumn("ts", F.to_timestamp("ts"))
+    write_batches(p.inp, recs, batch_size=24)
+    train = spark.createDataFrame(
+        [(r["etype"], r["ts"], r["id"], r["v"]) for r in recs if r["id"] % 4 == 0],
+        _SEASONAL_SCHEMA,
     )
-    stats = seasonal_stats(train, "etype", F.hour("ts"), "v")
-    ss = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(in_dir)
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    out = os.path.join(root, "seasonal_out")
-    q = (
-        seasonal_apply(ss, stats, "etype", F.hour("ts"), "v")
-        .select("etype", "season", "id", "v", "z")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", os.path.join(root, "seasonal_cp"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = [
-        (r["etype"], r["season"], r["id"], r["v"], r["z"])
-        for r in spark.read.parquet(out).collect()
-    ]
-    bb = (
-        spark.read.schema(schema)
-        .json(in_dir)
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    want = [
-        (r["etype"], r["season"], r["id"], r["v"], r["z"])
-        for r in seasonal_apply(bb, stats, "etype", F.hour("ts"), "v")
-        .select("etype", "season", "id", "v", "z")
-        .collect()
-    ]
-    flagged = {r[2] for r in want}
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-        # BOTH planted slot-absurd rows must actually fire — not just
-        # any two rows.
-        "planted_found": planted_ids <= flagged,
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["planted_found"]
-    )
-    return res
+    p.stats = anomaly.seasonal_stats(_ts(train, "ts"), "etype", F.hour("ts"), "v")
 
 
-def check_target_encoding_stream(spark, root: str) -> dict:
-    """run_target_encoding_stream (per-batch fold of the (category,
-    fold, n, Σ) sufficient-statistics frame by exact decimal addition,
-    state bounded at #categories × n_folds rows) ≡ the batch OOF
-    encoder over the union of all records — encodings served from the
-    maintained state via the SHARED finish step, hash-equal doubles
-    included. The fixture skews categories across batches so the
-    inclusion-exclusion totals really cross batch boundaries."""
-    from big_data_engineering_project_spark.operators.features import (
-        oof_finish,
-        target_encode_oof,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_target_encoding_stream,
-    )
+def _seasonal(df, p):
+    return anomaly.seasonal_apply(
+        _ts(df, "ts"), p.stats, "etype", F.hour("ts"), "v"
+    ).select(*_SEASONAL_COLS)
 
+
+def _ohlc_fixture(spark, p):
+    rng = random.Random(47)
+    base = dt.datetime(2026, 2, 2)
+    recs = []
+    i = 0
+    stamp = lambda d: d.strftime("%Y-%m-%dT%H:%M:%S")  # noqa: E731
+    for sym in ("AAA", "BBB", "CCC"):
+        for day in range(2):
+            for minute in range(0, 360, 7):
+                ts = stamp(base + dt.timedelta(days=day, minutes=minute))
+                recs.append(
+                    {"sym": sym, "ts": ts, "v": round(rng.uniform(1, 500), 2), "i": i}
+                )
+                i += 1
+            # planted tie: two rows AT the bucket's first instant with
+            # different ids and different values — the open must pick
+            # the lower id on both sides.
+            for _ in range(2):
+                ts = stamp(base + dt.timedelta(days=day))
+                recs.append(
+                    {"sym": sym, "ts": ts, "v": round(rng.uniform(1, 500), 2), "i": i}
+                )
+                i += 1
+    rng.shuffle(recs)  # ties split across micro-batches
+    write_batches(p.inp, recs, batch_size=40)  # 8+ micro-batches
+
+
+_OHLC_SCHEMA = "sym STRING, ts TIMESTAMP, v DOUBLE, i LONG"
+_OHLC_ARGS = dict(time_col="ts", value_col="v", id_col="i", bucket="day")
+
+
+def _te_fixture(spark, p):
     rng = random.Random(83)
     recs = []
     for i in range(480):
         uid = rng.randrange(60)
         cat = "c%d" % ((uid + i) % 5 if i < 240 else uid % 3)
-        recs.append({"uid": uid, "cat": cat,
-                     "y": round(rng.uniform(-5, 20), 3), "i": i})
-    in_dir = os.path.join(root, "te_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=60)  # 8 micro-batches
-
-    stats_path = os.path.join(root, "te_stats")
-    run_target_encoding_stream(
-        spark,
-        in_dir,
-        stats_path,
-        os.path.join(root, "te_cp"),
-        schema="uid LONG, cat STRING, y DOUBLE, i LONG",
-        category_col="cat",
-        target_col="y",
-        fold_key="uid",
-        n_folds=3,
-    )
-    served = oof_finish(spark.read.parquet(stats_path), m=10)
-    got = [
-        (r["category"], r["fold"], r["oof_cnt"], r["enc"], r["enc_smoothed"])
-        for r in served.orderBy("category", "fold").collect()
-    ]
-    bb = spark.read.schema("uid LONG, cat STRING, y DOUBLE, i LONG").json(
-        in_dir
-    )
-    want = [
-        (r["category"], r["fold"], r["oof_cnt"], r["enc"], r["enc_smoothed"])
-        for r in target_encode_oof(bb, "cat", "y", "uid", n_folds=3, m=10)
-        .orderBy("category", "fold")
-        .collect()
-    ]
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-    }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-    )
-    return res
+        y = round(rng.uniform(-5, 20), 3)
+        recs.append({"uid": uid, "cat": cat, "y": y, "i": i})
+    write_batches(p.inp, recs, batch_size=60)  # 8 micro-batches
 
 
-def check_table_diff_stream(spark, root: str) -> dict:
-    """run_table_diff_stream (foreachBatch XOR-delta maintenance of a
-    replica snapshot + its Merkle bucket-digest index from a
-    micro-batched upsert/tombstone changelog) ≡ the batch pair: the
-    maintained index must equal bucket_digests() rebuilt from the
-    final replica EXACTLY, and the level-1-from-persisted-indexes diff
-    (table_diff_incremental with old_digests AND new_digests) must
-    equal table_diff over the full snapshots. The changelog plants
-    value changes, echoes (must be digest-invisible), brand-new keys,
-    deletes, and delete-then-reinsert across micro-batch boundaries.
-    This is the continuous-reconciliation form of the r8 newborn
-    incremental diff (operators/cdc.py:table_diff_incremental)."""
-    from big_data_engineering_project_spark.operators.cdc import (
-        bucket_digests,
-        table_diff,
-        table_diff_incremental,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_table_diff_stream,
-    )
+_TE_SCHEMA = "uid LONG, cat STRING, y DOUBLE, i LONG"
+_TE_COLS = ("category", "fold", "oof_cnt", "enc", "enc_smoothed")
 
+_TD_SCHEMA = (
+    "key LONG, event_id LONG, ts TIMESTAMP, op STRING, color STRING, amount LONG"
+)
+_TD_COLS = ["color", "amount"]
+
+
+def _td_fixture(spark, p):
     rng = random.Random(31)
     base = dt.datetime(2026, 2, 2)
     colors = ["red", "green", "blue", None]
-
-    ref_rows = [
-        (k, rng.choice(colors), rng.randrange(1000)) for k in range(200)
-    ]
-    ref = spark.createDataFrame(
-        ref_rows, "key LONG, color STRING, amount LONG"
-    )
-    ref_path = os.path.join(root, "tds_ref")
-    ref.write.parquet(ref_path)
-    ref = spark.read.parquet(ref_path)
-
+    ref_rows = [(k, rng.choice(colors), rng.randrange(1000)) for k in range(200)]
+    ref = spark.createDataFrame(ref_rows, "key LONG, color STRING, amount LONG")
+    ref.write.parquet(p.path("ref"))
+    p.ref = spark.read.parquet(p.path("ref"))
     # the replica starts as a copy of the reference; both digest
     # tables start identical (the old side's stays frozen)
-    snap_path = os.path.join(root, "tds_replica")
-    dig_path = os.path.join(root, "tds_replica_digests")
-    ref_dig_path = os.path.join(root, "tds_ref_digests")
-    ref.write.parquet(snap_path)
-    bucket_digests(ref, "key", ["color", "amount"]).write.parquet(dig_path)
-    bucket_digests(ref, "key", ["color", "amount"]).write.parquet(
-        ref_dig_path
-    )
+    p.ref.write.parquet(p.path("replica"))
+    cdc.bucket_digests(p.ref, "key", _TD_COLS).write.parquet(p.out)
+    cdc.bucket_digests(p.ref, "key", _TD_COLS).write.parquet(p.path("ref_digests"))
 
     by_key = {k: (c, a) for k, c, a in ref_rows}
     recs = []
-    deleted: set[int] = set()
     for i in range(240):
         ts = (base + dt.timedelta(minutes=i)).strftime("%Y-%m-%dT%H:%M:%S")
         roll = rng.random()
@@ -2568,12 +688,10 @@ def check_table_diff_stream(spark, root: str) -> dict:
             k = 200 + rng.randrange(20)
             op, color, amount = "U", rng.choice(colors), rng.randrange(1000)
             by_key[k] = (color, amount)
-            deleted.discard(k)
         elif roll < 0.24:  # tombstone (sometimes later reinserted)
             k = rng.randrange(220)
             op, color, amount = "D", None, None
             by_key.pop(k, None)
-            deleted.add(k)
         elif roll < 0.34 and by_key:  # echo: digest must not move
             k = rng.choice(sorted(by_key))
             color, amount = by_key[k]
@@ -2582,47 +700,29 @@ def check_table_diff_stream(spark, root: str) -> dict:
             k = rng.randrange(220)
             op, color, amount = "U", rng.choice(colors), rng.randrange(1000)
             by_key[k] = (color, amount)
-            deleted.discard(k)
         recs.append(
-            {
-                "key": k,
-                "event_id": i,
-                "ts": ts,
-                "op": op,
-                "color": color,
-                "amount": amount,
-            }
+            {"key": k, "event_id": i, "ts": ts, "op": op, "color": color,
+             "amount": amount}
         )
-    in_dir = os.path.join(root, "tds_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=30)  # 8 micro-batches
+    write_batches(p.inp, recs, batch_size=30)  # 8 micro-batches
 
-    run_table_diff_stream(
-        spark,
-        in_dir,
-        snap_path,
-        dig_path,
-        os.path.join(root, "tds_cp"),
-        schema=(
-            "key LONG, event_id LONG, ts TIMESTAMP, op STRING, "
-            "color STRING, amount LONG"
-        ),
-        key="key",
-        compare_cols=["color", "amount"],
-        ts_col="ts",
-        tiebreak=("event_id",),
-    )
 
-    # batch twin of the final replica: latest change per key applied
-    # over the initial copy, tombstones dropped
-    chg = (
-        spark.read.schema(
-            "key LONG, event_id LONG, ts TIMESTAMP, op STRING, "
-            "color STRING, amount LONG"
-        )
-        .json(in_dir)
+def _td_read(spark, p):
+    diff = cdc.table_diff_incremental(
+        p.ref,
+        spark.read.parquet(p.path("replica")),
+        "key",
+        _TD_COLS,
+        old_digests=spark.read.parquet(p.path("ref_digests")),
+        new_digests=spark.read.parquet(p.out),
     )
-    seed = ref.select(
+    return {"": _tuples(diff), "digests": _tuples(spark.read.parquet(p.out))}
+
+
+def _td_batch(spark, p):
+    # the final replica: latest change per key applied over the initial
+    # copy, tombstones dropped
+    seed = p.ref.select(
         "key",
         F.lit(None).cast("long").alias("event_id"),
         F.lit("1970-01-01").cast("timestamp").alias("ts"),
@@ -2633,127 +733,1167 @@ def check_table_diff_stream(spark, root: str) -> dict:
     w = Window.partitionBy("key").orderBy(
         F.col("ts").desc(), F.col("event_id").desc_nulls_last()
     )
-    final_batch = (
-        seed.unionByName(chg)
+    final = (
+        seed.unionByName(_json(spark, _TD_SCHEMA, p.inp))
         .withColumn("__rn", F.row_number().over(w))
         .filter((F.col("__rn") == 1) & (F.col("op") != "D"))
         .select("key", "color", "amount")
     )
-
-    got_dig = [
-        tuple(r)
-        for r in spark.read.parquet(dig_path)
-        .orderBy("bucket")
-        .collect()
-    ]
-    want_dig = [
-        tuple(r)
-        for r in bucket_digests(final_batch, "key", ["color", "amount"])
-        .orderBy("bucket")
-        .collect()
-    ]
-
-    got_diff = [
-        tuple(r)
-        for r in table_diff_incremental(
-            ref,
-            spark.read.parquet(snap_path),
-            "key",
-            ["color", "amount"],
-            old_digests=spark.read.parquet(ref_dig_path),
-            new_digests=spark.read.parquet(dig_path),
-        )
-        .orderBy("key")
-        .collect()
-    ]
-    want_diff = [
-        tuple(r)
-        for r in table_diff(ref, final_batch, "key", ["color", "amount"])
-        .orderBy("key")
-        .collect()
-    ]
-    res = {
-        "rows_stream": len(got_diff),
-        "rows_batch": len(want_diff),
-        "digest_rows": len(got_dig),
-        "hash_stream": _rows_hash(got_diff),
-        "hash_batch": _rows_hash(want_diff),
-        "hash_digests_stream": _rows_hash(got_dig),
-        "hash_digests_batch": _rows_hash(want_dig),
+    return {
+        "": _tuples(cdc.table_diff(p.ref, final, "key", _TD_COLS)),
+        "digests": _tuples(cdc.bucket_digests(final, "key", _TD_COLS)),
     }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and len(got_dig) == len(want_dig) > 0
-        and res["hash_digests_stream"] == res["hash_digests_batch"]
-    )
-    return res
 
 
-
-def check_reservoir_stream(spark, root: str) -> dict:
-    """run_reservoir_stream (foreachBatch bottom-k reservoir merge per
-    key) ≡ batch reservoir_sample_agg over the union — EXACT
-    (score, id) struct-array equality, the KMV-style algebra proof.
-    The fixture plants id redeliveries across batch boundaries (must
-    dedupe to identical structs) and a key whose total ids are < k
-    (exact-enumeration path)."""
-    from big_data_engineering_project_spark.operators.sampling import (
-        reservoir_sample_agg,
-    )
-    from big_data_engineering_project_spark.streaming.scd2 import (
-        run_reservoir_stream,
-    )
-
+def _reservoir_fixture(spark, p):
     rng = random.Random(37)
-    recs = []
-    for i in range(400):
-        key = rng.choice(["alpha", "beta", "gamma"])
-        recs.append({"k": key, "id": rng.randrange(3000)})
+    recs = [
+        {"k": rng.choice(["alpha", "beta", "gamma"]), "id": rng.randrange(3000)}
+        for _ in range(400)
+    ]
     # redeliveries: echo 40 earlier rows later in the stream
     recs.extend(recs[50:90])
     # sparse key: fewer than k distinct ids in total
     recs.extend({"k": "sparse", "id": i} for i in range(7))
-    in_dir = os.path.join(root, "rsv_in")
-    os.makedirs(in_dir)
-    _write_batches(in_dir, recs, batch_size=56)  # 8 micro-batches
+    write_batches(p.inp, recs, batch_size=56)  # 8 micro-batches
 
-    sample_path = os.path.join(root, "rsv_state")
-    run_reservoir_stream(
-        spark,
-        in_dir,
-        sample_path,
-        os.path.join(root, "rsv_cp"),
-        schema="k STRING, id LONG",
-        key_cols=["k"],
-        id_col="id",
-        k=16,
+
+def _reservoir_rows(df) -> list[tuple]:
+    return [(r["k"], tuple(map(tuple, r["reservoir"]))) for r in df.collect()]
+
+
+def _hll_fixture(spark, p):
+    rng = random.Random(91)
+    recs = [
+        {
+            "etype": rng.choice(["click", "view", "buy"]),
+            "uid": rng.randint(0, 3000),
+            "i": i,
+        }
+        for i in range(600)
+    ]
+    write_batches(p.inp, recs, batch_size=75)  # 8 micro-batches
+
+
+def _hll_extras(spark, p, got, want):
+    exact = {
+        r["etype"]: r["x"]
+        for r in _json(spark, _KMV_SCHEMA, p.inp)
+        .groupBy("etype")
+        .agg(F.countDistinct("uid").alias("x"))
+        .collect()
+    }
+    # estimate sanity beside the equality: within 5% of exact at lgk=12
+    return {
+        "estimates_within_5pct": all(
+            abs(est - exact[k]) <= max(1, int(0.05 * exact[k])) for k, est in want
+        )
+    }
+
+
+def _kll_fixture(spark, p):
+    rng = random.Random(17)
+    recs = [{"v": int(rng.gauss(500, 150)) % 997, "i": i} for i in range(800)]
+    write_batches(p.inp, recs, batch_size=100)  # 8 micro-batches
+
+
+_KLL_QS = [(1, 4, "p25"), (1, 2, "p50"), (99, 100, "p99")]
+
+
+def _kll_read(spark, p):
+    state = spark.read.parquet(p.out)
+    served = sketches.kll_quantiles(
+        sketches.kll_merge_all(sketches.kll_summary_from_weighted(state, k=64), k=64),
+        _KLL_QS,
     )
-    got = sorted(
-        (r["k"], tuple(map(tuple, r["reservoir"])))
-        for r in spark.read.parquet(sample_path).collect()
+    return {"": _tuples(state, "shard", "__v", "__w"), "quantiles": _tuples(served)}
+
+
+def _kll_batch(spark, p):
+    bb = _json(spark, "v LONG, i LONG", p.inp)
+    state = (
+        bb.selectExpr("pmod(xxhash64(v), 8) AS shard", "CAST(v AS LONG) AS __v")
+        .groupBy("shard", "__v")
+        .agg(F.count(F.lit(1)).alias("__w"))
     )
-    bb = spark.read.schema("k STRING, id LONG").json(in_dir)
-    want = sorted(
-        (r["k"], tuple(map(tuple, r["reservoir"])))
-        for r in reservoir_sample_agg(bb, ["k"], "id", k=16).collect()
+    served = sketches.kll_quantiles(
+        sketches.kll_merge_all(sketches.kll_summary(bb, "v", k=64, n_shards=8), k=64),
+        _KLL_QS,
     )
-    res = {
-        "rows_stream": len(got),
-        "rows_batch": len(want),
-        "hash_stream": _rows_hash(got),
-        "hash_batch": _rows_hash(want),
-        "sparse_key_exact": any(
-            k == "sparse" and len(r) == 7 for k, r in got
+    return {"": _tuples(state, "shard", "__v", "__w"), "quantiles": _tuples(served)}
+
+
+def _auc_fixture(spark, p):
+    rng = random.Random(23)
+    recs = []
+    for i in range(900):
+        cohort = "a" if i % 3 else "b"
+        y = 1 if rng.random() < 0.4 else 0
+        # positives score higher on average; 3-decimal quantization
+        # makes scores collide across batches (the state stays small)
+        s = round(min(0.999, max(0.001, rng.gauss(0.62 if y else 0.41, 0.18))), 3)
+        recs.append({"s": s, "y": y, "c": cohort, "i": i})
+    write_batches(p.inp, recs, batch_size=150)  # 6 micro-batches
+
+
+_AUC_SCHEMA = "s DOUBLE, y LONG, c STRING, i LONG"
+_AUC_STATE = ("c", "__s", "__cnt", "__pos")
+
+
+def _auc_batch(spark, p):
+    bb = _json(spark, _AUC_SCHEMA, p.inp)
+    state = (
+        bb.selectExpr(
+            "c",
+            "s AS __s",
+            "CASE WHEN y IS NOT NULL AND CAST(y AS BOOLEAN) THEN 1 ELSE 0 END AS __p",
+        )
+        .groupBy("c", "__s")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("__cnt"),
+            F.sum("__p").cast("long").alias("__pos"),
+        )
+    )
+    return {
+        "": _tuples(state, *_AUC_STATE),
+        "auc": _tuples(features.auc_exact(bb, "s", "y", key_cols=["c"])),
+    }
+
+
+def _vocab_fixture(spark, p):
+    rng = random.Random(53)
+    vocab = [f"tok{i}" for i in range(60)]
+    recs = []
+    for i in range(300):
+        # Zipf-ish: low-index tokens dominate, all batches overlap
+        n = rng.randint(5, 15)
+        toks = [vocab[min(int(rng.expovariate(0.08)), 59)] for _ in range(n)]
+        recs.append({"doc_id": i, "text": " ".join(toks)})
+    write_batches(p.inp, recs, batch_size=75)  # 4 micro-batches
+
+
+_VOCAB_TOKENS = "filter(split(lower(text), '\\\\s+'), x -> x != '')"
+_VOCAB_NS = [5, 20, 50]
+
+
+def _vocab_read(spark, p):
+    state = spark.read.parquet(p.out)
+    return {
+        "": _tuples(state, "term", "c"),
+        "curve": _tuples(text_analysis.vocab_coverage_from_counts(state, _VOCAB_NS)),
+    }
+
+
+def _vocab_batch(spark, p):
+    counts = (
+        _json(spark, "doc_id LONG, text STRING", p.inp)
+        .selectExpr(f"explode({_VOCAB_TOKENS}) AS term")
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+    )
+    return {
+        "": _tuples(counts, "term", "c"),
+        "curve": _tuples(text_analysis.vocab_coverage_from_counts(counts, _VOCAB_NS)),
+    }
+
+
+_DOCS_SCHEMA = "doc_id LONG, text STRING"
+
+
+def _docs(spark, p):
+    """The fixture's documents as one batch frame (the union)."""
+    return spark.createDataFrame(
+        [(r["doc_id"], r["text"]) for r in p.recs], _DOCS_SCHEMA
+    )
+
+
+def _decontam_fixture(spark, p):
+    bench = [
+        "the quick brown fox jumps over the lazy dog tonight",
+        "pack my box with five dozen liquor jugs right now",
+    ]
+    p.eval_df = spark.createDataFrame(
+        [(100 + i, t) for i, t in enumerate(bench)], _DOCS_SCHEMA
+    )
+    p.eval_df.write.parquet(p.path("eval"))
+    p.recs = []
+    for i in range(24):
+        if i % 8 == 3:  # one leaked doc per batch of 8
+            t = bench[i % 2] + f" plus trailing tokens {i}"
+        else:
+            t = f"clean document body {i} with its own unique words w{i}"
+        p.recs.append({"doc_id": i, "text": t})
+    write_batches(p.inp, p.recs, batch_size=8)  # 3 micro-batches
+
+
+_DECONTAM_COLS = ("doc", "n_shared_shingles", "n_eval_docs")
+
+
+def _clusters_fixture(spark, p):
+    base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
+    p.recs = [
+        {"doc_id": i, "text": base + f" u{i} v{i % 7} w{i % 5}"} for i in range(30)
+    ]
+    # cross-batch chain: 30 (batch 3) near-dups 3 (batch 1); 31
+    # near-dups 30 — the component {3, 30, 31} spans three batches
+    p.recs.append({"doc_id": 30, "text": p.recs[3]["text"] + " extra"})
+    p.recs.append({"doc_id": 31, "text": p.recs[3]["text"] + " extra more"})
+    p.recs.append(
+        {"doc_id": 32, "text": "entirely different words only here nothing shared "
+                               "at all"}
+    )
+    write_batches(p.inp, p.recs, batch_size=11)  # 3 micro-batches
+
+
+def _clusters_extras(spark, p, got, want):
+    # 3, 30, 31 must land in ONE component even though their pairs were
+    # discovered in three different micro-batches (the base docs are
+    # near-dups of each other too, so the shared keeper is the
+    # component's min id, not 3 itself)
+    keepers = dict(got)
+    return {
+        "cross_batch_component": (
+            30 in keepers
+            and 31 in keepers
+            and keepers.get(30) == keepers.get(3)
+            and keepers.get(31) == keepers.get(3)
+        )
+    }
+
+
+_GATE_SCHEMA = "doc_id LONG, text STRING, source STRING"
+_GATE_STATE = ("source", "__fp", "__n", "__sq")
+_GATE_ARGS = (30, 0.6, 0.3)
+
+
+def _gate_fixture(spark, p):
+    rng = random.Random(41)
+    words = [f"w{i}" for i in range(400)]
+    recs = []
+    for i in range(600):
+        n = rng.randint(20, 120)
+        text = " ".join(rng.choice(words) for _ in range(n))
+        recs.append({"doc_id": i, "text": text, "source": f"s{i % 5}"})
+    # cross-batch mirror: docs 450-499 (batch 4) replay texts of docs
+    # 0-49 (batch 1) under source 'mirror'
+    for j in range(50):
+        recs[450 + j] = {"doc_id": 450 + j, "text": recs[j]["text"], "source": "mirror"}
+    write_batches(p.inp, recs, batch_size=150)  # 4 micro-batches
+
+
+def _gate_extras(spark, p, got, want):
+    # the planted mirror must be visible as dups on the served side
+    gate = {r[0]: r for r in _tuples(governance.source_gate_finish(
+        spark.read.parquet(p.out), *_GATE_ARGS
+    ))}
+    return {
+        "cross_batch_dups_seen": bool(
+            gate.get("mirror") and gate["mirror"][3] >= 50
+        )
+    }
+
+
+_VEC_SCHEMA = "vec_id LONG, embedding ARRAY<DOUBLE>"
+
+
+def _vec(i: int) -> list[float]:
+    return [round(math.sin(0.7 * i + j * 1.3), 6) for j in range(8)]
+
+
+def _ivf_base(spark, p):
+    """60 base vectors indexed at p.out under 5 frozen centroids."""
+    p.base = spark.createDataFrame([(i, _vec(i)) for i in range(60)], _VEC_SCHEMA)
+    p.cents = [_vec(i * 9) for i in range(5)]
+    similarity.build_ivf_index(p.base, p.out, p.cents)
+
+
+def _probe_all(spark, idx: str) -> list[tuple]:
+    query = spark.createDataFrame([(_vec(42),)], "embedding ARRAY<DOUBLE>")
+    return [
+        (r["vec_id"], round(r["cosine"], 12))
+        for r in similarity.ivf_index_topk(spark, idx, query, k=12, n_probe=5).collect()
+    ]
+
+
+def _brute(spark, corpus) -> list[tuple]:
+    query = spark.createDataFrame([(_vec(42),)], "embedding ARRAY<DOUBLE>")
+    return [
+        (r["vec_id"], round(r["cosine"], 12))
+        for r in similarity.brute_force_topk(corpus, query, k=12).collect()
+    ]
+
+
+def _ivf_fixture(spark, p):
+    _ivf_base(spark, p)
+    p.stream_rows = [(100 + i, _vec(100 + i)) for i in range(45)]
+    write_batches(
+        p.inp, [{"vec_id": i, "embedding": v} for i, v in p.stream_rows], batch_size=15
+    )
+
+
+def _ivf_batch(spark, p):
+    # from-scratch batch index over the union
+    p.union = p.base.unionByName(spark.createDataFrame(p.stream_rows, _VEC_SCHEMA))
+    similarity.build_ivf_index(p.union, p.path("idx_batch"), p.cents)
+    return _probe_all(spark, p.path("idx_batch"))
+
+
+def _delete_fixture(spark, p):
+    _ivf_base(spark, p)
+    p.deleted = [i for i in range(60) if i % 4 == 1]  # 15 ids, 3 batches
+    write_batches(p.inp, [{"vec_id": i} for i in p.deleted], batch_size=5)
+
+
+def _delete_batch(spark, p):
+    # same base index, one batch delete of the union id set
+    similarity.build_ivf_index(p.base, p.path("idx_batch"), p.cents)
+    similarity.vector_index_delete(spark, p.path("idx_batch"), p.deleted)
+    return _probe_all(spark, p.path("idx_batch"))
+
+
+def _delete_extras(spark, p, got, want):
+    surviving = p.base.filter(~F.col("vec_id").isin(p.deleted))
+    return {
+        "probe_all_equals_brute": got == _brute(spark, surviving),
+        "tombstones_compacted": similarity._fs_list_batches(
+            spark, p.out + "/tombstones"
+        ) == ["base"],
+        "no_deleted_served": not ({i for i, _c in got} & set(p.deleted)),
+    }
+
+
+def _minhash_fixture(spark, p):
+    words = [
+        "alpha bravo charlie delta echo foxtrot golf hotel india juliet",
+        "kilo lima mike november oscar papa quebec romeo sierra tango",
+        "uniform victor whiskey xray yankee zulu one two three four",
+    ]
+    def doc(i: int) -> str:
+        return words[i % 3] + f" tail{i % 7} suffix{i % 5} end{i % 11}"
+
+    # near-dup of i-4 every 9 docs (often lands in another batch)
+    p.recs = [
+        {"doc_id": i, "text": doc(i - 4) + " extra" if i % 9 == 4 else doc(i)}
+        for i in range(36)
+    ]
+    write_batches(p.inp, p.recs, batch_size=12)
+
+
+def _minhash_extras(spark, p, got, want):
+    idx_rows = _tuples(
+        spark.read.parquet(os.path.join(p.out, "bands")), "doc", "band", "bucket"
+    )
+    scratch = _tuples(
+        dedup.minhash_band_buckets(
+            dedup.with_minhash_signature(
+                dedup.hashed_shingle_table(_docs(spark, p), "doc_id", "text")
+            ).select("doc", "sig")
+        ),
+        "doc", "band", "bucket",
+    )
+    return {"index_equals_scratch": sorted(idx_rows) == sorted(scratch)}
+
+
+_BM25_COLS = ("doc_id", "n_terms", "score")
+
+
+def _bm25_serve(spark, idx: str, terms: list[str]) -> list[tuple]:
+    return _tuples(
+        text_analysis.bm25_from_index(
+            spark.read.parquet(os.path.join(idx, "postings")).drop("batch"),
+            spark.read.parquet(os.path.join(idx, "doclens")).drop("batch"),
+            terms,
+        ),
+        *_BM25_COLS,
+    )
+
+
+def _bm25_fixture(spark, p):
+    vocab = [
+        "spark", "query", "index", "scan", "merge", "join", "filter",
+        "table", "batch", "stream",
+    ]
+    p.recs = []
+    for i in range(30):
+        words = [vocab[(i * 7 + j * 3) % len(vocab)] for j in range(6 + i % 5)]
+        if i % 4 == 0:
+            words += ["spark", "index"]
+        p.recs.append({"doc_id": i, "text": " ".join(words)})
+    write_batches(p.inp, p.recs, batch_size=10)
+
+
+_BM25_TERMS = ["spark", "index", "merge"]
+
+
+def _bm25_extras(spark, p, got, want):
+    dl_stream = _tuples(
+        spark.read.parquet(os.path.join(p.out, "doclens")).drop("batch"), "doc", "dl"
+    )
+    dl_batch = _tuples(text_analysis.doc_lengths(_docs(spark, p)), "doc", "dl")
+    return {"doclens_equal": sorted(dl_stream) == sorted(dl_batch)}
+
+
+_PHASH_ARGS = dict(schema="media_id LONG, ahash_hi LONG, ahash_lo LONG", max_hamming=3)
+
+
+def _phash_fixture(spark, p):
+    p.recs = [
+        {
+            "media_id": i,
+            "ahash_hi": (0x9E3779B9 * (i + 1)) & 0xFFFFFFFF,
+            "ahash_lo": (0x85EBCA6B * (i + 7)) & 0x7FFFFFFF,
+        }
+        for i in range(18)
+    ]
+    # planted near-dups: 13 = copy of 1 with 2 bits flipped (cross-
+    # batch, batches of 6 → original in batch 0, copy in batch 2);
+    # 14 = exact copy of 2 (Hamming 0)
+    p.recs[13] = dict(p.recs[1], media_id=13, ahash_hi=p.recs[1]["ahash_hi"] ^ 0b101)
+    p.recs[14] = dict(p.recs[2], media_id=14)
+    write_batches(p.inp, p.recs, batch_size=6)
+
+
+def _phash_pairs(spark, p) -> list[tuple]:
+    return _tuples(
+        spark.read.parquet(os.path.join(p.out, "pairs")), "id_a", "id_b", "hamming"
+    )
+
+
+def _phash_extras(spark, p, got, want):
+    # replay the last batch: dropped commit, same lineage — the batch
+    # overwrites its own directories instead of duplicating pairs
+    n_bands = spark.read.parquet(os.path.join(p.out, "bands")).count()
+    cp2 = p.path("cp2")
+    shutil.copytree(p.cp, cp2)
+    for leaf in ("2", ".2.crc"):
+        if os.path.exists(os.path.join(cp2, "commits", leaf)):
+            os.remove(os.path.join(cp2, "commits", leaf))
+    scd2.run_phash_index_stream(spark, p.inp, p.out, cp2, **_PHASH_ARGS)
+    n_bands_replay = spark.read.parquet(os.path.join(p.out, "bands")).count()
+    return {
+        "cross_batch_pair": (1, 13, 2) in got,
+        "exact_pair": (2, 14, 0) in got,
+        "replay_identical": sorted(_phash_pairs(spark, p)) == sorted(got)
+        and n_bands_replay == n_bands,
+    }
+
+
+_CMP_TERMS = ["alpha", "merge"]
+
+
+def _compaction_fixture(spark, p):
+    vocab = ["alpha", "beta", "gamma", "delta", "scan", "merge"]
+    p.recs = [
+        {
+            "doc_id": i,
+            "text": " ".join(vocab[(i * 5 + j) % len(vocab)] for j in range(5 + i % 4)),
+        }
+        for i in range(30)
+    ]
+    write_batches(p.inp, p.recs[:20], batch_size=10)
+
+
+def _compaction_stream(spark, p):
+    """Stream two batches into a BM25 index and serve; compact and serve
+    again; then restart with a third batch under compact_on_stop."""
+    postings = os.path.join(p.out, "postings")
+    scd2.run_bm25_index_stream(spark, p.inp, p.out, p.cp, schema=_DOCS_SCHEMA)
+    p.pre = _bm25_serve(spark, p.out, _CMP_TERMS)
+    p.files_before = compaction.count_files(spark, postings)
+    p.stats = compaction.compact_bm25_index(spark, p.out)
+    p.files_after = compaction.count_files(spark, postings)
+    p.post = _bm25_serve(spark, p.out, _CMP_TERMS)
+    # clean-stop restart: batch 2 arrives after compaction, and the
+    # availableNow termination itself folds the new batch dir into a
+    # fresh lone base, so the final serve reads one base directory only.
+    write_batches(p.inp, p.recs, batch_size=10)
+    scd2.run_bm25_index_stream(
+        spark, p.inp, p.out, p.cp, schema=_DOCS_SCHEMA, compact_on_stop=True
+    )
+
+
+def _compaction_extras(spark, p, got, want):
+    return {
+        "compacted": bool(p.stats["postings"]["compacted"]),
+        "files_before": p.files_before,
+        "files_after": p.files_after,
+        "hash_pre": _rows_hash(p.pre),
+        "hash_post": _rows_hash(p.post),
+        # this entry's artifact names for the final serve since r11
+        "rows_final": len(got),
+        "hash_final": _rows_hash(got),
+        "final_tags": sorted(
+            d[len("batch=") :]
+            for d in os.listdir(os.path.join(p.out, "postings"))
+            if d.startswith("batch=")
         ),
     }
-    res["match"] = (
-        res["rows_stream"] == res["rows_batch"] > 0
-        and res["hash_stream"] == res["hash_batch"]
-        and res["sparse_key_exact"]
-    )
-    return res
 
+
+_MIX_TARGETS = {"en": 500_000, "de": 300_000}
+_MIX_COLS = ("id", "stratum", "n_tokens", "tok_before", "stratum_budget")
+
+
+def _mix_fixture(spark, p):
+    p.recs = [
+        {
+            "doc_id": i,
+            "lang": ["en", "de", "xx"][i % 3],
+            "text": " ".join(f"w{j}" for j in range(8 + (i % 5) * 4)),
+        }
+        for i in range(30)
+    ]
+    write_batches(p.inp, p.recs, batch_size=10)
+
+
+def _mix_batch(spark, p):
+    union = spark.createDataFrame(
+        [(r["doc_id"], r["lang"], r["text"]) for r in p.recs],
+        "doc_id LONG, lang STRING, text STRING",
+    ).withColumn("n_toks_doc", F.size(dedup.tokens_col(F.col("text"))).cast("long"))
+    return _tuples(
+        sampling.budget_mix_select(
+            union, "lang", "doc_id", "n_toks_doc", _MIX_TARGETS, 400
+        ),
+        *_MIX_COLS,
+    )
+
+
+def _pack_extras(spark, p, got, want):
+    # the replay marker must survive the final state swap
+    last = scd2._applied_batch_id(p.out, p.cp)
+    return {"replay_marker_present": last is not None and last >= 0}
+
+
+def _pack_fixture(spark, p):
+    rng = random.Random(23)
+    recs = [
+        {"doc_id": i, "text": " ".join(f"w{j}" for j in range(rng.randint(1, 40)))}
+        for i in range(400)
+    ]
+    write_batches(p.inp, recs, batch_size=50)  # 8 id-monotone batches
+
+
+# --- the table -----------------------------------------------------------------
+
+TWINS: list[Twin] = [
+    Twin(
+        "hot_path_enrichment",
+        why="run_hot_path (enrich + applyInPandasWithState author counts + "
+        "foreachBatch dual sink) ≡ enrich_stream + row_number in batch mode",
+        fixture=_hot_fixture,
+        stream=_hot_stream,
+        read=lambda s, p: _tuples(s.read.parquet(p.out), *_HOT_COLS),
+        batch=_hot_batch,
+        rows=200,
+        then=(
+            Twin(
+                "restart_recovery",
+                why="re-run with the same checkpoint after a late file: old "
+                "rows NOT reprocessed, author-count state continues past "
+                "batch-local counts",
+                fixture=_restart_fixture,
+                stream=_hot_stream,
+                read=lambda s, p: _tuples(s.read.parquet(p.out), "id"),
+                batch=lambda s, p: _tuples(
+                    _json(s, pipeline.STREAM_SCHEMA, p.inp), "id"
+                ),
+                extras=_restart_extras,
+                rows=240,
+            ),
+        ),
+    ),
+    Twin(
+        "sessionization",
+        why="with_session_idx (stateful gap sessions, sessions spanning "
+        "micro-batches) ≡ batch lag-island sessionize",
+        fixture=_sess_fixture,
+        stream=_sess_stream,
+        read=lambda s, p: _tuples(s.read.parquet(p.out), "event_id", "session_idx"),
+        batch=_sess_batch,
+        rows=120,
+    ),
+    Twin(
+        "sessionization_multichunk",
+        why="with_session_idx when one group's micro-batch arrives as many "
+        "Arrow chunks in scrambled order (5-record chunks, one 90-row batch) "
+        "≡ batch sessionize; a per-chunk sort once mis-stamped such batches",
+        fixture=_sess_multichunk_fixture,
+        stream=_sess_multichunk_stream,
+        read=lambda s, p: _tuples(s.read.parquet(p.out), "event_id", "session_idx"),
+        batch=_sess_batch,
+        rows=90,
+    ),
+    Twin(
+        "windowed_counts",
+        why="run_windowed_stream (watermarked event-time window counts, "
+        "append mode) ≡ batch windowed_counts over the windows the final "
+        "watermark has closed",
+        fixture=_windowed_fixture,
+        stream=_windowed_stream,
+        read=lambda s, p: _tuples(
+            s.read.parquet(p.out), "window_start", "subreddit", "cnt"
+        ),
+        batch=_windowed_batch,
+    ),
+    Twin(
+        "curation_ingest",
+        why="run_curation_stream (quality gate + split stamp + cross-batch "
+        "fingerprint dedup state) ≡ curate_documents over the union",
+        fixture=_curation_fixture,
+        stream=lambda s, p: pipeline.run_curation_stream(
+            s, p.inp, p.out, p.cp, quality_min=_CURATION_MIN_QUALITY
+        ),
+        read=lambda s, p: _tuples(s.read.parquet(p.out), *_CURATION_COLS),
+        batch=lambda s, p: _tuples(
+            curate_documents(s.createDataFrame(p.recs).dropDuplicates(["doc_id"])),
+            *_CURATION_COLS,
+        ),
+    ),
+    Twin(
+        "interval_join",
+        why="interval_join_streams executed stream-mode (time range in the "
+        "JOIN condition → bounded state) ≡ the same operator in batch mode",
+        fixture=lambda s, p: _join_fixture(
+            p, {i: 7 if i % 3 else 45 for i in range(60)}, sentinels=False
+        ),
+        stream=lambda s, p: _sink(_join(s, p, _source), p),
+        read=lambda s, p: _clicked(s.read.parquet(p.out)),
+        batch=lambda s, p: _clicked(_join(s, p, _json)),
+    ),
+    Twin(
+        "watermark_dedup",
+        why="dedup_stream (dropDuplicatesWithinWatermark, cross-batch keyed "
+        "state) drops planted redeliveries ≡ batch dropDuplicates: ids "
+        "divisible by 5 are re-delivered byte-identically in LATER "
+        "micro-batches inside the 1-hour horizon (the at-least-once "
+        "crash-replay shape of the reference's no-checkpoint consumer)",
+        fixture=_dedup_fixture,
+        stream=lambda s, p: _sink(
+            pipeline.dedup_stream(
+                _ts(_source(s, _DEDUP_SCHEMA, p.inp), "created_ts"),
+                id_col="id", ts_col="created_ts", within="1 hour",
+            ),
+            p,
+        ),
+        read=lambda s, p: _tuples(
+            s.read.parquet(p.out), "id", "payload", "created_ts"
+        ),
+        batch=lambda s, p: _tuples(
+            _ts(_json(s, _DEDUP_SCHEMA, p.inp), "created_ts").dropDuplicates(["id"]),
+            "id", "payload", "created_ts",
+        ),
+        extras=lambda s, p, got, want: {"redelivered": p.redelivered},
+        rows=100,
+    ),
+    Twin(
+        "cusum_drift",
+        why="cusum_alarm_stream (8-byte keyed recursion state, frozen "
+        "training stats) ≡ the batch closed-form operator, exact integer "
+        "rows; the drift starts mid-stream so alarms depend on state "
+        "carried across micro-batches",
+        fixture=_cusum_fixture,
+        stream=lambda s, p: _sink(
+            stateful.cusum_alarm_stream(
+                _ts(_source(s, _CUSUM_SCHEMA, p.inp), "ts"),
+                p.stats, "k", "ts", "id", "v",
+            ),
+            p,
+        ),
+        read=lambda s, p: _tuples(s.read.parquet(p.out), *_CUSUM_COLS),
+        batch=lambda s, p: _tuples(
+            anomaly.cusum_drift(
+                _ts(_json(s, _CUSUM_SCHEMA, p.inp), "ts"),
+                "k", "ts", "id", "v", precomputed_stats=p.stats,
+            ),
+            *_CUSUM_COLS,
+        ),
+    ),
+    Twin(
+        "scd2_maintenance",
+        why="run_scd2_stream (foreachBatch MERGE of an SCD2 history table "
+        "from a micro-batched changelog, replay-guarded) ≡ batch "
+        "scd2_from_changelog over the union; echo rows and NULL attr states "
+        "cross micro-batch boundaries",
+        fixture=_scd2_fixture,
+        stream=lambda s, p: scd2.run_scd2_stream(s, p.inp, p.out, p.cp),
+        read=lambda s, p: _tuples(
+            s.read.parquet(p.out), "user_id", "event_type", "effective_from",
+            "effective_to", "version", "is_current",
+        ),
+        batch=lambda s, p: _tuples(
+            cdc.scd2_from_changelog(
+                _ts(_json(s, "user_id LONG, event_id LONG, ts STRING, "
+                          "event_type STRING", p.inp), "ts"),
+                "user_id", "ts", "event_type", ("event_id",),
+            )
+        ),
+    ),
+    Twin(
+        "cm_sketch_merge",
+        why="run_cm_sketch_stream (per-batch linear-sketch counter addition, "
+        "constant d·w state) ≡ batch cm_counters over the union, EXACT "
+        "integers, with a zipf-ish hot-key skew",
+        fixture=_cm_fixture,
+        stream=lambda s, p: scd2.run_cm_sketch_stream(
+            s, p.inp, p.out, p.cp, schema="h LONG, i LONG", hash_expr="h"
+        ),
+        read=lambda s, p: _tuples(s.read.parquet(p.out), "seed", "bucket", "cnt"),
+        batch=lambda s, p: _tuples(
+            sketches.cm_counters(
+                _json(s, "h LONG, i LONG", p.inp).selectExpr("h AS __h"), "__h"
+            ),
+            "seed", "bucket", "cnt",
+        ),
+    ),
+    Twin(
+        "kmv_sketch_merge",
+        why="run_kmv_stream (per-batch KMV sketch merge, one ≤ k-array per "
+        "key) ≡ batch kmv_sketch_agg over the union, EXACT sketch arrays; "
+        "user ids replay across batches, and one key stays under k distinct "
+        "(the exact-enumeration path)",
+        fixture=_kmv_fixture,
+        stream=lambda s, p: scd2.run_kmv_stream(
+            s, p.inp, p.out, p.cp, schema=_KMV_SCHEMA, key_cols=["etype"],
+            hash_expr=_KMV_HASH, k=16, n_shards=8,
+        ),
+        read=lambda s, p: _sketch_rows(s.read.parquet(p.out), "kmv_sketch"),
+        batch=lambda s, p: _sketch_rows(
+            sketches.kmv_sketch_agg(
+                _json(s, _KMV_SCHEMA, p.inp).selectExpr("etype", f"{_KMV_HASH} AS __h"),
+                ["etype"], "__h", k=16, n_shards=8,
+            ),
+            "kmv_sketch",
+        ),
+        extras=lambda s, p, got, want: {
+            "short_sketch_covered": any(
+                key == "rare" and 0 < len(sk) < 16 for key, sk in want
+            )
+        },
+    ),
+    Twin(
+        "agg_maintenance",
+        why="run_agg_maintenance_stream (per-batch fold of (n, Σ, Σ², min, "
+        "max) states via ivm.agg_merge) ≡ one batch agg over the union, "
+        "EXACT served aggregates with cross-batch extremes planted",
+        fixture=_agg_fixture,
+        stream=lambda s, p: scd2.run_agg_maintenance_stream(
+            s, p.inp, p.out, p.cp, schema="k STRING, v LONG, i LONG",
+            keys=["k"], value_expr="v",
+        ),
+        read=lambda s, p: _tuples(ivm.agg_finish(s.read.parquet(p.out), ["k"])),
+        batch=lambda s, p: _tuples(
+            ivm.agg_finish(
+                ivm.agg_state(
+                    _json(s, "k STRING, v LONG, i LONG", p.inp).selectExpr(
+                        "k", "v AS __v"
+                    ),
+                    ["k"], "__v",
+                ),
+                ["k"],
+            )
+        ),
+        # the planted cross-batch extremes must be the served min/max
+        extras=lambda s, p, got, want: {
+            "extremes_folded": any(
+                r[0] == "k1" and r[-2] == -10_000 and r[-1] == 10_000 for r in want
+            )
+        },
+    ),
+    Twin(
+        "seasonal_anomalies",
+        why="seasonal_apply with FROZEN training stats (stream-static "
+        "broadcast join, stateless map) ≡ the same applier over the batch "
+        "union; planted slot-absurd values (slot baselines differ 20×) "
+        "must fire",
+        fixture=_seasonal_fixture,
+        stream=lambda s, p: _sink(
+            _seasonal(_source(s, _SEASONAL_SCHEMA, p.inp), p), p
+        ),
+        read=lambda s, p: _tuples(s.read.parquet(p.out), *_SEASONAL_COLS),
+        batch=lambda s, p: _tuples(
+            _seasonal(_json(s, _SEASONAL_SCHEMA, p.inp), p), *_SEASONAL_COLS
+        ),
+        extras=lambda s, p, got, want: {
+            "planted_found": p.planted <= {r[2] for r in want}
+        },
+    ),
+    Twin(
+        "interval_join_outer",
+        why="LEFT OUTER stream-stream interval join (abandonment rows emit "
+        "with NULL right side after the watermark passes; sentinel rows "
+        "advance the min-across-inputs watermark) ≡ the batch left join",
+        fixture=lambda s, p: _join_fixture(
+            p, {i: 7 for i in range(0, 60, 2)}, sentinels=True
+        ),
+        stream=lambda s, p: _sink(_join(s, p, _source, how="left_outer"), p),
+        read=lambda s, p: _clicked(s.read.parquet(p.out)),
+        batch=lambda s, p: _clicked(_join(s, p, _json, how="left_outer")),
+        extras=lambda s, p, got, want: {
+            "abandoned": sum(1 for _, b in want if b is None)
+        },
+        ok=lambda r: r["abandoned"] > 0,
+    ),
+    Twin(
+        "ohlc_bars",
+        why="run_ohlc_stream (foreachBatch merge of mergeable OHLC partial "
+        "state, one row per (key, bucket)) ≡ batch ohlc_resample over the "
+        "union, incl. same-timestamp ties split across micro-batches",
+        fixture=_ohlc_fixture,
+        stream=lambda s, p: scd2.run_ohlc_stream(
+            s, p.inp, p.out, p.cp, schema=_OHLC_SCHEMA, key="sym", **_OHLC_ARGS
+        ),
+        read=lambda s, p: _tuples(scd2.ohlc_finish(s.read.parquet(p.out), "sym")),
+        batch=lambda s, p: _tuples(
+            temporal.ohlc_resample(
+                _json(s, _OHLC_SCHEMA, p.inp), key="sym", **_OHLC_ARGS
+            )
+        ),
+    ),
+    Twin(
+        "target_encoding",
+        why="run_target_encoding_stream (per-batch fold of the (category, "
+        "fold, n, Σ) frame by exact decimal addition) ≡ the batch OOF "
+        "encoder over the union through the SHARED finish step, doubles "
+        "included; categories skew across batches",
+        fixture=_te_fixture,
+        stream=lambda s, p: scd2.run_target_encoding_stream(
+            s, p.inp, p.out, p.cp, schema=_TE_SCHEMA, category_col="cat",
+            target_col="y", fold_key="uid", n_folds=3,
+        ),
+        read=lambda s, p: _tuples(
+            features.oof_finish(s.read.parquet(p.out), m=10), *_TE_COLS
+        ),
+        batch=lambda s, p: _tuples(
+            features.target_encode_oof(
+                _json(s, _TE_SCHEMA, p.inp), "cat", "y", "uid", n_folds=3, m=10
+            ),
+            *_TE_COLS,
+        ),
+    ),
+    Twin(
+        "table_diff_maintenance",
+        why="run_table_diff_stream (XOR-delta maintenance of a replica "
+        "snapshot + its Merkle bucket-digest index from an upsert/tombstone "
+        "changelog with echoes, new keys and delete-then-reinsert) ≡ "
+        "bucket_digests rebuilt from the final replica AND table_diff over "
+        "the full snapshots, both EXACT",
+        fixture=_td_fixture,
+        stream=lambda s, p: scd2.run_table_diff_stream(
+            s, p.inp, p.path("replica"), p.out, p.cp, schema=_TD_SCHEMA,
+            key="key", compare_cols=_TD_COLS, ts_col="ts", tiebreak=("event_id",),
+        ),
+        read=_td_read,
+        batch=_td_batch,
+        extras=lambda s, p, got, want: {
+            "digest_rows": s.read.parquet(p.out).count()
+        },
+        ok=lambda r: r["digest_rows"] > 0,
+    ),
+    Twin(
+        "reservoir_maintenance",
+        why="run_reservoir_stream (per-batch bottom-k reservoir merge per "
+        "key) ≡ batch reservoir_sample_agg over the union, EXACT (score, id) "
+        "arrays incl. cross-batch redeliveries + the < k enumeration path",
+        fixture=_reservoir_fixture,
+        stream=lambda s, p: scd2.run_reservoir_stream(
+            s, p.inp, p.out, p.cp, schema="k STRING, id LONG", key_cols=["k"],
+            id_col="id", k=16,
+        ),
+        read=lambda s, p: _reservoir_rows(s.read.parquet(p.out)),
+        batch=lambda s, p: _reservoir_rows(
+            sampling.reservoir_sample_agg(
+                _json(s, "k STRING, id LONG", p.inp), ["k"], "id", k=16
+            )
+        ),
+        extras=lambda s, p, got, want: {
+            "sparse_key_exact": any(k == "sparse" and len(r) == 7 for k, r in got)
+        },
+    ),
+    Twin(
+        "hll_maintenance",
+        why="run_hll_stream (per-batch HLL sketch union, one binary per key) "
+        "≡ hll_sketch_agg over the union: the served estimate table is "
+        "hash-equal (same-lgK union is lossless in register space); user "
+        "ids replay across micro-batches",
+        fixture=_hll_fixture,
+        stream=lambda s, p: scd2.run_hll_stream(
+            s, p.inp, p.out, p.cp, schema=_KMV_SCHEMA, key_cols=["etype"],
+            item_expr="uid", lgk=12,
+        ),
+        read=lambda s, p: _tuples(
+            s.read.parquet(p.out).select(
+                "etype", F.hll_sketch_estimate("hll").cast("long").alias("est")
+            )
+        ),
+        batch=lambda s, p: _tuples(
+            _json(s, _KMV_SCHEMA, p.inp)
+            .groupBy("etype")
+            .agg(
+                F.hll_sketch_estimate(F.hll_sketch_agg("uid", F.lit(12)))
+                .cast("long")
+                .alias("est")
+            )
+        ),
+        extras=_hll_extras,
+    ),
+    Twin(
+        "kll_maintenance",
+        why="run_kll_stream (weighted-distinct value state per shard, exact "
+        "count addition) ≡ the batch KLL build over the union: BOTH the "
+        "state table and the served quantile read-offs are hash-equal",
+        fixture=_kll_fixture,
+        stream=lambda s, p: scd2.run_kll_stream(
+            s, p.inp, p.out, p.cp, schema="v LONG, i LONG", value_expr="v",
+            n_shards=8,
+        ),
+        read=_kll_read,
+        batch=_kll_batch,
+    ),
+    Twin(
+        "ivf_index_maintenance",
+        why="run_ivf_append_stream (per-batch directory appends against the "
+        "frozen centroids) ≡ one batch build over base ∪ all streamed "
+        "vectors: probe-all top-k over the MAINTAINED index equals the "
+        "from-scratch index AND brute force over the union",
+        fixture=_ivf_fixture,
+        stream=lambda s, p: scd2.run_ivf_append_stream(
+            s, p.inp, p.out, p.cp, schema=_VEC_SCHEMA
+        ),
+        read=lambda s, p: _probe_all(s, p.out),
+        batch=_ivf_batch,
+        extras=lambda s, p, got, want: {
+            "probe_all_equals_brute": got == _brute(s, p.union)
+        },
+    ),
+    Twin(
+        "index_delete_maintenance",
+        why="run_index_delete_stream (micro-batched takedown feed → "
+        "tombstone batch dirs, compacted on stop) ≡ one batch "
+        "vector_index_delete of the union id set, and ≡ brute force over "
+        "the surviving corpus",
+        fixture=_delete_fixture,
+        stream=lambda s, p: scd2.run_index_delete_stream(
+            s, p.inp, p.out, p.cp, schema="vec_id LONG", compact_on_stop=True
+        ),
+        read=lambda s, p: _probe_all(s, p.out),
+        batch=_delete_batch,
+        extras=_delete_extras,
+    ),
+    Twin(
+        "pack_maintenance",
+        why="run_pack_stream (incremental concat-and-chunk packing over an "
+        "id-monotone append stream, replay-guarded) ≡ batch "
+        "pack_concat_chunks over the union, EXACT offsets/chunk ranges",
+        fixture=_pack_fixture,
+        stream=lambda s, p: scd2.run_pack_stream(
+            s, p.inp, p.out, p.cp, schema=_DOCS_SCHEMA, chunk_tokens=64
+        ),
+        read=lambda s, p: _tuples(s.read.parquet(p.out)),
+        batch=lambda s, p: _tuples(
+            text_analysis.pack_concat_chunks(
+                _json(s, _DOCS_SCHEMA, p.inp), 64, "doc_id", "text"
+            )
+        ),
+        extras=_pack_extras,
+    ),
+    Twin(
+        "minhash_index_maintenance",
+        why="run_minhash_index_stream (per-batch band-index append + probe + "
+        "exact-Jaccard verify) ≡ batch minhash_lsh_pairs over the union, ids "
+        "AND jaccard doubles; the maintained band index equals one built "
+        "from scratch; near-dups planted within and across batches",
+        fixture=_minhash_fixture,
+        stream=lambda s, p: scd2.run_minhash_index_stream(
+            s, p.inp, p.out, p.cp, schema=_DOCS_SCHEMA, threshold=0.5
+        ),
+        read=lambda s, p: _tuples(
+            s.read.parquet(os.path.join(p.out, "pairs")), "doc_a", "doc_b", "jaccard"
+        ),
+        batch=lambda s, p: _tuples(
+            dedup.minhash_lsh_pairs(_docs(s, p), "doc_id", "text", 0.5),
+            "doc_a", "doc_b", "jaccard",
+        ),
+        extras=_minhash_extras,
+    ),
+    Twin(
+        "bm25_index_maintenance",
+        why="run_bm25_index_stream (per-batch posting/doclen directory "
+        "appends) ≡ batch bm25_scores over the union: the index-served "
+        "scores are hash-equal, doubles included, and the doclen tables "
+        "are equal",
+        fixture=_bm25_fixture,
+        stream=lambda s, p: scd2.run_bm25_index_stream(
+            s, p.inp, p.out, p.cp, schema=_DOCS_SCHEMA
+        ),
+        read=lambda s, p: _bm25_serve(s, p.out, _BM25_TERMS),
+        batch=lambda s, p: _tuples(
+            text_analysis.bm25_scores(_docs(s, p), _BM25_TERMS), *_BM25_COLS
+        ),
+        extras=_bm25_extras,
+    ),
+    Twin(
+        "mix_maintenance",
+        why="run_mix_stream (per-batch greedy mix fill against the ledger) "
+        "≡ batch budget_mix_select over the union, EXACT manifests; one "
+        "stratum exhausts its budget mid-stream, one is untargeted",
+        fixture=_mix_fixture,
+        stream=lambda s, p: scd2.run_mix_stream(
+            s, p.inp, p.path("state"), p.out, p.cp,
+            schema="doc_id LONG, lang STRING, text STRING",
+            targets_ppm=_MIX_TARGETS, budget_tokens=400,
+        ),
+        read=lambda s, p: _tuples(s.read.parquet(p.out).drop("batch"), *_MIX_COLS),
+        batch=_mix_batch,
+        extras=lambda s, p, got, want: {
+            "budget_exhausted_mid_stream": any(r[1] == "de" for r in want)
+            and len({r[1] for r in want}) == 2
+        },
+    ),
+    Twin(
+        "auc_maintenance",
+        why="run_auc_stream (weighted-distinct score state per cohort, exact "
+        "count addition) ≡ batch auc_exact over the union: BOTH the state "
+        "and the served keyed AUC rows are hash-equal",
+        fixture=_auc_fixture,
+        stream=lambda s, p: scd2.run_auc_stream(
+            s, p.inp, p.out, p.cp, schema=_AUC_SCHEMA, score_expr="s",
+            label_expr="y", key_cols=["c"],
+        ),
+        read=lambda s, p: {
+            "": _tuples(s.read.parquet(p.out), *_AUC_STATE),
+            "auc": _tuples(features.auc_from_weighted(s.read.parquet(p.out), ["c"])),
+        },
+        batch=_auc_batch,
+    ),
+    Twin(
+        "source_gate_maintenance",
+        why="run_source_gate_stream ((source, fingerprint) cell state, exact "
+        "count/ladder-sum addition) ≡ batch source_quality_gate over the "
+        "union: BOTH the state and the gate verdicts are hash-equal; a "
+        "cross-batch mirror source must show as dups",
+        fixture=_gate_fixture,
+        stream=lambda s, p: scd2.run_source_gate_stream(
+            s, p.inp, p.out, p.cp, schema=_GATE_SCHEMA, id_col="doc_id",
+            text_col="text", source_col="source",
+        ),
+        read=lambda s, p: {
+            "": _tuples(s.read.parquet(p.out), *_GATE_STATE),
+            "gate": _tuples(
+                governance.source_gate_finish(s.read.parquet(p.out), *_GATE_ARGS)
+            ),
+        },
+        batch=lambda s, p: {
+            "": _tuples(
+                governance.source_gate_state(
+                    _json(s, _GATE_SCHEMA, p.inp), "doc_id", "text", "source"
+                ),
+                *_GATE_STATE,
+            ),
+            "gate": _tuples(
+                governance.source_quality_gate(
+                    _json(s, _GATE_SCHEMA, p.inp), "doc_id", "text", "source",
+                    *_GATE_ARGS,
+                )
+            ),
+        },
+        extras=_gate_extras,
+    ),
+    Twin(
+        "dedup_cluster_serve",
+        why="duplicate_clusters served over the MinHash stream's maintained "
+        "pair state ≡ batch clusters over re-paired union docs; a "
+        "cross-batch chain (30 ~ 3, 31 ~ 30) must merge into one component",
+        fixture=_clusters_fixture,
+        stream=lambda s, p: scd2.run_minhash_index_stream(
+            s, p.inp, p.out, p.cp, schema=_DOCS_SCHEMA, threshold=0.5
+        ),
+        read=lambda s, p: _tuples(
+            dedup.duplicate_clusters(s.read.parquet(os.path.join(p.out, "pairs"))),
+            "doc", "keeper",
+        ),
+        batch=lambda s, p: _tuples(
+            dedup.duplicate_clusters(
+                dedup.minhash_lsh_pairs(_docs(s, p), "doc_id", "text", 0.5)
+            ),
+            "doc", "keeper",
+        ),
+        extras=_clusters_extras,
+    ),
+    Twin(
+        "decontam_maintenance",
+        why="run_decontam_stream (per-batch contamination screening against "
+        "a frozen broadcast eval set, directory-per-batch appends) ≡ batch "
+        "contamination_report over the union; one leaked doc per batch",
+        fixture=_decontam_fixture,
+        stream=lambda s, p: scd2.run_decontam_stream(
+            s, p.inp, p.path("eval"), p.out, p.cp, schema=_DOCS_SCHEMA
+        ),
+        read=lambda s, p: _tuples(
+            s.read.parquet(p.out).drop("batch"), *_DECONTAM_COLS
+        ),
+        batch=lambda s, p: _tuples(
+            dedup.contamination_report(_docs(s, p), p.eval_df, "doc_id", "text"),
+            *_DECONTAM_COLS,
+        ),
+        extras=lambda s, p, got, want: {
+            "flagged_docs": sorted({d for d, _, _ in got})
+        },
+        ok=lambda r: r["flagged_docs"] == [3, 11, 19],
+    ),
+    Twin(
+        "vocab_maintenance",
+        why="run_vocab_stream ((term → count) state, exact addition) ≡ the "
+        "batch token counts over the union, AND the served "
+        "vocabulary-coverage curve equals the batch curve",
+        fixture=_vocab_fixture,
+        stream=lambda s, p: scd2.run_vocab_stream(
+            s, p.inp, p.out, p.cp, schema=_DOCS_SCHEMA, text_expr=_VOCAB_TOKENS
+        ),
+        read=_vocab_read,
+        batch=_vocab_batch,
+    ),
+    Twin(
+        "index_compaction_lifecycle",
+        why="compaction of a streamed directory-per-batch BM25 index: batch "
+        "dirs collapse to one base and the file count drops, the serve is "
+        "bit-equal across the compaction, and a clean-stop restart with "
+        "compact_on_stop serves ≡ the batch scorer over the full union",
+        fixture=_compaction_fixture,
+        stream=_compaction_stream,
+        read=lambda s, p: _bm25_serve(s, p.out, _CMP_TERMS),
+        batch=lambda s, p: _tuples(
+            text_analysis.bm25_scores(_docs(s, p), _CMP_TERMS), *_BM25_COLS
+        ),
+        extras=_compaction_extras,
+        ok=lambda r: r["files_after"] < r["files_before"]
+        and r["hash_pre"] == r["hash_post"]
+        and r["final_tags"] == ["base"],
+    ),
+    Twin(
+        "phash_index_maintenance",
+        why="run_phash_index_stream (per-batch band/hash/pair directory "
+        "appends) ≡ batch phash_neardup_pairs over the union: a noisy copy "
+        "two batches after its original pairs via the maintained band "
+        "index, and a dropped-commit replay overwrites its own directories",
+        fixture=_phash_fixture,
+        stream=lambda s, p: scd2.run_phash_index_stream(
+            s, p.inp, p.out, p.cp, **_PHASH_ARGS
+        ),
+        read=_phash_pairs,
+        batch=lambda s, p: _tuples(
+            dedup.phash_neardup_pairs(
+                s.createDataFrame(
+                    [(r["media_id"], r["ahash_hi"], r["ahash_lo"]) for r in p.recs],
+                    "media_id LONG, ahash_hi LONG, ahash_lo LONG",
+                ),
+                max_hamming=3,
+            ),
+            "id_a", "id_b", "hamming",
+        ),
+        extras=_phash_extras,
+    ),
+]
 
 
 def main() -> None:
@@ -2777,48 +1917,8 @@ def main() -> None:
     results: dict[str, dict] = {}
     try:
         t0 = time.perf_counter()
-        results["hot_path_enrichment"], ctx = check_hot_path(spark, root)
-        results["restart_recovery"] = check_restart(spark, ctx)
-        results["sessionization"] = check_sessionize(spark, root)
-        results["curation_ingest"] = check_curation(spark, root)
-        results["interval_join"] = check_interval_join(spark, root)
-        results["watermark_dedup"] = check_watermark_dedup(spark, root)
-        results["cusum_drift"] = check_cusum_stream(spark, root)
-        results["scd2_maintenance"] = check_scd2_stream(spark, root)
-        results["cm_sketch_merge"] = check_cm_sketch_stream(spark, root)
-        results["kmv_sketch_merge"] = check_kmv_stream(spark, root)
-        results["agg_maintenance"] = check_agg_maintenance_stream(spark, root)
-        results["seasonal_anomalies"] = check_seasonal_stream(spark, root)
-        results["interval_join_outer"] = check_interval_join_outer(spark, root)
-        results["ohlc_bars"] = check_ohlc_stream(spark, root)
-        results["target_encoding"] = check_target_encoding_stream(spark, root)
-        results["table_diff_maintenance"] = check_table_diff_stream(spark, root)
-        results["reservoir_maintenance"] = check_reservoir_stream(spark, root)
-        results["hll_maintenance"] = check_hll_stream(spark, root)
-        results["kll_maintenance"] = check_kll_stream(spark, root)
-        results["ivf_index_maintenance"] = check_ivf_index_stream(spark, root)
-        results["index_delete_maintenance"] = check_index_delete_stream(
-            spark, root
-        )
-        results["pack_maintenance"] = check_pack_stream(spark, root)
-        results["minhash_index_maintenance"] = check_minhash_index_stream(spark, root)
-        results["bm25_index_maintenance"] = check_bm25_index_stream(spark, root)
-        results["mix_maintenance"] = check_mix_stream(spark, root)
-        results["auc_maintenance"] = check_auc_stream(spark, root)
-        results["source_gate_maintenance"] = check_source_gate_stream(
-            spark, root
-        )
-        results["dedup_cluster_serve"] = check_dedup_cluster_serve(
-            spark, root
-        )
-        results["decontam_maintenance"] = check_decontam_stream(spark, root)
-        results["vocab_maintenance"] = check_vocab_stream(spark, root)
-        results["index_compaction_lifecycle"] = check_index_compaction(
-            spark, root
-        )
-        results["phash_index_maintenance"] = check_phash_index_stream(
-            spark, root
-        )
+        for twin in TWINS:
+            results.update(run_twin(spark, root, twin))
         elapsed = round(time.perf_counter() - t0, 1)
     finally:
         shutil.rmtree(root, ignore_errors=True)
