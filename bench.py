@@ -326,9 +326,9 @@ def bench_streaming(spark, reps: int) -> dict:
     pipelines, so state-store/enrichment regressions show up
     round-over-round like any batch number:
 
-    - hot_path: enrichment + applyInPandasWithState author counts +
-      foreachBatch dual sink (run_hot_path), N_ROWS over N_FILES
-      micro-batches;
+    - hot_path: enrichment + foreachBatch body with JVM author counts
+      (prior totals from checkpointed per-batch deltas) and the dual
+      sink (run_hot_path), N_ROWS over N_FILES micro-batches;
     - curation: quality gate + split stamp + cross-batch fingerprint
       dedup state + parquet sink (run_curation_stream).
 

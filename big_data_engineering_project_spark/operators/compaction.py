@@ -77,6 +77,7 @@ def compact_batches(
     partition_by: tuple[str, ...] = (),
     base_tag: str = "base",
     transform=None,
+    n_files: int = 1,
 ) -> dict:
     """Collapse every `batch=<tag>` child of `root` into one
     `batch=<base_tag>` directory holding the identical rows, swapped
@@ -95,6 +96,9 @@ def compact_batches(
     repartitioning on a real column instead; the artifacts this
     compacts (postings, band rows, manifests) are index-sized, not
     corpus-sized, so one file per root is the honest default.
+    `n_files` > 1 writes that many files instead, for a base that a
+    reader scans whole on every micro-batch (the hot path's author
+    totals): one file would be one scan task.
 
     `transform` (optional, df -> df) rewrites the rows on the way
     through — the seam vector_index_vacuum uses to apply delete
@@ -149,7 +153,8 @@ def compact_batches(
             .parquet(dest)
         )
     else:
-        df.coalesce(1).write.mode("overwrite").parquet(dest)
+        df = df.coalesce(1) if n_files == 1 else df.repartition(n_files)
+        df.write.mode("overwrite").parquet(dest)
     # Two-rename atomic swap (ivf_index_rebuild_swap discipline).
     # Hadoop FileSystem.rename reports failure by returning FALSE, not
     # by raising (s3a/abfs renames are copy+delete and can fail

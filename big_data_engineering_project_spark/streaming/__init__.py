@@ -8,9 +8,10 @@ checkpointing (at-least-once at best).
 
 Spark-first, that collapses to ONE Structured Streaming query:
 file JSON source (micro-batch caps ≡ T1/O7) → native column
-enrichment (UD3 decomposed; §2.10) → stateful author counts (T4) →
-foreachBatch: typed Parquet append (K3/T6) + per-batch anomalies (T5)
-— with checkpointing for exactly-once (T8, the upgrade the reference
+enrichment (UD3 decomposed; §2.10) → foreachBatch: author counts
+folded in the JVM from checkpointed per-batch deltas (T4), typed
+Parquet append (K3/T6) + per-batch anomalies (T5) — with
+checkpointing for exactly-once (T8, the upgrade the reference
 lacks).
 """
 
@@ -20,14 +21,10 @@ from big_data_engineering_project_spark.streaming.pipeline import (
     run_hot_path,
     stream_source,
 )
-from big_data_engineering_project_spark.streaming.stateful import (
-    with_author_activity_count,
-)
 
 __all__ = [
     "STREAM_SCHEMA",
     "enrich_stream",
     "run_hot_path",
     "stream_source",
-    "with_author_activity_count",
 ]

@@ -160,6 +160,23 @@ def _applied_batch_id(path: str, checkpoint_dir: str) -> int | None:
     return m[1]
 
 
+def _last_committed(spark: SparkSession, checkpoint_dir: str) -> int:
+    """The id of the last batch committed to `checkpoint_dir` (the
+    `commits/<id>` files Spark writes per batch), or -1 before the
+    first. Listed through the Hadoop FS API, like _fs_list_batches:
+    os.listdir only exists for local checkpoints, and on s3a/abfs it
+    would report commits/ absent (r13 ADVICE #2)."""
+    from big_data_engineering_project_spark.operators.similarity import (
+        _hadoop_fs,
+    )
+
+    fs, jpath = _hadoop_fs(spark, checkpoint_dir.rstrip("/") + "/commits")
+    if not fs.exists(jpath):
+        return -1
+    names = [st.getPath().getName() for st in fs.listStatus(jpath)]
+    return max((int(n) for n in names if n.isdigit()), default=-1)
+
+
 def _compact_on_stop(
     spark: SparkSession,
     checkpoint_dir: str,
@@ -195,26 +212,7 @@ def _compact_on_stop(
     )
 
     prefix = _batch_tag(checkpoint_dir, "")
-    # List commits/ through the Hadoop FS API, like _fs_list_batches:
-    # os.listdir only exists for local checkpoints, and on s3a/abfs it
-    # would report commits/ absent → last=-1 → a spurious refusal on
-    # every committed batch (r13 ADVICE #2).
-    from big_data_engineering_project_spark.operators.similarity import (
-        _hadoop_fs,
-    )
-
-    commits_dir = checkpoint_dir.rstrip("/") + "/commits"
-    fs, jpath = _hadoop_fs(spark, commits_dir)
-    committed = (
-        [
-            int(st.getPath().getName())
-            for st in fs.listStatus(jpath)
-            if st.getPath().getName().isdigit()
-        ]
-        if fs.exists(jpath)
-        else []
-    )
-    last = max(committed) if committed else -1
+    last = _last_committed(spark, checkpoint_dir)
     # Refusal scan over ALL roots FIRST, compaction only after every
     # root passes: a per-root guard-then-compact loop would leave
     # roots 1..N-1 compacted when root N refuses, a mixed artifact

@@ -1,18 +1,15 @@
-"""T4 — cross-batch per-record running author count.
+"""Per-record stateful stamps over a stream: `applyInPandasWithState`
+maps that carry per-key state across micro-batches, checkpointed with
+the query, where a window aggregate would only give per-key TOTALS.
 
-Reference: a driver-local dict `author_activity[author] += 1` stamped
-onto every record (`kinesis_processing_2.py:42-43,98-100`) — state
-lives in one Python process, lost on crash, impossible to scale.
+- `with_session_idx`: gap-based session index per user;
+- `cusum_alarm_stream`: one-sided CUSUM drift alarms per key.
 
-Here: `applyInPandasWithState` — state is per-author, partitioned by
-the shuffle, checkpointed with the query. Each micro-batch the group's
-rows get consecutive counts continuing from the stored total. This is
-the hardest op in SURVEY.md §7.4 because update-mode `groupBy.count`
-gives per-key TOTALS, not per-RECORD stamps; the stateful map is what
-reproduces the reference's exact record-level semantics.
-
-Exact batch equivalent (tested): `row_number().over(
-Window.partitionBy(author).orderBy(arrival))`.
+The hot path's running author count (T4, `kinesis_processing_2.py:
+42-43,98-100`) is not here: `streaming.pipeline.stamp_author_counts`
+folds it in the JVM inside the foreachBatch body, from per-batch
+`(author, total)` deltas kept in the checkpoint — a count needs no
+per-group Python, and its batch twin is plain `row_number()`.
 """
 
 from __future__ import annotations
@@ -24,52 +21,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructField, StructType
-
-
-def with_author_activity_count(
-    df: DataFrame,
-    author_col: str = "author",
-    order_col: str = "seq",
-    out_col: str = "author_activity_count",
-) -> DataFrame:
-    """Stamp a running per-author count on every record of a streaming
-    DataFrame. Rows within a batch are stamped in `order_col` order
-    (arrival order — the reference stamps in poll-loop order)."""
-    from big_data_engineering_project_spark.sources.catalog import (
-        ensure_package_on_executors,
-    )
-
-    ensure_package_on_executors(df.sparkSession)
-    out_schema = StructType(df.schema.fields + [StructField(out_col, LongType())])
-    state_schema = StructType([StructField("total", LongType())])
-
-    def stamp(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        total = state.get[0] if state.exists else 0
-        # Materialize the whole group before sorting: Arrow hands one
-        # group's micro-batch over as MULTIPLE chunks (default 10k rows
-        # each) in shuffle-arrival order, so per-chunk sorts would stamp
-        # large batches out of order. One user's rows in one micro-batch
-        # is the memory bound — the per-trigger cap governs it.
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            pdf = pd.concat(chunks).sort_values(order_col)
-            n = len(pdf)
-            pdf[out_col] = range(total + 1, total + n + 1)
-            total += n
-            yield pdf
-        state.update((total,))
-
-    return df.groupBy(author_col).applyInPandasWithState(
-        stamp,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def with_session_idx(

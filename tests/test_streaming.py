@@ -139,6 +139,118 @@ def test_restart_is_exactly_once_and_state_continues(spark, hot_path_output):
         assert maxes[r["author"]] > r["count"]
 
 
+def _count_mismatches(spark, table: str, in_dir: str) -> int:
+    """Rows of `table` whose author count differs from the batch
+    formulation row_number().over(partitionBy(author).orderBy(seq))."""
+    w = Window.partitionBy("author").orderBy("seq")
+    expected = (
+        spark.read.schema(STREAM_SCHEMA)
+        .json(in_dir)
+        .select("seq", F.row_number().over(w).alias("expected"))
+    )
+    return (
+        spark.read.parquet(table)
+        .join(expected, "seq")
+        .filter(F.col("author_activity_count") != F.col("expected"))
+        .count()
+    )
+
+
+@pytest.fixture(scope="module")
+def null_author_run(spark, tmp_path_factory):
+    """The hot path over 60 records in 4 batches, every fourth record
+    with a null author, merging committed deltas from two on: batch 2
+    merges deltas 0-1 into run m1, batch 3 merges m1 and delta 2 into
+    run m2."""
+    from big_data_engineering_project_spark.streaming import pipeline
+
+    base = tmp_path_factory.mktemp("null_author")
+    recs = gen_hot_records(60, seed=11)
+    for r in recs[::4]:
+        r["author"] = None
+    paths = {k: str(base / k) for k in ("in", "table", "anom", "cp")}
+    write_batches(paths["in"], recs, batch_size=15)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pipeline, "MERGE_AT", 2)
+        run_hot_path(
+            spark, paths["in"], paths["table"], paths["anom"], paths["cp"],
+            now=FROZEN_NOW, max_files_per_trigger=1,
+        )
+    return paths
+
+
+def test_null_author_counts_equal_batch_row_number(spark, null_author_run):
+    """A null author is one author, as row_number's partitioning treats
+    it: its count continues across batches like any other (a prior
+    joined with plain `=` would restart it every batch)."""
+    import os
+
+    out = spark.read.parquet(null_author_run["table"])
+    assert out.count() == 60
+    assert out.filter(F.col("author").isNull()).select("batch_id").distinct().count() == 4
+    assert _count_mismatches(spark, null_author_run["table"], null_author_run["in"]) == 0
+    dirs = sorted(os.listdir(os.path.join(null_author_run["cp"], "author_counts")))
+    assert [d.rsplit("-", 1)[1] for d in dirs] == ["3", "m2"], dirs
+
+
+def test_crash_window_replay_stamps_the_same_counts(spark, tmp_path, null_author_run):
+    """A batch replayed after a crash before its commit reads the same
+    prior, stamps the same counts and rewrites only its own delta. The
+    restart first deletes that uncommitted delta and folds the
+    committed run m2 into `batch=base`."""
+    import os
+    import shutil
+
+    # Relocate the checkpoint (same query id, so the same lineage) and
+    # drop the last commit, so the restart re-executes batch 3.
+    cp = str(tmp_path / "cp")
+    table = str(tmp_path / "table")
+    shutil.copytree(null_author_run["cp"], cp)
+    shutil.copytree(null_author_run["table"], table)
+    os.remove(os.path.join(cp, "commits", "3"))
+    os.remove(os.path.join(cp, "commits", ".3.crc"))
+    run_hot_path(
+        spark, null_author_run["in"], table, str(tmp_path / "anom"), cp,
+        now=FROZEN_NOW, max_files_per_trigger=1,
+    )
+    out = spark.read.parquet(table)
+    assert out.count() == 75  # the replayed batch is appended again
+    per_seq = out.groupBy("seq").agg(
+        F.countDistinct("author_activity_count").alias("n")
+    )
+    assert per_seq.filter(F.col("n") != 1).count() == 0
+    assert _count_mismatches(spark, table, null_author_run["in"]) == 0
+    dirs = os.listdir(os.path.join(cp, "author_counts"))
+    assert len(dirs) == 2 and "batch=base" in dirs
+    assert any(d.endswith("-3") for d in dirs), dirs
+
+
+def test_hot_path_stamp_runs_no_python(spark, tmp_path):
+    """The batch body's stamped plan, with and without a prior, executes
+    without a Python, Pandas or Arrow-eval node: no Python UDF on the
+    hot path."""
+    from big_data_engineering_project_spark.streaming.pipeline import (
+        enrich_stream,
+        stamp_author_counts,
+    )
+
+    recs = gen_hot_records(30)
+    write_batches(str(tmp_path / "in"), recs, batch_size=30)
+    batch = enrich_stream(
+        spark.read.schema(STREAM_SCHEMA).json(str(tmp_path / "in")), FROZEN_NOW
+    )
+    root = str(tmp_path / "author_counts")
+    spark.createDataFrame(
+        [("user1", 5), (None, 2)], "author STRING, total BIGINT"
+    ).write.parquet(root + "/batch=base")
+    for tag in ("base", "x-0"):  # tag "base" excludes the only delta
+        stamped = stamp_author_counts(batch, root, tag)
+        assert len(stamped.collect()) == 30
+        plan = stamped._jdf.queryExecution().executedPlan().toString()
+        assert ("BroadcastHashJoin" in plan) == (tag == "x-0")
+        assert not any(n in plan for n in ("Python", "Pandas", "ArrowEval")), plan
+
+
 def test_dedup_stream_drops_redelivered_records(spark, tmp_path):
     """T8 upgrade: duplicate ids re-delivered in later micro-batches
     (the at-least-once failure mode) are dropped within the watermark."""

@@ -1279,8 +1279,9 @@ def _pack_fixture(spark, p):
 TWINS: list[Twin] = [
     Twin(
         "hot_path_enrichment",
-        why="run_hot_path (enrich + applyInPandasWithState author counts + "
-        "foreachBatch dual sink) ≡ enrich_stream + row_number in batch mode",
+        why="run_hot_path (enrich + JVM author counts from checkpointed "
+        "per-batch deltas + foreachBatch dual sink) ≡ enrich_stream + "
+        "row_number in batch mode",
         fixture=_hot_fixture,
         stream=_hot_stream,
         read=lambda s, p: _tuples(s.read.parquet(p.out), *_HOT_COLS),
