@@ -27,6 +27,17 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """`spark.driver.memory` when SPARK_DRIVER_MEMORY is unset: half of
+    physical memory, at most 24g. The other half is headroom for what
+    lives outside the heap: the Python driver and pandas/Arrow
+    workers, and the JVM's own off-heap memory (metaspace, thread
+    stacks, direct buffers). A heap sized past physical memory grows
+    until the kernel kills the JVM."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "bde-spark-engine",
     shuffle_partitions: int | None = None,
@@ -85,7 +96,10 @@ def get_spark(
         # Quiet local runs; harmless on a cluster.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -1,5 +1,8 @@
 """The hot-path pipeline: source → enrichment → foreachBatch body
-(author-count stamp + sinks) (SURVEY.md §3.1 engine mapping).
+(author-count stamp + sinks) (SURVEY.md §3.1 engine mapping). The hot
+path is one more runner of streaming/scd2.py: the same `_drain`, the
+same prior reader (`_read_prior`), the same uncommitted-directory rule
+(`_uncommitted`) and the same directory-per-batch sinks (`_batch_tag`).
 
 Enrichment is the full `preprocess_record` port
 (`kinesis_processing_2.py:48-102`, UD3) decomposed into native column
@@ -12,7 +15,9 @@ Scale notes:
 - Micro-batch caps (`maxFilesPerTrigger`) ≡ the consumer's
   `get_records(Limit=100)` (T1/O7).
 - `checkpointLocation` upgrades the reference's at-least-once-no-
-  checkpoint loop (T8) to exactly-once sink semantics.
+  checkpoint loop (T8) to exactly-once sinks: each batch writes its
+  table rows, anomalies and author-count delta to its own
+  `batch=<lineage>-<id>` directory, which a replay overwrites.
 - The running author count (T4) is JVM work inside the batch body:
   `row_number` within the batch plus each author's prior total, read
   from per-batch `(author, total)` delta directories that live in the
@@ -70,7 +75,11 @@ from big_data_engineering_project_spark.operators.similarity import (
 )
 from big_data_engineering_project_spark.streaming.scd2 import (
     _batch_tag,
+    _drain,
+    _json_stream,
     _last_committed,
+    _read_prior,
+    _uncommitted,
 )
 
 # The 14-field producer record (`reddit_kinesis_1.py:41-56`; FIXTURES.md §2)
@@ -102,11 +111,7 @@ def stream_source(
 ) -> DataFrame:
     """S2/S3: JSON-lines micro-batch file source — the Kinesis shard
     poll re-expressed (`maxFilesPerTrigger` ≡ get_records Limit)."""
-    return (
-        spark.readStream.schema(STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
-    )
+    return _json_stream(spark, STREAM_SCHEMA, input_dir, max_files_per_trigger)
 
 
 def enrich_stream(df: DataFrame, now: dt.datetime) -> DataFrame:
@@ -169,13 +174,11 @@ def stamp_author_counts(batch: DataFrame, counts_root: str, tag: str) -> DataFra
         F.count(F.lit(1)).over(by_author).alias("_c"),
     )
     prior_total = F.lit(0)
-    if any(t != tag for t in _fs_list_batches(batch.sparkSession, counts_root)):
+    prior = _read_prior(batch.sparkSession, counts_root, tag, COUNTS_SCHEMA)
+    if prior is not None:
         authors = batch.select(F.col("author").alias("_a"))
         prior = (
-            batch.sparkSession.read.schema(COUNTS_SCHEMA)
-            .parquet(counts_root)
-            .filter(F.col("batch") != tag)
-            .join(authors, F.col("author").eqNullSafe(F.col("_a")), "left_semi")
+            prior.join(authors, F.col("author").eqNullSafe(F.col("_a")), "left_semi")
             .groupBy(F.col("author").alias("_pa"))
             .agg(F.max("total").alias("_prior"))
         )
@@ -200,23 +203,6 @@ def _max_total(df: DataFrame) -> DataFrame:
     return df.groupBy("author").agg(F.max("total").alias("total"))
 
 
-def _committed_deltas(checkpoint_dir: str, tags: list[str], last: int) -> list[str]:
-    """The non-base tags of `tags` whose batch is committed: a merged
-    run (`<lineage>-m<id>`, any foreign tag) or a delta whose id is at
-    most `last`, the last file in `<checkpoint>/commits`. A delta past
-    it is the crash window, which its replay overwrites."""
-    prefix = _batch_tag(checkpoint_dir, "")
-    return [
-        t for t in tags
-        if t != "base"
-        and not (
-            t.startswith(prefix)
-            and t[len(prefix):].isdigit()
-            and int(t[len(prefix):]) > last
-        )
-    ]
-
-
 def _compact_author_counts(spark: SparkSession, checkpoint_dir: str) -> None:
     """At the start of a call: delete the uncommitted delta, if a
     crash left one (its replay rewrites it), then fold every committed
@@ -226,13 +212,10 @@ def _compact_author_counts(spark: SparkSession, checkpoint_dir: str) -> None:
     totals."""
     root = posixpath.join(checkpoint_dir, "author_counts")
     tags = _fs_list_batches(spark, root)
-    committed = _committed_deltas(
-        checkpoint_dir, tags, _last_committed(spark, checkpoint_dir)
-    )
-    for t in tags:
-        if t != "base" and t not in committed:
-            _fs_delete(spark, posixpath.join(root, f"batch={t}"))
-    if committed:
+    stale = _uncommitted(tags, checkpoint_dir, _last_committed(spark, checkpoint_dir))
+    for t in stale:
+        _fs_delete(spark, posixpath.join(root, f"batch={t}"))
+    if set(tags) - set(stale) - {"base"}:
         compact_batches(
             spark,
             root,
@@ -253,7 +236,8 @@ def _merge_author_counts(spark: SparkSession, checkpoint_dir: str) -> None:
     root = posixpath.join(checkpoint_dir, "author_counts")
     tags = _fs_list_batches(spark, root)
     last = _last_committed(spark, checkpoint_dir)
-    merged = _committed_deltas(checkpoint_dir, tags, last)
+    stale = _uncommitted(tags, checkpoint_dir, last)
+    merged = [t for t in tags if t != "base" and t not in stale]
     if len(merged) < MERGE_AT:
         return
     run = _batch_tag(checkpoint_dir, f"m{last}")
@@ -280,23 +264,25 @@ def run_hot_path(
     max_files_per_trigger: int = 1,
 ) -> list[dict]:
     """End-to-end hot path with AvailableNow trigger (bounded run ≡ the
-    55-min cutoff T3, but data-driven: process everything then stop).
+    55-min cutoff T3, but data-driven: process everything then stop),
+    drained by streaming/scd2.py's `_drain` over the enriched stream.
     Returns `durationMs` (phase → ms) of each recent micro-batch
     progress, oldest first.
 
-    The foreachBatch body, per micro-batch:
+    The foreachBatch body, per micro-batch with tag `<lineage>-<id>`:
       a) persists the enriched batch once (the source is read once),
          merges the committed author-count deltas once there are
          MERGE_AT of them (`_merge_author_counts`), and stamps
          `author_activity_count` (`stamp_author_counts`);
-      b) appends it to the typed Parquet table — the DynamoDB put_item
-         table (K3/T6) — with batch_id, observing avg/stddev_samp of
-         `anomaly_col` during that write;
-      c) overwrites its own `(author, total)` delta for the authors it
+      b) writes it to the typed Parquet table — the DynamoDB put_item
+         table (K3/T6) — as `table_path/batch=<tag>/` with batch_id,
+         observing avg/stddev_samp of `anomaly_col` during that write;
+      c) writes its own `(author, total)` delta for the authors it
          touched, `<checkpoint>/author_counts/batch=<tag>/`;
-      d) appends the z-score anomalies OVER THIS BATCH ONLY (T5,
-         kinesis_processing_2.py:104-119), a filter with the observed
-         μ/σ as literals.
+      d) writes the z-score anomalies OVER THIS BATCH ONLY (T5,
+         kinesis_processing_2.py:104-119) to
+         `anomaly_path/batch=<tag>/`, a filter with the observed μ/σ
+         as literals.
     c) and d) only read the persisted frame, so c) runs on a pool
     thread beside d): the two small jobs at once take ~10% off a
     100-record trigger (SCALING.md).
@@ -306,11 +292,12 @@ def run_hot_path(
     fresh counts and a restart continues them. Each call first deletes
     a delta a crash left uncommitted and folds the committed ones into
     `batch=base` (`_compact_author_counts`), a read and write of every
-    author's total. A batch replayed after a
-    crash before its commit reads the same prior (its own delta is
-    excluded, later ones do not exist yet), so it stamps the same
-    counts and rewrites only its own delta; the table and anomaly
-    appends stay at-least-once across such a replay, as before.
+    author's total. A batch replayed after a crash before its commit
+    reads the same prior (its own delta is excluded, later ones do not
+    exist yet), so it stamps the same counts, and every write of b)-d)
+    overwrites the batch's own directory: the table, the anomalies and
+    the counts are exactly-once across the replay (streaming/scd2.py,
+    replay contract).
     """
     counts_root = posixpath.join(checkpoint_dir, "author_counts")
     _compact_author_counts(spark, checkpoint_dir)
@@ -331,7 +318,9 @@ def run_hot_path(
                 stats,
                 F.avg(anomaly_col).alias("mu"),
                 F.stddev_samp(anomaly_col).alias("sigma"),
-            ).write.mode("append").parquet(table_path)
+            ).write.mode("overwrite").parquet(
+                posixpath.join(table_path, f"batch={tag}")
+            )
             delta = (
                 stamped.filter(F.col("_last"))
                 .select("author", F.col("author_activity_count").alias("total"))
@@ -349,23 +338,19 @@ def run_hot_path(
                 (
                     table.withColumn("z", zscore(F.col(anomaly_col), mu, sigma))
                     .filter(F.col("z") > threshold)
-                    .write.mode("append")
-                    .parquet(anomaly_path)
+                    .write.mode("overwrite")
+                    .parquet(posixpath.join(anomaly_path, f"batch={tag}"))
                 )
                 written.result()
         finally:
             stamped.unpersist()
             batch.unpersist()
 
-    query = (
-        enrich_stream(stream_source(spark, input_dir, max_files_per_trigger), now)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        enrich_stream(stream_source(spark, input_dir, max_files_per_trigger), now),
+        checkpoint_dir,
+        process_batch,
     )
-    query.awaitTermination()
-    return [p["durationMs"] for p in query.recentProgress]
 
 
 def dedup_stream(
@@ -429,11 +414,7 @@ def run_curation_stream(
         text_profile_named,
     )
 
-    src = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(input_dir)
-    )
+    src = _json_stream(spark, DOC_STREAM_SCHEMA, input_dir, max_files_per_trigger)
     prof = text_profile_named("text")
     kept = (
         src.select("doc_id", "source", "text", prof.alias("_prof"))

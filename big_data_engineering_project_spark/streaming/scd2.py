@@ -41,9 +41,10 @@ folding any batch-partition of a changelog through scd2_merge_batch
 yields the IDENTICAL history table as the batch operator over the
 union.
 
-Replay contract, shared by every runner in this module. Each runner
-drains its json file stream with `_drain` (availableNow: every file,
-then stop). The 13 single-state fold runners (SCD2, CM, KMV, agg,
+Replay contract, shared by every runner in this module and by the
+hot path (streaming/pipeline.py:run_hot_path). Each runner drains its
+stream with `_drain` (availableNow: every file, one per trigger, then
+stop). The 13 single-state fold runners (SCD2, CM, KMV, agg,
 OHLC, target encoding, HLL, KLL, AUC, source gate, vocab, reservoir,
 pack) only supply a fold; `_fold_into` skips a batch whose id is at
 or below the `_applied_batch` marker stored inside the state
@@ -58,13 +59,23 @@ ingest, not a replay, and always applies. Write-then-swap order: the
 new state and its marker are written in full to a sibling
 `.swap-tmp` directory, then swapped in by two renames
 (`_write_state_swap`), so the state and its marker commit together
-and no task retry ever reads a half-written table. The
-directory-per-batch runners (decontam, IVF append, index delete,
-MinHash, pHash, BM25) write each batch to its own
-`batch=<lineage>-<id>` directory (`_batch_tag`), which a replay
-overwrites, so they need no marker; `run_table_diff_stream` and
-`run_mix_stream` write two outputs in a set order and keep their own
-batch body, described in their docstrings.
+and no task retry ever reads a half-written table. These state and
+marker helpers take POSIX paths only and raise on a URI.
+
+The directory-per-batch runners (decontam, IVF append, index delete,
+MinHash, pHash, BM25) and the hot path's table, anomaly and
+author-count sinks write each batch to its own `batch=<lineage>-<id>`
+directory (`_batch_tag`), which a replay overwrites, so they need no
+marker. A batch reads what earlier batches wrote through
+`_read_prior`, which excludes its own tag, and one rule
+(`_uncommitted`) names the directories a crash left past the last
+commit: `_compact_on_stop` refuses to fold them, and the hot path
+deletes them before its fold. Batch directories are listed and
+deleted through the Hadoop FS API, so a URI root finds its prior
+batches as a plain path does.
+`run_table_diff_stream` and `run_mix_stream` write two outputs in a
+set order and keep their own batch body, described in their
+docstrings.
 """
 
 from __future__ import annotations
@@ -73,6 +84,7 @@ import os
 import re
 import shutil
 from collections.abc import Callable, Sequence
+from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -84,12 +96,28 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from big_data_engineering_project_spark.operators.compaction import compact_batches
+from big_data_engineering_project_spark.operators.similarity import (
+    _fs_list_batches,
+    _hadoop_fs,
+)
+
 HISTORY_COLS = (
     "effective_from",
     "effective_to",
     "version",
     "is_current",
 )
+
+
+def _posix(path: str) -> str:
+    """`path`, which must not be a URI: the state-swap and marker
+    helpers use os calls, which report a URI absent, so the state
+    would restart and the replay guard re-apply a batch. They raise
+    instead."""
+    if urlparse(path).scheme:
+        raise ValueError(f"state tables need a POSIX path, not a URI: {path}")
+    return path
 
 
 def _read_state(spark: SparkSession, path: str) -> DataFrame | None:
@@ -102,7 +130,7 @@ def _read_state(spark: SparkSession, path: str) -> DataFrame | None:
     storage the existence probe is a HEAD on the _SUCCESS marker.
     Also completes a swap interrupted between _write_state_swap's two
     renames, so a crash mid-swap is recoverable, not data loss."""
-    bak = path + ".swap-old"
+    bak = _posix(path) + ".swap-old"
     if not os.path.exists(path):
         if os.path.exists(bak):
             os.rename(bak, path)
@@ -122,7 +150,7 @@ def _read_marker(path: str) -> tuple[str, int] | None:
     files — so it commits atomically with the state it describes:
     there is no window where the state reflects batch N but the
     marker says N-1."""
-    marker = os.path.join(path, _BATCH_MARKER)
+    marker = os.path.join(_posix(path), _BATCH_MARKER)
     if not os.path.exists(marker):
         return None
     import json as _json
@@ -166,15 +194,27 @@ def _last_committed(spark: SparkSession, checkpoint_dir: str) -> int:
     first. Listed through the Hadoop FS API, like _fs_list_batches:
     os.listdir only exists for local checkpoints, and on s3a/abfs it
     would report commits/ absent (r13 ADVICE #2)."""
-    from big_data_engineering_project_spark.operators.similarity import (
-        _hadoop_fs,
-    )
-
     fs, jpath = _hadoop_fs(spark, checkpoint_dir.rstrip("/") + "/commits")
     if not fs.exists(jpath):
         return -1
     names = [st.getPath().getName() for st in fs.listStatus(jpath)]
     return max((int(n) for n in names if n.isdigit()), default=-1)
+
+
+def _uncommitted(tags: list[str], checkpoint_dir: str, last: int) -> list[str]:
+    """The tags of `tags` that this checkpoint lineage wrote for a
+    batch past `last`, its last committed batch: the crash window,
+    which the batch's replay rewrites. Every other tag is committed
+    data: an earlier batch of this lineage, a merged run, a base, or
+    any foreign lineage's (its replay protection died with its
+    checkpoint)."""
+    prefix = _batch_tag(checkpoint_dir, "")
+    return [
+        t for t in tags
+        if t.startswith(prefix)
+        and t[len(prefix):].isdigit()
+        and int(t[len(prefix):]) > last
+    ]
 
 
 def _compact_on_stop(
@@ -192,51 +232,34 @@ def _compact_on_stop(
     itself, closing the lifecycle loop a user previously had to know
     to drive manually.
 
-    Defense-in-depth: before touching anything it re-derives the
-    checkpoint's last committed batch id (the `commits/` files Spark
-    writes per batch) and REFUSES loudly if any batch directory of
-    THIS lineage carries a higher id — that state means the safe-
-    window assumption is broken (a concurrent writer on the same
-    artifact, or a clock-skewed copy of our tags), and compacting
-    would bake an uncommitted batch into the base, double-applying it
-    when the stream replays. Foreign-lineage directories (a previous
-    checkpoint's fully-committed history, explicit day-0 tags) are
-    absorbed as normal data — their replay protection died with their
-    checkpoint. `roots` is [(artifact_root, partition_by)] so the
-    cell-partitioned ANN tables keep their pruning layout."""
-    from big_data_engineering_project_spark.operators.compaction import (
-        compact_batches,
-    )
-    from big_data_engineering_project_spark.operators.similarity import (
-        _fs_list_batches,
-    )
-
-    prefix = _batch_tag(checkpoint_dir, "")
+    Defense-in-depth: before touching anything it REFUSES loudly if
+    any root holds an uncommitted batch directory (`_uncommitted`) —
+    that state means the safe-window assumption is broken (a
+    concurrent writer on the same artifact, or a clock-skewed copy of
+    our tags), and compacting would bake an uncommitted batch into the
+    base, double-applying it when the stream replays. `roots` is
+    [(artifact_root, partition_by)] so the cell-partitioned ANN tables
+    keep their pruning layout."""
     last = _last_committed(spark, checkpoint_dir)
     # Refusal scan over ALL roots FIRST, compaction only after every
     # root passes: a per-root guard-then-compact loop would leave
     # roots 1..N-1 compacted when root N refuses, a mixed artifact
     # state the RuntimeError's wording would belie (r13 ADVICE #3).
     for root, _partition_by in roots:
-        for tag in _fs_list_batches(spark, root):
-            if not tag.startswith(prefix):
-                continue
-            suffix = tag[len(prefix) :]
-            if suffix.isdigit() and int(suffix) > last:
-                raise RuntimeError(
-                    f"compact_on_stop: {root} holds batch={tag} beyond "
-                    f"the checkpoint's last committed batch ({last}) — "
-                    "refusing to compact an uncommitted batch into the "
-                    "base (it would double-apply on replay). Another "
-                    "writer is racing this artifact; quiesce it and "
-                    "compact manually. No root was compacted."
-                )
-    stats: dict = {}
-    for root, partition_by in roots:
-        stats[root] = compact_batches(
-            spark, root, partition_by=tuple(partition_by)
-        )
-    return stats
+        stale = _uncommitted(_fs_list_batches(spark, root), checkpoint_dir, last)
+        if stale:
+            raise RuntimeError(
+                f"compact_on_stop: {root} holds batch={stale[0]} beyond "
+                f"the checkpoint's last committed batch ({last}) — "
+                "refusing to compact an uncommitted batch into the "
+                "base (it would double-apply on replay). Another "
+                "writer is racing this artifact; quiesce it and "
+                "compact manually. No root was compacted."
+            )
+    return {
+        root: compact_batches(spark, root, partition_by=tuple(partition_by))
+        for root, partition_by in roots
+    }
 
 
 def _write_state_tmp(
@@ -288,27 +311,38 @@ def _write_state_swap(
     _swap_in(path)
 
 
-def _drain(
+def _json_stream(
     spark: SparkSession,
     schema: str | StructType,
     input_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int,
-    process_batch: Callable[[DataFrame, int], None],
-) -> None:
-    """Run `process_batch` over every file under `input_dir` as an
-    availableNow json file stream and return once every batch is
-    committed to `checkpoint_dir`."""
-    (
+    files_per_trigger: int = 1,
+) -> DataFrame:
+    """The json files under `input_dir` as a file stream, read
+    `files_per_trigger` files per micro-batch."""
+    return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", files_per_trigger)
         .json(input_dir)
-        .writeStream.foreachBatch(process_batch)
+    )
+
+
+def _drain(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    process_batch: Callable[[DataFrame, int], None],
+) -> list[dict]:
+    """Run `process_batch` over every micro-batch of `stream` with an
+    availableNow trigger and return once every batch is committed to
+    `checkpoint_dir`. Returns `durationMs` (phase → ms) of each recent
+    micro-batch progress, oldest first."""
+    query = (
+        stream.writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
-        .awaitTermination()
     )
+    query.awaitTermination()
+    return [p["durationMs"] for p in query.recentProgress]
 
 
 def _fold_into(
@@ -359,18 +393,20 @@ def _batch_tag(checkpoint_dir: str, batch_id: int | str) -> str:
 
 
 def _read_prior(
-    spark: SparkSession, root: str, tag: str
+    spark: SparkSession,
+    root: str,
+    tag: str,
+    schema: str | StructType | None = None,
 ) -> DataFrame | None:
     """Every batch directory under `root` except the batch's own `tag`
-    (a replay must not probe itself), or None before the first batch
-    lands."""
-    if not os.path.exists(root):
+    (a replay must not read itself), or None while there is none.
+    Listed through the Hadoop FS API, so a URI root finds its batches
+    as a plain path does. An explicit `schema` spares the read a
+    schema-inference job; it must name the `batch` column."""
+    if all(t == tag for t in _fs_list_batches(spark, root)):
         return None
-    return (
-        spark.read.parquet(root)
-        .filter(F.col("batch") != tag)
-        .drop("batch")
-    )
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(root).filter(F.col("batch") != tag).drop("batch")
 
 
 def scd2_merge_batch(
@@ -491,7 +527,6 @@ def run_scd2_stream(
     ts_col: str = "ts",
     attr: str = "event_type",
     tiebreak: Sequence[str] = ("event_id",),
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Maintain an SCD2 history Parquet table from a micro-batched
     changelog file stream (AvailableNow: drain then stop — T1/T3
@@ -504,8 +539,8 @@ def run_scd2_stream(
         return scd2_merge_batch(history, batch_df, key, ts_col, attr, tiebreak)
 
     _drain(
-        spark, CHANGELOG_STREAM_SCHEMA, input_dir, checkpoint_dir,
-        max_files_per_trigger, _fold_into(history_path, checkpoint_dir, fold),
+        _json_stream(spark, CHANGELOG_STREAM_SCHEMA, input_dir), checkpoint_dir,
+        _fold_into(history_path, checkpoint_dir, fold),
     )
 
 
@@ -516,7 +551,6 @@ def run_cm_sketch_stream(
     checkpoint_dir: str,
     schema: str,
     hash_expr: str,
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Maintain count-min counters over a micro-batched stream by
     per-batch linear-sketch MERGE: CM is a linear sketch, so
@@ -541,8 +575,8 @@ def run_cm_sketch_stream(
         )
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, _fold_into(counters_path, checkpoint_dir, fold),
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        _fold_into(counters_path, checkpoint_dir, fold),
     )
 
 
@@ -556,7 +590,6 @@ def run_kmv_stream(
     hash_expr: str,
     k: int = 64,
     n_shards: int = 32,
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Maintain per-key KMV distinct-count sketches over a
     micro-batched stream by per-batch sketch MERGE: KMV composes by
@@ -594,8 +627,8 @@ def run_kmv_stream(
         )
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, _fold_into(sketch_path, checkpoint_dir, fold),
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        _fold_into(sketch_path, checkpoint_dir, fold),
     )
 
 
@@ -607,7 +640,6 @@ def run_agg_maintenance_stream(
     schema: str,
     keys: list[str],
     value_expr: str,
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Maintain a generic grouped aggregate over a micro-batched
     stream by folding per-batch sufficient-statistic states with
@@ -630,8 +662,8 @@ def run_agg_maintenance_stream(
         return part if existing is None else agg_merge(existing, part, keys)
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, _fold_into(state_path, checkpoint_dir, fold),
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        _fold_into(state_path, checkpoint_dir, fold),
     )
 
 
@@ -716,7 +748,6 @@ def run_ohlc_stream(
     value_col: str,
     id_col: str,
     bucket: str = "day",
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Maintain OHLC bars over a micro-batched stream by per-batch
     partial-state MERGE — the speed-layer twin of
@@ -739,8 +770,8 @@ def run_ohlc_stream(
         return part if existing is None else ohlc_merge(existing, part, key)
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, _fold_into(state_path, checkpoint_dir, fold),
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        _fold_into(state_path, checkpoint_dir, fold),
     )
 
 
@@ -754,7 +785,6 @@ def run_target_encoding_stream(
     target_col: str,
     fold_key: str,
     n_folds: int = 4,
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Maintain the OOF target-encoding sufficient-statistics frame
     over a micro-batched stream: per-batch (category, fold, n, Σ)
@@ -778,8 +808,8 @@ def run_target_encoding_stream(
         return part if existing is None else oof_merge(existing, part)
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, _fold_into(stats_path, checkpoint_dir, fold),
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        _fold_into(stats_path, checkpoint_dir, fold),
     )
 
 
@@ -795,7 +825,6 @@ def run_table_diff_stream(
     ts_col: str,
     tiebreak: Sequence[str] = (),
     op_col: str = "op",
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Continuous snapshot reconciliation — the streaming twin of
     `operators/cdc.py:table_diff_incremental` (r8 verdict task 6,
@@ -960,8 +989,8 @@ def run_table_diff_stream(
         _swap_in(digests_path)
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, process_batch,
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        process_batch,
     )
 
 
@@ -974,7 +1003,6 @@ def run_hll_stream(
     key_cols: list[str],
     item_expr: str,
     lgk: int = 14,
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Maintain per-key HLL distinct-count sketches over a
     micro-batched stream by per-batch sketch UNION — the HLL member
@@ -1000,8 +1028,8 @@ def run_hll_stream(
         )
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, _fold_into(sketch_path, checkpoint_dir, fold),
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        _fold_into(sketch_path, checkpoint_dir, fold),
     )
 
 
@@ -1014,7 +1042,6 @@ def run_kll_stream(
     value_expr: str,
     n_shards: int = 32,
     shard_expr: str | None = None,
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Maintain the KLL quantile summary's BUILD STATE over a
     micro-batched stream (r9 verdict task 3, the 19th stream≡batch
@@ -1051,8 +1078,8 @@ def run_kll_stream(
         )
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, _fold_into(state_path, checkpoint_dir, fold),
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        _fold_into(state_path, checkpoint_dir, fold),
     )
 
 
@@ -1065,7 +1092,6 @@ def run_auc_stream(
     score_expr: str,
     label_expr: str,
     key_cols: list[str] | None = None,
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Maintain EXACT ROC AUC over a micro-batched prediction stream
     — continuous model monitoring as a mergeable-state twin (the AUC
@@ -1109,8 +1135,8 @@ def run_auc_stream(
         )
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, _fold_into(state_path, checkpoint_dir, fold),
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        _fold_into(state_path, checkpoint_dir, fold),
     )
 
 
@@ -1123,7 +1149,6 @@ def run_source_gate_stream(
     id_col: str,
     text_col: str,
     source_col: str,
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Maintain the source/domain quality gate's sufficient
     statistics over a micro-batched document stream — continuous
@@ -1155,8 +1180,8 @@ def run_source_gate_stream(
         )
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, _fold_into(state_path, checkpoint_dir, fold),
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        _fold_into(state_path, checkpoint_dir, fold),
     )
 
 
@@ -1167,7 +1192,6 @@ def run_vocab_stream(
     checkpoint_dir: str,
     schema: str,
     text_expr: str,
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Maintain corpus token statistics — the (term → count) table —
     over a micro-batched document stream by exact count addition:
@@ -1190,8 +1214,8 @@ def run_vocab_stream(
         )
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, _fold_into(state_path, checkpoint_dir, fold),
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        _fold_into(state_path, checkpoint_dir, fold),
     )
 
 
@@ -1204,7 +1228,6 @@ def run_decontam_stream(
     schema: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_files_per_trigger: int = 1,
     compact_on_stop: bool = False,
 ) -> None:
     """Streaming benchmark decontamination: every micro-batch of
@@ -1235,8 +1258,8 @@ def run_decontam_stream(
         )
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, process_batch,
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        process_batch,
     )
     if compact_on_stop:
         _compact_on_stop(spark, checkpoint_dir, [(out_path, ())])
@@ -1250,7 +1273,6 @@ def run_ivf_append_stream(
     schema: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    max_files_per_trigger: int = 1,
     compact_on_stop: bool = False,
 ) -> None:
     """Maintain the persisted IVF ANN index over a micro-batched
@@ -1285,8 +1307,8 @@ def run_ivf_append_stream(
         )
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, process_batch,
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        process_batch,
     )
     if compact_on_stop:
         _compact_on_stop(
@@ -1301,7 +1323,6 @@ def run_index_delete_stream(
     checkpoint_dir: str,
     schema: str,
     id_col: str = "vec_id",
-    max_files_per_trigger: int = 1,
     compact_on_stop: bool = False,
 ) -> None:
     """Maintain a persisted ANN index's DELETE TOMBSTONES over a
@@ -1337,8 +1358,8 @@ def run_index_delete_stream(
         )
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, process_batch,
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        process_batch,
     )
     if compact_on_stop:
         _compact_on_stop(
@@ -1356,7 +1377,6 @@ def run_reservoir_stream(
     id_col: str,
     k: int = 32,
     n_shards: int = 32,
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Maintain per-key bounded uniform samples over a micro-batched
     stream by per-batch reservoir MERGE: the content-hash bottom-k
@@ -1387,8 +1407,8 @@ def run_reservoir_stream(
         )
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, _fold_into(sample_path, checkpoint_dir, fold),
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        _fold_into(sample_path, checkpoint_dir, fold),
     )
 
 
@@ -1401,7 +1421,6 @@ def run_pack_stream(
     chunk_tokens: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Maintain the concat-and-chunk packing ASSIGNMENT TABLE
     (operators/text_analysis.py:pack_concat_chunks) over a
@@ -1461,8 +1480,8 @@ def run_pack_stream(
         return shifted if existing is None else existing.unionByName(shifted)
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, _fold_into(state_path, checkpoint_dir, fold),
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        _fold_into(state_path, checkpoint_dir, fold),
     )
 
 
@@ -1507,7 +1526,6 @@ def run_minhash_index_stream(
     threshold: float,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_files_per_trigger: int = 1,
     compact_on_stop: bool = False,
 ) -> None:
     """Maintain a MinHash-LSH BAND INDEX over a micro-batched document
@@ -1572,8 +1590,8 @@ def run_minhash_index_stream(
         hashed.unpersist()
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, process_batch,
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        process_batch,
     )
     if compact_on_stop:
         _compact_on_stop(
@@ -1593,7 +1611,6 @@ def run_phash_index_stream(
     id_col: str = "media_id",
     hi_col: str = "ahash_hi",
     lo_col: str = "ahash_lo",
-    max_files_per_trigger: int = 1,
     compact_on_stop: bool = False,
 ) -> None:
     """Maintain a perceptual-hash BAND INDEX over a micro-batched
@@ -1675,8 +1692,8 @@ def run_phash_index_stream(
         newb.unpersist()
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, process_batch,
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        process_batch,
     )
     if compact_on_stop:
         _compact_on_stop(
@@ -1694,7 +1711,6 @@ def run_bm25_index_stream(
     schema: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_files_per_trigger: int = 1,
     compact_on_stop: bool = False,
 ) -> None:
     """Maintain a lexical search index — posting table (doc, term, tf)
@@ -1727,8 +1743,8 @@ def run_bm25_index_stream(
         ).parquet(os.path.join(index_path, "doclens", f"batch={tag}"))
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, process_batch,
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        process_batch,
     )
     if compact_on_stop:
         _compact_on_stop(
@@ -1753,7 +1769,6 @@ def run_mix_stream(
     id_col: str = "doc_id",
     text_col: str = "text",
     strata_col: str = "lang",
-    max_files_per_trigger: int = 1,
     compact_on_stop: bool = False,
 ) -> None:
     """Maintain the token-budget training-mix MANIFEST
@@ -1880,8 +1895,8 @@ def run_mix_stream(
         )
 
     _drain(
-        spark, schema, input_dir, checkpoint_dir,
-        max_files_per_trigger, process_batch,
+        _json_stream(spark, schema, input_dir), checkpoint_dir,
+        process_batch,
     )
     if compact_on_stop:
         _compact_on_stop(spark, checkpoint_dir, [(manifest_path, ())])

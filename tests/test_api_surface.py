@@ -104,3 +104,22 @@ def test_clear_hashed_memo_unpersists(spark, sf_dir):
     clear_memos()
     assert not hashed.storageLevel.useMemory
     assert qp._shared_hashed(spark, sf_dir, 3) is not hashed
+
+
+def test_default_driver_memory_stays_below_physical_memory(monkeypatch):
+    """The driver heap default leaves headroom on this host and on
+    small and large ones: half of physical memory, at most 24g."""
+    import os
+
+    from big_data_engineering_project_spark import session
+
+    def mb(setting: str) -> int:
+        assert setting.endswith("m"), setting
+        return int(setting[:-1])
+
+    page, pages = os.sysconf("SC_PAGE_SIZE"), os.sysconf("SC_PHYS_PAGES")
+    assert 0 < mb(session.default_driver_memory()) < page * pages // 2**20
+    for gib, want in ((2, 1024), (15, 7680), (512, 24 * 1024)):
+        phys = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 2**30 // 4096}
+        monkeypatch.setattr(session.os, "sysconf", phys.__getitem__)
+        assert mb(session.default_driver_memory()) == want < gib * 1024

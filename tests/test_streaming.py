@@ -2,12 +2,12 @@
 frozen clock. Every stream ≡ batch twin runs from the one TWINS table
 of tools/streaming_check.py (test_twin_stream_equals_batch); the tests
 below check what a twin cannot: trigger caps, the per-batch pandas
-anomaly oracle, replay guards, refusals and marker-disagree rebuilds."""
+anomaly oracle, URI index roots, crash-window replays, replay guards,
+refusals and marker-disagree rebuilds."""
 
 from __future__ import annotations
 
 import datetime as dt
-import json
 import random
 
 import pandas as pd
@@ -22,6 +22,7 @@ from big_data_engineering_project_spark.streaming.pipeline import (
 from tools.streaming_check import (
     FROZEN_NOW,
     TWINS,
+    Paths,
     gen_hot_records,
     run_twin,
     write_batches,
@@ -54,12 +55,6 @@ def hot_path_output(spark, tmp_path_factory):
     return {"in": in_dir, "table": table, "anom": anom, "cp": cp, "recs": recs}
 
 
-def test_all_records_land_exactly_once(spark, hot_path_output):
-    out = spark.read.parquet(hot_path_output["table"])
-    assert out.count() == 200
-    assert out.select("id").distinct().count() == 200
-
-
 def test_batches_respect_trigger_cap(spark, hot_path_output):
     out = spark.read.parquet(hot_path_output["table"])
     per_batch = {
@@ -69,25 +64,6 @@ def test_batches_respect_trigger_cap(spark, hot_path_output):
     # 200 records / 40 per file / 1 file per trigger = 5 batches (T1/O7).
     assert len(per_batch) == 5
     assert all(v == 40 for v in per_batch.values())
-
-
-def test_author_count_equals_batch_row_number(spark, hot_path_output):
-    """The stateful streaming count must equal the batch formulation
-    row_number().over(partitionBy(author).orderBy(seq)) — SURVEY §7.3
-    'has exact batch equivalent for testing'."""
-    out = spark.read.parquet(hot_path_output["table"])
-    w = Window.partitionBy("author").orderBy("seq")
-    expected = (
-        spark.read.schema(STREAM_SCHEMA)
-        .json(hot_path_output["in"])
-        .withColumn("expected", F.row_number().over(w))
-        .select("seq", "expected")
-    )
-    joined = out.join(expected, "seq")
-    mismatches = joined.filter(
-        F.col("author_activity_count") != F.col("expected")
-    ).count()
-    assert mismatches == 0
 
 
 def test_per_batch_anomalies_match_pandas_oracle(spark, hot_path_output):
@@ -106,37 +82,19 @@ def test_per_batch_anomalies_match_pandas_oracle(spark, hot_path_output):
     assert len(expected) > 0  # the generator plants outliers
 
 
-def test_restart_is_exactly_once_and_state_continues(spark, hot_path_output):
-    """T8: re-running with the same checkpoint after new files arrive
-    processes ONLY the new files; author counts continue from state."""
-    in_dir, table, anom, cp = (
-        hot_path_output["in"],
-        hot_path_output["table"],
-        hot_path_output["anom"],
-        hot_path_output["cp"],
-    )
-    more = gen_hot_records(40, seed=7)
-    for r in more:
-        r["seq"] += 1000
-        r["id"] = f"late{r['seq']}"
-    with open(f"{in_dir}/9999.json", "w") as f:
-        for r in more:
-            f.write(json.dumps(r) + "\n")
-    run_hot_path(
-        spark, in_dir, table, anom, cp, now=FROZEN_NOW, max_files_per_trigger=1
-    )
-    out = spark.read.parquet(table)
-    assert out.count() == 240  # old 200 NOT reprocessed
-    # State continued: for an author seen before, the new max count >
-    # the count reachable from the late file alone.
-    late = out.filter(F.col("seq") >= 1000)
-    per_author_late_n = late.groupBy("author").count().collect()
-    maxes = {
-        r["author"]: r["m"]
-        for r in out.groupBy("author").agg(F.max("author_activity_count").alias("m")).collect()
-    }
-    for r in per_author_late_n:
-        assert maxes[r["author"]] > r["count"]
+@pytest.mark.parametrize(
+    "name", ["minhash_index_maintenance", "phash_index_maintenance"]
+)
+def test_index_stream_with_a_uri_root_equals_batch(spark, tmp_path, name):
+    """The MinHash and pHash rows with a `file://` index root: the
+    prior batches are listed through the Hadoop FS API, so the stream
+    probes them as it does under a plain path and its pairs equal the
+    batch operator's."""
+    (twin,) = [t for t in TWINS if t.name == name]
+    p = Paths(str(tmp_path), name)
+    p.out = "file://" + p.out
+    results = run_twin(spark, str(tmp_path), twin, p)
+    assert all(r["match"] for r in results.values()), results
 
 
 def _count_mismatches(spark, table: str, in_dir: str) -> int:
@@ -195,7 +153,8 @@ def test_null_author_counts_equal_batch_row_number(spark, null_author_run):
 
 def test_crash_window_replay_stamps_the_same_counts(spark, tmp_path, null_author_run):
     """A batch replayed after a crash before its commit reads the same
-    prior, stamps the same counts and rewrites only its own delta. The
+    prior, stamps the same counts and overwrites its own table, anomaly
+    and delta directories, so every record and anomaly lands once. The
     restart first deletes that uncommitted delta and folds the
     committed run m2 into `batch=base`."""
     import os
@@ -203,26 +162,39 @@ def test_crash_window_replay_stamps_the_same_counts(spark, tmp_path, null_author
 
     # Relocate the checkpoint (same query id, so the same lineage) and
     # drop the last commit, so the restart re-executes batch 3.
-    cp = str(tmp_path / "cp")
-    table = str(tmp_path / "table")
-    shutil.copytree(null_author_run["cp"], cp)
-    shutil.copytree(null_author_run["table"], table)
+    paths = {k: str(tmp_path / k) for k in ("cp", "table", "anom")}
+    for k, path in paths.items():
+        shutil.copytree(null_author_run[k], path)
+    cp, table, anom = paths["cp"], paths["table"], paths["anom"]
     os.remove(os.path.join(cp, "commits", "3"))
     os.remove(os.path.join(cp, "commits", ".3.crc"))
     run_hot_path(
-        spark, null_author_run["in"], table, str(tmp_path / "anom"), cp,
+        spark, null_author_run["in"], table, anom, cp,
         now=FROZEN_NOW, max_files_per_trigger=1,
     )
     out = spark.read.parquet(table)
-    assert out.count() == 75  # the replayed batch is appended again
-    per_seq = out.groupBy("seq").agg(
-        F.countDistinct("author_activity_count").alias("n")
-    )
-    assert per_seq.filter(F.col("n") != 1).count() == 0
+    assert out.count() == 60
+    assert out.select("seq").distinct().count() == 60
     assert _count_mismatches(spark, table, null_author_run["in"]) == 0
+    seqs = [r["seq"] for r in spark.read.parquet(anom).select("seq").collect()]
+    assert seqs and len(seqs) == len(set(seqs)), seqs
     dirs = os.listdir(os.path.join(cp, "author_counts"))
     assert len(dirs) == 2 and "batch=base" in dirs
     assert any(d.endswith("-3") for d in dirs), dirs
+
+
+def test_state_helpers_refuse_a_uri(spark, tmp_path):
+    """The state and marker helpers use os calls, which report a URI
+    absent: they raise on one instead of restarting the state or
+    re-applying a batch."""
+    from big_data_engineering_project_spark.streaming import scd2
+
+    uri = "file://" + str(tmp_path / "state")
+    spark.range(3).write.parquet(uri)
+    with pytest.raises(ValueError, match="POSIX path"):
+        scd2._read_state(spark, uri)
+    with pytest.raises(ValueError, match="POSIX path"):
+        scd2._read_marker(uri)
 
 
 def test_hot_path_stamp_runs_no_python(spark, tmp_path):

@@ -275,6 +275,25 @@ def _hot_batch(spark, p):
     )
 
 
+def _hot_extras(spark, p, got, want):
+    """200 records in files of 40 at one file per trigger are 5
+    batches of 40 (T1/O7). The anomalies are the z-scores over each
+    batch alone (T5), each written once: they equal a pandas
+    groupby-per-batch oracle (ddof=1, like the reference's pandas
+    .std())."""
+    table = spark.read.parquet(p.out).toPandas()
+    anom = spark.read.parquet(p.path("anom")).toPandas()
+    expected = []
+    for _, g in table.groupby("batch_id"):
+        mu, sigma = g["score"].mean(), g["score"].std(ddof=1)
+        if sigma > 0:
+            expected += list(g.loc[((g["score"] - mu) / sigma).abs() > 3.0, "seq"])
+    return {
+        "trigger_cap": sorted(table.groupby("batch_id").size()) == [40] * 5,
+        "anomalies_match_oracle": sorted(anom["seq"]) == sorted(expected) != [],
+    }
+
+
 def _restart_fixture(spark, p):
     more = gen_hot_records(40, seed=7)
     for r in more:
@@ -1281,11 +1300,13 @@ TWINS: list[Twin] = [
         "hot_path_enrichment",
         why="run_hot_path (enrich + JVM author counts from checkpointed "
         "per-batch deltas + foreachBatch dual sink) ≡ enrich_stream + "
-        "row_number in batch mode",
+        "row_number in batch mode; one file per trigger; per-batch "
+        "anomalies ≡ a pandas oracle",
         fixture=_hot_fixture,
         stream=_hot_stream,
         read=lambda s, p: _tuples(s.read.parquet(p.out), *_HOT_COLS),
         batch=_hot_batch,
+        extras=_hot_extras,
         rows=200,
         then=(
             Twin(
