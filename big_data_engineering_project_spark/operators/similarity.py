@@ -23,6 +23,16 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from big_data_engineering_project_spark.caches import memo
+from big_data_engineering_project_spark.operators.compaction import (
+    _fs_delete,
+    _fs_list,
+    _fs_list_batches,
+    _hadoop_fs,
+    _next_free_batch_tag,
+    _swap_in,
+    _swap_stage,
+    compact_batches,
+)
 from big_data_engineering_project_spark.sources.catalog import spread
 
 HASH_PRIME = 1_000_000_007
@@ -477,69 +487,6 @@ def _rank_cells(
 # partition pruning on the parquet layout, not a post-scan filter).
 
 
-def _hadoop_fs(spark, path: str):
-    """(FileSystem, Path) for `path` resolved through the session's
-    Hadoop configuration — the seam every index-directory operation
-    goes through so the SAME code runs against file://, hdfs://,
-    s3a://, abfs://... A driver-local os.listdir/shutil.rmtree only
-    exists on POSIX paths (r10 verdict task 1: the one part of the
-    persisted index that could not run on a real cluster)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _fs_list_batches(spark, vectors_dir: str) -> list[str]:
-    """Sorted tags of the existing `batch=<tag>` child directories
-    under the index's vectors/ dir, via the Hadoop FileSystem API;
-    an absent dir is simply zero batches."""
-    fs, jpath = _hadoop_fs(spark, vectors_dir)
-    if not fs.exists(jpath):
-        return []
-    return sorted(
-        st.getPath().getName()[len("batch=") :]
-        for st in fs.listStatus(jpath)
-        if st.isDirectory() and st.getPath().getName().startswith("batch=")
-    )
-
-
-def _next_free_batch_tag(spark, parent_dir: str) -> str:
-    """Default append tag: start at d<number-of-existing-batches> and
-    probe FORWARD past any taken name — an explicitly-tagged or
-    stream-written batch can occupy the count-based name, and
-    overwriting it would silently drop that batch's vectors (r10
-    ADVICE #2). Shared by the IVF, IVF-PQ, and residual-IVF-PQ
-    appends.
-
-    HARD REQUIREMENT — single writer per index: the probe is
-    check-then-write, so two CONCURRENT appenders (or an append racing
-    a stream maintainer) can both claim the same free d<n> and one
-    batch's mode=overwrite write silently clobbers the other's (r11
-    ADVICE #2). Appends, streamed appends, rebuilds, and compactions
-    against one index path must be serialized by the caller — the same
-    single-writer discipline every directory-layout index (Delta
-    without a commit service, raw FAISS shards) imposes. Concurrent
-    READS are safe against APPENDS and rebuild-aside swaps (a writer
-    never mutates an existing batch directory) — but NOT against
-    compact_batches, whose two-rename swap renames the whole artifact
-    root away for a window and deletes absorbed batch directories
-    afterward (r12 ADVICE #2): readers racing a compaction must be
-    quiesced, or tolerate a transient missing-path retry."""
-    existing = set(_fs_list_batches(spark, parent_dir))
-    n = len(existing)
-    while f"d{n}" in existing:
-        n += 1
-    return f"d{n}"
-
-
-def _fs_delete(spark, path: str) -> None:
-    """Recursive delete through the Hadoop FileSystem API (the
-    rmtree analog that also exists on HDFS/S3); absent → no-op."""
-    fs, jpath = _hadoop_fs(spark, path)
-    if fs.exists(jpath):
-        fs.delete(jpath, True)
-
-
 def build_ivf_index(
     vectors: DataFrame,
     index_path: str,
@@ -647,30 +594,24 @@ def ivf_index_rebuild_swap(
 ) -> None:
     """The centroid-REFIT step of the index lifecycle (build → append
     ×N → refit): builds a fresh index — new frozen centroids, corpus
-    re-assigned, batch history collapsed to `base` — in a sibling
-    `.rebuild-tmp` directory while readers keep the intact current
-    index, then swaps it in with two FileSystem renames. Same
-    two-rename discipline as the streaming state swaps
-    (streaming/scd2.py:_swap_in) but through the Hadoop FS seam, so it
-    works on HDFS (atomic directory rename) as well as file:// — at
-    catalog scale this is the Delta/Iceberg table-swap analog. A crash
-    between the renames leaves `.swap-old`, which the next rebuild
-    clears; appends issued against the OLD path during the swap window
-    land in the old directory and die with it — refits are a
-    stop-the-ingest operation by design, exactly like re-clustering
-    any IVF index."""
+    re-assigned, batch history collapsed to `base` — in the swap's
+    staging directory while readers keep the intact current index,
+    then swaps it in by the one crash-safe directory swap
+    (operators/compaction.py: `_swap_stage`, `_swap_in`), the same
+    one the streaming state tables and compact_batches use: two
+    checked Hadoop FS renames, so it works on HDFS (atomic directory
+    rename) as well as file:// — at catalog scale this is the
+    Delta/Iceberg table-swap analog. A failed rename raises IOError
+    with the old index back at `index_path`; a crash between the
+    renames is healed by the next swap. Appends issued against the
+    OLD path during the swap window land in the old directory and die
+    with it — refits are a stop-the-ingest operation by design,
+    exactly like re-clustering any IVF index."""
     spark = vectors.sparkSession
-    tmp = index_path + ".rebuild-tmp"
-    bak = index_path + ".swap-old"
-    _fs_delete(spark, tmp)
-    build_ivf_index(vectors, tmp, centroids, id_col, vec_col)
-    fs, jroot = _hadoop_fs(spark, index_path)
-    _fs_delete(spark, bak)
-    jvm = spark._jvm
-    if fs.exists(jroot):
-        fs.rename(jroot, jvm.org.apache.hadoop.fs.Path(bak))
-    fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), jroot)
-    _fs_delete(spark, bak)
+    build_ivf_index(
+        vectors, _swap_stage(spark, index_path), centroids, id_col, vec_col
+    )
+    _swap_in(spark, index_path)
 
 
 def ivf_index_topk(
@@ -1392,19 +1333,15 @@ def merge_vector_indexes(
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     if check_quantizers:
-        subs = ["centroids"]
-        fs_d, _ = _hadoop_fs(spark, dest_path)
-        for sub in ("codebooks",):
-            d_has = fs_d.exists(jvm.org.apache.hadoop.fs.Path(f"{dest_path}/{sub}"))
-            fs_s, _ = _hadoop_fs(spark, src_path)
-            s_has = fs_s.exists(jvm.org.apache.hadoop.fs.Path(f"{src_path}/{sub}"))
-            if d_has != s_has:
-                raise ValueError(
-                    f"merge_vector_indexes: {sub} present on one index "
-                    "only — different index kinds cannot merge"
-                )
-            if d_has:
-                subs.append(sub)
+        d_has, s_has = (
+            bool(_fs_list(spark, f"{p}/codebooks")) for p in (dest_path, src_path)
+        )
+        if d_has != s_has:
+            raise ValueError(
+                "merge_vector_indexes: codebooks present on one index "
+                "only — different index kinds cannot merge"
+            )
+        subs = ["centroids", "codebooks"] if d_has else ["centroids"]
         for sub in subs:
             a = sorted(
                 tuple(r) for r in spark.read.parquet(f"{dest_path}/{sub}").collect()
@@ -1432,7 +1369,6 @@ def merge_vector_indexes(
     src_tbl = f"{src_path}/{table}"
     dest_tbl = f"{dest_path}/{table}"
     fs_src, _ = _hadoop_fs(spark, src_tbl)
-    fs_dst, jdest = _hadoop_fs(spark, dest_tbl)
     copied: list[str] = []
     n_added = 0
     for tag in _fs_list_batches(spark, src_tbl):
@@ -1444,42 +1380,29 @@ def merge_vector_indexes(
         # leaves only an inert .merge-tmp-* dir, never a partial
         # batch directory that would serve with silently missing
         # rows (r13 ADVICE #1).
-        tmp_path = jvm.org.apache.hadoop.fs.Path(
-            f"{dest_tbl}/.merge-tmp-{new_tag}"
-        )
-        if fs_dst.exists(tmp_path):
-            fs_dst.delete(tmp_path, True)
-        ok = jvm.org.apache.hadoop.fs.FileUtil.copy(
-            fs_src,
-            jvm.org.apache.hadoop.fs.Path(f"{src_tbl}/batch={tag}"),
-            fs_dst,
-            tmp_path,
-            False,
-            conf,
-        )
-        if not ok:
-            fs_dst.delete(tmp_path, True)
+        tmp = f"{dest_tbl}/.merge-tmp-{new_tag}"
+        final = f"{dest_tbl}/batch={new_tag}"
+        _fs_delete(spark, tmp)
+        fs_dst, jtmp = _hadoop_fs(spark, tmp)
+        src = jvm.org.apache.hadoop.fs.Path(f"{src_tbl}/batch={tag}")
+        if not jvm.org.apache.hadoop.fs.FileUtil.copy(
+            fs_src, src, fs_dst, jtmp, False, conf
+        ):
+            _fs_delete(spark, tmp)
             raise IOError(
                 f"merge_vector_indexes: staged copy of batch={tag} "
-                f"into {dest_tbl}/.merge-tmp-{new_tag} failed — dest "
-                "batches are untouched (temp dir removed); re-merge "
-                "(src is untouched)"
+                f"into {tmp} failed — dest batches are untouched (temp "
+                "dir removed); re-merge (src is untouched)"
             )
-        final_path = jvm.org.apache.hadoop.fs.Path(
-            f"{dest_tbl}/batch={new_tag}"
-        )
-        if not fs_dst.rename(tmp_path, final_path):
+        if not fs_dst.rename(jtmp, _hadoop_fs(spark, final)[1]):
             raise IOError(
-                f"merge_vector_indexes: rename of staged "
-                f".merge-tmp-{new_tag} into batch={new_tag} failed — "
-                f"the staged copy remains at {dest_tbl}/.merge-tmp-"
-                f"{new_tag} (invisible to serving); delete it and "
-                "re-merge (src is untouched)"
+                f"merge_vector_indexes: rename of staged {tmp} into "
+                f"batch={new_tag} failed — the staged copy remains "
+                "(invisible to serving); delete it and re-merge (src "
+                "is untouched)"
             )
         copied.append(new_tag)
-        n_added += (
-            spark.read.parquet(f"{dest_tbl}/batch={new_tag}").count()
-        )
+        n_added += spark.read.parquet(final).count()
     return {"copied": copied, "n_rows_added": n_added}
 
 
@@ -1688,10 +1611,6 @@ def vector_index_vacuum(
     No-op when the index has no tombstones (use compact_vector_index
     for a pure compaction). Returns the compact stats plus
     {"n_tombstones": n}."""
-    from big_data_engineering_project_spark.operators.compaction import (
-        compact_batches,
-    )
-
     tomb = load_index_tombstones(spark, index_path, id_col)
     if tomb is None:
         return {"vacuumed": False, "n_tombstones": 0}
@@ -1710,12 +1629,9 @@ def vector_index_vacuum(
     # vacuumed vectors drops dead ids) but it wastes shortlist slots
     # forever — drop them; the next matryoshka serve re-materializes
     # from the vacuumed vectors.
-    fs, jroot = _hadoop_fs(spark, index_path)
-    if fs.exists(jroot):
-        for st in fs.listStatus(jroot):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith("prefix"):
-                fs.delete(st.getPath(), True)
+    for name, is_dir in _fs_list(spark, index_path).items():
+        if is_dir and name.startswith("prefix"):
+            _fs_delete(spark, f"{index_path}/{name}")
     return {"vacuumed": True, "n_tombstones": int(n), **stats}
 
 

@@ -68,10 +68,11 @@ from big_data_engineering_project_spark.functions.text import (
     strip_punctuation,
     tokenize,
 )
-from big_data_engineering_project_spark.operators.compaction import compact_batches
-from big_data_engineering_project_spark.operators.similarity import (
+from big_data_engineering_project_spark.operators.compaction import (
     _fs_delete,
+    _fs_list,
     _fs_list_batches,
+    compact_batches,
 )
 from big_data_engineering_project_spark.streaming.scd2 import (
     _batch_tag,
@@ -298,7 +299,22 @@ def run_hot_path(
     overwrites the batch's own directory: the table, the anomalies and
     the counts are exactly-once across the replay (streaming/scd2.py,
     replay contract).
+
+    Raises ValueError before the stream starts when `table_path` or
+    `anomaly_path` holds a visible entry (not `_`- or `.`-prefixed)
+    that is not a `batch=` directory, e.g. the flat files of a table
+    an earlier version appended to: a parquet read of such a root
+    sees only the `batch=` partitions and silently drops the rest.
     """
+    for root in (table_path, anomaly_path):
+        stray = [
+            n for n in _fs_list(spark, root) if not n.startswith(("batch=", "_", "."))
+        ]
+        if stray:
+            raise ValueError(
+                f"run_hot_path: {root} holds {stray[0]} beside its batch= "
+                "directories, which a read would drop; start a fresh path"
+            )
     counts_root = posixpath.join(checkpoint_dir, "author_counts")
     _compact_author_counts(spark, checkpoint_dir)
 

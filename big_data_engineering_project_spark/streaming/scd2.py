@@ -56,11 +56,15 @@ idempotent anyway (SCD2, KMV, HLL, reservoir). The marker is scoped
 to the checkpoint lineage (the query id in `<checkpoint>/metadata`):
 batch ids restart at 0 under a fresh checkpoint, which is a new
 ingest, not a replay, and always applies. Write-then-swap order: the
-new state and its marker are written in full to a sibling
-`.swap-tmp` directory, then swapped in by two renames
-(`_write_state_swap`), so the state and its marker commit together
-and no task retry ever reads a half-written table. These state and
-marker helpers take POSIX paths only and raise on a URI.
+new state and its marker are written in full to the swap's staging
+directory, then swapped in (`_write_state_swap`) by the one
+crash-safe directory swap of operators/compaction.py, which
+compact_batches and the IVF refit also use: two checked renames, and
+a root that a crash between them left absent is restored before it
+is read. So the state and its marker commit together and no task
+retry ever reads a half-written table. State, marker and checkpoint
+metadata are read and written through the Hadoop FS API, so a URI
+state path or checkpoint works as a plain path does.
 
 The directory-per-batch runners (decontam, IVF append, index delete,
 MinHash, pHash, BM25) and the hot path's table, anomaly and
@@ -80,11 +84,10 @@ docstrings.
 
 from __future__ import annotations
 
-import os
+import json
+import posixpath
 import re
-import shutil
 from collections.abc import Callable, Sequence
-from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -96,10 +99,19 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from big_data_engineering_project_spark.operators.compaction import compact_batches
-from big_data_engineering_project_spark.operators.similarity import (
+from big_data_engineering_project_spark.operators.compaction import (
+    _fs_list,
     _fs_list_batches,
-    _hadoop_fs,
+    _fs_read_text,
+    _fs_write_text,
+    _swap_in,
+    _swap_restore,
+    _swap_stage,
+    compact_batches,
+)
+from big_data_engineering_project_spark.operators.similarity import (
+    ivf_index_append,
+    vector_index_delete,
 )
 
 HISTORY_COLS = (
@@ -110,32 +122,17 @@ HISTORY_COLS = (
 )
 
 
-def _posix(path: str) -> str:
-    """`path`, which must not be a URI: the state-swap and marker
-    helpers use os calls, which report a URI absent, so the state
-    would restart and the replay guard re-apply a batch. They raise
-    instead."""
-    if urlparse(path).scheme:
-        raise ValueError(f"state tables need a POSIX path, not a URI: {path}")
-    return path
-
-
 def _read_state(spark: SparkSession, path: str) -> DataFrame | None:
     """The current state table, or None ONLY when it genuinely does
     not exist yet (first micro-batch). Missing-path is detected
     explicitly — a transient IO/permission/corruption error during
     the read RAISES, so the checkpoint retry re-runs the batch against
     intact state instead of silently restarting state from the current
-    micro-batch (r8 ADVICE #1). Local-FS paths here; on object
-    storage the existence probe is a HEAD on the _SUCCESS marker.
-    Also completes a swap interrupted between _write_state_swap's two
-    renames, so a crash mid-swap is recoverable, not data loss."""
-    bak = _posix(path) + ".swap-old"
-    if not os.path.exists(path):
-        if os.path.exists(bak):
-            os.rename(bak, path)
-        else:
-            return None
+    micro-batch (r8 ADVICE #1). A state root that a crash between the
+    swap's two renames left absent is restored first (`_swap_restore`),
+    so a crash mid-swap is recoverable, not data loss."""
+    if not _swap_restore(spark, path):
+        return None
     return spark.read.parquet(path)
 
 
@@ -150,13 +147,12 @@ def _read_marker(path: str) -> tuple[str, int] | None:
     files — so it commits atomically with the state it describes:
     there is no window where the state reflects batch N but the
     marker says N-1."""
-    marker = os.path.join(_posix(path), _BATCH_MARKER)
-    if not os.path.exists(marker):
+    spark = SparkSession.active()
+    _swap_restore(spark, path)
+    text = _fs_read_text(spark, posixpath.join(path, _BATCH_MARKER))
+    if text is None:
         return None
-    import json as _json
-
-    with open(marker) as fh:
-        d = _json.loads(fh.read())
+    d = json.loads(text)
     return (d["ckpt"], int(d["batch_id"]))
 
 
@@ -164,16 +160,16 @@ def _lineage_id(checkpoint_dir: str) -> str:
     """Identity of the streaming query lineage this batch belongs to:
     the query id Spark persists in `<checkpoint>/metadata` at stream
     start (stable across restarts of the same checkpoint, fresh for a
-    new one, and — unlike the path — stable if the checkpoint is
-    relocated). foreachBatch runs after the metadata file exists;
-    the realpath fallback only covers exotic checkpoint layouts."""
-    meta = os.path.join(checkpoint_dir, "metadata")
-    if os.path.exists(meta):
-        import json as _json
-
-        with open(meta) as fh:
-            return str(_json.load(fh)["id"])
-    return os.path.realpath(checkpoint_dir)
+    new one — also one deleted and recreated at the same path — and,
+    unlike the path, stable if the checkpoint is relocated). Read
+    through the Hadoop FS API, so a URI checkpoint is read as a plain
+    path is. foreachBatch runs after the metadata file exists; before
+    any stream started, the path stands in (such a checkpoint has no
+    batches)."""
+    meta = _fs_read_text(
+        SparkSession.active(), posixpath.join(checkpoint_dir, "metadata")
+    )
+    return checkpoint_dir if meta is None else str(json.loads(meta)["id"])
 
 
 def _applied_batch_id(path: str, checkpoint_dir: str) -> int | None:
@@ -194,10 +190,7 @@ def _last_committed(spark: SparkSession, checkpoint_dir: str) -> int:
     first. Listed through the Hadoop FS API, like _fs_list_batches:
     os.listdir only exists for local checkpoints, and on s3a/abfs it
     would report commits/ absent (r13 ADVICE #2)."""
-    fs, jpath = _hadoop_fs(spark, checkpoint_dir.rstrip("/") + "/commits")
-    if not fs.exists(jpath):
-        return -1
-    names = [st.getPath().getName() for st in fs.listStatus(jpath)]
+    names = _fs_list(spark, posixpath.join(checkpoint_dir, "commits"))
     return max((int(n) for n in names if n.isdigit()), default=-1)
 
 
@@ -264,33 +257,19 @@ def _compact_on_stop(
 
 def _write_state_tmp(
     merged: DataFrame, path: str, marker: tuple[str, int] | None
-) -> str:
-    """Materialize `merged` into the sibling `.swap-tmp` dir (plus
+) -> None:
+    """Materialize `merged` into the swap's staging directory (plus
     the (checkpoint lineage, batch_id) marker, if any) WITHOUT
-    swapping it in — lineage still reads the intact current table.
-    Returns the tmp path for _swap_in."""
-    tmp = path + ".swap-tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
+    swapping it in — lineage still reads the intact current table."""
+    spark = merged.sparkSession
+    tmp = _swap_stage(spark, path)
     merged.write.mode("overwrite").parquet(tmp)
     if marker is not None:
-        import json as _json
-
-        with open(os.path.join(tmp, _BATCH_MARKER), "w") as fh:
-            fh.write(_json.dumps({"ckpt": marker[0], "batch_id": marker[1]}))
-    return tmp
-
-
-def _swap_in(path: str) -> None:
-    """Promote the fully-written `.swap-tmp` dir to `path` via two
-    renames; a crash between them leaves `.swap-old`, which
-    _read_state restores."""
-    tmp = path + ".swap-tmp"
-    bak = path + ".swap-old"
-    shutil.rmtree(bak, ignore_errors=True)
-    if os.path.exists(path):
-        os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak, ignore_errors=True)
+        _fs_write_text(
+            spark,
+            posixpath.join(tmp, _BATCH_MARKER),
+            json.dumps({"ckpt": marker[0], "batch_id": marker[1]}),
+        )
 
 
 def _write_state_swap(
@@ -298,17 +277,16 @@ def _write_state_swap(
 ) -> None:
     """Replace the state table with `merged` WITHOUT overwriting the
     files its own lineage reads: the new table fully materializes
-    into a sibling temp dir first (any task retry / lost-cached-block
-    recomputation still reads the intact current table), then swaps
-    in via two directory renames (r8 ADVICE #2 — persist()+count()
-    before an in-place overwrite still recomputes from already-
-    deleted files if cached blocks drop). A crash between the renames
-    leaves `.swap-old`, which _read_state restores. Delta/Iceberg
+    into the staging directory first (any task retry / lost-cached-
+    block recomputation still reads the intact current table), then
+    swaps in (operators/compaction.py's swap; r8 ADVICE #2 —
+    persist()+count() before an in-place overwrite still recomputes
+    from already-deleted files if cached blocks drop). Delta/Iceberg
     MERGE INTO is the deployment-scale form of this whole dance.
     The (checkpoint lineage, batch_id) marker rides inside the swapped
     dir (module docstring, replay contract)."""
     _write_state_tmp(merged, path, marker)
-    _swap_in(path)
+    _swap_in(merged.sparkSession, path)
 
 
 def _json_stream(
@@ -985,8 +963,8 @@ def run_table_diff_stream(
         mark = (_lineage_id(checkpoint_dir), batch_id)
         _write_state_tmp(merged_snap, snapshot_path, mark)
         _write_state_tmp(merged_digests, digests_path, mark)
-        _swap_in(snapshot_path)
-        _swap_in(digests_path)
+        _swap_in(spark_b, snapshot_path)
+        _swap_in(spark_b, digests_path)
 
     _drain(
         _json_stream(spark, schema, input_dir), checkpoint_dir,
@@ -1291,10 +1269,6 @@ def run_ivf_append_stream(
     pre-seeded replica. Probe-all reads of the maintained index equal
     brute force over base ∪ all streamed batches exactly (checked per
     round: tools/streaming_check.py `ivf_index_maintenance`)."""
-    from big_data_engineering_project_spark.operators.similarity import (
-        ivf_index_append,
-    )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -1342,10 +1316,6 @@ def run_index_delete_stream(
     tombstone batch dirs into one `batch=base` at availableNow
     termination (tombstones/ is a directory-per-batch artifact like
     any other) with the standard uncommitted-batch refusal."""
-    from big_data_engineering_project_spark.operators.similarity import (
-        vector_index_delete,
-    )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -1557,9 +1527,9 @@ def run_minhash_index_stream(
         with_minhash_signature,
     )
 
-    bands_root = os.path.join(index_path, "bands")
-    sh_root = os.path.join(index_path, "shingles")
-    pairs_root = os.path.join(index_path, "pairs")
+    bands_root = posixpath.join(index_path, "bands")
+    sh_root = posixpath.join(index_path, "shingles")
+    pairs_root = posixpath.join(index_path, "pairs")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1578,13 +1548,13 @@ def run_minhash_index_stream(
             hv = hv.unionByName(prior_h.select("doc", "hv"))
         verified = verify_jaccard_pairs(cands, hv, threshold)
         verified.write.mode("overwrite").parquet(
-            os.path.join(pairs_root, f"batch={tag}")
+            posixpath.join(pairs_root, f"batch={tag}")
         )
         newb.write.mode("overwrite").parquet(
-            os.path.join(bands_root, f"batch={tag}")
+            posixpath.join(bands_root, f"batch={tag}")
         )
         hashed.select("doc", "hv").write.mode("overwrite").parquet(
-            os.path.join(sh_root, f"batch={tag}")
+            posixpath.join(sh_root, f"batch={tag}")
         )
         newb.unpersist()
         hashed.unpersist()
@@ -1637,9 +1607,9 @@ def run_phash_index_stream(
         phash_band_table,
     )
 
-    bands_root = os.path.join(index_path, "bands")
-    hashes_root = os.path.join(index_path, "hashes")
-    pairs_root = os.path.join(index_path, "pairs")
+    bands_root = posixpath.join(index_path, "bands")
+    hashes_root = posixpath.join(index_path, "hashes")
+    pairs_root = posixpath.join(index_path, "pairs")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -1677,10 +1647,10 @@ def run_phash_index_stream(
             .filter(F.col("hamming") <= max_hamming)
         )
         verified.write.mode("overwrite").parquet(
-            os.path.join(pairs_root, f"batch={tag}")
+            posixpath.join(pairs_root, f"batch={tag}")
         )
         newb.select("doc", "band", "val").write.mode("overwrite").parquet(
-            os.path.join(bands_root, f"batch={tag}")
+            posixpath.join(bands_root, f"batch={tag}")
         )
         # the batch's own hashes only — already materialized in newb;
         # semi-joining the (new ∪ prior-corpus) union back to the batch
@@ -1688,7 +1658,7 @@ def run_phash_index_stream(
         # identical rows (r12 review finding)
         newb.select("doc", "w1", "w2").distinct().write.mode(
             "overwrite"
-        ).parquet(os.path.join(hashes_root, f"batch={tag}"))
+        ).parquet(posixpath.join(hashes_root, f"batch={tag}"))
         newb.unpersist()
 
     _drain(
@@ -1737,10 +1707,10 @@ def run_bm25_index_stream(
         tag = _batch_tag(checkpoint_dir, batch_id)
         text_postings(batch_df, id_col, text_col).write.mode(
             "overwrite"
-        ).parquet(os.path.join(index_path, "postings", f"batch={tag}"))
+        ).parquet(posixpath.join(index_path, "postings", f"batch={tag}"))
         doc_lengths(batch_df, id_col, text_col).write.mode(
             "overwrite"
-        ).parquet(os.path.join(index_path, "doclens", f"batch={tag}"))
+        ).parquet(posixpath.join(index_path, "doclens", f"batch={tag}"))
 
     _drain(
         _json_stream(spark, schema, input_dir), checkpoint_dir,
@@ -1751,8 +1721,8 @@ def run_bm25_index_stream(
             spark,
             checkpoint_dir,
             [
-                (os.path.join(index_path, "postings"), ()),
-                (os.path.join(index_path, "doclens"), ()),
+                (posixpath.join(index_path, "postings"), ()),
+                (posixpath.join(index_path, "doclens"), ()),
             ],
         )
 
@@ -1864,7 +1834,7 @@ def run_mix_stream(
         scored.filter(F.col("tok_before") < F.col("stratum_budget")).select(
             "id", "stratum", "n_tokens", "tok_before", "stratum_budget"
         ).write.mode("overwrite").parquet(
-            os.path.join(manifest_path, f"batch={tag}")
+            posixpath.join(manifest_path, f"batch={tag}")
         )
         batch_ledger = scored.groupBy("stratum").agg(
             F.sum("n_tokens").cast("long").alias("__bt"),

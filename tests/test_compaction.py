@@ -357,7 +357,7 @@ def test_compact_batches_noop_and_crash_self_heal(spark, tmp_path):
 
     # simulate a crash between rename(root→bak) and rename(tmp→root)
     shutil.move(root, root + ".swap-old")
-    df.write.parquet(root + ".compact-tmp/batch=base")  # stale tmp too
+    df.write.parquet(root + ".swap-tmp/batch=base")  # stale tmp too
     s = compact_batches(spark, root)  # self-heals, then no-op (lone base)
     assert os.path.isdir(root) and not os.path.isdir(root + ".swap-old")
     rows_after = sorted(
@@ -532,7 +532,7 @@ def test_merge_compact_composed_lifecycle(spark, tmp_path):
     assert serve() == want_abc
 
     # compact again: back to a lone base, serve unchanged, and no
-    # .merge-tmp / .swap-old / .compact-tmp residue anywhere
+    # .merge-tmp / .swap-old / .swap-tmp residue anywhere
     stats2 = compact_vector_index(spark, ia, table="codes")
     assert stats2["codes"]["compacted"]
     assert _batch_tags(ia + "/codes") == ["base"]
@@ -544,9 +544,75 @@ def test_merge_compact_composed_lifecycle(spark, tmp_path):
     ] + [
         d
         for d in os.listdir(str(tmp_path))
-        if d.endswith(".swap-old") or d.endswith(".compact-tmp")
+        if d.endswith(".swap-old") or d.endswith(".swap-tmp")
     ]
     assert residue == [], residue
+
+
+class _FailingRename:
+    """A Hadoop FileSystem whose `fail_at`-th rename (counted across
+    every instance sharing `renames`) returns False without renaming,
+    as an s3a/abfs copy-and-delete rename can; everything else goes to
+    the real FileSystem."""
+
+    def __init__(self, fs, renames: list, fail_at: int):
+        self._fs, self._renames, self._fail_at = fs, renames, fail_at
+
+    def rename(self, src, dst):
+        self._renames.append((src.toString(), dst.toString()))
+        if len(self._renames) == self._fail_at:
+            return False
+        return self._fs.rename(src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def test_refit_swap_keeps_the_old_index_when_the_second_rename_fails(
+    spark, tmp_path, monkeypatch
+):
+    """`ivf_index_rebuild_swap` goes through the one directory swap: the
+    staged index's rename into place (the swap's second rename) fails,
+    so the old index is renamed back, IOError is raised, and the old
+    index still serves from its path, with the refit left staged in
+    `.swap-tmp`. An unchecked swap would delete `.swap-old`, the only
+    complete index."""
+    from big_data_engineering_project_spark.operators import compaction
+    from big_data_engineering_project_spark.operators.similarity import (
+        build_ivf_index,
+        ivf_index_rebuild_swap,
+        load_ivf_centroids,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [1.0 + i % 5, 1.0 + i % 3]) for i in range(20)],
+        "vec_id LONG, embedding ARRAY<FLOAT>",
+    )
+    idx = "file://" + str(tmp_path / "ivf")
+    old_cents = [[1.0, 1.0], [5.0, 3.0]]
+    build_ivf_index(vecs, idx, old_cents)
+    old_rows = sorted(
+        tuple(r) for r in spark.read.parquet(idx + "/vectors").collect()
+    )
+
+    real, renames = compaction._hadoop_fs, []
+
+    def failing_fs(spark_, path):
+        fs, jpath = real(spark_, path)
+        return _FailingRename(fs, renames, fail_at=2), jpath
+
+    monkeypatch.setattr(compaction, "_hadoop_fs", failing_fs)
+    with pytest.raises(IOError, match="old copy is back"):
+        ivf_index_rebuild_swap(vecs, idx, [[2.0, 2.0], [4.0, 1.0], [3.0, 3.0]])
+    monkeypatch.undo()
+
+    assert [d.rsplit("/", 1)[1] for _s, d in renames] == ["ivf.swap-old", "ivf", "ivf"]
+    assert load_ivf_centroids(spark, idx) == old_cents
+    assert sorted(
+        tuple(r) for r in spark.read.parquet(idx + "/vectors").collect()
+    ) == old_rows
+    assert not os.path.exists(str(tmp_path / "ivf.swap-old"))
+    assert len(load_ivf_centroids(spark, idx + ".swap-tmp")) == 3
 
 
 if __name__ == "__main__":

@@ -147,6 +147,51 @@ def test_environment_and_cache_state_have_one_owner():
     assert all(c.startswith("caches.py:") for c in containers), containers
 
 
+def test_directory_swap_has_one_owner():
+    """operators/compaction.py owns the one build-aside directory swap
+    and the Hadoop FS helpers: only it names the swap's `.swap-old` and
+    `.swap-tmp` siblings in code (docstrings may describe them), the
+    retired `.compact-tmp` / `.rebuild-tmp` suffixes appear nowhere,
+    and no module imports the FS helpers from their old home,
+    operators/similarity.py."""
+    import ast
+
+    owner = os.path.join("operators", "compaction.py")
+    bad = []
+    for rel, src in _package_sources():
+        bad += [
+            f"{rel}: {old}" for old in (".compact-tmp", ".rebuild-tmp") if old in src
+        ]
+        tree = ast.parse(src)
+        docs = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(
+                node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+            )
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+        }
+        for node in ast.walk(tree):
+            if (
+                rel != owner
+                and isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in docs
+                and (".swap-old" in node.value or ".swap-tmp" in node.value)
+            ):
+                bad.append(f"{rel}:{node.lineno}: {node.value!r}")
+            if (
+                isinstance(node, ast.ImportFrom)
+                and (node.module or "").split(".")[-1] == "similarity"
+                and {a.name for a in node.names}
+                & {"_hadoop_fs", "_fs_list_batches", "_fs_delete"}
+            ):
+                bad.append(f"{rel}:{node.lineno}: imports FS helpers from similarity")
+    assert not bad, bad
+
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = os.path.join(ROOT, "big_data_engineering_project_spark")
 

@@ -4244,7 +4244,7 @@ def test_ivf_index_rebuild_swap(spark, sf_dir, tmp_path):
     """Centroid refit lifecycle: after appends, a rebuild with NEW
     centroids swaps in atomically (two Hadoop FS renames) — batch
     history collapses to base, the new centroids round-trip, probe-all
-    still equals brute force over the full corpus, and no .rebuild-tmp
+    still equals brute force over the full corpus, and no .swap-tmp
     / .swap-old residue remains. Runs against a file:// scheme path so
     the rename path is the Hadoop FS one."""
     from big_data_engineering_project_spark.operators.similarity import (
@@ -4284,7 +4284,7 @@ def test_ivf_index_rebuild_swap(spark, sf_dir, tmp_path):
         (r["vec_id"], r["cosine"]) for r in exact
     ]
     fs, _ = _hadoop_fs(spark, idx)
-    for suffix in (".rebuild-tmp", ".swap-old"):
+    for suffix in (".swap-tmp", ".swap-old"):
         p = spark._jvm.org.apache.hadoop.fs.Path(idx + suffix)
         assert not fs.exists(p), suffix
 

@@ -83,16 +83,19 @@ def test_per_batch_anomalies_match_pandas_oracle(spark, hot_path_output):
 
 
 @pytest.mark.parametrize(
-    "name", ["minhash_index_maintenance", "phash_index_maintenance"]
+    "name", ["minhash_index_maintenance", "phash_index_maintenance", "hll_maintenance"]
 )
 def test_index_stream_with_a_uri_root_equals_batch(spark, tmp_path, name):
-    """The MinHash and pHash rows with a `file://` index root: the
-    prior batches are listed through the Hadoop FS API, so the stream
-    probes them as it does under a plain path and its pairs equal the
-    batch operator's."""
+    """The MinHash and pHash rows with a `file://` index root, and the
+    HLL fold row with a `file://` state table and checkpoint: prior
+    batches, the state, its swap, its replay marker and the lineage
+    all go through the Hadoop FS API, so the stream runs as it does
+    under plain paths and equals the batch operator."""
     (twin,) = [t for t in TWINS if t.name == name]
     p = Paths(str(tmp_path), name)
     p.out = "file://" + p.out
+    if name == "hll_maintenance":
+        p.cp = "file://" + p.cp
     results = run_twin(spark, str(tmp_path), twin, p)
     assert all(r["match"] for r in results.values()), results
 
@@ -183,18 +186,59 @@ def test_crash_window_replay_stamps_the_same_counts(spark, tmp_path, null_author
     assert any(d.endswith("-3") for d in dirs), dirs
 
 
-def test_state_helpers_refuse_a_uri(spark, tmp_path):
-    """The state and marker helpers use os calls, which report a URI
-    absent: they raise on one instead of restarting the state or
-    re-applying a batch."""
+def test_hot_path_refuses_a_root_with_entries_beside_its_batches(spark, tmp_path):
+    """A table or anomaly root holding visible entries beside its
+    `batch=` directories (a table an earlier version appended to) is
+    refused before the stream starts: a parquet read of it sees the
+    `batch=` partitions only and drops the flat rows without an error.
+    An absent root, `_`- and `.`-prefixed entries and `batch=`
+    directories pass."""
+    import os
+
+    in_dir = str(tmp_path / "in")
+    os.makedirs(in_dir)
+    flat = str(tmp_path / "flat")
+    spark.range(3).write.parquet(flat)
+    spark.range(3).write.parquet(flat + "/batch=abc-0")
+    assert spark.read.parquet(flat).count() == 3  # the silent loss
+    ok = str(tmp_path / "ok")
+    spark.range(3).write.parquet(ok + "/batch=abc-0")
+    os.makedirs(os.path.join(ok, ".staging"))
+    open(os.path.join(ok, "_SUCCESS"), "w").close()
+    absent = str(tmp_path / "absent")
+    for table, anom in ((flat, absent), (ok, flat)):
+        with pytest.raises(ValueError, match=f"{flat} holds .* beside its batch="):
+            run_hot_path(
+                spark, in_dir, table, anom, str(tmp_path / "cp"), now=FROZEN_NOW
+            )
+    assert not os.path.exists(str(tmp_path / "cp"))  # refused before the stream
+    run_hot_path(spark, in_dir, ok, absent, str(tmp_path / "cp"), now=FROZEN_NOW)
+
+
+def test_recreated_uri_checkpoint_is_a_new_lineage(spark, tmp_path):
+    """The lineage is the query id in `<checkpoint>/metadata`, read
+    through the Hadoop FS API: a `file://` checkpoint deleted and
+    recreated at the same URI is a new lineage, so its batch 0 writes a
+    new `batch=<lineage>-0` directory instead of overwriting the
+    previous stream's."""
+    import shutil
+
     from big_data_engineering_project_spark.streaming import scd2
 
-    uri = "file://" + str(tmp_path / "state")
-    spark.range(3).write.parquet(uri)
-    with pytest.raises(ValueError, match="POSIX path"):
-        scd2._read_state(spark, uri)
-    with pytest.raises(ValueError, match="POSIX path"):
-        scd2._read_marker(uri)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    _write_ordered_json(in_dir, [[{"x": 1}]])
+    cp = "file://" + str(tmp_path / "cp")
+    tags = []
+    for _ in range(2):
+        shutil.rmtree(tmp_path / "cp", ignore_errors=True)
+        scd2._drain(
+            scd2._json_stream(spark, "x LONG", str(in_dir)),
+            cp,
+            lambda _df, batch_id: tags.append(scd2._batch_tag(cp, batch_id)),
+        )
+    assert len(tags) == 2 and all(t.endswith("-0") for t in tags), tags
+    assert tags[0] != tags[1], tags
 
 
 def test_hot_path_stamp_runs_no_python(spark, tmp_path):
@@ -1030,6 +1074,42 @@ def test_batch_id_guard_skips_replayed_batches(spark, tmp_path, name):
         (r[:2], r[2]) for r in want
     ):
         assert doubled[(seed, bucket)] == 2 * cnt
+
+
+def test_fold_runner_restores_a_state_root_left_in_swap_old(spark, tmp_path):
+    """A crash between the state swap's two renames leaves the state
+    root absent, the complete old state in `.swap-old` and a staged
+    copy in `.swap-tmp`; the batch is uncommitted. The next batch
+    renames the old state back before it folds, so the state equals
+    the batch operator over every file and the swap leaves no sibling
+    behind."""
+    import json as _json
+    import os as _os
+
+    from big_data_engineering_project_spark.operators.sketches import (
+        cm_counters,
+    )
+
+    runner, kw, batches = _replay_runner("cm")
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    _write_ordered_json(in_dir, batches[:1])
+    state_path, cp = str(tmp_path / "state"), str(tmp_path / "cp")
+    runner(spark, str(in_dir), state_path, cp, **kw)
+    _os.rename(state_path, state_path + ".swap-old")
+    _os.makedirs(state_path + ".swap-tmp")
+    with open(in_dir / "1.json", "w") as fh:  # newest file: batch 1
+        fh.writelines(_json.dumps(r) + "\n" for r in batches[1])
+    runner(spark, str(in_dir), state_path, cp, **kw)
+
+    got = sorted(tuple(r) for r in spark.read.parquet(state_path).collect())
+    bb = spark.read.schema("x LONG").json(str(in_dir))
+    want = sorted(
+        tuple(r)
+        for r in cm_counters(bb.selectExpr("x AS __h"), "__h").collect()
+    )
+    assert got == want
+    assert sorted(_os.listdir(tmp_path)) == ["cp", "in", "state"]
 
 
 def test_table_diff_stream_marker_disagree_rebuild(spark, tmp_path):

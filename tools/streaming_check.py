@@ -1074,7 +1074,7 @@ def _delete_extras(spark, p, got, want):
     surviving = p.base.filter(~F.col("vec_id").isin(p.deleted))
     return {
         "probe_all_equals_brute": got == _brute(spark, surviving),
-        "tombstones_compacted": similarity._fs_list_batches(
+        "tombstones_compacted": compaction._fs_list_batches(
             spark, p.out + "/tombstones"
         ) == ["base"],
         "no_deleted_served": not ({i for i, _c in got} & set(p.deleted)),
